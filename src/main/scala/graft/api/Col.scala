@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
@@ -43,28 +43,31 @@ final class Col private[api] (
   def len: Long = table.len
 
   /** Non-null count (reference: column.py:162-166). */
-  def count: Long = cache.memo(colDf.agg(F.count(c))) {
+  def count: Long = cache.memo(Stats.plan.count(df, name)) {
     df.agg(F.count(c)).head().getLong(0)
   }
 
   /** Null count (reference: column.py:168-172). */
-  def nullCount: Long = cache.memo(df.filter(c.isNull).select(c)) {
+  def nullCount: Long = cache.memo(Stats.plan.nullCount(df, name)) {
     df.filter(c.isNull).count()
   }
 
-  def min: Any = cache.memo(df.agg(Aggs.minAgg(c))) {
-    df.agg(Aggs.minAgg(c)).head().get(0)
+  def min: Any = {
+    val p = Stats.plan.min(df, name)
+    cache.memo(p)(p.head().get(0))
   }
 
-  def max: Any = cache.memo(df.agg(Aggs.maxAgg(c))) {
-    df.agg(Aggs.maxAgg(c)).head().get(0)
+  def max: Any = {
+    val p = Stats.plan.max(df, name)
+    cache.memo(p)(p.head().get(0))
   }
 
   /** Sum; raises on non-numeric columns (reference: column.py:186-196). */
   def sum: Double = {
     requireNumeric("sum")
-    cache.memo(df.agg(Aggs.sumAgg(c))) {
-      val r = df.agg(Aggs.sumAgg(c)).head()
+    val p = Stats.plan.sum(df, name)
+    cache.memo(p) {
+      val r = p.head()
       if (r.isNullAt(0)) 0.0 else r.getDouble(0)
     }
   }
@@ -72,7 +75,8 @@ final class Col private[api] (
   /** Mean; raises on non-numeric columns (reference: column.py:198-208). */
   def avg: Double = {
     requireNumeric("avg")
-    val r = cache.memo(df.agg(Aggs.avgAgg(c)))(df.agg(Aggs.avgAgg(c)).head())
+    val p = Stats.plan.avg(df, name)
+    val r = cache.memo(p)(p.head())
     if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
   }
 
@@ -86,8 +90,7 @@ final class Col private[api] (
     // by distributed order-statistic selection (StatsOps.exactPercentiles)
     // — the built-in median aggregate merges the full value→count map on
     // ONE reducer, a choke point on high-cardinality columns at scale
-    val agg = df.agg(Aggs.medianAgg(c))
-    cache.memo(agg) {
+    cache.memo(Stats.plan.median(df, name)) {
       val proj = df.select(c.cast("double").as("__m"))
       try graft.ops.StatsOps.exactPercentiles(proj, "__m", Seq(0.5)).head
       catch { case _: IllegalArgumentException => Double.NaN }
@@ -97,7 +100,7 @@ final class Col private[api] (
   /** All tied modes with their counts; null participates as a value
     * (reference: column.py:233-249).
     */
-  def mode: Map[Any, Long] = cache.memo(colDf.groupBy(c).count()) {
+  def mode: Map[Any, Long] = cache.memo(Stats.plan.mode(df, name)) {
     modePlan.collect().map(r => (r.get(0), r.getLong(1))).toMap
   }
 
@@ -114,21 +117,30 @@ final class Col private[api] (
       .select(c, col("__cnt"))
   }
 
-  /** Distinct values incl. null (reference: column.py:281-287). */
-  def unique: Seq[Any] =
-    cache.memo(colDf.distinct())(colDf.distinct().collect().map(_.get(0)).toSeq)
+  /** Distinct values incl. null (reference: column.py:281-287), ordered
+    * count DESC, then value ASC with null first. The reference's
+    * `SELECT DISTINCT` fixes no order; this one is deterministic, and the
+    * same whether this getter (a distributed sort) or the memo warm-up's
+    * grouped pass computed it.
+    */
+  def unique: Seq[Any] = cache.memo(Stats.plan.unique(df, name)) {
+    Stats.counts(df, name).orderBy(Stats.byCount(name): _*).collect().map(_.get(0)).toSeq
+  }
 
   /** Value → count, null excluded, ordered count DESC then value ASC
     * (pandas semantics; reference: column.py:289-304).
     */
   def valueCounts: Seq[(Any, Long)] = {
-    val q = df.filter(c.isNotNull).groupBy(c).agg(F.count(lit(1)).as("count"))
-      .orderBy(desc("count"), asc(name))
+    val q = Stats.plan.valueCounts(df, name)
     cache.memo(q)(q.collect().map(r => (r.get(0), r.getLong(1))).toSeq)
   }
 
   /** Composite stats: numeric → len/count/min/max/sum/avg/median,
     * text → len/count/min/max/unique (reference: column.py:251-279).
+    * Each stat comes from its getter, one job or more apiece when cold.
+    * After [[Database.populateCache]] (one aggregate per table, plus one
+    * grouped pass per column up to `distinctStatMaxRows` rows) every one
+    * is a memo hit and no job runs.
     */
   def describe: Map[String, Any] =
     if (isNumeric)
@@ -343,18 +355,4 @@ final class Col private[api] (
       if (d == null) null else java.lang.Long.valueOf(f(d)))
     df.select(u(c).as(name))
   }
-}
-
-/** Internal aggregate builders shared by Col (kept out of the class so cache
-  * keys canonicalize identically across Col instances).
-  */
-private[api] object Aggs {
-  def minAgg(c: Column): Column = org.apache.spark.sql.functions.min(c)
-  def maxAgg(c: Column): Column = org.apache.spark.sql.functions.max(c)
-  def sumAgg(c: Column): Column =
-    org.apache.spark.sql.functions.sum(c.cast(DoubleType))
-  def avgAgg(c: Column): Column =
-    org.apache.spark.sql.functions.avg(c.cast(DoubleType))
-  def medianAgg(c: Column): Column =
-    org.apache.spark.sql.functions.median(c.cast(DoubleType))
 }

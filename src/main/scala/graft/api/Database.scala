@@ -2,8 +2,7 @@ package graft.api
 
 import java.io.File
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success}
 
 import scala.language.dynamics
 
@@ -131,11 +130,6 @@ final class Database private (
     if (renameDuplicates) Database.renameDuplicateCols(out) else out
   }
 
-  /** Warm the scalar-stat cache for every column of every table, one Future
-    * per table (reference: connection.py:91-99 + cache.py:94-125). Distinct-
-    * heavy stats (mode/unique/valueCounts) are skipped for tables over
-    * `distinctStatMaxRows` rows (reference guard: cache.py:120).
-    */
   // tables whose stats have been fully warmed — the reference's readiness
   // counter (cache.py:62-68 `is_ready`)
   private val populatedTables =
@@ -147,22 +141,33 @@ final class Database private (
     */
   def cacheReady: Boolean = tables.forall(populatedTables.contains)
 
+  /** Warm the stat memo for every column of every table, one Future per
+    * table (reference: connection.py:91-99 + cache.py:94-125). Each table
+    * runs one aggregate for every column's len, count, nullCount, min and
+    * max (plus sum and avg of numeric columns), then one grouped pass per
+    * column for its mode, unique, valueCounts and median. Tables over
+    * `distinctStatMaxRows` rows skip mode/unique/valueCounts (reference
+    * guard: cache.py:120) and take the exact median alone instead. Only
+    * entries the memo lacks are computed: a warm table, or a disabled
+    * memo, runs no job. Columns run concurrently too, and every job
+    * carries the caller's job group.
+    *
+    * Every table runs to the end; the ones that warmed fully are marked
+    * ready, and a [[CacheWarmupError]] then names each column that failed.
+    */
   def populateCache(distinctStatMaxRows: Long = 1000000L): Unit = {
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val futures = tables.map { tn =>
-      Future {
-        val t = table(tn)
-        val small = t.len <= distinctStatMaxRows
-        t.columns.foreach { cn =>
-          val c = t.col(cn)
-          c.count; c.nullCount; c.min; c.max
-          if (c.isNumeric) { c.sum; c.avg; c.median }
-          if (small) { c.mode; c.unique; c.valueCounts }
-        }
-        populatedTables.add(tn)
+    if (!cache.enabled) { tables.foreach(populatedTables.add); return }
+    val outcomes = Stats.inParallel(spark.sparkContext,
+      tables.map(tn => () => Stats.warm(table(tn), distinctStatMaxRows)))
+    val failures = tables.zip(outcomes).flatMap { case (tn, outcome) =>
+      val failed = outcome match {
+        case Success(fs) => fs
+        case Failure(e) => Seq(None -> e)
       }
+      if (failed.isEmpty) populatedTables.add(tn)
+      failed.map { case (cn, e) => (tn, cn, e) }
     }
-    Await.result(Future.sequence(futures), Duration.Inf)
+    if (failures.nonEmpty) throw new CacheWarmupError(failures)
   }
 
   /** Drop this database's temp views and temp tables (reference `exit`,
@@ -292,81 +297,71 @@ object Database {
     // Tolerate TIMESTAMP(NANOS) parquet columns (read as epoch-nanos long).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val target = new File(dir)
+    val isSqlite = Seq(".db", ".sqlite", ".sqlite3").exists(dir.endsWith)
     // single-file open, like the reference's Database('file.db')
     // (connection.py:64-78: unsupported extensions raise FileTypeError)
-    if (target.isFile) {
-      // .sql dumps are the reference's native input (connection.py:64-78,
-      // utils.py:242-265) — replayed here by graft.sources.SqlDump instead
-      // of SQLite. Binary .db opens through graft.sources.SqliteJdbc WHEN a
-      // sqlite-jdbc driver jar is on the classpath (the build itself stays
-      // zero-dep); otherwise fail loudly with the `.dump` workaround.
-      if (dir.endsWith(".sql")) {
-        val tableMap = graft.sources.SqlDump.open(spark, dir)
-        tableMap.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-        val fileViews = registerFileViews(spark, tableMap.keySet,
-          graft.sources.SqlDump.viewDefs(spark, dir))
-        val qc = new QueryCache(cacheEnabled, maxItemMb, maxTotalMb)
-        val fp = sourceFingerprint(Seq(target))
-        if (cacheDir != null) qc.loadFrom(spark, cacheDir, Some(fp))
-        val db = new Database(spark, tableMap, qc, dir, Option(cacheDir), fp)
-        db.adoptFileViews(fileViews)
-        return db
-      }
-      if (Seq(".db", ".sqlite", ".sqlite3").exists(dir.endsWith)) {
+    if (target.isFile && !isSqlite &&
+        !Seq(".sql", ".parquet", ".csv").exists(dir.endsWith))
+      throw new FileTypeError(
+        s"unsupported file type '$dir' — expected .parquet, .csv, .sql, " +
+          ".db, .sqlite or .sqlite3")
+    // (tables, views the file defines, source files to fingerprint)
+    val (tableMap, fileViews, sources) =
+      if (target.isFile && dir.endsWith(".sql")) {
+        // .sql dumps are the reference's native input (connection.py:64-78,
+        // utils.py:242-265) — replayed here by graft.sources.SqlDump
+        // instead of SQLite
+        val tm = graft.sources.SqlDump.open(spark, dir)
+        tm.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+        (tm, registerFileViews(spark, tm.keySet,
+          graft.sources.SqlDump.viewDefs(spark, dir)), Seq(target))
+      } else if (target.isFile && isSqlite) {
         // JDBC route when a sqlite-jdbc jar happens to be on the classpath
         // (it streams table scans); otherwise graft's own pure-JVM reader
         // parses the b-tree pages directly — the reference's direct-.db
         // open (connection.py:64-78) with zero added dependencies either way
         val jdbc = graft.sources.SqliteJdbc.driverAvailable
-        val tableMap =
+        val tm =
           if (jdbc) graft.sources.SqliteJdbc.open(spark, dir)
           else graft.sources.SqliteFile.open(spark, dir)
-        tableMap.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-        val fileViews = registerFileViews(spark, tableMap.keySet,
+        tm.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+        (tm, registerFileViews(spark, tm.keySet,
           if (jdbc) graft.sources.SqliteJdbc.views(dir)
-          else graft.sources.SqliteFile.views(dir))
-        val qc = new QueryCache(cacheEnabled, maxItemMb, maxTotalMb)
-        val fp = sourceFingerprint(Seq(target))
-        if (cacheDir != null) qc.loadFrom(spark, cacheDir, Some(fp))
-        val db = new Database(spark, tableMap, qc, dir, Option(cacheDir), fp)
-        db.adoptFileViews(fileViews)
-        return db
+          else graft.sources.SqliteFile.views(dir)), Seq(target))
+      } else {
+        val files =
+          if (target.isFile) Array(target)
+          else Option(target.listFiles()).getOrElse(Array.empty[File])
+            .filter(f => f.isFile || f.isDirectory) // spark parquet "files" may be dirs
+            .filter(f => f.getName.endsWith(".parquet") || f.getName.endsWith(".csv") ||
+              isPartitionedStore(f)) // graft.ops.Layout stores: dirs of key=value/ subdirs
+        if (files.isEmpty)
+          throw new FileTypeError(s"no .parquet or .csv tables found under '$dir'")
+        val tm = files.map { f =>
+          val isCsv = f.getName.endsWith(".csv")
+          val stem = f.getName.replaceAll("\\.(parquet|csv)$", "")
+          // CSV ingestion normalizes names like the reference's
+          // convert_csvs_to_db (utils.py:233-238): spaces/hyphens -> '_' in
+          // the table name and headers, headers lowercased
+          val tname = if (isCsv) stem.replace(' ', '_').replace('-', '_') else stem
+          val raw =
+            if (isCsv) spark.read.option("header", "true").option("inferSchema", "true").csv(f.getPath)
+            else spark.read.parquet(f.getPath)
+          val df =
+            if (isCsv)
+              raw.toDF(raw.columns.toIndexedSeq
+                .map(_.replace(' ', '_').replace('-', '_').toLowerCase): _*)
+            else raw
+          df.createOrReplaceTempView(tname)
+          tname -> df
+        }.toMap
+        (tm, Seq.empty[String], files.toIndexedSeq)
       }
-      if (!dir.endsWith(".parquet") && !dir.endsWith(".csv"))
-        throw new FileTypeError(
-          s"unsupported file type '$dir' — expected .parquet, .csv, .sql, " +
-            ".db, .sqlite or .sqlite3")
-    }
-    val files =
-      if (target.isFile) Array(target)
-      else Option(target.listFiles()).getOrElse(Array.empty[File])
-        .filter(f => f.isFile || f.isDirectory) // spark parquet "files" may be dirs
-        .filter(f => f.getName.endsWith(".parquet") || f.getName.endsWith(".csv") ||
-          isPartitionedStore(f)) // graft.ops.Layout stores: dirs of key=value/ subdirs
-    if (files.isEmpty)
-      throw new FileTypeError(s"no .parquet or .csv tables found under '$dir'")
-    val tableMap = files.map { f =>
-      val isCsv = f.getName.endsWith(".csv")
-      val stem = f.getName.replaceAll("\\.(parquet|csv)$", "")
-      // CSV ingestion normalizes names like the reference's
-      // convert_csvs_to_db (utils.py:233-238): spaces/hyphens -> '_' in the
-      // table name and headers, headers lowercased
-      val tname = if (isCsv) stem.replace(' ', '_').replace('-', '_') else stem
-      val raw =
-        if (isCsv) spark.read.option("header", "true").option("inferSchema", "true").csv(f.getPath)
-        else spark.read.parquet(f.getPath)
-      val df =
-        if (isCsv)
-          raw.toDF(raw.columns.toIndexedSeq
-            .map(_.replace(' ', '_').replace('-', '_').toLowerCase): _*)
-        else raw
-      df.createOrReplaceTempView(tname)
-      tname -> df
-    }.toMap
     val qc = new QueryCache(cacheEnabled, maxItemMb, maxTotalMb)
-    val fp = sourceFingerprint(files.toIndexedSeq)
+    val fp = sourceFingerprint(sources)
     if (cacheDir != null) qc.loadFrom(spark, cacheDir, Some(fp))
     val db = new Database(spark, tableMap, qc, dir, Option(cacheDir), fp)
+    db.adoptFileViews(fileViews)
     if (populateCache) db.populateCache()
     db
   }

@@ -88,6 +88,15 @@ final class QueryCache(
     v
   }
 
+  /** The memoized value under `key`, if any, counted as a use. */
+  private[api] def peek(key: String): Option[Any] =
+    if (!enabled) None else Option(store.get(key)).map(_.value)
+
+  /** Key → value of every entry, without touching recency. */
+  private[api] def snapshot: Map[String, Any] = store.synchronized {
+    store.entrySet().asScala.map(e => e.getKey -> e.getValue.value).toMap
+  }
+
   /** Memoize an aggregate computed from `df`, keyed on its canonical plan. */
   def memo[T](df: DataFrame)(compute: => T): T = getOrElseUpdate(keyOf(df))(compute)
 

@@ -48,7 +48,7 @@ final class Table private[api] (
   /** Row count, memoized like the reference's cached COUNT(*)
     * (table.py:155-160) and its iloc length cache (table.py:21-22).
     */
-  def len: Long = cache.memo(df.select(lit(1)))(df.count())
+  def len: Long = cache.memo(Stats.plan.len(df))(df.count())
 
   def shape: (Long, Int) = (len, columns.length)
 
@@ -272,6 +272,10 @@ final class Table private[api] (
 
   // ---- stats (reference §2.4 A13) --------------------------------------
 
+  /** Every column's [[Col.describe]]: its getters' jobs when cold, memo
+    * hits only after [[Database.populateCache]] (one aggregate per table,
+    * plus one grouped pass per column up to `distinctStatMaxRows` rows).
+    */
   def describe: Map[String, Map[String, Any]] =
     columns.map(cn => cn -> col(cn).describe).toMap
 

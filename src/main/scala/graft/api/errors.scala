@@ -24,3 +24,18 @@ class IndexOutOfBoundsError(msg: String) extends GraftException(msg)
   * (reference: column.py:193-194 raises TypeError).
   */
 class ColumnTypeError(msg: String) extends GraftException(msg)
+
+/** [[Database.populateCache]] could not warm some columns: the message
+  * names each `table.column` (or the table, when its aggregate pass
+  * failed) with its cause, and every cause is attached as suppressed.
+  * The other tables and columns were still warmed.
+  */
+class CacheWarmupError(val failures: Seq[(String, Option[String], Throwable)])
+    extends GraftException(
+      s"populateCache failed for ${failures.length} column(s): " +
+        failures.map { case (t, c, e) =>
+          s"${c.fold(t)(t + "." + _)} (${e.getClass.getSimpleName}: " +
+            Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString + ")"
+        }.mkString("; ")) {
+  failures.foreach { case (_, _, e) => addSuppressed(e) }
+}

@@ -74,10 +74,8 @@ object StatsOps {
       .scanLeft(0L)((acc, p) => acc + counts.getOrElse(p, 0L)).init
     val n = counts.values.sum
     require(n > 0, s"exactPercentiles: no non-null values in $column")
-    // global row indices needed: floor and ceil rank per fraction
-    val ranks = fracs.map(f => f * (n - 1))
-    val wanted = ranks.flatMap(r => Seq(r.toLong, math.ceil(r).toLong)).distinct.sorted
-    val byPart: Map[Int, Seq[Long]] = wanted.groupBy { idx =>
+    val q = QuantileRanks(n, fracs)
+    val byPart: Map[Int, Seq[Long]] = q.wanted.groupBy { idx =>
       // owning partition: last pid whose offset <= idx
       (0 until nParts).filter(p => offsets(p) <= idx &&
         idx < offsets(p) + counts.getOrElse(p, 0L)).head
@@ -100,11 +98,25 @@ object StatsOps {
         out.iterator
       }
     }.collect().toMap
-    (ranks.map { r =>
-      val lo = picked(r.toLong)
-      val hi = picked(math.ceil(r).toLong)
+    (q.interpolate(picked), n)
+  }
+
+  /** quantile_cont over `n` ascending values: fraction f has rank
+    * r = f·(n−1), reads the values at ranks ⌊r⌋ and ⌈r⌉, and yields
+    * lo + (hi − lo)·(r − ⌊r⌋). [[wanted]] lists those 0-based ranks;
+    * [[interpolate]] combines the values found there, one per fraction.
+    * The one home of the exact-percentile rule: [[exactPercentiles]] and
+    * the memo warm-up's grouped-count median both apply it.
+    */
+  final case class QuantileRanks(n: Long, fracs: Seq[Double]) {
+    private val ranks = fracs.map(f => f * (n - 1))
+    def wanted: Seq[Long] =
+      ranks.flatMap(r => Seq(r.toLong, math.ceil(r).toLong)).distinct.sorted
+    def interpolate(at: Long => Double): Seq[Double] = ranks.map { r =>
+      val lo = at(r.toLong)
+      val hi = at(math.ceil(r).toLong)
       lo + (hi - lo) * (r - math.floor(r))
-    }, n)
+    }
   }
 
   /** One-pass profile of every column: rows, nulls, min, max, approx
