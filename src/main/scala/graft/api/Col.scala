@@ -1,5 +1,7 @@
 package graft.api
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
@@ -9,8 +11,10 @@ import org.apache.spark.sql.types._
   * reference's `Column` (reference: pandasdb/column.py:106-763).
   *
   * Holds no data: just the owning table's DataFrame, the column name, and the
-  * result cache. Scalar aggregates are memoized under the canonicalized plan
-  * (reference memoizes under the generated SQL string, column.py:132-304).
+  * result cache. Scalar aggregates are memoized under the table's name,
+  * the stat, this column and the table's canonicalized plan
+  * ([[Table.memoKey]]; reference memoizes under the generated SQL string,
+  * which names the table, column.py:132-304).
   *
   * All aggregates execute as distributed Spark jobs (partial aggregation
   * map-side, single final combine) — at 100 TB each is one column-pruned scan;
@@ -24,6 +28,7 @@ final class Col private[api] (
   private def cache: QueryCache = table.cache
   private def c: Column = col(name)
   private def colDf: DataFrame = df.select(c)
+  private lazy val keys = new Stats.Keys(table, name)
 
   /** Spark SQL type of the column (replaces the reference's PRAGMA probe,
     * column.py:135-147 — schema is free in Spark).
@@ -43,41 +48,37 @@ final class Col private[api] (
   def len: Long = table.len
 
   /** Non-null count (reference: column.py:162-166). */
-  def count: Long = cache.memo(Stats.plan.count(df, name)) {
+  def count: Long = cache.getOrElseUpdate(keys.count) {
     df.agg(F.count(c)).head().getLong(0)
   }
 
   /** Null count (reference: column.py:168-172). */
-  def nullCount: Long = cache.memo(Stats.plan.nullCount(df, name)) {
+  def nullCount: Long = cache.getOrElseUpdate(keys.nullCount) {
     df.filter(c.isNull).count()
   }
 
-  def min: Any = {
-    val p = Stats.plan.min(df, name)
-    cache.memo(p)(p.head().get(0))
-  }
+  def min: Any = cache.getOrElseUpdate(keys.min)(df.agg(F.min(c)).head().get(0))
 
-  def max: Any = {
-    val p = Stats.plan.max(df, name)
-    cache.memo(p)(p.head().get(0))
-  }
+  def max: Any = cache.getOrElseUpdate(keys.max)(df.agg(F.max(c)).head().get(0))
 
   /** Sum; raises on non-numeric columns (reference: column.py:186-196). */
   def sum: Double = {
     requireNumeric("sum")
-    val p = Stats.plan.sum(df, name)
-    cache.memo(p) {
-      val r = p.head()
+    cache.getOrElseUpdate(keys.sum) {
+      val r = df.agg(Stats.sumAgg(c)).head()
       if (r.isNullAt(0)) 0.0 else r.getDouble(0)
     }
   }
 
-  /** Mean; raises on non-numeric columns (reference: column.py:198-208). */
+  /** Mean, NaN when no value is non-null; raises on non-numeric columns
+    * (reference: column.py:198-208).
+    */
   def avg: Double = {
     requireNumeric("avg")
-    val p = Stats.plan.avg(df, name)
-    val r = cache.memo(p)(p.head())
-    if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
+    cache.getOrElseUpdate(keys.avg) {
+      val r = df.agg(Stats.avgAgg(c)).head()
+      if (r.isNullAt(0)) Double.NaN else r.getDouble(0)
+    }
   }
 
   /** Exact median — the reference computes it exactly client-side
@@ -86,11 +87,10 @@ final class Col private[api] (
     */
   def median: Double = {
     requireNumeric("median")
-    // memo key stays the canonical median-agg plan; the VALUE is computed
-    // by distributed order-statistic selection (StatsOps.exactPercentiles)
-    // — the built-in median aggregate merges the full value→count map on
+    // distributed order-statistic selection (StatsOps.exactPercentiles):
+    // the built-in median aggregate merges the full value→count map on
     // ONE reducer, a choke point on high-cardinality columns at scale
-    cache.memo(Stats.plan.median(df, name)) {
+    cache.getOrElseUpdate(keys.median) {
       val proj = df.select(c.cast("double").as("__m"))
       try graft.ops.StatsOps.exactPercentiles(proj, "__m", Seq(0.5)).head
       catch { case _: IllegalArgumentException => Double.NaN }
@@ -100,7 +100,7 @@ final class Col private[api] (
   /** All tied modes with their counts; null participates as a value
     * (reference: column.py:233-249).
     */
-  def mode: Map[Any, Long] = cache.memo(Stats.plan.mode(df, name)) {
+  def mode: Map[Any, Long] = cache.getOrElseUpdate(keys.mode) {
     modePlan.collect().map(r => (r.get(0), r.getLong(1))).toMap
   }
 
@@ -123,16 +123,16 @@ final class Col private[api] (
     * same whether this getter (a distributed sort) or the memo warm-up's
     * grouped pass computed it.
     */
-  def unique: Seq[Any] = cache.memo(Stats.plan.unique(df, name)) {
+  def unique: Seq[Any] = cache.getOrElseUpdate(keys.unique) {
     Stats.counts(df, name).orderBy(Stats.byCount(name): _*).collect().map(_.get(0)).toSeq
   }
 
   /** Value → count, null excluded, ordered count DESC then value ASC
     * (pandas semantics; reference: column.py:289-304).
     */
-  def valueCounts: Seq[(Any, Long)] = {
-    val q = Stats.plan.valueCounts(df, name)
-    cache.memo(q)(q.collect().map(r => (r.get(0), r.getLong(1))).toSeq)
+  def valueCounts: Seq[(Any, Long)] = cache.getOrElseUpdate(keys.valueCounts) {
+    Stats.counts(df.filter(c.isNotNull), name).orderBy(Stats.byCount(name): _*)
+      .collect().map(r => (r.get(0), r.getLong(1))).toSeq
   }
 
   /** Composite stats: numeric → len/count/min/max/sum/avg/median,
@@ -257,12 +257,6 @@ final class Col private[api] (
   def sample(n: Int = 10, seed: Long = scala.util.Random.nextLong()): Seq[Any] =
     colDf.orderBy(rand(seed)).limit(n).collect().map(_.get(0)).toSeq
 
-  private implicit class RichIter[T](it: java.util.Iterator[T]) {
-    def asScala: Iterator[T] = new Iterator[T] {
-      def hasNext = it.hasNext; def next() = it.next()
-    }
-  }
-
   // ---- element-wise arithmetic (reference §2.8 U3/U4) ------------------
 
   /** Element-wise ops against a scalar or a same-table column; nulls
@@ -303,10 +297,6 @@ final class Col private[api] (
     case _ => arith(x => floor(x / lit(v)))
   }
 
-  /** Null-propagating per-element function application (reference `apply`,
-    * column.py:338-364, `ignore_na=True`). Typed overloads keep Spark
-    * Encoders happy; execution is a codegen'd map over the column.
-    */
   /** Cross-table element-wise combine — the reference's strict iterator zip
     * (column.py:604-607, strict=True raises on length mismatch). Distributed
     * form: row-index equi-join on both tables' minted __rowid, after an
@@ -341,6 +331,10 @@ final class Col private[api] (
       if (cell == null && ignoreNa) null else func(cell, args, kwargs)
     }
 
+  /** Null-propagating per-element function application (reference `apply`,
+    * column.py:338-364, `ignore_na=True`). Typed overloads keep Spark
+    * Encoders happy; execution is a codegen'd map over the column.
+    */
   def applyStr(f: String => String): DataFrame = {
     val u = udf((s: String) => if (s == null) null else f(s))
     df.select(u(c).as(name))

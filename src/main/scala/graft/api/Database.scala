@@ -2,11 +2,12 @@ package graft.api
 
 import java.io.File
 
-import scala.util.{Failure, Success}
+import scala.util.{Failure, Success, Try}
 
 import scala.language.dynamics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Catalog + entry point — the Spark-native analogue of the reference's
   * `Database` (reference: pandasdb/connection.py:17-261).
@@ -170,23 +171,39 @@ final class Database private (
     if (failures.nonEmpty) throw new CacheWarmupError(failures)
   }
 
-  /** Drop this database's temp views and temp tables (reference `exit`,
-    * connection.py:191-228; the SparkSession itself is owned by the caller).
+  /** Row-indexed frames of this database's tables ([[Table.indexed]])
+    * under (table name, canonicalized plan), at most 64. A synchronized
+    * access-order LinkedHashMap: true LRU eviction one entry at a time, and
+    * computeIfAbsent runs under the map's mutex so concurrent callers
+    * observe ONE `indexed` frame per key (the ApiSpec `eq` invariant). Per
+    * database, so no frame outlives the file listing it was read from.
     */
+  private[api] val indexedMemo: java.util.Map[(String, LogicalPlan), DataFrame] =
+    java.util.Collections.synchronizedMap(
+      new java.util.LinkedHashMap[(String, LogicalPlan), DataFrame](64, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[(String, LogicalPlan), DataFrame]): Boolean =
+          size() > 64
+      })
+
   /** Spill the stat memo to this database's cacheDir (no-op without one).
     * Called by [[exit]]; public so long-lived sessions can checkpoint the
     * warm cache without closing. A disabled or EMPTY cache never writes —
     * otherwise a cache-off (or failed-reload) session's exit would
-    * overwrite a previous session's warm spill with nothing.
+    * overwrite a previous session's warm spill with nothing. A failed
+    * write throws.
     */
   def saveCache(): Unit =
     if (cache.enabled && cache.size > 0)
-      cacheDir.foreach(d =>
-        try cache.saveTo(spark, d, Some(sourceFp))
-        catch { case scala.util.control.NonFatal(_) => () })
+      cacheDir.foreach(cache.saveTo(spark, _, Some(sourceFp)))
 
+  /** Spill the stat memo ([[saveCache]]), then drop this database's temp
+    * views and temp tables (reference `exit`, connection.py:191-228; the
+    * SparkSession itself is owned by the caller). The drops run even when
+    * the spill fails; its error is rethrown after them.
+    */
   def exit(): Unit = {
-    saveCache()
+    val saved = Try(saveCache())
     tempTableNames.foreach { n =>
       try spark.table(n).unpersist(false) catch { case scala.util.control.NonFatal(_) => () }
       spark.catalog.dropTempView(n)
@@ -204,6 +221,7 @@ final class Database private (
     // a .sql-dump database pins the dump text in the block-manager cache;
     // exit is the reference's connection-close, so drop it here
     if (path.endsWith(".sql")) graft.sources.SqlDump.release(path)
+    saved.get
   }
 
   /** Attribute-style access sugar, the reference's `db.orders.total`
@@ -271,11 +289,13 @@ object Database {
     defs.map(_.name)
   }
 
-  /** Open every `<table>.parquet` / `<table>.csv` in `dir` as a table.
-    * Unsupported files raise FileTypeError if explicitly requested via
-    * `open(path)` on a single file (reference: connection.py:77-78).
-    */
-  /** @param cacheDir when non-null, the stat cache persists across sessions:
+  /** Open every `<table>.parquet` / `<table>.csv` in `dir` as a table, or
+    * one file: a `.parquet`, `.csv`, `.sql` dump or SQLite `.db`/`.sqlite`/
+    * `.sqlite3`. Unsupported files raise FileTypeError if explicitly
+    * requested via `open(path)` on a single file (reference:
+    * connection.py:77-78).
+    *
+    * @param cacheDir when non-null, the stat cache persists across sessions:
     *   `open` reloads any prior spill from this directory and `exit()` (or
     *   `saveCache()`) writes the current memo back — the reference's cache
     *   story (cache.py:39-92) upgraded with durability. Caps still apply on
@@ -283,8 +303,8 @@ object Database {
     *   (path + size + mtime) and discarded when they changed since it was
     *   written — stale stats are never served. The fingerprint is taken at
     *   open: data under `dir` is assumed immutable for the session's
-    *   lifetime (the same assumption every plan-keyed memo entry already
-    *   makes in-session).
+    *   lifetime (the same assumption every memo entry already makes
+    *   in-session).
     */
   def open(
       spark: SparkSession,

@@ -10,10 +10,13 @@ import org.apache.spark.util.SizeEstimator
   * reference's size-capped result cache (reference: pandasdb/cache.py:11-92;
   * defaults 2 MB per item / 100 MB total, connection.py:23-24).
   *
-  * The reference keys on the generated SQL string; the Spark-native
-  * equivalent is the *canonicalized analyzed plan*, so two differently-written
-  * but semantically identical queries share an entry
-  * (SURVEY.md §7.4 "cache keying").
+  * The reference keys on the generated SQL string, which names the table
+  * (cache.py). Here every stat entry is keyed by one rule, [[Table.memoKey]]:
+  * (table name, stat, column, [[keyOf]] of the table's plan). The
+  * canonicalized plan alone drops each relation's location — two
+  * same-schema tables print the same plan — so the table name carries the
+  * source's identity and the plan the derivation (filter, sort, ...).
+  * The key names what is memoized; no plan is built to make it.
   *
   * Where the reference simply REFUSES inserts once full (cache.py:87-91),
   * this cache evicts least-recently-used entries to make room — a long-lived
@@ -32,7 +35,7 @@ final class QueryCache(
     val maxTotalMb: Double = 100.0) {
   import QueryCache.Entry
 
-  // access-order LinkedHashMap (same shape as Table.indexedMemo): get/put
+  // access-order LinkedHashMap (same shape as Database.indexedMemo): get/put
   // bump recency, eviction pops the eldest. All access goes through the
   // map's own mutex — driver-side scalar memo, contention is negligible.
   private val store = java.util.Collections.synchronizedMap(
@@ -42,7 +45,9 @@ final class QueryCache(
   // aggregate insertion cost O(n²))
   private val storedBytes = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Canonical cache key for a DataFrame's logical plan. */
+  /** The canonicalized analyzed plan of `df`, as text: expression ids are
+    * normalized, so equal derivations print equally across sessions.
+    */
   def keyOf(df: DataFrame): String =
     df.queryExecution.analyzed.canonicalized.toString
 
@@ -97,36 +102,41 @@ final class QueryCache(
     store.entrySet().asScala.map(e => e.getKey -> e.getValue.value).toMap
   }
 
-  /** Memoize an aggregate computed from `df`, keyed on its canonical plan. */
-  def memo[T](df: DataFrame)(compute: => T): T = getOrElseUpdate(keyOf(df))(compute)
-
   // ---- cross-session durability ----------------------------------------
   // The reference's cache dies with the connection (cache.py:39-92); Spark
   // makes a durable upgrade natural: spill the driver-side memo to one tiny
-  // parquet of (plan-key, java-serialized value) rows and reload it on the
-  // next Database.open. Canonicalized plan strings normalize expression ids,
-  // so the same query over the same source paths re-derives the same key in
-  // a fresh session (asserted in Api2Spec). Values are small driver scalars
-  // (Long/Double/Row/Map) bounded by maxItemMb — the file stays O(MB).
+  // parquet of (key, java-serialized value) rows and reload it on the next
+  // Database.open. A key is the table name, stat and column plus keyOf of
+  // the table's plan, whose expression ids are normalized, so the same stat
+  // of the same table re-derives the same key in a fresh session (asserted
+  // in Api2Spec). Values are small driver results (Long/Double/Seq/Map/Row)
+  // bounded by maxItemMb — the file stays O(MB).
   //
   // Two hazards a durable cache has that the reference's never did, both
   // closed here:
-  //  * STALENESS — plan keys are path-based, so if the data at the path
+  //  * STALENESS — keys name tables, not file contents, so if the data
   //    changes between sessions the old spill would silently serve stale
   //    stats. saveTo stamps the spill with a caller-supplied fingerprint of
   //    the source files (path+mtime+size digest, see
-  //    Database.sourceFingerprint); loadFrom discards the whole spill when
-  //    the fingerprint doesn't match the current sources.
+  //    Database.sourceFingerprint) and the spill format; loadFrom discards
+  //    the whole spill when either doesn't match. The format changes with
+  //    the key rule: a spill of the earlier plan-only keys (stamped with the
+  //    bare fingerprint) would serve one table's stats for another's.
   //  * DESERIALIZATION GADGETS — a tampered/attacker-writable cacheDir must
   //    not become a code-execution vector at Database.open. loadFrom reads
   //    through an ObjectInputFilter that allow-lists only the scalar /
   //    collection / Row types the cache actually stores and rejects
   //    everything else (rejected or corrupt entries load as nothing).
 
-  /** Reserved spill row carrying the source fingerprint (plan keys are
-    * multi-line plan trees and can never equal it).
+  /** Reserved spill row carrying the stamp (keys hold NULs and can never
+    * equal it).
     */
   private val FingerprintKey = "__graft_source_fingerprint__"
+
+  /** The spill format, stamped ahead of the fingerprint. */
+  private val SpillFormat = 2
+
+  private def stamp(fingerprint: String): String = s"v$SpillFormat:$fingerprint"
 
   /** JEP-290 filter for spill deserialization: only the value shapes the
     * memo stores (boxed scalars, strings, decimals, dates, Scala
@@ -157,9 +167,9 @@ final class QueryCache(
       x
     } catch { case NonFatal(_) => null }
 
-  /** Spill the memo to `dir` (overwrites), stamped with `fingerprint` when
-    * given. Non-serializable values are skipped — they just recompute next
-    * session.
+  /** Spill the memo to `dir` (overwrites), stamped with the spill format
+    * and `fingerprint` when given. Non-serializable values are skipped —
+    * they just recompute next session.
     */
   def saveTo(spark: org.apache.spark.sql.SparkSession, dir: String,
       fingerprint: Option[String] = None): Unit = {
@@ -168,7 +178,7 @@ final class QueryCache(
       store.entrySet().asScala.map(e => (e.getKey, e.getValue.value)).toVector
     }
     val rows = entries.flatMap { case (k, v) => serialize(v).map(b => (k, b)) } ++
-      fingerprint.map(fp => (FingerprintKey, fp.getBytes("UTF-8")))
+      fingerprint.map(fp => (FingerprintKey, stamp(fp).getBytes("UTF-8")))
     // driver-sized by the caps (<= maxTotalMb): one file, no shuffle
     rows.toDF("key", "value").coalesce(1).write.mode("overwrite").parquet(dir)
   }
@@ -176,10 +186,11 @@ final class QueryCache(
   /** Reload a [[saveTo]] spill, re-applying the size caps (a spill written
     * under looser caps cannot overfill a tighter cache). Missing/unreadable
     * dirs are a no-op — a cold start, not an error — and so is a spill whose
-    * stamped fingerprint doesn't match `expectFingerprint` (the source data
-    * changed since the spill was written: stale stats must not be served).
-    * When `expectFingerprint` is given, an UNSTAMPED spill is also
-    * discarded — absence of provenance is treated as staleness, not trust.
+    * stamp doesn't match `expectFingerprint` and this spill format (the
+    * source data changed since the spill was written, or its keys follow
+    * another rule: stale stats must not be served). When
+    * `expectFingerprint` is given, an UNSTAMPED spill is also discarded —
+    * absence of provenance is treated as staleness, not trust.
     * Returns entries loaded.
     */
   def loadFrom(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -196,7 +207,7 @@ final class QueryCache(
       val stamped = byKey.collectFirst {
         case (FingerprintKey, b) => new String(b, "UTF-8")
       }
-      if (!stamped.contains(want)) return 0
+      if (!stamped.contains(stamp(want))) return 0
     }
     var n = 0
     byKey.foreach { case (key, bytes) =>

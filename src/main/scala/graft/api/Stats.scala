@@ -7,16 +7,15 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
 
 import graft.ops.StatsOps.QuantileRanks
 
-/** Per-column stats: the plan each one is memoized under, and the fused
-  * passes that compute many of them at once (reference: cache.py:94-125
-  * warms them one query at a time).
+/** Per-column stats: the memo key of each one, and the fused passes that
+  * compute many of them at once (reference: cache.py:94-125 warms them one
+  * query at a time).
   *
   * The distributive and algebraic stats (len, count, nullCount, min, max,
   * sum, avg) of any number of columns come from ONE aggregate over the
@@ -31,54 +30,26 @@ import graft.ops.StatsOps.QuantileRanks
   */
 private[api] object Stats {
 
-  /** The plan each stat is memoized under — one definition, read by the
-    * [[Col]] getter and by the fused passes, so the two cannot drift.
-    * Where a plan is also the getter's query, the getter runs it.
-    */
-  object plan {
-    def len(df: DataFrame): DataFrame = df.select(lit(1))
-    def count(df: DataFrame, n: String): DataFrame =
-      df.select(col(n)).agg(F.count(col(n)))
-    def nullCount(df: DataFrame, n: String): DataFrame =
-      df.filter(col(n).isNull).select(col(n))
-    def min(df: DataFrame, n: String): DataFrame = df.agg(F.min(col(n)))
-    def max(df: DataFrame, n: String): DataFrame = df.agg(F.max(col(n)))
-    def sum(df: DataFrame, n: String): DataFrame = df.agg(sumAgg(col(n)))
-    def avg(df: DataFrame, n: String): DataFrame = df.agg(avgAgg(col(n)))
-    def median(df: DataFrame, n: String): DataFrame =
-      df.agg(F.median(col(n).cast(DoubleType)))
-    def mode(df: DataFrame, n: String): DataFrame =
-      df.select(col(n)).groupBy(col(n)).count()
-    def unique(df: DataFrame, n: String): DataFrame = df.select(col(n)).distinct()
-    def valueCounts(df: DataFrame, n: String): DataFrame =
-      df.filter(col(n).isNotNull).groupBy(col(n)).agg(F.count(lit(1)).as("count"))
-        .orderBy(desc("count"), asc(n))
-  }
+  def sumAgg(c: Column): Column = F.sum(c.cast(DoubleType))
+  def avgAgg(c: Column): Column = F.avg(c.cast(DoubleType))
 
-  private def sumAgg(c: Column): Column = F.sum(c.cast(DoubleType))
-  private def avgAgg(c: Column): Column = F.avg(c.cast(DoubleType))
-
-  /** The memo keys of one column's stats. Building one analyzes the
-    * column's aggregate plans, so a type a stat cannot take (the min of a
-    * map) fails here, before any job runs.
+  /** The memo keys of one column's stats ([[Table.memoKey]]) — one
+    * definition, read by the [[Col]] getters and by the fused passes, so
+    * the two cannot drift. Building one runs no analysis.
     */
   final class Keys(t: Table, val name: String) {
-    private val df = t.toDf
-    private def key(p: DataFrame): String = t.cache.keyOf(p)
-    val numeric: Boolean = df.schema(name).dataType.isInstanceOf[NumericType]
-    val count: String = key(plan.count(df, name))
-    val nullCount: String = key(plan.nullCount(df, name))
-    val min: String = key(plan.min(df, name))
-    val max: String = key(plan.max(df, name))
-    val sum: Option[String] = if (numeric) Some(key(plan.sum(df, name))) else None
-    private val avgPlan = if (numeric) Some(plan.avg(df, name)) else None
-    val avg: Option[String] = avgPlan.map(key)
-    // avg memoizes the whole result Row of its plan, schema included
-    lazy val avgSchema: StructType = avgPlan.get.schema
-    lazy val median: String = key(plan.median(df, name))
-    lazy val mode: String = key(plan.mode(df, name))
-    lazy val unique: String = key(plan.unique(df, name))
-    lazy val valueCounts: String = key(plan.valueCounts(df, name))
+    private def key(stat: String): String = t.memoKey(stat, name)
+    val numeric: Boolean = t.toDf.schema(name).dataType.isInstanceOf[NumericType]
+    val count: String = key("count")
+    val nullCount: String = key("nullCount")
+    val min: String = key("min")
+    val max: String = key("max")
+    val sum: String = key("sum")
+    val avg: String = key("avg")
+    val median: String = key("median")
+    val mode: String = key("mode")
+    val unique: String = key("unique")
+    val valueCounts: String = key("valueCounts")
     def holistic: Seq[String] =
       Seq(mode, unique, valueCounts) ++ (if (numeric) Seq(median) else Nil)
     /** This column's share of the fused aggregate, in [[seedFrom]]'s order. */
@@ -95,16 +66,14 @@ private[api] object Stats {
     */
   def aggregate(t: Table, cols: Seq[Keys]): Long = {
     val cache = t.cache
-    val df = t.toDf
-    val lenKey = cache.keyOf(plan.len(df))
     val todo = cols.filterNot(aggregated(cache, _))
-    cache.peek(lenKey) match {
+    cache.peek(t.lenKey) match {
       case Some(n: Long) if todo.isEmpty => n
       case _ =>
         val aggs = F.count(lit(1)) +: todo.flatMap(_.aggregates)
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
+        val row = t.toDf.agg(aggs.head, aggs.tail: _*).head()
         val n = row.getLong(0)
-        seed(cache, lenKey, n)
+        seed(cache, t.lenKey, n)
         todo.foldLeft(1) { (at, k) => seedFrom(cache, k, row, at, n); at + k.aggregates.length }
         n
     }
@@ -116,7 +85,8 @@ private[api] object Stats {
       case Some(count: Long) =>
         // min and max are null, and so never memoized, exactly when count is 0
         val minMax = if (count == 0) Nil else Seq(k.min, k.max)
-        (Seq(k.nullCount) ++ minMax ++ k.sum ++ k.avg).forall(cache.contains)
+        val sumAvg = if (k.numeric) Seq(k.sum, k.avg) else Nil
+        (Seq(k.nullCount) ++ minMax ++ sumAvg).forall(cache.contains)
       case _ => false
     }
 
@@ -127,8 +97,10 @@ private[api] object Stats {
     seed(cache, k.nullCount, len - count)
     seed(cache, k.min, row.get(at + 1))
     seed(cache, k.max, row.get(at + 2))
-    k.sum.foreach(seed(cache, _, if (row.isNullAt(at + 3)) 0.0 else row.getDouble(at + 3)))
-    k.avg.foreach(seed(cache, _, new GenericRowWithSchema(Array(row.get(at + 4)), k.avgSchema)))
+    if (k.numeric) {
+      seed(cache, k.sum, if (row.isNullAt(at + 3)) 0.0 else row.getDouble(at + 3))
+      seed(cache, k.avg, if (row.isNullAt(at + 4)) Double.NaN else row.getDouble(at + 4))
+    }
   }
 
   // insert unless present; like a getter, a null is not memoized
@@ -194,7 +166,11 @@ private[api] object Stats {
     * failures by column; None is the table's aggregate.
     */
   def warm(t: Table, distinctStatMaxRows: Long): Seq[(Option[String], Throwable)] = {
-    val built = t.columns.map(n => n -> Try(new Keys(t, n)))
+    // one analysis per column: a type a stat cannot take (the min of a
+    // map) fails here, named, before any job runs
+    val built = t.columns.map { n =>
+      n -> Try { val k = new Keys(t, n); t.toDf.select(k.aggregates: _*); k }
+    }
     val failed = built.collect { case (n, Failure(e)) => (Some(n), e) }
     val keys = built.collect { case (_, Success(k)) => k }
     val len =

@@ -1,5 +1,7 @@
 package graft.api
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -48,7 +50,25 @@ final class Table private[api] (
   /** Row count, memoized like the reference's cached COUNT(*)
     * (table.py:155-160) and its iloc length cache (table.py:21-22).
     */
-  def len: Long = cache.memo(Stats.plan.len(df))(df.count())
+  def len: Long = cache.getOrElseUpdate(lenKey)(df.count())
+
+  // ---- memo keys ---------------------------------------------------------
+
+  /** The key of every stat memo entry: this table's name, the stat, its
+    * column ("" for the whole table) and [[QueryCache.keyOf]] of this
+    * table's own, already-analyzed plan. The name carries the source's
+    * identity, which the canonicalized plan drops (same-schema tables
+    * print the same plan); the plan carries the derivation (filter, sort,
+    * ...). No plan is built to make a key. NUL, which no file or table
+    * name holds, separates the parts. The row-index memo ([[indexed]])
+    * pairs the same name with the plan object itself.
+    */
+  private[api] def memoKey(stat: String, column: String = ""): String =
+    s"$name\u0000$stat\u0000$column\u0000$planKey"
+
+  private lazy val planKey: String = cache.keyOf(df)
+
+  private[api] def lenKey: String = memoKey("len")
 
   def shape: (Long, Int) = (len, columns.length)
 
@@ -125,12 +145,15 @@ final class Table private[api] (
     * without a single-partition window.
     */
   private[api] lazy val indexed: DataFrame = {
-    // memoized on the canonicalized plan, not per Table instance: positional
-    // sessions re-derive equal-plan tables constantly (db.t.iloc(0),
-    // db.t.iloc(1), ... each mints a new Table) and would re-run
-    // zipWithIndex for each without the shared memo
-    val key = (spark, df.queryExecution.analyzed.canonicalized)
-    Table.indexedMemo.computeIfAbsent(key, { _ =>
+    // memoized per Database under (name, canonicalized plan), not per
+    // Table instance: positional sessions re-derive equal-plan tables
+    // constantly (db.t.iloc(0), db.t.iloc(1), ... each mints a new Table)
+    // and would re-run zipWithIndex for each without the shared memo. The
+    // plan object, not its string: a ScalaUDF prints without its function
+    // but compares it by reference, so tables mapped by different UDFs
+    // keep apart (these entries never spill, so need no string)
+    val key = (name, df.queryExecution.analyzed.canonicalized)
+    db.indexedMemo.computeIfAbsent(key, { _ =>
       val schema = df.schema.add(ROWID, LongType, nullable = false)
       val rdd = df.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
       spark.createDataFrame(rdd, schema)
@@ -337,27 +360,7 @@ final class Table private[api] (
 
   def head(n: Int = 5): Seq[Row] = this.limit(n).toDf.collect().toSeq
 
-  /** First/last `n` rows rendered compactly — the reference's repr fetches
-    * only head+tail via iloc instead of a full scan (table.py:445-468).
-    */
-  def reprString(n: Int = 10): String = {
-    val total = len
-    val half = n / 2
-    val head = this.limit(half).toDf.collect()
-    val tail: Seq[Row] =
-      if (total <= n) Seq.empty
-      else iloc(total - half, total)
-    val shown: Seq[Seq[Any]] = head.map(_.toSeq).toSeq ++
-      (if (tail.isEmpty) Nil else Seq(Seq("..."))) ++ tail.map(_.toSeq)
-    val header = columns.mkString(" | ")
-    s"$header\n" + shown.map(_.mkString(" | ")).mkString("\n") +
-      s"\n[$total rows x ${columns.length} cols]"
-  }
-
-  def iterator: Iterator[Row] = {
-    val it = df.toLocalIterator()
-    new Iterator[Row] { def hasNext = it.hasNext; def next() = it.next() }
-  }
+  def iterator: Iterator[Row] = df.toLocalIterator().asScala
 }
 
 /** Result of Table.groupBy: aggregate with (column -> function) pairs.
@@ -397,24 +400,4 @@ final class GroupedTable private[api] (parent: Table, keys: Seq[String]) {
 
 object Table {
   private[api] val ROWID = "__rowid"
-
-  private[api] val indexedMemoMax = 64
-
-  /** (session, canonicalized plan) → row-indexed DataFrame. A synchronized
-    * access-order LinkedHashMap: true LRU eviction one entry at a time (a
-    * wholesale clear() at the cap meant a thundering rebuild of every live
-    * memoized plan), and computeIfAbsent runs under the map's mutex so
-    * concurrent callers observe ONE `indexed` frame per plan (the ApiSpec
-    * `eq` invariant). Entries of a closed session simply age out.
-    */
-  private[api] val indexedMemo: java.util.Map[
-      (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame] =
-    java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[
-          (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame](
-          indexedMemoMax, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame]): Boolean =
-          size() > indexedMemoMax
-      })
 }
