@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Regenerate the binary SQLite test fixtures under src/test/resources/.
 
-Two files, both committed (small, deterministic):
+Every file is committed (small, deterministic). Among them:
 
 - forestation_subset.db: the byte-for-byte SQLite twin of
   forestation_subset.sql (executescript of the dump). SqliteFileSpec
@@ -14,6 +14,9 @@ Two files, both committed (small, deterministic):
   unicode + empty text, blobs (empty / binary / all-256-bytes), a ~60 KB
   text payload that spills across an overflow-page chain, and enough rows
   (5000) to force interior b-tree pages at 512-byte page size.
+
+The rest pin one reader feature or fail-loud path each (see each gen_*
+function's comments).
 
 Run from the repo root: python3 scripts/gen_sqlite_fixtures.py
 """
@@ -339,6 +342,34 @@ def gen_unsupported():
     print(f"wrote {p4} ({os.path.getsize(p4)} bytes)")
 
 
+def gen_scan_cases():
+    """Tables whose failure or emptiness only a scan can see."""
+    # misfit: INTEGER affinity cannot convert 'not a number', so SQLite
+    # stores it as TEXT in an INTEGER column; the reader refuses the value
+    # when a scan reaches it, and opening the file still succeeds
+    p5 = os.path.join(RES, "sqlite_misfit.db")
+    if os.path.exists(p5):
+        os.remove(p5)
+    con = sqlite3.connect(p5)
+    con.execute("CREATE TABLE t(n INTEGER)")
+    con.executemany("INSERT INTO t VALUES (?)", [(1,), ("not a number",)])
+    con.commit()
+    con.close()
+    print(f"wrote {p5} ({os.path.getsize(p5)} bytes)")
+    # an empty table beside a non-empty one: ingest must still write the
+    # empty table's schema
+    p6 = os.path.join(RES, "sqlite_empty.db")
+    if os.path.exists(p6):
+        os.remove(p6)
+    con = sqlite3.connect(p6)
+    con.execute("CREATE TABLE empty(id INTEGER PRIMARY KEY, s TEXT, r REAL)")
+    con.execute("CREATE TABLE one(x INTEGER)")
+    con.execute("INSERT INTO one VALUES (42)")
+    con.commit()
+    con.close()
+    print(f"wrote {p6} ({os.path.getsize(p6)} bytes)")
+
+
 if __name__ == "__main__":
     gen_forestation()
     gen_edge_cases()
@@ -347,3 +378,4 @@ if __name__ == "__main__":
     gen_utf16()
     gen_views()
     gen_unsupported()
+    gen_scan_cases()

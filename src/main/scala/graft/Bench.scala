@@ -468,10 +468,18 @@ object Bench {
     val ran = rerun.map(_._1).toSet
     val allSkipped = skippedSuspects ++
       suspects.map(_._1).filterNot(ran)
-    writeBenchLast(fullJson(rerun, allSkipped))
-    println(fullJson(rerun, allSkipped))
-    println(headlineLine(rerun, allSkipped, provisional = false))
-    System.out.flush()
+    val json = fullJson(rerun, allSkipped)
+    val finalLine = headlineLine(rerun, allSkipped, provisional = false)
+    writeBenchLast(json)
+    // Stop the streaming state-store maintenance and Spark BEFORE the final
+    // print: a maintenance thread that outlives spark.stop() prints an
+    // RpcEnvStoppedException trace, and one that lands after the headline
+    // leaves the record unparseable.
+    spark.streams.active.foreach(_.stop())
+    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
     spark.stop()
+    println(json)
+    println(finalLine)
+    System.out.flush()
   }
 }

@@ -203,9 +203,9 @@ final class Col private[api] (
       step: Long = 1): Seq[Any] = view.ilocSlice(start, stop, step).map(_.get(0))
   def sortValues(ascending: Boolean = true): Table =
     new Table(table.db, colDf.orderBy(if (ascending) asc(name) else desc(name)),
-      table.name, cache, ordered = true)
+      table.name, ordered = true)
   def limit(n: Int): Table = view.limit(n)
-  def notNullView: Table = new Table(table.db, df.filter(c.isNotNull).select(c), table.name, cache)
+  def notNullView: Table = new Table(table.db, df.filter(c.isNotNull).select(c), table.name)
 
   // ---- materialization (reference §2.1 S7-S9) --------------------------
 

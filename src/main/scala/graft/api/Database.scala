@@ -40,7 +40,7 @@ final class Database private (
 
   def table(tableName: String): Table =
     tableMap.get(tableName) match {
-      case Some(df) => new Table(this, df, tableName, cache)
+      case Some(df) => new Table(this, df, tableName)
       case None => throw new InvalidTableError(
         s"table '$tableName' does not exist; available: ${tables.mkString(", ")}")
     }
@@ -295,6 +295,13 @@ object Database {
     * requested via `open(path)` on a single file (reference:
     * connection.py:77-78).
     *
+    * A SQLite file's tables are lazy `graft-sqlite` scans, like parquet
+    * and csv: no row is decoded on the driver. Opening still fails loud
+    * with FileTypeError on what the file's header and schema show (not a
+    * SQLite file, a hot `-journal`, pending `-wal` frames, a virtual
+    * table), but a stored value that does not fit its declared column
+    * type fails at the first action that scans it.
+    *
     * @param cacheDir when non-null, the stat cache persists across sessions:
     *   `open` reloads any prior spill from this directory and `exit()` (or
     *   `saveCache()`) writes the current memo back — the reference's cache
@@ -325,29 +332,26 @@ object Database {
       throw new FileTypeError(
         s"unsupported file type '$dir' — expected .parquet, .csv, .sql, " +
           ".db, .sqlite or .sqlite3")
+    // a one-file database: its tables as temp views, then the file's views
+    def fileTables(tm: Map[String, DataFrame],
+        views: => Seq[graft.sources.SqlDump.ViewDef]) = {
+      tm.foreach { case (n, df) => df.createOrReplaceTempView(n) }
+      (tm, registerFileViews(spark, tm.keySet, views), Seq(target))
+    }
     // (tables, views the file defines, source files to fingerprint)
     val (tableMap, fileViews, sources) =
       if (target.isFile && dir.endsWith(".sql")) {
         // .sql dumps are the reference's native input (connection.py:64-78,
         // utils.py:242-265) — replayed here by graft.sources.SqlDump
         // instead of SQLite
-        val tm = graft.sources.SqlDump.open(spark, dir)
-        tm.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-        (tm, registerFileViews(spark, tm.keySet,
-          graft.sources.SqlDump.viewDefs(spark, dir)), Seq(target))
+        fileTables(graft.sources.SqlDump.open(spark, dir),
+          graft.sources.SqlDump.viewDefs(spark, dir))
       } else if (target.isFile && isSqlite) {
-        // JDBC route when a sqlite-jdbc jar happens to be on the classpath
-        // (it streams table scans); otherwise graft's own pure-JVM reader
-        // parses the b-tree pages directly — the reference's direct-.db
-        // open (connection.py:64-78) with zero added dependencies either way
-        val jdbc = graft.sources.SqliteJdbc.driverAvailable
-        val tm =
-          if (jdbc) graft.sources.SqliteJdbc.open(spark, dir)
-          else graft.sources.SqliteFile.open(spark, dir)
-        tm.foreach { case (n, df) => df.createOrReplaceTempView(n) }
-        (tm, registerFileViews(spark, tm.keySet,
-          if (jdbc) graft.sources.SqliteJdbc.views(dir)
-          else graft.sources.SqliteFile.views(dir)), Seq(target))
+        // the reference's direct-.db open (connection.py:64-78): every
+        // table is a lazy graft-sqlite scan, decoded inside its scan task
+        fileTables(graft.sources.SqliteFile.tableNames(dir).map { n =>
+          n -> spark.read.format("graft-sqlite").option("table", n).load(dir)
+        }.toMap, graft.sources.SqliteFile.views(dir))
       } else {
         val files =
           if (target.isFile) Array(target)

@@ -221,6 +221,9 @@ final class QueryCache(
 }
 
 object QueryCache {
+  /** A memo that memoizes nothing: every stat computes afresh. */
+  private[api] val Off = new QueryCache(enabled = false)
+
   // top-level so the pattern-match type test needs no outer-instance check
   private[api] final case class Entry(value: Any, bytes: Long)
 }

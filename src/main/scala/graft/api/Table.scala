@@ -3,13 +3,14 @@ package graft.api
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Handle on a (possibly derived) table — the Spark-native analogue of the
   * reference's `Table`/`TableView` (reference: pandasdb/table.py:109-541).
   *
-  * A `Table` stores only `(db, plan, name, cache)` — never data — exactly like
+  * A `Table` stores only `(db, plan, name)` — never data — exactly like
   * the reference stores `(conn, name, cache)` (table.py:113-127). Derived
   * tables (filter/sort/limit/slice) are new lazy DataFrames, which is what the
   * reference fakes with SQLite TEMP VIEWs (table.py:498-541): in Spark the
@@ -25,7 +26,6 @@ final class Table private[api] (
     private[api] val db: Database,
     private val df: DataFrame,
     val name: String,
-    private[api] val cache: QueryCache,
     private val ordered: Boolean = false) {
 
   import Table.ROWID
@@ -66,7 +66,19 @@ final class Table private[api] (
   private[api] def memoKey(stat: String, column: String = ""): String =
     s"$name\u0000$stat\u0000$column\u0000$planKey"
 
-  private lazy val planKey: String = cache.keyOf(df)
+  private lazy val planKey: String = db.cache.keyOf(df)
+
+  /** The stat memo: the Database's, or none for a table whose plan holds
+    * a Scala UDF. A ScalaUDF prints as `UDF(...)` without its function,
+    * so [[planKey]] cannot tell `t.applymapStr(f)` from `t.applymapStr(g)`;
+    * such a table computes every stat afresh and never spills one.
+    */
+  private[api] lazy val cache: QueryCache = {
+    val withUdf = df.queryExecution.analyzed.collectWithSubqueries {
+      case p if p.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => p
+    }
+    if (withUdf.isEmpty) db.cache else QueryCache.Off
+  }
 
   private[api] def lenKey: String = memoKey("len")
 
@@ -79,7 +91,7 @@ final class Table private[api] (
     if (missing.nonEmpty)
       throw new InvalidColumnError(
         s"columns ${missing.mkString("[", ", ", "]")} do not exist in table '$name'")
-    new Table(db, df.select(cols.map(functionsCol): _*), name, cache, ordered)
+    new Table(db, df.select(cols.map(functionsCol): _*), name, ordered)
   }
   private def functionsCol(s: String): Column = org.apache.spark.sql.functions.col(s)
 
@@ -89,7 +101,7 @@ final class Table private[api] (
     if (e.table != name)
       throw new ExpressionError(
         s"expression belongs to table '${e.table}', not '$name'")
-    new Table(db, df.filter(e.cond), name, cache, ordered)
+    new Table(db, df.filter(e.cond), name, ordered)
   }
 
   // ---- sort / limit / sample (reference §2.5) --------------------------
@@ -107,7 +119,7 @@ final class Table private[api] (
     val sortCols = spec.map { case (cn, asc0) =>
       if (asc0) asc_nulls_first(cn) else desc_nulls_last(cn)
     }
-    new Table(db, df.orderBy(sortCols: _*), name, cache, ordered = true)
+    new Table(db, df.orderBy(sortCols: _*), name, ordered = true)
   }
   def sortValues(colName: String, ascending: Boolean = true): Table =
     sortValues(Seq(colName -> ascending))
@@ -118,7 +130,7 @@ final class Table private[api] (
     * base table it is a per-partition-prefix scan via the minted row index.
     */
   def limit(n: Int): Table =
-    if (ordered) new Table(db, df.limit(n), name, cache, ordered)
+    if (ordered) new Table(db, df.limit(n), name, ordered)
     else {
       // base-order head-n without minting the row index:
       // monotonically_increasing_id is (partitionId << 33) + offset, whose
@@ -127,7 +139,7 @@ final class Table private[api] (
       val mid = monotonically_increasing_id()
       new Table(db,
         df.withColumn(ROWID, mid).orderBy(ROWID).limit(n).drop(ROWID),
-        name, cache, ordered)
+        name, ordered)
     }
 
   /** Exactly-n random sample without replacement (reference: table.py:195-203
@@ -135,7 +147,7 @@ final class Table private[api] (
     * SURVEY.md §4.3.6). Distributed top-k on a random key: no full sort.
     */
   def sample(n: Int, seed: Long = scala.util.Random.nextLong()): Table =
-    new Table(db, df.orderBy(rand(seed)).limit(n), name, cache)
+    new Table(db, df.orderBy(rand(seed)).limit(n), name)
 
   // ---- positional access (reference §2.5 O5-O7, IndexLoc table.py:19-106) --
 
@@ -242,7 +254,7 @@ final class Table private[api] (
       if (fld.dataType == StringType && fld.name != ROWID) u(functionsCol(fld.name)).as(fld.name)
       else functionsCol(fld.name)
     }
-    new Table(db, df.select(cols.toSeq: _*), name, cache, ordered)
+    new Table(db, df.select(cols.toSeq: _*), name, ordered)
   }
 
   /** Apply a numeric function to every numeric cell (the non-string half of
@@ -262,7 +274,7 @@ final class Table private[api] (
         u(functionsCol(fld.name).cast(DoubleType)).as(fld.name)
       else functionsCol(fld.name)
     }
-    new Table(db, df.select(cols.toSeq: _*), name, cache, ordered)
+    new Table(db, df.select(cols.toSeq: _*), name, ordered)
   }
 
   // ---- group-by (the reference's own unchecked TODO, README.md:643;
@@ -394,7 +406,7 @@ final class GroupedTable private[api] (parent: Table, keys: Seq[String]) {
     new Table(parent.db,
       df.groupBy(keys.map(org.apache.spark.sql.functions.col): _*)
         .agg(aggCols.head, aggCols.tail: _*),
-      parent.name, parent.cache)
+      parent.name)
   }
 }
 

@@ -13,10 +13,7 @@ import graft.api.FileTypeError
   * native library, no dependency: the on-disk format is public and frozen
   * (sqlite.org/fileformat2.html), so the `.db`/`.sqlite`/`.sqlite3` files
   * the reference opens directly (reference: connection.py:64-78) open here
-  * by parsing the b-tree pages themselves. This replaces the fail-loud
-  * FileTypeError path that previous rounds shipped when no sqlite-jdbc jar
-  * was present; [[SqliteJdbc]] remains the preferred route WHEN a driver
-  * jar is on the classpath (it streams instead of materializing).
+  * by parsing the b-tree pages themselves.
   *
   * Scope (fail-loud beyond it, never silently wrong):
   *  - ordinary rowid tables: table b-trees (leaf 0x0d / interior 0x05),
@@ -31,68 +28,41 @@ import graft.api.FileTypeError
   *    journals, and virtual tables raise FileTypeError with the
   *    `.dump` workaround.
   *
-  * Scale note, same as [[SqlDump]]/[[SqliteJdbc]]: a SQLite file is an
-  * inherently single-reader, single-node artifact. Rows are decoded
-  * driver-side page-by-page (bounded memory per page; the file itself is
-  * never loaded whole). [[open]] hands them to Spark as local relations
-  * and REFUSES files past `maxOpenBytes` (the decoded rows, not the
-  * decode, are what would OOM the driver); past the guard, [[ingest]]
-  * streams each table to parquet in bounded row batches — ingest-once as
-  * an operation, not advice. Schema mapping reuses [[SqlDump.parseDdl]] on the CREATE
-  * statements stored in `sqlite_master`, so a `.db` and its `.dump` twin
-  * open with IDENTICAL schemas (hash-compared in SqliteFileSpec) — except
-  * BLOB columns, which the binary reader can represent faithfully as
+  * Every table is read through ONE entry, [[streamTable]], which the
+  * `graft-sqlite` DSv2 connector ([[graft.sources.sqlitev2.SqliteDataSource]])
+  * pulls inside its scan task: rows decode page-by-page executor-side
+  * (bounded memory per page; the file is never loaded whole), so no row
+  * is ever held on the driver and no file is too large to open.
+  * [[graft.api.Database.open]] and [[ingest]] both read through that scan.
+  * Schema mapping reuses [[SqlDump.parseDdl]] on the CREATE statements
+  * stored in `sqlite_master`, so a `.db` and its `.dump` twin open with
+  * IDENTICAL schemas (hash-compared in SqliteFileSpec) — except BLOB
+  * columns, which the binary reader can represent faithfully as
   * BinaryType where a textual dump cannot.
   */
 object SqliteFile {
 
-  /** Above this file size, [[open]] refuses to materialize driver-side
-    * local relations and directs the caller to [[ingest]] — decoded rows
-    * for a multi-GB file would OOM the driver long before the
-    * "ingest-once to parquet" advice in the scaladoc could apply.
-    * Overridable per call; 256 MB keeps every plausible fixture/config
-    * database under the fast path.
-    */
-  val DefaultMaxOpenBytes: Long = 256L << 20
-
-  def open(spark: SparkSession, path: String,
-      maxOpenBytes: Long = DefaultMaxOpenBytes): Map[String, DataFrame] = {
-    val fileLen = new java.io.File(path).length()
-    if (fileLen > maxOpenBytes)
-      throw new FileTypeError(
-        s"'$path' is $fileLen bytes (> $maxOpenBytes): opening would " +
-          "materialize every row on the driver. Ingest it to parquet " +
-          "instead — graft.sources.SqliteFile.ingest(spark, path, outDir) " +
-          "streams the decode in bounded row batches and returns " +
-          "parquet-backed DataFrames (or raise maxOpenBytes explicitly " +
-          "if the driver heap really has room).")
-    openUnchecked(spark, path)
-  }
-
-  /** Streaming access to ONE table for the `graft-sqlite` DSv2 connector
-    * ([[graft.sources.sqlitev2.SqliteDataSource]]): (schema, lazy row
-    * iterator, closer). Unlike [[open]], nothing is materialized — the
-    * connector pulls this iterator EXECUTOR-side, so file size bounds
-    * nothing but the scan's wall-clock (no driver guard needed). The
-    * caller owns the closer and must invoke it after consuming (or
-    * abandoning) the iterator.
+  /** Streaming access to ONE table for the `graft-sqlite` connector:
+    * (schema, lazy row iterator, closer). Only the named table's DDL is
+    * validated, so a virtual or unparseable table elsewhere in the file
+    * does not break this one. The caller owns the closer and must invoke
+    * it after consuming (or abandoning) the iterator.
     */
   private[sources] def streamTable(path: String, table: String)
-      : (org.apache.spark.sql.types.StructType, Iterator[Row], () => Unit) = {
+      : (StructType, Iterator[Row], () => Unit) = {
     val db = new Reader(path)
-    val found = try {
-      tableIterators(db, path, only = Some(table)).headOption.getOrElse(
-        // name listing only — never validates (or decodes) other tables
-        throw new FileTypeError(
+    try {
+      val (_, rootPage, createSql) = db.masterTables().find(_._1 == table)
+        .getOrElse(throw new FileTypeError( // name listing only, nothing decoded
           s"table '$table' not found in '$path' — available: " +
             db.masterTables().map(_._1).sorted.mkString(", ")))
+      val (schema, rows) = decodeTable(db, path, table, rootPage, createSql)
+      (schema, rows, () => db.close())
     } catch { case e: Throwable => db.close(); throw e }
-    (found._2, found._3, () => db.close())
   }
 
   /** Schema of one table, decoded from the file's DDL (no rows read). */
-  private[sources] def tableSchema(path: String, table: String)
-      : org.apache.spark.sql.types.StructType = {
+  private[sources] def tableSchema(path: String, table: String): StructType = {
     val (schema, _, close) = streamTable(path, table)
     close()
     schema
@@ -100,40 +70,24 @@ object SqliteFile {
 
   /** Names of every user table in the file, in sqlite_master order —
     * schema-page listing only, no per-table validation or decoding (a
-    * virtual table IS listed here; it fails loud on read). Backs the
-    * `graft-sqlite` catalog's `SHOW TABLES`.
+    * virtual table IS listed here; it fails loud when its scan is built).
+    * Backs [[graft.api.Database.open]] and the `graft-sqlite` catalog's
+    * `SHOW TABLES`.
     */
-  private[sources] def tableNames(path: String): Seq[String] = {
+  private[graft] def tableNames(path: String): Seq[String] = {
     val db = new Reader(path)
     try db.masterTables().map(_._1) finally db.close()
   }
 
-  private def openUnchecked(spark: SparkSession, path: String):
-      Map[String, DataFrame] = {
-    val db = new Reader(path)
-    try {
-      import scala.jdk.CollectionConverters._
-      tableIterators(db, path).map { case (name, schema, rowIt) =>
-        name -> spark.createDataFrame(rowIt.toSeq.asJava, schema)
-      }.toMap
-    } finally db.close()
-  }
-
-  /** Ingest-once made real: decode each table STREAMING — `batchRows`
-    * rows on the driver at a time, each batch appended to
-    * `outDir/<table>/` as parquet — and return parquet-backed
-    * DataFrames. This is the path for `.db` files past [[open]]'s
-    * size guard: driver memory is bounded by one batch regardless of
-    * file size (the page decoder underneath was always incremental;
-    * this stops the driver from holding the DECODED rows whole).
-    * Any prior ingest of the same table dir is replaced.
+  /** Ingest-once: write every table to `outDir/<table>/` as parquet
+    * through the `graft-sqlite` scan (one write per table, decoded
+    * executor-side) and return parquet-backed DataFrames. Any prior
+    * ingest of the same table dir is replaced.
     */
-  def ingest(spark: SparkSession, path: String, outDir: String,
-      batchRows: Int = 500000): Map[String, DataFrame] = {
-    require(batchRows > 0, s"batchRows must be positive, got $batchRows")
-    // Crash safety (the graft.ops.Layout convention): batches land in a
-    // dot-prefixed scratch dir — invisible to Spark's file index — and
-    // the finished table swaps in with rename-aside ATOMIC_MOVEs, so a
+  def ingest(spark: SparkSession, path: String, outDir: String): Map[String, DataFrame] = {
+    // Crash safety (the graft.ops.Layout convention): a table is written
+    // to a dot-prefixed scratch dir — invisible to Spark's file index —
+    // and the finished table swaps in with rename-aside ATOMIC_MOVEs, so a
     // kill mid-ingest can never leave a partial table readable as
     // complete. The pre-existing table survives every crash window
     // except the instant between its aside-move and the scratch move-in
@@ -141,138 +95,120 @@ object SqliteFile {
     // copy). Stale scratch/aside dirs from a crashed run are cleaned on
     // the next ingest.
     import java.nio.file.{Files, StandardCopyOption}
-    val db = new Reader(path)
-    try {
-      import scala.jdk.CollectionConverters._
-      val base = outDir.stripSuffix("/")
-      tableIterators(db, path).map { case (name, schema, rowIt) =>
-        val finalDir = new java.io.File(s"$base/$name")
-        val scratch = new java.io.File(s"$base/.__ingesting__$name")
-        val aside = new java.io.File(s"$base/.__old__$name")
-        graft.ops.Layout.deleteRecursively(scratch)
-        graft.ops.Layout.deleteRecursively(aside)
-        var wrote = false
-        rowIt.grouped(batchRows).foreach { chunk =>
-          spark.createDataFrame(chunk.asJava, schema)
-            .write.mode("append").parquet(scratch.getAbsolutePath)
-          wrote = true
-        }
-        if (!wrote) // empty table still lands with its schema
-          spark.createDataFrame(
-            java.util.Collections.emptyList[Row](), schema)
-            .write.mode("overwrite").parquet(scratch.getAbsolutePath)
-        if (finalDir.exists()) {
-          Files.move(finalDir.toPath, aside.toPath,
-            StandardCopyOption.ATOMIC_MOVE)
-          try Files.move(scratch.toPath, finalDir.toPath,
-            StandardCopyOption.ATOMIC_MOVE)
-          catch {
-            case e: Throwable =>
-              Files.move(aside.toPath, finalDir.toPath,
-                StandardCopyOption.ATOMIC_MOVE)
-              throw e
-          }
-          graft.ops.Layout.deleteRecursively(aside)
-        } else Files.move(scratch.toPath, finalDir.toPath,
+    val base = outDir.stripSuffix("/")
+    tableNames(path).map { name =>
+      val finalDir = new java.io.File(s"$base/$name")
+      val scratch = new java.io.File(s"$base/.__ingesting__$name")
+      val aside = new java.io.File(s"$base/.__old__$name")
+      graft.ops.Layout.deleteRecursively(scratch)
+      graft.ops.Layout.deleteRecursively(aside)
+      // an empty table still lands with its schema: the scan's one
+      // partition writes a file even when it has no rows
+      spark.read.format("graft-sqlite").option("table", name).load(path)
+        .write.parquet(scratch.getAbsolutePath)
+      if (finalDir.exists()) {
+        Files.move(finalDir.toPath, aside.toPath,
           StandardCopyOption.ATOMIC_MOVE)
-        name -> spark.read.parquet(finalDir.getAbsolutePath)
-      }.toMap
-    } finally db.close()
+        try Files.move(scratch.toPath, finalDir.toPath,
+          StandardCopyOption.ATOMIC_MOVE)
+        catch {
+          case e: Throwable =>
+            Files.move(aside.toPath, finalDir.toPath,
+              StandardCopyOption.ATOMIC_MOVE)
+            throw e
+        }
+        graft.ops.Layout.deleteRecursively(aside)
+      } else Files.move(scratch.toPath, finalDir.toPath,
+        StandardCopyOption.ATOMIC_MOVE)
+      name -> spark.read.parquet(finalDir.getAbsolutePath)
+    }.toMap
   }
 
-  /** Per-table (name, schema, streaming row iterator) for every table in
-    * the file. Iterators decode lazily off the open [[Reader]] — the
-    * caller must fully consume them BEFORE closing it.
+  /** (schema, streaming row iterator) of the table `name` rooted at
+    * `rootPage`. The iterator decodes lazily off the open [[Reader]] —
+    * the caller must fully consume it BEFORE closing the reader.
     */
-  private[sources] def tableIterators(db: Reader, path: String,
-      only: Option[String] = None):
-      Seq[(String, StructType, Iterator[Row])] = {
-      // `only` restricts BEFORE any per-table validation: the connector's
-      // single-table read must not fail because an UNRELATED table in the
-      // file is virtual / unparseable (FTS shadow tables are common)
-      val tables = db.masterTables()
-        .filter(t => only.forall(_ == t._1))
-      tables.map { case (name, rootPage, createSql) =>
-        // split the DDL at the paren that CLOSES the column-list body
-        // (comment/quote-aware — lastIndexOf(')') would be fooled by a
-        // trailing comment containing one). Table options after it:
-        // WITHOUT ROWID in any combination/order with STRICT (3.37+
-        // allows "WITHOUT ROWID, STRICT"). STRICT alone is fine — strict
-        // tables are ordinary rowid tables on disk.
-        val bodyEndIdx = bodyEnd(createSql)
-        val tableOpts =
-          if (bodyEndIdx >= 0) createSql.substring(bodyEndIdx + 1) else ""
-        val withoutRowid =
-          "(?is).*\\bwithout\\s+rowid\\b.*".r.matches(stripComments(tableOpts))
-        // virtual tables (FTS, rtree, …) have no b-tree of their own —
-        // rootpage 0 — and their content lives in module shadow tables
-        if (rootPage <= 0)
+  private def decodeTable(db: Reader, path: String, name: String,
+      rootPage: Int, createSql: String): (StructType, Iterator[Row]) = {
+    // split the DDL at the paren that CLOSES the column-list body
+    // (comment/quote-aware — lastIndexOf(')') would be fooled by a
+    // trailing comment containing one). Table options after it:
+    // WITHOUT ROWID in any combination/order with STRICT (3.37+
+    // allows "WITHOUT ROWID, STRICT"). STRICT alone is fine — strict
+    // tables are ordinary rowid tables on disk.
+    val bodyEndIdx = bodyEnd(createSql)
+    val tableOpts =
+      if (bodyEndIdx >= 0) createSql.substring(bodyEndIdx + 1) else ""
+    val withoutRowid =
+      "(?is).*\\bwithout\\s+rowid\\b.*".r.matches(stripComments(tableOpts))
+    // virtual tables (FTS, rtree, …) have no b-tree of their own —
+    // rootpage 0 — and their content lives in module shadow tables
+    if (rootPage <= 0)
+      throw new FileTypeError(
+        s"table '$name' in '$path' is a virtual table (rootpage 0) — " +
+          s"unsupported; export the dump instead: sqlite3 '$path' .dump > out.sql")
+    // parseDdl anchors on ');' — feed it the DDL up to the body's
+    // closing paren so table options (STRICT, WITHOUT ROWID) never
+    // break the parse
+    val defs = SqlDump.parseDdl(
+      (if (bodyEndIdx >= 0) createSql.substring(0, bodyEndIdx + 1)
+       else createSql) + ";")
+    if (defs.isEmpty)
+      throw new FileTypeError(s"cannot parse DDL for table '$name' in '$path'")
+    val cols = defs.head.cols
+    val fields = cols.map { c =>
+      val t = if (c.sqlType.toLowerCase.startsWith("blob")) BinaryType
+              else c.sparkType
+      StructField(c.name, t, nullable = true)
+    }
+    val schema = StructType(fields)
+    // Rows written BEFORE an `ALTER TABLE ADD COLUMN` are stored with
+    // fewer record columns; SQLite serves the ADD COLUMN's DEFAULT for
+    // them (NULL when none). Mirror that: pre-decode each column's
+    // DEFAULT literal from the DDL once.
+    val defaults: Seq[Any] = cols.map(c => defaultLiteral(c.sqlType))
+    val rows: Iterator[Row] =
+      if (withoutRowid) {
+        // Index-b-tree layout: each entry's record holds the PRIMARY
+        // KEY columns first (in PK-declaration order), then the
+        // remaining columns in CREATE TABLE order. ALTER ADD COLUMN
+        // appends at the END of that record order, so short records
+        // still truncate at the tail and the DEFAULT rule applies
+        // unchanged. INTEGER PRIMARY KEY does NOT alias anything
+        // here — the value is stored literally in the record.
+        val pkIdxs = pkColumnIndexes(cols, createSql)
+        if (pkIdxs.isEmpty)
           throw new FileTypeError(
-            s"table '$name' in '$path' is a virtual table (rootpage 0) — " +
-              s"unsupported; export the dump instead: sqlite3 '$path' .dump > out.sql")
-        // parseDdl anchors on ');' — feed it the DDL up to the body's
-        // closing paren so table options (STRICT, WITHOUT ROWID) never
-        // break the parse
-        val defs = SqlDump.parseDdl(
-          (if (bodyEndIdx >= 0) createSql.substring(0, bodyEndIdx + 1)
-           else createSql) + ";")
-        if (defs.isEmpty)
-          throw new FileTypeError(s"cannot parse DDL for table '$name' in '$path'")
-        val cols = defs.head.cols
-        val fields = cols.map { c =>
-          val t = if (c.sqlType.toLowerCase.startsWith("blob")) BinaryType
-                  else c.sparkType
-          StructField(c.name, t, nullable = true)
+            s"table '$name' in '$path' is WITHOUT ROWID but its PRIMARY" +
+              " KEY columns could not be resolved from the DDL")
+        val perm = pkIdxs ++ cols.indices.filterNot(pkIdxs.contains)
+        val posInRecord = {
+          val a = new Array[Int](cols.length)
+          perm.zipWithIndex.foreach { case (decl, pos) => a(decl) = pos }
+          a
         }
-        val schema = StructType(fields)
-        // Rows written BEFORE an `ALTER TABLE ADD COLUMN` are stored with
-        // fewer record columns; SQLite serves the ADD COLUMN's DEFAULT for
-        // them (NULL when none). Mirror that: pre-decode each column's
-        // DEFAULT literal from the DDL once.
-        val defaults: Seq[Any] = cols.map(c => defaultLiteral(c.sqlType))
-        val rows: Iterator[Row] =
-          if (withoutRowid) {
-            // Index-b-tree layout: each entry's record holds the PRIMARY
-            // KEY columns first (in PK-declaration order), then the
-            // remaining columns in CREATE TABLE order. ALTER ADD COLUMN
-            // appends at the END of that record order, so short records
-            // still truncate at the tail and the DEFAULT rule applies
-            // unchanged. INTEGER PRIMARY KEY does NOT alias anything
-            // here — the value is stored literally in the record.
-            val pkIdxs = pkColumnIndexes(cols, createSql)
-            if (pkIdxs.isEmpty)
-              throw new FileTypeError(
-                s"table '$name' in '$path' is WITHOUT ROWID but its PRIMARY" +
-                  " KEY columns could not be resolved from the DDL")
-            val perm = pkIdxs ++ cols.indices.filterNot(pkIdxs.contains)
-            val posInRecord = {
-              val a = new Array[Int](cols.length)
-              perm.zipWithIndex.foreach { case (decl, pos) => a(decl) = pos }
-              a
-            }
-            db.indexRows(rootPage).map { rec =>
-              val vals = fields.zipWithIndex.map { case (f, i) =>
-                val pos = posInRecord(i)
-                val raw = if (pos < rec.length) rec(pos) else defaults(i)
-                coerce(raw, f.dataType, name, f.name, db.textCharset)
-              }
-              Row.fromSeq(vals)
-            }
-          } else {
-            val ipkIdx = rowidAliasIndex(cols, createSql)
-            db.tableRows(rootPage).map { case (rowid, rec) =>
-              val vals = fields.zipWithIndex.map { case (f, i) =>
-                val raw =
-                  if (i == ipkIdx) java.lang.Long.valueOf(rowid)
-                  else if (i < rec.length) rec(i)
-                  else defaults(i)
-                coerce(raw, f.dataType, name, f.name, db.textCharset)
-              }
-              Row.fromSeq(vals)
-            }
+        db.indexRows(rootPage).map { rec =>
+          val vals = fields.zipWithIndex.map { case (f, i) =>
+            val pos = posInRecord(i)
+            val raw = if (pos < rec.length) rec(pos) else defaults(i)
+            coerce(raw, f.dataType, name, f.name, db.textCharset)
           }
-        (name, schema, rows)
+          Row.fromSeq(vals)
+        }
+      } else {
+        val ipkIdx = rowidAliasIndex(cols, createSql)
+        db.tableRows(rootPage).map { case (rowid, rec) =>
+          val vals = fields.zipWithIndex.map { case (f, i) =>
+            val raw =
+              if (i == ipkIdx) java.lang.Long.valueOf(rowid)
+              else if (i < rec.length) rec(i)
+              else defaults(i)
+            coerce(raw, f.dataType, name, f.name, db.textCharset)
+          }
+          Row.fromSeq(vals)
+        }
       }
+    (schema, rows)
   }
 
   /** The `CREATE VIEW` statements stored in the file, parsed to
@@ -589,8 +525,9 @@ object SqliteFile {
     }
   }
 
-  /** Page-at-a-time binary reader. Not thread-safe (one shared transfer
-    * buffer per page read); open() uses it from the driver thread only.
+  /** Page-at-a-time binary reader over one open file handle. Not
+    * thread-safe; each caller (a scan task, a schema or name listing)
+    * opens its own and closes it when done.
     */
   private final class Reader(path: String) {
     private val ch = FileChannel.open(Paths.get(path), StandardOpenOption.READ)

@@ -22,22 +22,20 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   .option("table", "forests").load("data/forestation.db")
   * }}}
   *
-  * What this adds over `SqliteFile.open` (which materializes every row on
-  * the driver and guards itself with `maxOpenBytes`): the decode runs
-  * EXECUTOR-side inside the scan task, streaming pages through the
-  * b-tree walker one row at a time — driver memory is O(1) for any file
-  * size, so the connector has no size guard at all. Column pruning drops
-  * unused fields before the Catalyst conversion (the page decode itself
-  * is whole-record by format: SQLite serializes each record as one
-  * varint-headed blob).
+  * It is the one way graft reads a SQLite file: [[graft.api.Database.open]]
+  * builds every `.db` table from it, and `SqliteFile.ingest` writes each
+  * table to parquet through it. The decode runs EXECUTOR-side inside the
+  * scan task, streaming pages through the b-tree walker one row at a
+  * time — driver memory is O(1) for any file size, so there is no size
+  * guard. Column pruning drops unused fields before the Catalyst
+  * conversion (the page decode itself is whole-record by format: SQLite
+  * serializes each record as one varint-headed blob).
   *
   * What it deliberately does NOT do: multi-task parallelism. A SQLite
   * file is one page chain behind one file handle; the scan is a single
   * InputPartition by design (same class of source as a gzip stream).
-  * At 100 TB scale the play is unchanged — `SqliteFile.ingest` once to
-  * parquet and let every later query scan that in parallel; this
-  * connector is for the config/metadata-sized `.db` files the reference
-  * serves directly, minus the driver bottleneck.
+  * At 100 TB scale the play is `SqliteFile.ingest` once to parquet and
+  * let every later query scan that in parallel.
   */
 class SqliteDataSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {

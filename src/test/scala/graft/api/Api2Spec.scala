@@ -283,10 +283,9 @@ class Api2Spec extends SparkSuite {
   }
 
   test("binary sqlite: a corrupt .db fails loudly, never a silent stub") {
-    // without a sqlite-jdbc jar the .db path runs graft's pure-JVM reader
-    // (SqliteFileSpec covers real files); garbage bytes must raise the
-    // reference's FileTypeError, not return empty tables
-    assert(!graft.sources.SqliteJdbc.driverAvailable)
+    // the .db path runs graft's pure-JVM reader (SqliteFileSpec covers
+    // real files); garbage bytes must raise the reference's
+    // FileTypeError, not return empty tables
     val f = Files.createTempDirectory("graftdb").resolve("forestation.db")
     Files.write(f, Array[Byte](1, 2, 3))
     val e = intercept[FileTypeError] { Database.open(spark, f.toString) }

@@ -7,7 +7,8 @@ import graft.SparkSuite
 
 /** Every memo entry is keyed by its table, stat and column
   * ([[Table.memoKey]]): two same-schema tables never share a stat, in
-  * memory or through a spill; a row index lives and dies with its
+  * memory or through a spill; tables mapped by different UDFs share no
+  * stat; a row index lives and dies with its
   * Database and keeps apart tables mapped by different UDFs; a spill of another format is discarded; a failed spill is
   * loud.
   */
@@ -112,6 +113,23 @@ class MemoKeySpec extends SparkSuite {
     assert(t.applymapStr(_.toUpperCase).iloc(0).getString(0) == "AB")
     assert(t.applymapStr(_.reverse).iloc(0).getString(0) == "ba")
     assert(t.applymapStr(_.reverse).iloc(0L, 2L).map(_.getString(0)) == Seq("ba", "dc"))
+    db.exit()
+  }
+
+  test("tables mapped by different UDFs never share a memoized stat") {
+    val dir = tmp("graftudfstat")
+    Seq(("ab", 1.0), ("cd", 2.0)).toDF("s", "n").coalesce(1).write.parquet(s"$dir/t.parquet")
+    val db = Database.open(spark, dir)
+    val t = db("t")
+    assert(t.applymapStr(_.toUpperCase).col("s").max == "CD")
+    assert(t.applymapStr(_.reverse).col("s").max == "dc")
+    assert(t.applymapNum(_ * 10).col("n").sum == 30.0)
+    assert(t.applymapNum(_ + 1).col("n").sum == 5.0)
+    assert(t.applymapNum(_ + 1).len == 2L)
+    // the base table's stats are still memoized; none of a mapped table's
+    // are, so none of them can spill either
+    assert(t.col("s").max == "cd")
+    assert(db.cache.size == 1)
     db.exit()
   }
 

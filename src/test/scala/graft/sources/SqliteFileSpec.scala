@@ -1,14 +1,17 @@
 package graft.sources
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+
 import graft.SparkSuite
 import graft.api.{Database, FileTypeError}
 
-/** The pure-JVM binary SQLite reader (S11's `.db` half, previously the one
-  * "implemented, not integration-proven" partial): opened against REAL
-  * SQLite files — the committed fixtures regenerated by
-  * scripts/gen_sqlite_fixtures.py and the reference's own data/forestation
-  * .db when present — and hash-compared against the `.sql`-dump twin read
-  * through the independent SqlDump path.
+/** The pure-JVM binary SQLite reader (S11's `.db` half), read through the
+  * `graft-sqlite` scan it sits behind: opened against REAL SQLite files —
+  * the committed fixtures regenerated by scripts/gen_sqlite_fixtures.py
+  * and the reference's own data/forestation.db when present — and
+  * hash-compared against the `.sql`-dump twin read through the
+  * independent SqlDump path.
   */
 class SqliteFileSpec extends SparkSuite {
 
@@ -18,58 +21,57 @@ class SqliteFileSpec extends SparkSuite {
     r.getPath
   }
 
-  test(".db opens identically to its .dump twin: tables, schemas, rows") {
-    val fromDb = SqliteFile.open(spark, res("forestation_subset.db"))
-    val fromSql = SqlDump.open(spark, res("forestation_subset.sql"))
-    assert(fromDb.keySet === fromSql.keySet)
-    for (t <- fromDb.keySet) {
-      assert(fromDb(t).schema === fromSql(t).schema, s"schema mismatch in $t")
-      val a = fromDb(t)
-      val b = fromSql(t)
+  /** Every table of a SQLite file, each a `graft-sqlite` scan. */
+  private def tables(path: String): Map[String, DataFrame] =
+    SqliteFile.tableNames(path).map { n =>
+      n -> spark.read.format("graft-sqlite").option("table", n).load(path)
+    }.toMap
+
+  /** Same tables, schemas and row sets. */
+  private def assertSameTables(got: Map[String, DataFrame],
+      want: Map[String, DataFrame]): Unit = {
+    assert(got.keySet === want.keySet)
+    for (t <- want.keySet) {
+      val (a, b) = (got(t), want(t))
+      assert(a.schema === b.schema, s"schema mismatch in $t")
       assert(a.count() === b.count(), s"row count mismatch in $t")
       assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
         s"row set mismatch in $t")
     }
   }
 
-  test("size guard: an oversized .db refuses open with the ingest recipe") {
-    val path = res("forestation_subset.db")
-    val e = intercept[graft.api.FileTypeError] {
-      SqliteFile.open(spark, path, maxOpenBytes = 1024L)
-    }
-    assert(e.getMessage.contains("ingest") &&
-      e.getMessage.contains("maxOpenBytes"))
-    // at the default guard the same file opens fine
-    assert(SqliteFile.open(spark, path).nonEmpty)
+  test(".db opens identically to its .dump twin: tables, schemas, rows") {
+    val db = Database.open(spark, res("forestation_subset.db"))
+    try assertSameTables(db.tables.map(t => t -> db(t).toDf).toMap,
+      SqlDump.open(spark, res("forestation_subset.sql")))
+    finally db.exit()
   }
 
-  test("ingest streams to parquet in bounded batches, identical to open") {
+  test("ingest writes every table to parquet, identical to its .dump twin") {
     val path = res("forestation_subset.db")
     val outDir = java.nio.file.Files
       .createTempDirectory("sqlite_ingest_").toString
-    // batchRows=7 forces every table through MANY append batches — the
-    // bounded-driver-memory path — and the parquet round trip must match
-    // the local-relation open row for row
-    val ingested = SqliteFile.ingest(spark, path, outDir, batchRows = 7)
-    val opened = SqliteFile.open(spark, path)
-    assert(ingested.keySet === opened.keySet)
-    for (t <- opened.keySet) {
-      assert(ingested(t).schema === opened(t).schema, s"schema mismatch in $t")
-      assert(ingested(t).count() === opened(t).count(), s"count mismatch in $t")
-      assert(ingested(t).exceptAll(opened(t)).isEmpty &&
-        opened(t).exceptAll(ingested(t)).isEmpty, s"row set mismatch in $t")
-      // really parquet-backed, not a local relation
+    val ingested = SqliteFile.ingest(spark, path, outDir)
+    val twin = SqlDump.open(spark, res("forestation_subset.sql"))
+    assertSameTables(ingested, twin)
+    for (t <- twin.keySet)
+      // really parquet-backed, not a scan of the .db
       assert(new java.io.File(s"$outDir/$t").listFiles()
         .exists(_.getName.endsWith(".parquet")), s"$t not parquet-backed")
-    }
-    // re-ingest replaces cleanly (no doubled rows from stale appends)
-    val again = SqliteFile.ingest(spark, path, outDir, batchRows = 1000)
-    for (t <- opened.keySet)
-      assert(again(t).count() === opened(t).count(), s"re-ingest doubled $t")
+    // re-ingest replaces cleanly (no doubled rows from stale files)
+    val again = SqliteFile.ingest(spark, path, outDir)
+    for (t <- twin.keySet)
+      assert(again(t).count() === twin(t).count(), s"re-ingest doubled $t")
+    // an empty table still lands, with its schema
+    val empty = SqliteFile.ingest(spark, res("sqlite_empty.db"), outDir)
+    assert(empty("empty").count() === 0L)
+    assert(empty("empty").schema.map(f => (f.name, f.dataType.simpleString)) ===
+      Seq("id" -> "bigint", "s" -> "string", "r" -> "double"))
+    assert(empty("one").collect().map(_.getLong(0)).toSeq === Seq(42L))
   }
 
   test("record decode: every integer width, floats, text, blobs, NULLs, IPK rowids") {
-    val typed = SqliteFile.open(spark, res("sqlite_edge_cases.db"))("typed")
+    val typed = tables(res("sqlite_edge_cases.db"))("typed")
     assert(typed.schema.map(f => (f.name, f.dataType.simpleString)) === Seq(
       "id" -> "bigint", "i" -> "bigint", "r" -> "double",
       "t" -> "string", "b" -> "binary"))
@@ -104,7 +106,7 @@ class SqliteFileSpec extends SparkSuite {
   }
 
   test("overflow-page chains and multi-level interior b-trees decode fully") {
-    val tabs = SqliteFile.open(spark, res("sqlite_edge_cases.db"))
+    val tabs = tables(res("sqlite_edge_cases.db"))
     // ~60 KB payload at 512-byte pages = a >100-page overflow chain
     val big = tabs("overflow").orderBy("k").collect()
     assert(big(0).getString(1).length === 60003)
@@ -121,7 +123,7 @@ class SqliteFileSpec extends SparkSuite {
   }
 
   test("ALTER TABLE ADD COLUMN: short records serve the DDL DEFAULT, not NULL") {
-    val alt = SqliteFile.open(spark, res("sqlite_edge_cases.db"))("altered")
+    val alt = tables(res("sqlite_edge_cases.db"))("altered")
       .orderBy("a").collect()
     // rows 1-2 predate the ALTERs — their stored records have 2 columns;
     // SQLite materializes DEFAULT 7 / 'it''s' / NULL for the missing three
@@ -157,8 +159,6 @@ class SqliteFileSpec extends SparkSuite {
   }
 
   test("Database.open end-to-end on a .db file without any JDBC driver") {
-    assume(!SqliteJdbc.driverAvailable, "a sqlite-jdbc jar appeared; this " +
-      "test pins the pure-JVM fallback path")
     val db = Database.open(spark, res("forestation_subset.db"))
     assert(db.tables === Seq("forest_area", "land_area", "regions"))
     val aruba = db.query(
@@ -172,7 +172,7 @@ class SqliteFileSpec extends SparkSuite {
   test("opens the reference's own forestation.db (when present)") {
     val f = new java.io.File("/root/reference/data/forestation.db")
     assume(f.isFile, "reference fixture not present in this environment")
-    val tabs = SqliteFile.open(spark, f.getPath)
+    val tabs = tables(f.getPath)
     assert(tabs.keySet === Set("forest_area", "land_area", "regions"))
     // the dump-subset fixture is a 40-rows-per-table slice of this very
     // database: every subset row must appear verbatim in the full table
@@ -185,7 +185,7 @@ class SqliteFileSpec extends SparkSuite {
   }
 
   test("rowid-alias forms: table-level PK, NOT NULL PK, and the DESC/INT non-alias exceptions") {
-    val tabs = SqliteFile.open(spark, res("sqlite_pk_forms.db"))
+    val tabs = tables(res("sqlite_pk_forms.db"))
     def pairs(t: String): Set[(Long, String)] =
       tabs(t).collect().map(r => (r.getLong(0), r.getString(1))).toSet
     // alias shapes: the id IS the rowid; stored record slot is NULL and
@@ -222,10 +222,10 @@ class SqliteFileSpec extends SparkSuite {
 
   test("rollback journals: hot refuses, cold reads fine") {
     val e = intercept[FileTypeError] {
-      SqliteFile.open(spark, res("sqlite_hot_journal.db"))
+      tables(res("sqlite_hot_journal.db"))
     }
     assert(e.getMessage.contains("journal"))
-    val cold = SqliteFile.open(spark, res("sqlite_cold_journal.db"))
+    val cold = tables(res("sqlite_cold_journal.db"))
     assert(cold("t").collect().map(_.getLong(0)).toSeq === Seq(1L))
   }
 
@@ -267,7 +267,7 @@ class SqliteFileSpec extends SparkSuite {
   }
 
   test("WITHOUT ROWID: index-b-tree layout, PK-first record permutation") {
-    val tabs = SqliteFile.open(spark, res("sqlite_without_rowid.db"))
+    val tabs = tables(res("sqlite_without_rowid.db"))
     // simple TEXT PK; natural order is PK (index) order, not insert order
     assert(tabs("wr").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       === Seq(("a", 1L), ("b", 2L), ("c", 3L)))
@@ -292,13 +292,13 @@ class SqliteFileSpec extends SparkSuite {
       .map(r => (r.getLong(0), r.getString(1))).toSeq ===
       Seq((3L, "three"), (2L, "two"), (1L, "one")))
     // the 3.37+ combined "WITHOUT ROWID, STRICT" table-options form
-    val wrs = SqliteFile.open(spark, res("sqlite_wr_strict.db"))("wrs")
+    val wrs = tables(res("sqlite_wr_strict.db"))("wrs")
     assert(wrs.collect().map(r => (r.getString(0), r.getLong(1))).toSeq ===
       Seq(("a", 1L)))
   }
 
   test("WITHOUT ROWID: interior index cells are real entries; overflow; ALTER defaults") {
-    val tabs = SqliteFile.open(spark, res("sqlite_without_rowid.db"))
+    val tabs = tables(res("sqlite_without_rowid.db"))
     // 3000 rows at 512-byte pages = a multi-level INDEX tree. Unlike table
     // trees, its interior cells hold real entries — a traversal that skips
     // them loses exactly the interior keys and this count/order fails.
@@ -327,21 +327,14 @@ class SqliteFileSpec extends SparkSuite {
   }
 
   test("WITHOUT ROWID .db matches its .dump twin through the independent SqlDump path") {
-    val fromDb = SqliteFile.open(spark, res("sqlite_without_rowid.db"))
-    val fromSql = SqlDump.open(spark, res("sqlite_without_rowid.sql"))
-    assert(fromDb.keySet === fromSql.keySet) // incl. `) WITHOUT ROWID;` DDL
-    for (t <- fromDb.keySet) {
-      assert(fromDb(t).schema === fromSql(t).schema, s"schema mismatch in $t")
-      val (a, b) = (fromDb(t), fromSql(t))
-      assert(a.count() === b.count(), s"row count mismatch in $t")
-      assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
-        s"row set mismatch in $t")
-    }
+    // incl. `) WITHOUT ROWID;` DDL
+    assertSameTables(tables(res("sqlite_without_rowid.db")),
+      SqlDump.open(spark, res("sqlite_without_rowid.sql")))
   }
 
   test("UTF-16LE and UTF-16BE databases decode, including overflow text") {
     for (f <- Seq("sqlite_utf16le.db", "sqlite_utf16be.db")) {
-      val tabs = SqliteFile.open(spark, res(f))
+      val tabs = tables(res(f))
       val t = tabs("t").orderBy("id").collect()
       assert(t.map(r => if (r.isNullAt(1)) null else r.getString(1)).toSeq
         .take(5) === Seq("é", "plain", "", "unicodé ✓ 😀", null), s"in $f")
@@ -359,16 +352,50 @@ class SqliteFileSpec extends SparkSuite {
 
   test("fail-loud scope: non-SQLite files and virtual tables are rejected") {
     val e3 = intercept[FileTypeError] {
-      SqliteFile.open(spark, res("forestation_subset.sql")) // not a .db
+      tables(res("forestation_subset.sql")) // not a .db
     }
     assert(e3.getMessage.contains("magic"))
     // virtual tables (FTS5 here) have rootpage 0; their module shadow
     // tables are ordinary/WITHOUT ROWID tables the reader could decode,
     // but serving shadow internals as user tables would be silently wrong
-    // — the open must fail loud with the .dump workaround
+    // — the read must fail loud with the .dump workaround
     val e4 = intercept[FileTypeError] {
-      SqliteFile.open(spark, res("sqlite_virtual.db"))
+      tables(res("sqlite_virtual.db"))
     }
     assert(e4.getMessage.contains(".dump"))
+  }
+
+  test("a .db Database holds no driver rows and still fails loud at open") {
+    for (f <- Seq("forestation_subset.db", "sqlite_edge_cases.db",
+        "sqlite_without_rowid.db", "sqlite_misfit.db")) {
+      val db = Database.open(spark, res(f))
+      try for (t <- db.tables) {
+        val local = db(t).toDf.queryExecution.analyzed.collect {
+          case r: LocalRelation => r
+        }
+        assert(local.isEmpty, s"$f: table $t holds driver-side rows")
+      } finally db.exit()
+    }
+    // what the header and schema show fails at open
+    val notSqlite = java.nio.file.Files.createTempDirectory("graftnotdb")
+      .resolve("dump.db")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(res("forestation_subset.sql")), notSqlite)
+    assert(intercept[FileTypeError](Database.open(spark, notSqlite.toString))
+      .getMessage.contains("magic"))
+    assert(intercept[FileTypeError](
+      Database.open(spark, res("sqlite_hot_journal.db"))).getMessage.contains("journal"))
+    // a virtual table beside a readable one
+    assert(intercept[FileTypeError](
+      Database.open(spark, res("sqlite_mixed.db"))).getMessage.contains("virtual"))
+    // a stored value that does not fit its column fails at the first
+    // action that scans it, not at open
+    val misfit = Database.open(spark, res("sqlite_misfit.db"))
+    try {
+      val e = intercept[Exception](misfit("t").data())
+      val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => c.isInstanceOf[FileTypeError] &&
+        c.getMessage.contains("t.n")), e.getMessage)
+    } finally misfit.exit()
   }
 }

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions.col
 import graft.SparkSuite
 
 /** The `graft-sqlite` DSv2 connector: executor-side streaming decode of
-  * one table, equal row-for-row to the driver-side SqliteFile.open path
-  * (two independent consumers of the same b-tree walker), column pruning
-  * visible in the scan, fail-loud option/table errors.
+  * one table, equal row-for-row to the `.sql` dump twin read by the
+  * independent SqlDump parser, column pruning visible in the scan,
+  * fail-loud option/table errors.
   */
 class SqliteV2Spec extends SparkSuite {
 
@@ -20,16 +20,21 @@ class SqliteV2Spec extends SparkSuite {
   private def v2(table: String) = spark.read.format("graft-sqlite")
     .option("table", table).load(res("forestation_subset.db"))
 
-  test("every table reads identically through the connector and through open()") {
-    val opened = SqliteFile.open(spark, res("forestation_subset.db"))
-    for ((name, df) <- opened) {
+  // forestation_subset.db's `.sql` dump twin, parsed by SqlDump
+  private def twin = SqlDump.open(spark, res("forestation_subset.sql"))
+
+  test("every table reads through the connector identically to its .dump twin") {
+    val dump = twin
+    assert(SqliteFile.tableNames(res("forestation_subset.db")).sorted ===
+      dump.keys.toSeq.sorted)
+    for ((name, df) <- dump) {
       val c = v2(name)
       assert(c.schema === df.schema, s"schema mismatch in $name")
       assert(c.count() === df.count(), s"count mismatch in $name")
       assert(c.exceptAll(df).isEmpty && df.exceptAll(c).isEmpty,
         s"row set mismatch in $name")
     }
-    assert(opened.nonEmpty)
+    assert(dump.nonEmpty)
   }
 
   test("column pruning reaches the scan (readSchema shrinks), projection is correct") {
@@ -47,8 +52,7 @@ class SqliteV2Spec extends SparkSuite {
     }
     assert(pruned.count() === full.count())
     assert(pruned.exceptAll(
-      SqliteFile.open(spark, res("forestation_subset.db"))("forest_area")
-        .select(twoCols.map(col): _*)).isEmpty)
+      twin("forest_area").select(twoCols.map(col): _*)).isEmpty)
   }
 
   test("filters evaluate correctly on the streamed rows") {
@@ -64,8 +68,8 @@ class SqliteV2Spec extends SparkSuite {
 
   test("a readable table next to a virtual table still reads; the virtual one fails loud") {
     // sqlite_mixed.db: ordinary 'docs' beside FTS5 'ft' (rootpage 0).
-    // open() rejects the whole file; the single-table connector must
-    // serve the decodable table and only fail on the virtual one — a
+    // Database.open rejects the whole file; the single-table connector
+    // must serve the decodable table and only fail on the virtual one — a
     // per-table read may not break because an UNRELATED table is FTS
     val docs = spark.read.format("graft-sqlite")
       .option("table", "docs").load(res("sqlite_mixed.db"))
@@ -107,12 +111,12 @@ class SqliteV2Spec extends SparkSuite {
     val ns = spark.sql("SHOW NAMESPACES IN forestdb")
       .collect().map(_.getString(0)).toSeq
     assert(ns == Seq("main"))
-    val opened = SqliteFile.open(spark, res("forestation_subset.db"))
+    val opened = twin
     val tabs = spark.sql("SHOW TABLES IN forestdb.main")
       .collect().map(_.getString(1)).sorted.toSeq
     assert(tabs == opened.keys.toSeq.sorted)
     // pure SQL against the catalog-qualified name — no DataFrame API, no
-    // temp view — returns the same rows the driver-side open() decodes
+    // temp view — returns the rows of the .dump twin
     val viaSql = spark.sql("SELECT * FROM forestdb.main.forest_area")
     assert(viaSql.schema === opened("forest_area").schema)
     assert(viaSql.exceptAll(opened("forest_area")).isEmpty &&
@@ -124,8 +128,7 @@ class SqliteV2Spec extends SparkSuite {
       classOf[graft.sources.sqlitev2.SqliteCatalog].getName)
     spark.conf.set("spark.sql.catalog.forestdesc.path",
       res("forestation_subset.db"))
-    val opened = SqliteFile.open(spark, res("forestation_subset.db"))
-    val expect = opened("forest_area").schema
+    val expect = twin("forest_area").schema
     val desc = spark.sql("DESCRIBE TABLE forestdesc.main.forest_area")
       .collect().map(r => r.getString(0) -> r.getString(1))
       .filter(_._1.nonEmpty).toMap
