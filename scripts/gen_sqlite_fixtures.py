@@ -356,8 +356,8 @@ def gen_scan_cases():
     con.commit()
     con.close()
     print(f"wrote {p5} ({os.path.getsize(p5)} bytes)")
-    # an empty table beside a non-empty one: ingest must still write the
-    # empty table's schema
+    # an empty table beside a non-empty one: it must open with its DDL
+    # schema and length 0
     p6 = os.path.join(RES, "sqlite_empty.db")
     if os.path.exists(p6):
         os.remove(p6)

@@ -23,8 +23,8 @@ final class Database private (
     tableMap: Map[String, DataFrame],
     val cache: QueryCache,
     val path: String,
-    cacheDir: Option[String] = None,
-    sourceFp: String = "") {
+    cacheDir: Option[String],
+    sourceFp: String) {
 
   /** Table names, like `db.tables` (reference: connection.py:112-120). */
   def tables: Seq[String] = tableMap.keys.toSeq.sorted

@@ -46,25 +46,14 @@ object Export {
   def shuffleKey(id: Column, seed: Long): Column =
     md5(concat(id.cast("string"), lit("|shuffle" + seed)))
 
-  /** Assign each row a shard in [0, nShards) by global rank over
-    * `orderCols` (must be a total order), round-robin — so shard sizes
-    * differ by at most one and, when ordered by a size proxy, shards are
-    * balanced on it too.
-    *
-    * Global rank WITHOUT a global window (a no-partition `row_number()`
-    * funnels the corpus through one task): range-repartition on the order,
-    * count rows per partition (one #partitions-row collect), then rank =
-    * partition offset + local index — Curation.takeTokenBudget's two-phase
-    * scheme with row counts instead of token sums. Both passes map the
-    * same shuffled RDD instance, so the sort is computed once.
-    */
   /** Re-shard by SIZE: pack rows, in `orderCols` order (must be a total
     * order), into consecutive shards of ~`targetBytes` by the exclusive
     * running total of `sizeCol` — shard = before div targetBytes. The
     * rebalancing pass a shard store needs when upstream batches left it
     * fragmented into many small archives (WebDataset-style training reads
     * want few large sequential shards, not thousands of KB-sized ones) —
-    * compose with [[graft.sources.Tar.writeShards]] on the result.
+    * write the result through `graft-tar` with
+    * `shard_file = concat("shard-", shard, ".tar")`.
     *
     * Every shard except the last lands in (targetBytes − maxRow,
     * targetBytes + maxRow): the greedy order-preserving packing, exactly
@@ -106,6 +95,18 @@ object Export {
     spark.createDataFrame(out, outSchema)
   }
 
+  /** Assign each row a shard in [0, nShards) by global rank over
+    * `orderCols` (must be a total order), round-robin — so shard sizes
+    * differ by at most one and, when ordered by a size proxy, shards are
+    * balanced on it too.
+    *
+    * Global rank WITHOUT a global window (a no-partition `row_number()`
+    * funnels the corpus through one task): range-repartition on the order,
+    * count rows per partition (one #partitions-row collect), then rank =
+    * partition offset + local index — Curation.takeTokenBudget's two-phase
+    * scheme with row counts instead of token sums. Both passes map the
+    * same shuffled RDD instance, so the sort is computed once.
+    */
   def assignShards(df: DataFrame, orderCols: Seq[Column], nShards: Int): DataFrame = {
     require(nShards > 0, s"nShards must be positive, got $nShards")
     val spark = df.sparkSession

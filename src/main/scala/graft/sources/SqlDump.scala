@@ -404,7 +404,6 @@ object SqlDump {
 
   /** Open every table in the dump as a typed DataFrame. */
   def open(spark: SparkSession, path: String): Map[String, DataFrame] = {
-    import spark.implicits._
     val key = dumpKey(spark, path)
     // putIfAbsent, not getOrElseUpdate: the TrieMap default getOrElseUpdate
     // is not atomic, so two concurrent opens could each persist the dump
@@ -452,7 +451,6 @@ object SqlDump {
 
   private def openImpl(spark: SparkSession, path: String,
       lines: Dataset[String]): Map[String, DataFrame] = {
-    import spark.implicits._
     val ddl = collectDdl(spark, path, lines)
     val defs = parseDdl(ddl)
     require(defs.nonEmpty, s"no CREATE TABLE statements found in '$path'")

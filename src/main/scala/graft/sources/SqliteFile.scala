@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.file.{Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.api.FileTypeError
@@ -33,7 +33,7 @@ import graft.api.FileTypeError
   * pulls inside its scan task: rows decode page-by-page executor-side
   * (bounded memory per page; the file is never loaded whole), so no row
   * is ever held on the driver and no file is too large to open.
-  * [[graft.api.Database.open]] and [[ingest]] both read through that scan.
+  * [[graft.api.Database.open]] reads through that scan.
   * Schema mapping reuses [[SqlDump.parseDdl]] on the CREATE statements
   * stored in `sqlite_master`, so a `.db` and its `.dump` twin open with
   * IDENTICAL schemas (hash-compared in SqliteFileSpec) — except BLOB
@@ -71,57 +71,11 @@ object SqliteFile {
   /** Names of every user table in the file, in sqlite_master order —
     * schema-page listing only, no per-table validation or decoding (a
     * virtual table IS listed here; it fails loud when its scan is built).
-    * Backs [[graft.api.Database.open]] and the `graft-sqlite` catalog's
-    * `SHOW TABLES`.
+    * Backs [[graft.api.Database.open]].
     */
   private[graft] def tableNames(path: String): Seq[String] = {
     val db = new Reader(path)
     try db.masterTables().map(_._1) finally db.close()
-  }
-
-  /** Ingest-once: write every table to `outDir/<table>/` as parquet
-    * through the `graft-sqlite` scan (one write per table, decoded
-    * executor-side) and return parquet-backed DataFrames. Any prior
-    * ingest of the same table dir is replaced.
-    */
-  def ingest(spark: SparkSession, path: String, outDir: String): Map[String, DataFrame] = {
-    // Crash safety (the graft.ops.Layout convention): a table is written
-    // to a dot-prefixed scratch dir — invisible to Spark's file index —
-    // and the finished table swaps in with rename-aside ATOMIC_MOVEs, so a
-    // kill mid-ingest can never leave a partial table readable as
-    // complete. The pre-existing table survives every crash window
-    // except the instant between its aside-move and the scratch move-in
-    // (table ABSENT, never partial; the source .db stays the durable
-    // copy). Stale scratch/aside dirs from a crashed run are cleaned on
-    // the next ingest.
-    import java.nio.file.{Files, StandardCopyOption}
-    val base = outDir.stripSuffix("/")
-    tableNames(path).map { name =>
-      val finalDir = new java.io.File(s"$base/$name")
-      val scratch = new java.io.File(s"$base/.__ingesting__$name")
-      val aside = new java.io.File(s"$base/.__old__$name")
-      graft.ops.Layout.deleteRecursively(scratch)
-      graft.ops.Layout.deleteRecursively(aside)
-      // an empty table still lands with its schema: the scan's one
-      // partition writes a file even when it has no rows
-      spark.read.format("graft-sqlite").option("table", name).load(path)
-        .write.parquet(scratch.getAbsolutePath)
-      if (finalDir.exists()) {
-        Files.move(finalDir.toPath, aside.toPath,
-          StandardCopyOption.ATOMIC_MOVE)
-        try Files.move(scratch.toPath, finalDir.toPath,
-          StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case e: Throwable =>
-            Files.move(aside.toPath, finalDir.toPath,
-              StandardCopyOption.ATOMIC_MOVE)
-            throw e
-        }
-        graft.ops.Layout.deleteRecursively(aside)
-      } else Files.move(scratch.toPath, finalDir.toPath,
-        StandardCopyOption.ATOMIC_MOVE)
-      name -> spark.read.parquet(finalDir.getAbsolutePath)
-    }.toMap
   }
 
   /** (schema, streaming row iterator) of the table `name` rooted at

@@ -1,24 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-/** WebDataset-style tar shards — the interchange format for multimodal
+/** The USTAR (POSIX.1-1988) header codec behind the `graft-tar` connector
+  * ([[graft.sources.tarv2.TarDataSource]]), which reads and writes
+  * WebDataset-style tar shards — the interchange format for multimodal
   * training corpora (a shard is a plain `.tar`; each sample is one or
   * more adjacent entries named `<key>.<ext>`; trainers stream shards
-  * sequentially and shuffle at the shard level). Spark writes and reads
-  * them here with a self-contained USTAR (POSIX.1-1988) implementation —
-  * fixed 512-byte headers, octal fields, the space-initialized checksum —
-  * so shards interoperate with `tar`/`tarfile` and no archive library is
-  * needed.
-  *
-  * Scale shape: one task per shard group (rows arrive clustered and
-  * sorted), each streaming its rows straight into one sequential file —
-  * the write parallelizes across shards, payloads never shuffle twice,
-  * and the reader parallelizes across shard FILES (headers tell it where
-  * every entry is without scanning payload bytes... though tar, having no
-  * index, is always a sequential read per shard — exactly the access
-  * pattern trainers use it for).
+  * sequentially and shuffle at the shard level). Fixed 512-byte headers,
+  * octal fields, the space-initialized checksum — so shards interoperate
+  * with `tar`/`tarfile` and no archive library is needed.
   */
 object Tar {
 
@@ -76,13 +65,17 @@ object Tar {
   }
 
   /** Validate one 512-byte USTAR header block: verifies the checksum and
-    * decodes (name, payload size, is-regular-file). Returns None on the
-    * end-of-archive zero block. Shared by the inline reader below and the
-    * DataSourceV2 connector ([[graft.sources.tarv2]]), so the two paths
-    * cannot drift on header semantics.
+    * decodes (name, payload size, typeflag). Returns None on the
+    * end-of-archive zero block. A POSIX ustar header's non-empty `prefix`
+    * field is joined as `prefix/name`. A PAX `'x'` header's payload goes
+    * to [[paxPath]], whose `path` names the next entry; a PAX `'g'`
+    * header is skipped like any other non-file entry. GNU long-name
+    * entries (`'L'`/`'K'`) rewrite the next entry's name in a form this
+    * codec does not decode, so they fail loud naming `context` (the
+    * shard) rather than yield a cut name.
     */
   private[sources] def parseHeader(h: Array[Byte],
-      context: String): Option[(String, Long, Boolean)] = {
+      context: String): Option[(String, Long, Char)] = {
     if (h.forall(_ == 0)) return None // end-of-archive
     val stored = new String(h, 148, 8, "US-ASCII")
       .takeWhile(c => c >= '0' && c <= '7')
@@ -92,179 +85,52 @@ object Tar {
     System.arraycopy(saved, 0, h, 148, 8)
     require(java.lang.Long.parseLong(stored, 8) == sum,
       s"tar header checksum mismatch in $context")
+    val typeflag = h(156).toChar
+    require(typeflag != 'L' && typeflag != 'K',
+      s"tar entry type '$typeflag' (GNU long-name header) in $context is " +
+        "not supported — write shards in ustar or pax format")
     // the name field is BYTES 0..99 — a full 100-byte name has no
     // NUL terminator, so scanning the whole header would run into
     // the mode field
-    val name = new String(h.take(100).takeWhile(_ != 0), "UTF-8")
+    def field(off: Int, len: Int) =
+      new String(h.slice(off, off + len).takeWhile(_ != 0), "UTF-8")
+    val base = field(0, 100)
+    // POSIX magic "ustar\0" only: the old GNU layout ("ustar  ") keeps
+    // atime/ctime where POSIX keeps the prefix
+    val posix = new String(h, 257, 6, "US-ASCII") == "ustar\u0000"
+    val prefix = if (posix) field(345, 155) else ""
+    val name = if (prefix.isEmpty) base else s"$prefix/$base"
     val size = java.lang.Long.parseLong(
       new String(h, 124, 12, "US-ASCII").trim.takeWhile(_ != 0), 8)
-    val typeflag = h(156)
-    Some((name, size, typeflag == '0' || typeflag == 0))
+    Some((name, size, typeflag))
   }
 
-  /** Parse every regular-file entry of a tar byte stream, verifying each
-    * header checksum — a corrupt or truncated shard fails LOUD, never
-    * yields silently clipped samples.
+  /** Decode a PAX `'x'` header's payload, records of the form
+    * `<len> <key>=<value>\n`, and return its `path`, which names the
+    * next entry in place of that entry's ustar name. Other keys (mtime,
+    * uid, uname, linkpath, vendor `SCHILY.*` …) describe what the reader
+    * does not return, and are ignored. Keys that change the payload's
+    * length or layout (`size`, `GNU.sparse.*`) or the name's encoding
+    * (`hdrcharset`) fail loud naming `context`.
     */
-  private[sources] def readEntries(in: java.io.InputStream,
-      context: String): Iterator[(String, Array[Byte])] =
-    new Iterator[(String, Array[Byte])] {
-      private var nextEntry: (String, Array[Byte]) = null
-      private var done = false
-      private def readFully(n: Int): Array[Byte] = {
-        val b = new Array[Byte](n)
-        var off = 0
-        while (off < n) {
-          val r = in.read(b, off, n - off)
-          if (r < 0) throw new java.io.IOException(
-            s"truncated tar in $context: wanted $n bytes, got $off")
-          off += r
-        }
-        b
-      }
-      private def advance(): Unit = {
-        if (done) return
-        val h = readFully(BLOCK)
-        parseHeader(h, context) match {
-          case None => done = true // end-of-archive
-          case Some((name, size, isFile)) =>
-            require(size <= Int.MaxValue, s"oversized tar entry in $context")
-            val payload = readFully(size.toInt)
-            val pad = ((BLOCK - size % BLOCK) % BLOCK).toInt
-            if (pad > 0) readFully(pad)
-            if (isFile) nextEntry = (name, payload)
-            else advance() // skip directories/links, keep scanning
-        }
-      }
-      override def hasNext: Boolean = {
-        if (nextEntry == null && !done) advance()
-        nextEntry != null
-      }
-      override def next(): (String, Array[Byte]) = {
-        if (!hasNext) throw new NoSuchElementException
-        val e = nextEntry; nextEntry = null; e
-      }
+  private[sources] def paxPath(rec: Array[Byte], context: String): Option[String] = {
+    var path: Option[String] = None
+    var i = 0
+    while (i < rec.length && rec(i) != 0) {
+      val sp = rec.indexOf(' '.toByte, i)
+      val len = if (sp <= i) -1
+        else scala.util.Try(new String(rec, i, sp - i, "US-ASCII").toInt).getOrElse(-1)
+      require(len > sp - i + 1 && i + len <= rec.length && rec(i + len - 1) == '\n',
+        s"malformed PAX header record at byte $i in $context")
+      val kv = new String(rec, sp + 1, i + len - 2 - sp, "UTF-8")
+      val eq = kv.indexOf('=')
+      require(eq > 0, s"malformed PAX header record at byte $i in $context")
+      val key = kv.substring(0, eq)
+      require(key != "size" && key != "hdrcharset" && !key.startsWith("GNU.sparse."),
+        s"PAX header key '$key' in $context is not supported")
+      if (key == "path") path = Some(kv.substring(eq + 1))
+      i += len
     }
-
-  /** Write `df` as `dir/shard-<value>.tar` files. Required columns:
-    * `shardCol` (integral shard id), `nameCol` (entry name, ≤100 bytes,
-    * unique per shard), `payloadCol` (binary). Rows cluster by shard
-    * (each value lands in ONE task) and entries are written in name
-    * order — deterministic shard bytes. Returns the shard file names.
-    *
-    * Commit protocol: tasks write into a dot-prefixed staging dir and
-    * the export lands in `dir` only after the WHOLE job succeeds (stale
-    * shards deleted, staged files renamed in) — a failed export can
-    * never leave a partial shard SET readable as data (the per-task
-    * cleanup below additionally guarantees no truncated individual
-    * file), and the previous export stays readable until the new one
-    * commits.
-    */
-  def writeShards(df: DataFrame, dir: String, shardCol: String,
-      nameCol: String, payloadCol: String): Seq[String] = {
-    val dirF = new java.io.File(dir)
-    dirF.mkdirs()
-    val staging = new java.io.File(dirF, ".__staging__")
-    def deleteStaging(): Unit = {
-      def del(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(del)
-        f.delete(); ()
-      }
-      del(staging)
-    }
-    deleteStaging() // stale crashed export
-    staging.mkdirs()
-    val stagingPath = staging.getAbsolutePath
-    val rows = df.select(col(shardCol).cast("long").as("s"),
-        col(nameCol).cast("string").as("n"), col(payloadCol).as("p"))
-      .repartition(col("s"))
-      .sortWithinPartitions("s", "n")
-    val staged = rows.mapPartitions { it =>
-      // partition holds whole shards, rows sorted (shard, name): stream
-      // each shard straight into its file, switching on shard change
-      var out: java.io.OutputStream = null
-      var curFile: java.io.File = null
-      var cur = Long.MinValue
-      var files = List.empty[String]
-      var lastName: String = null
-      def close(): Unit = if (out != null) {
-        out.write(new Array[Byte](BLOCK * 2)) // end-of-archive blocks
-        out.close(); out = null
-      }
-      // on ANY failure mid-shard (e.g. the duplicate-name require), close
-      // the stream and delete the in-progress file — a truncated archive
-      // without end-of-archive blocks must not be readable back as data
-      try {
-        it.foreach { r =>
-          val s = r.getLong(0); val n = r.getString(1)
-          val p = r.getAs[Array[Byte]](2)
-          if (s != cur) {
-            close(); cur = s; lastName = null
-            curFile = new java.io.File(stagingPath, s"shard-$s.tar")
-            files ::= curFile.getName
-            out = new java.io.BufferedOutputStream(
-              new java.io.FileOutputStream(curFile), 1 << 16)
-          }
-          require(n != lastName,
-            s"duplicate entry name '$n' in shard $s — keys must be unique")
-          lastName = n
-          out.write(entryBytes(n, p))
-        }
-        close()
-      } catch {
-        case e: Throwable =>
-          if (out != null) {
-            try out.close() catch { case _: Throwable => () }
-            out = null
-          }
-          if (curFile != null) curFile.delete()
-          throw e
-      }
-      files.reverseIterator
-    }(org.apache.spark.sql.Encoders.STRING)
-    val written =
-      try staged.collect().toSeq.sorted
-      catch { case e: Throwable => deleteStaging(); throw e }
-    // COMMIT: only now remove the previous export and rename the staged
-    // shards in (same-filesystem moves — the staging dir lives inside
-    // `dir` precisely so these never degrade to copies)
-    Option(dirF.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.matches("shard-\\d+\\.tar"))
-      .foreach(_.delete())
-    written.foreach { n =>
-      java.nio.file.Files.move(
-        new java.io.File(staging, n).toPath,
-        new java.io.File(dirF, n).toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
-    deleteStaging()
-    written
-  }
-
-  /** Read every `shard-*.tar` under `dir` back as (shard_file, name,
-    * payload) — one task per shard file, checksum-verified.
-    */
-  def readShards(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val files = Option(new java.io.File(dir).listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".tar"))
-      .map(_.getAbsolutePath).sorted.toSeq
-    require(files.nonEmpty, s"no .tar shards under '$dir'")
-    spark.sparkContext.parallelize(files, files.size)
-      .flatMap { f =>
-        // STREAM the shard: one entry in memory at a time (shards are
-        // routinely ~1 GB — materializing a whole shard per task would
-        // defeat the sequential-access design). The stream closes with
-        // the task, covering both exhaustion and mid-read task kills.
-        val in = new java.io.BufferedInputStream(
-          new java.io.FileInputStream(f), 1 << 16)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => in.close()))
-        val base = new java.io.File(f).getName
-        readEntries(in, f).map { case (n, p) => (base, n, p) }
-      }
-      .toDF("shard_file", "name", "payload")
+    path
   }
 }

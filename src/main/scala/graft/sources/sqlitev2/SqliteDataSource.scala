@@ -23,8 +23,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * }}}
   *
   * It is the one way graft reads a SQLite file: [[graft.api.Database.open]]
-  * builds every `.db` table from it, and `SqliteFile.ingest` writes each
-  * table to parquet through it. The decode runs EXECUTOR-side inside the
+  * builds every `.db` table from it. The decode runs EXECUTOR-side inside the
   * scan task, streaming pages through the b-tree walker one row at a
   * time — driver memory is O(1) for any file size, so there is no size
   * guard. Column pruning drops unused fields before the Catalyst
@@ -34,8 +33,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * What it deliberately does NOT do: multi-task parallelism. A SQLite
   * file is one page chain behind one file handle; the scan is a single
   * InputPartition by design (same class of source as a gzip stream).
-  * At 100 TB scale the play is `SqliteFile.ingest` once to parquet and
-  * let every later query scan that in parallel.
+  * At 100 TB scale the play is to write each table once to parquet
+  * (`db("t").toDf.write.parquet(...)`) and let every later query scan
+  * that in parallel.
   */
 class SqliteDataSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister {
@@ -62,47 +62,6 @@ class SqliteDataSource extends TableProvider
         "graft-sqlite: option 'table' is required")),
       schema)
   }
-}
-
-/** Catalog-routed face of the connector (`SupportsCatalogOptions`):
-  *
-  * {{{
-  * spark.conf.set("spark.sql.catalog.forestdb",
-  *   "graft.sources.sqlitev2.SqliteCatalog")
-  * spark.conf.set("spark.sql.catalog.forestdb.path", "data/forestation.db")
-  * spark.read.format("graft-sqlite-catalog")
-  *   .option("catalog", "forestdb").option("table", "forests").load()
-  * }}}
-  *
-  * The reader API resolves through the REGISTERED [[SqliteCatalog]]
-  * (extractCatalog/extractIdentifier) instead of carrying a file path per
-  * read — one configured path, every read against it consistent, and the
-  * same `forestdb.main.forests` identity whether addressed from SQL or
-  * the reader. A SEPARATE short name from `graft-sqlite` on purpose:
-  * Spark routes EVERY `.load()` of a `SupportsCatalogOptions` provider
-  * through a catalog, so mixing the interface into [[SqliteDataSource]]
-  * would break its documented path-based `.load("file.db")` form (no
-  * registered catalog to route to). Two names, two contracts, one table
-  * implementation underneath.
-  */
-class SqliteCatalogSource extends SqliteDataSource
-    with org.apache.spark.sql.connector.catalog.SupportsCatalogOptions {
-  override def shortName(): String = "graft-sqlite-catalog"
-
-  private def need(options: CaseInsensitiveStringMap, key: String): String =
-    Option(options.get(key)).getOrElse(throw new IllegalArgumentException(
-      s"graft-sqlite-catalog: option '$key' is required — this form reads " +
-        "through a registered catalog (spark.sql.catalog.<name> = " +
-        "graft.sources.sqlitev2.SqliteCatalog); use format 'graft-sqlite' " +
-        "with .load(path) for direct file reads"))
-
-  override def extractCatalog(
-      options: CaseInsensitiveStringMap): String = need(options, "catalog")
-
-  override def extractIdentifier(
-      options: CaseInsensitiveStringMap): org.apache.spark.sql.connector.catalog.Identifier =
-    org.apache.spark.sql.connector.catalog.Identifier.of(
-      Array("main"), need(options, "table"))
 }
 
 class SqliteTable(path: String, table: String, schema: StructType)

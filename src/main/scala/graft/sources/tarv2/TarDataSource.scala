@@ -19,11 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.Tar
 
 /** WebDataset tar shards as a first-class DataSourceV2 table:
-  * `spark.read.format("graft-tar").load(dir)` — the Catalyst-integrated
-  * sibling of [[graft.sources.Tar.readShards]] (which parallelizes via an
-  * RDD and always materializes payloads).
+  * `spark.read.format("graft-tar").load(dir)` and
+  * `df.write.format("graft-tar").mode("overwrite").save(dir)` — graft's
+  * one tar reader and writer, over the USTAR header codec in
+  * [[graft.sources.Tar]].
   *
-  * What the connector integration buys at 100 TB, beyond the RDD reader:
+  * What the connector integration buys at 100 TB:
   *
   *  - **Shard pruning**: filters on `shard_file` (=, IN, prefix, suffix)
   *    are pushed into planning, so excluded shard FILES are never opened —
@@ -118,7 +119,7 @@ class TarTable(path: String) extends Table with SupportsRead with SupportsWrite 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new TarScanBuilder(path)
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new TarWriteBuilder(path, info)
+    new TarWriteBuilder(path)
 }
 
 class TarScanBuilder(path: String) extends ScanBuilder
@@ -206,10 +207,6 @@ case class TarReaderFactory(columns: Seq[String], nameFilters: Seq[Filter])
     new TarPartitionReader(partition.asInstanceOf[TarInputPartition], columns, nameFilters)
 }
 
-/** Streams one shard: header → (name screen) → payload read OR skip.
-  * Memory is one entry's payload at most — and zero when `payload` is
-  * pruned or the name screen rejects the entry.
-  */
 /** Shard-open counter: local-mode observability for specs asserting that
   * static and RUNTIME pruning really kept files shut (executor-side state,
   * meaningful in the single-JVM test/local deployments only).
@@ -218,6 +215,10 @@ object TarMetrics {
   val openedShards = new java.util.concurrent.atomic.AtomicLong(0L)
 }
 
+/** Streams one shard: header → (name screen) → payload read OR skip.
+  * Memory is one entry's payload at most — and zero when `payload` is
+  * pruned or the name screen rejects the entry.
+  */
 class TarPartitionReader(p: TarInputPartition, columns: Seq[String],
     nameFilters: Seq[Filter]) extends PartitionReader[InternalRow] {
 
@@ -228,6 +229,8 @@ class TarPartitionReader(p: TarInputPartition, columns: Seq[String],
   private val shardUtf8 = UTF8String.fromString(p.shardFile)
   private var row: InternalRow = _
   private var done = false
+  // the `path` of a PAX 'x' header, which names the entry after it
+  private var paxName: Option[String] = None
 
   private def readFully(n: Int): Array[Byte] = {
     val b = new Array[Byte](n)
@@ -258,10 +261,17 @@ class TarPartitionReader(p: TarInputPartition, columns: Seq[String],
       val h = readFully(512)
       Tar.parseHeader(h, p.file) match {
         case None => done = true
-        case Some((name, size, isFile)) =>
+        case Some((_, size, 'x')) =>
           require(size <= Int.MaxValue, s"oversized tar entry in ${p.file}")
+          paxName = Tar.paxPath(readFully(size.toInt), p.file)
+          skipFully((512 - size % 512) % 512)
+        case Some((ustarName, size, typeflag)) =>
+          require(size <= Int.MaxValue, s"oversized tar entry in ${p.file}")
+          val name = paxName.getOrElse(ustarName)
+          paxName = None
           val padded = size + ((512 - size % 512) % 512)
-          val want = isFile && TarTable.accepts(nameFilters, "name", name)
+          val want = (typeflag == '0' || typeflag == 0) &&
+            TarTable.accepts(nameFilters, "name", name)
           if (!want) skipFully(padded)
           else {
             val payload = if (wantPayload) {
@@ -304,7 +314,7 @@ class TarPartitionReader(p: TarInputPartition, columns: Seq[String],
   * either the old export, or (after recovery) the complete new one —
   * never a partial shard set.
   */
-class TarWriteBuilder(path: String, info: LogicalWriteInfo)
+class TarWriteBuilder(path: String)
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
@@ -502,8 +512,10 @@ class TarDataWriter(stagingPath: String, partitionId: Int, taskId: Long)
   private var out: java.io.OutputStream = _
   private var fos: java.io.FileOutputStream = _
   private var curFile: java.io.File = _
-  private var cur: String = null
-  private var lastName: String = null
+  // compared as UTF8String, the UTF-8 byte order the declared ordering
+  // sorts by (String's UTF-16 order differs once a name leaves the BMP)
+  private var cur: UTF8String = null
+  private var lastName: UTF8String = null
   private var files = List.empty[String]
 
   private def closeShard(): Unit = if (out != null) {
@@ -516,32 +528,33 @@ class TarDataWriter(stagingPath: String, partitionId: Int, taskId: Long)
   override def write(row: InternalRow): Unit = {
     require(!row.isNullAt(0) && !row.isNullAt(1) && !row.isNullAt(3),
       "graft-tar: shard_file, name and payload must be non-null")
-    val shard = row.getUTF8String(0).toString
-    val name = row.getUTF8String(1).toString
+    val shardU = row.getUTF8String(0)
+    val nameU = row.getUTF8String(1)
     val payload = row.getBinary(3)
     if (!row.isNullAt(2)) require(row.getLong(2) == payload.length.toLong,
       s"graft-tar: size ${row.getLong(2)} != payload length ${payload.length} " +
-        s"for entry '$name' — size must be octet_length(payload) or null")
-    if (shard != cur) {
-      require(cur == null || shard > cur,
+        s"for entry '$nameU' — size must be octet_length(payload) or null")
+    if (shardU != cur) {
+      val shard = shardU.toString
+      require(cur == null || shardU.compareTo(cur) > 0,
         s"graft-tar: rows not clustered+sorted by shard_file ('$shard' after '$cur')")
       require(shard.endsWith(".tar") && !shard.contains("/") &&
         !shard.exists(_ < ' '), // no control chars (NUL, tab, newline) —
         // also keeps the commit-marker's tab/line framing unambiguous
         s"graft-tar: shard_file must be a bare *.tar file name, got '$shard'")
       closeShard()
-      cur = shard; lastName = null
+      cur = shardU.clone(); lastName = null
       taskDir.mkdirs()
       curFile = new java.io.File(taskDir, shard)
       files ::= shard
       fos = new java.io.FileOutputStream(curFile)
       out = new java.io.BufferedOutputStream(fos, 1 << 16)
     }
-    require(lastName == null || name > lastName,
+    require(lastName == null || nameU.compareTo(lastName) > 0,
       s"graft-tar: entry names must be strictly increasing per shard " +
-        s"('$name' after '$lastName' in $shard)")
-    lastName = name
-    out.write(Tar.entryBytes(name, payload))
+        s"('$nameU' after '$lastName' in $cur)")
+    lastName = nameU.clone()
+    out.write(Tar.entryBytes(nameU.toString, payload))
   }
 
   override def commit(): WriterCommitMessage = {

@@ -47,29 +47,6 @@ class SqliteFileSpec extends SparkSuite {
     finally db.exit()
   }
 
-  test("ingest writes every table to parquet, identical to its .dump twin") {
-    val path = res("forestation_subset.db")
-    val outDir = java.nio.file.Files
-      .createTempDirectory("sqlite_ingest_").toString
-    val ingested = SqliteFile.ingest(spark, path, outDir)
-    val twin = SqlDump.open(spark, res("forestation_subset.sql"))
-    assertSameTables(ingested, twin)
-    for (t <- twin.keySet)
-      // really parquet-backed, not a scan of the .db
-      assert(new java.io.File(s"$outDir/$t").listFiles()
-        .exists(_.getName.endsWith(".parquet")), s"$t not parquet-backed")
-    // re-ingest replaces cleanly (no doubled rows from stale files)
-    val again = SqliteFile.ingest(spark, path, outDir)
-    for (t <- twin.keySet)
-      assert(again(t).count() === twin(t).count(), s"re-ingest doubled $t")
-    // an empty table still lands, with its schema
-    val empty = SqliteFile.ingest(spark, res("sqlite_empty.db"), outDir)
-    assert(empty("empty").count() === 0L)
-    assert(empty("empty").schema.map(f => (f.name, f.dataType.simpleString)) ===
-      Seq("id" -> "bigint", "s" -> "string", "r" -> "double"))
-    assert(empty("one").collect().map(_.getLong(0)).toSeq === Seq(42L))
-  }
-
   test("record decode: every integer width, floats, text, blobs, NULLs, IPK rowids") {
     val typed = tables(res("sqlite_edge_cases.db"))("typed")
     assert(typed.schema.map(f => (f.name, f.dataType.simpleString)) === Seq(
@@ -367,7 +344,7 @@ class SqliteFileSpec extends SparkSuite {
 
   test("a .db Database holds no driver rows and still fails loud at open") {
     for (f <- Seq("forestation_subset.db", "sqlite_edge_cases.db",
-        "sqlite_without_rowid.db", "sqlite_misfit.db")) {
+        "sqlite_without_rowid.db", "sqlite_misfit.db", "sqlite_empty.db")) {
       val db = Database.open(spark, res(f))
       try for (t <- db.tables) {
         val local = db(t).toDf.queryExecution.analyzed.collect {
@@ -376,6 +353,14 @@ class SqliteFileSpec extends SparkSuite {
         assert(local.isEmpty, s"$f: table $t holds driver-side rows")
       } finally db.exit()
     }
+    // a table with no rows opens with its DDL schema and length 0
+    val empty = Database.open(spark, res("sqlite_empty.db"))
+    try {
+      assert(empty("empty").toDf.schema.map(f => (f.name, f.dataType.simpleString)) ===
+        Seq("id" -> "bigint", "s" -> "string", "r" -> "double"))
+      assert(empty("empty").len === 0L)
+      assert(empty("one").toDf.collect().map(_.getLong(0)).toSeq === Seq(42L))
+    } finally empty.exit()
     // what the header and schema show fails at open
     val notSqlite = java.nio.file.Files.createTempDirectory("graftnotdb")
       .resolve("dump.db")

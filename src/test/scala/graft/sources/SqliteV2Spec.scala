@@ -103,128 +103,6 @@ class SqliteV2Spec extends SparkSuite {
       e.getMessage.contains("available"), e.getMessage)
   }
 
-  test("a .db file registers as a TableCatalog: SHOW NAMESPACES/TABLES, pure-SQL SELECT") {
-    spark.conf.set("spark.sql.catalog.forestdb",
-      classOf[graft.sources.sqlitev2.SqliteCatalog].getName)
-    spark.conf.set("spark.sql.catalog.forestdb.path",
-      res("forestation_subset.db"))
-    val ns = spark.sql("SHOW NAMESPACES IN forestdb")
-      .collect().map(_.getString(0)).toSeq
-    assert(ns == Seq("main"))
-    val opened = twin
-    val tabs = spark.sql("SHOW TABLES IN forestdb.main")
-      .collect().map(_.getString(1)).sorted.toSeq
-    assert(tabs == opened.keys.toSeq.sorted)
-    // pure SQL against the catalog-qualified name — no DataFrame API, no
-    // temp view — returns the rows of the .dump twin
-    val viaSql = spark.sql("SELECT * FROM forestdb.main.forest_area")
-    assert(viaSql.schema === opened("forest_area").schema)
-    assert(viaSql.exceptAll(opened("forest_area")).isEmpty &&
-      opened("forest_area").exceptAll(viaSql).isEmpty)
-  }
-
-  test("catalog: DESCRIBE TABLE and SHOW COLUMNS surface the decoded schema") {
-    spark.conf.set("spark.sql.catalog.forestdesc",
-      classOf[graft.sources.sqlitev2.SqliteCatalog].getName)
-    spark.conf.set("spark.sql.catalog.forestdesc.path",
-      res("forestation_subset.db"))
-    val expect = twin("forest_area").schema
-    val desc = spark.sql("DESCRIBE TABLE forestdesc.main.forest_area")
-      .collect().map(r => r.getString(0) -> r.getString(1))
-      .filter(_._1.nonEmpty).toMap
-    expect.fields.foreach { f =>
-      assert(desc.get(f.name).contains(f.dataType.simpleString),
-        s"${f.name}: DESCRIBE said ${desc.get(f.name)}, " +
-          s"schema says ${f.dataType.simpleString}")
-    }
-    val cols = spark.sql("SHOW COLUMNS IN forestdesc.main.forest_area")
-      .collect().map(_.getString(0)).toSeq
-    assert(cols == expect.fieldNames.toSeq)
-  }
-
-  test("catalog SQL federates: .db JOIN parquet in one SQL statement") {
-    spark.conf.set("spark.sql.catalog.mixeddb",
-      classOf[graft.sources.sqlitev2.SqliteCatalog].getName)
-    spark.conf.set("spark.sql.catalog.mixeddb.path", res("sqlite_mixed.db"))
-    spark.read.parquet(s"$sfDir/documents.parquet")
-      .createOrReplaceTempView("docs_pq")
-    val j = spark.sql(
-      """SELECT d.id, count(*) AS n
-        |FROM mixeddb.main.docs d
-        |JOIN docs_pq p ON p.doc_id % 25 = d.id
-        |GROUP BY d.id ORDER BY d.id""".stripMargin)
-    assert(j.count() === 25L)
-    assert(j.agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0)
-      === spark.read.parquet(s"$sfDir/documents.parquet").count())
-    spark.catalog.dropTempView("docs_pq")
-  }
-
-  test("catalog: unknown table/namespace fail as analysis errors; DDL is read-only") {
-    spark.conf.set("spark.sql.catalog.forestdb2",
-      classOf[graft.sources.sqlitev2.SqliteCatalog].getName)
-    spark.conf.set("spark.sql.catalog.forestdb2.path",
-      res("forestation_subset.db"))
-    val e1 = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT * FROM forestdb2.main.no_such").collect()
-    }
-    assert(e1.getMessage.contains("no_such"), e1.getMessage)
-    intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SHOW TABLES IN forestdb2.aux").collect()
-    }
-    val e3 = intercept[Exception] {
-      spark.sql("DROP TABLE forestdb2.main.regions")
-    }
-    assert(e3.getMessage.contains("read-only"), e3.getMessage)
-    val e4 = intercept[Exception] {
-      spark.sql("CREATE TABLE forestdb2.main.t2 (a INT)")
-    }
-    assert(e4.getMessage.contains("read-only"), e4.getMessage)
-  }
-
-  test("catalog without a path conf fails with the conf key in the message") {
-    spark.conf.set("spark.sql.catalog.nopath",
-      classOf[graft.sources.sqlitev2.SqliteCatalog].getName)
-    val e = intercept[Exception] {
-      spark.sql("SHOW TABLES IN nopath.main").collect()
-    }
-    assert(e.getMessage.contains("spark.sql.catalog.nopath.path") ||
-      Option(e.getCause).exists(_.getMessage.contains("spark.sql.catalog.nopath.path")),
-      e.getMessage)
-  }
-
-  test("SupportsCatalogOptions: reader resolves through the registered catalog") {
-    spark.conf.set("spark.sql.catalog.optdb",
-      classOf[graft.sources.sqlitev2.SqliteCatalog].getName)
-    spark.conf.set("spark.sql.catalog.optdb.path",
-      res("forestation_subset.db"))
-    // no .load(path): the catalog owns the file, the read names the table
-    val viaOpts = spark.read.format("graft-sqlite-catalog")
-      .option("catalog", "optdb").option("table", "forest_area").load()
-    val direct = v2("forest_area")
-    assert(viaOpts.schema === direct.schema)
-    assert(viaOpts.exceptAll(direct).isEmpty &&
-      direct.exceptAll(viaOpts).isEmpty)
-    // unknown table surfaces the catalog's not-found, not a decode error
-    val e = intercept[Exception] {
-      spark.read.format("graft-sqlite-catalog")
-        .option("catalog", "optdb").option("table", "nope").load()
-    }
-    assert(e.getMessage.toLowerCase.contains("nope") ||
-      Option(e.getCause).exists(_.getMessage.toLowerCase.contains("nope")),
-      e.getMessage)
-    // missing catalog/table options → actionable message naming the option
-    val e2 = intercept[IllegalArgumentException] {
-      spark.read.format("graft-sqlite-catalog")
-        .option("table", "forest_area").load()
-    }
-    assert(e2.getMessage.contains("catalog"), e2.getMessage)
-    val e3 = intercept[IllegalArgumentException] {
-      spark.read.format("graft-sqlite-catalog")
-        .option("catalog", "optdb").load()
-    }
-    assert(e3.getMessage.contains("table"), e3.getMessage)
-  }
-
   test("missing table option / missing path fail with actionable messages") {
     val e1 = intercept[IllegalArgumentException] {
       spark.read.format("graft-sqlite").load(res("forestation_subset.db"))

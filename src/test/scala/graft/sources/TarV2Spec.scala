@@ -6,37 +6,91 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-/** The graft-tar DataSourceV2 connector vs the RDD reader it mirrors:
-  * identical content, shard pruning reaching planInputPartitions, payload
-  * skipping under column pruning, and per-entry name screens.
+/** The graft-tar DataSourceV2 connector: shards written by Python's
+  * `tarfile` (scripts/gen_tar_fixtures.py) read back exactly as the
+  * script's manifest lists them, ustar `prefix` and PAX `path` names
+  * applied and GNU long-name headers refused; shard pruning reaching
+  * planInputPartitions, payload skipping under column pruning,
+  * per-entry name screens; and the write path's marker commit.
   */
 class TarV2Spec extends SparkSuite {
   import spark.implicits._
 
   private lazy val dir: String = {
     val d = Files.createTempDirectory("graft_tarv2_").toFile.getAbsolutePath
-    val df = (0 until 40).map { i =>
-      (i % 4, f"doc$i%03d.${if (i % 2 == 0) "txt" else "json"}",
+    (0 until 40).map { i =>
+      (s"shard-${i % 4}.tar", f"doc$i%03d.${if (i % 2 == 0) "txt" else "json"}",
         s"payload-$i-${"x" * i}".getBytes("UTF-8"))
-    }.toDF("shard", "name", "payload")
-    Tar.writeShards(df, d, "shard", "name", "payload")
+    }.toDF("shard_file", "name", "payload")
+      .select(col("shard_file"), col("name"), lit(null).cast("long").as("size"),
+        col("payload"))
+      .write.format("graft-tar").mode("overwrite").save(d)
     d
   }
 
-  test("v2 read equals the RDD reader row-for-row") {
-    val v2 = spark.read.format("graft-tar").load(dir)
-      .select("shard_file", "name", "payload")
-    val rdd = Tar.readShards(spark, dir)
-    assert(v2.exceptAll(rdd).isEmpty && rdd.exceptAll(v2).isEmpty)
-    assert(v2.count() == 40)
+  /** A `tarfile`-written fixture dir under `tar/` (`""` for the root). */
+  private def fixture(sub: String): String = {
+    val r = getClass.getResource("/tar/" + sub)
+    assert(r != null, s"tar fixture '$sub' missing")
+    r.getPath
+  }
+
+  /** The fixture dir's manifest: (shard_file, name, size, sha256). */
+  private def manifest(d: String): Seq[(String, String, Long, String)] =
+    Files.readAllLines(java.nio.file.Paths.get(d, "manifest.tsv"),
+        java.nio.charset.StandardCharsets.UTF_8)
+      .toArray(Array.empty[String]).toSeq.drop(1).map { l =>
+        val Array(f, n, sz, sha) = l.split("\t", -1)
+        (f, n, sz.toLong, sha)
+      }.sorted
+
+  private def readDigests(d: String): Seq[(String, String, Long, String)] =
+    spark.read.format("graft-tar").load(d)
+      .select(col("shard_file"), col("name"), col("size"),
+        sha2(col("payload"), 256))
+      .as[(String, String, Long, String)].collect().toSeq.sorted
+
+  test("graft-tar reads tarfile-written shards as their manifest lists them") {
+    // 0/511/512/513-byte payloads, a full 100-byte name, a UTF-8 name,
+    // json/txt pairs; the directory and symlink entries are skipped
+    val d = fixture("")
+    val want = manifest(d)
+    assert(want.size == 19)
+    assert(readDigests(d) == want)
+  }
+
+  test("a ustar prefix field joins its name as prefix/name") {
+    val d = fixture("prefix")
+    assert(manifest(d).exists(_._2.getBytes("UTF-8").length > 100))
+    assert(readDigests(d) == manifest(d))
+  }
+
+  test("a PAX path names the next entry; mtime-only and global headers change nothing") {
+    val d = fixture("pax")
+    assert(manifest(d).map(_._2).contains("café.txt"))
+    assert(readDigests(d) == manifest(d))
+  }
+
+  test("GNU long-name headers and a PAX size key fail loud naming the shard") {
+    for ((sub, msg) <- Seq("gnu" -> "GNU long-name", "pax_size" -> "PAX header key 'size'")) {
+      val e = intercept[Exception] {
+        spark.read.format("graft-tar").load(fixture(sub)).collect()
+      }
+      assert(findCause(e, s"$sub/shard-0.tar") && findCause(e, msg), e.getMessage)
+    }
   }
 
   test("size column matches payload length without reading payloads") {
-    val meta = spark.read.format("graft-tar").load(dir)
-      .select("name", "size")
-    val expected = Tar.readShards(spark, dir)
-      .select(col("name"), length(col("payload")).cast("long").as("size"))
-    assert(meta.exceptAll(expected).isEmpty && expected.exceptAll(meta).isEmpty)
+    val d = fixture("")
+    val meta = spark.read.format("graft-tar").load(d).select("name", "size")
+    // payload is pruned from the scan itself
+    val scanned = meta.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.output.map(_.name)
+    }
+    assert(scanned == Seq(Seq("name", "size")))
+    assert(meta.as[(String, Long)].collect().toSeq.sorted ==
+      manifest(d).map(m => (m._2, m._3)).sorted)
   }
 
   test("shard_file equality prunes input partitions to one file") {
@@ -139,10 +193,40 @@ class TarV2Spec extends SparkSuite {
       .as[(String, String, String)].collect().toSet
     assert(back == (0 until 30).map(i =>
       (s"shard-${i % 3}.tar", f"e$i%03d.txt", s"pay-$i")).toSet)
-    // the RDD reader parses the v2-written archive too (same USTAR bytes)
-    assert(Tar.readShards(spark, d).count() == 30)
+    // GNU tar lists the written archive too (same USTAR bytes)
+    if (new java.io.File("/usr/bin/tar").canExecute) {
+      val list = new ProcessBuilder("tar", "-tf", s"$d/shard-0.tar")
+        .redirectErrorStream(true).start()
+      val listed = scala.io.Source.fromInputStream(list.getInputStream)
+        .getLines().toVector
+      assert(list.waitFor() == 0, listed)
+      assert(listed == (0 until 30 by 3).map(i => f"e$i%03d.txt"))
+    }
     // no staging residue
     assert(!new java.io.File(d, ".__v2staging__").exists())
+  }
+
+  test("the writer accepts names in UTF-8 byte order, the order Spark sorts them in") {
+    // U+FF21 sorts before U+1F600 in UTF-8 bytes (and in Spark's sort),
+    // but after it in UTF-16 code units (surrogates are 0xD8xx)
+    val names = Seq("\uFF21.txt", "\uD83D\uDE00.txt")
+    val d = Files.createTempDirectory("graft_tarv2u_").toFile.getAbsolutePath
+    names.map(n => ("shard-0.tar", n, null.asInstanceOf[java.lang.Long],
+        n.getBytes("UTF-8")))
+      .toDF("shard_file", "name", "size", "payload")
+      .write.format("graft-tar").mode("overwrite").save(d)
+    assert(spark.read.format("graft-tar").load(d).select("name").as[String]
+      .collect().toSeq == names)
+    // the same order between the shards of one task
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val staging = Files.createTempDirectory("graft_tarv2u_").toFile.getAbsolutePath
+    val w = new graft.sources.tarv2.TarDataWriter(staging, 0, 1L)
+    names.map(_.replace(".txt", ".tar")).foreach { s =>
+      w.write(new GenericInternalRow(Array[Any](UTF8String.fromString(s),
+        UTF8String.fromString("a.txt"), null, Array[Byte](1))))
+    }
+    w.commit()
   }
 
   test("overwrite replaces stale shards; append collision fails loud") {
