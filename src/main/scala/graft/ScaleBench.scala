@@ -971,7 +971,7 @@ object ScaleBench {
     val peel: Map[String, (Double, Long)] =
       if (!explicit.contains("peel")) Map.empty
       else try {
-        import org.apache.spark.sql.functions.{col, pmod, lit}
+        import org.apache.spark.sql.functions.{col, lit}
         val raw = spark.read.parquet(s"$sfDir/lineitem.parquet")
           .select(col("l_orderkey").as("src"), col("l_partkey").as("dst"))
         // RAW edge rows — the exact quantity the guard compares to

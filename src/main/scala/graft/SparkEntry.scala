@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{BpeOps, CartOps, CleanOps, DiffOps, EntityOps, EvalOps, EventOps, ExportOps, GraphOps, LmOps, MoreOps, MoreOps2, MoreOps3, Parity, ProfileOps, Q, SearchOps, SinkOps, SketchOps, SpanOps, TextOps, TpchOps, TrainOps, VectorOps}
+import graft.queries.{BpeOps, CartOps, CleanOps, DiffOps, EntityOps, EvalOps, EventOps, ExportOps, GraphOps, LmOps, MoreOps, MoreOps2, MoreOps3, Parity, ProfileOps, SearchOps, SinkOps, SketchOps, SpanOps, TextOps, TpchOps, TrainOps, VectorOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *

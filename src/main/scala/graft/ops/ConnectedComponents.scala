@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components over a pair list — the cluster-closure
@@ -11,15 +12,19 @@ import org.apache.spark.sql.functions._
   * approximates away.
   *
   * Algorithm: alternating large-star / small-star contraction (Kiveris et
-  * al., "Connected Components in MapReduce and Beyond", SoCC 2014) — each
-  * round is two aggregate+join rounds over the edge list, and the edge set
-  * converges to per-component stars rooted at the component minimum in
-  * O(log n) rounds in practice. Both phases are plain groupBy-min +
-  * equi-join (no per-node adjacency materialization, no collect_list), so
-  * a round shuffles O(|E|) tuples of two longs no matter how skewed the
-  * graph — the 100 TB shape. An iterative min-label propagation would need
-  * O(diameter) rounds; star contraction collapses long chains
-  * exponentially.
+  * al., "Connected Components in MapReduce and Beyond", SoCC 2014); the
+  * edge set converges to per-component stars rooted at the component
+  * minimum in O(log n) rounds in practice. Each phase needs one minimum
+  * per node, taken as `min(v) over (partition by u)` on the rows already
+  * shuffled by `u`, so the edges carry their node's minimum without an
+  * aggregate joined back to them. One round runs THREE shuffles: the
+  * large-star window, the small-star window and small-star's `distinct`.
+  * No per-node adjacency is materialized (no collect_list), so a round
+  * shuffles O(|E|) tuples of two longs. Skew: a hub's edges all meet in one window partition, as
+  * they met in one join partition before; the window's row buffer spills
+  * to disk rather than holding the hub in memory. An iterative min-label
+  * propagation would need O(diameter) rounds; star contraction collapses
+  * long chains exponentially.
   *
   * Convergence is detected by an order-insensitive edge-set checksum
   * (count + sum of xxhash64(u, v)), observed on the per-round checkpoint
@@ -28,28 +33,36 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** One large-star round: every node connects its LARGER neighbors to its
-    * minimum neighbor (or itself if smaller). Input/output edges oriented
-    * big → small.
+  /** Large-star: every node connects its LARGER neighbors to the minimum
+    * of its neighborhood and itself. Input/output edges oriented
+    * big → small. One shuffle (the window). The output may repeat an edge;
+    * small-star's minimum ignores repeats and its `distinct` drops them.
     */
   private def largeStar(e: DataFrame): DataFrame = {
     val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-    val mins = sym.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
-    sym.join(mins, "u").filter(col("v") > col("u"))
+    sym.select(col("u"), col("v"),
+        least(min(col("v")).over(Window.partitionBy("u")), col("u")).as("m"))
+      .filter(col("v") > col("u"))
       .select(col("v").as("u"), col("m").as("v"))
+  }
+
+  /** Small-star: every node connects its SMALLER neighbors (and itself) to
+    * the smallest of them. Requires big → small orientation, preserves it.
+    * Both edge kinds, (v, m) and (u, m), come out of one projection; two
+    * shuffles (the window, then the `distinct` that makes the edge set a
+    * set again before the checksum).
+    */
+  private def smallStar(e: DataFrame): DataFrame = {
+    e.select(col("u"), col("v"), min(col("v")).over(Window.partitionBy("u")).as("m"))
+      .select(explode(array(
+        struct(col("v").as("u"), col("m").as("v")),
+        struct(col("u"), col("m").as("v")))).as("e"))
+      .select("e.*")
       .filter(col("u") =!= col("v")).distinct()
   }
 
-  /** One small-star round: every node connects its SMALLER neighbors (and
-    * itself) to the smallest of them. Requires big → small orientation,
-    * preserves it.
-    */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val mins = e.groupBy("u").agg(min(col("v")).as("m"))
-    e.join(mins, "u").select(col("v").as("u"), col("m").as("v"))
-      .union(mins.select(col("u"), col("m").as("v")))
-      .filter(col("u") =!= col("v")).distinct()
-  }
+  /** One contraction round: large-star, then small-star (three shuffles). */
+  private[ops] def contract(e: DataFrame): DataFrame = smallStar(largeStar(e))
 
   /** Order-insensitive edge-set fingerprint: (|E|, Σ xxhash64(u, v) mod p).
     * The hash is bounded below 2³⁰ before summing so the sum cannot
@@ -107,7 +120,7 @@ object ConnectedComponents {
     var converged = false
     var iters = 0
     while (!converged && iters < maxIters) {
-      val (next, nextSig) = checkpointWithChecksum(smallStar(largeStar(edges)))
+      val (next, nextSig) = checkpointWithChecksum(contract(edges))
       // checksum equality is probabilistic; this path's whole point is
       // EXACT cluster closure, so confirm with a set-equality check on the
       // two (converged, tiny, already-materialized) frames. Both are

@@ -68,7 +68,6 @@ object Lloyd {
     var cents: Array[Array[Long]] =
       init.map(_.getSeq[Long](1).toArray)
     var sizes: Array[Long] = Array.fill(k)(0L)
-    val dim = cents.head.length
     for (_ <- 1 to iters) {
       val assigned = q.withColumn("cluster",
         graft.functions.VectorExprs.nearestCentroid(col("q"), cents))

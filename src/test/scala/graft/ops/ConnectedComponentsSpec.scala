@@ -1,11 +1,14 @@
 package graft.ops
 
 import graft.SparkSuite
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 
 /** Star-contraction connected components vs a driver-side union-find on
   * graphs whose shapes stress the algorithm: long chains (the case
   * single-pass star grouping gets wrong), multiple mixed components, and
-  * deterministic pseudo-random graphs.
+  * deterministic pseudo-random graphs, a hub with a chain through its
+  * leaves, and the plan shape of one contraction round.
   */
 class ConnectedComponentsSpec extends SparkSuite {
 
@@ -117,5 +120,54 @@ class ConnectedComponentsSpec extends SparkSuite {
         Seq(("x", "y")).toDF("a", "b"), "a", "b")
     }
     assert(e.getMessage.contains("integral"))
+  }
+
+  test("one contraction round plans exactly 3 shuffle exchanges") {
+    import spark.implicits._
+    // large-star window, small-star window, small-star distinct; the
+    // aggregate + join-back form ran 6 exchanges here (4 shuffles and the
+    // 2 broadcasts AQE made of its joins)
+    val round = ConnectedComponents.contract(Seq((2L, 1L), (3L, 2L)).toDF("u", "v"))
+    assert(round.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet ==
+      Set(2L -> 1L, 3L -> 1L))
+    // the plan that ran, walked through its adaptive query stages
+    val plan = round.queryExecution.executedPlan
+    val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) { case x: Exchange => x }
+    assert(exchanges.size == 3 && exchanges.forall(_.isInstanceOf[ShuffleExchangeExec]),
+      plan.treeString)
+  }
+
+  test("a hub with a chain through some of its leaves matches union-find") {
+    // hub 10000 linked to leaves 1000..2999; the chain 5-6-...-40 enters at
+    // leaf 1500 and leaves at leaf 2999 towards 20000..20010; {7000, 7001}
+    // stays apart
+    val hub = (1000L to 2999L).map(l => (10000L, l))
+    val chain = (5L until 40L).map(i => (i, i + 1)) ++
+      Seq((40L, 1500L), (2999L, 20000L)) ++ (20000L until 20010L).map(i => (i + 1, i))
+    val edges = hub ++ chain :+ ((7001L, 7000L))
+    val got = run(edges)
+    assert(got == unionFind(20011, edges))
+    assert(got(10000L) == 5L && got(20010L) == 5L && got(7001L) == 7000L)
+  }
+
+  test("incremental with no new pairs returns its input labels unchanged") {
+    import spark.implicits._
+    val l1 = ConnectedComponents.components(
+      Seq((1L, 2L), (2L, 3L), (7L, 8L), (9L, 9L)).toDF("a", "b"), "a", "b")
+    val before = l1.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val after = ConnectedComponents
+      .incremental(l1, Seq.empty[(Long, Long)].toDF("a", "b"), "a", "b")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(after == before)
+    assert(before == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L, 9L -> 9L))
+  }
+
+  test("maxIters = 1 on a 64-node chain fails loud instead of returning partial labels") {
+    import spark.implicits._
+    val chain = (1L until 64L).map(i => (i, i + 1)).toDF("a", "b")
+    val e = intercept[IllegalArgumentException] {
+      ConnectedComponents.components(chain, "a", "b", maxIters = 1)
+    }
+    assert(e.getMessage.contains("did not converge"))
   }
 }
