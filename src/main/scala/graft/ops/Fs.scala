@@ -89,15 +89,33 @@ private[graft] object Fs {
     else f.listStatus(dir).toSeq
   }
 
-  def mkdirs(p: Path): Unit = { fs(p).mkdirs(p); () }
+  /** Fault-injection seam for the crash specs: called with the primitive's
+    * name and path just before every call below changes the filesystem
+    * (probes and no-op calls never reach it). A hook that throws stands in
+    * for the process dying at that point. No-op outside the specs.
+    */
+  @volatile private[ops] var beforeMutation: (String, Path) => Unit =
+    (_, _) => ()
+
+  /** No-op when `p` already exists. */
+  def mkdirs(p: Path): Unit = {
+    val f = fs(p)
+    if (!f.exists(p)) { beforeMutation("mkdirs", p); f.mkdirs(p) }
+    ()
+  }
 
   /** Recursive delete; true when something was deleted. Absent = no-op. */
   def deleteRecursively(p: Path): Boolean = {
     val f = fs(p)
-    f.exists(p) && f.delete(p, true)
+    f.exists(p) && { beforeMutation("deleteRecursively", p); f.delete(p, true) }
   }
 
-  def deleteFile(p: Path): Unit = { fs(p).delete(p, false); () }
+  /** Absent = no-op. */
+  def deleteFile(p: Path): Unit = {
+    val f = fs(p)
+    if (f.exists(p)) { beforeMutation("deleteFile", p); f.delete(p, false) }
+    ()
+  }
 
   /** The ATOMIC_MOVE of the swap protocol: rename `src` onto a
     * NONEXISTENT `dst`, failing loudly instead of falling into Hadoop's
@@ -107,6 +125,7 @@ private[graft] object Fs {
     * against other maintainers, which every caller already forbids.
     */
   def rename(src: Path, dst: Path): Unit = {
+    beforeMutation("rename", src)
     val f = fs(src)
     assertAtomicRename(f, src)
     if (f.exists(dst))
@@ -123,6 +142,7 @@ private[graft] object Fs {
     * (at-least-once preserved), never corruption.
     */
   def renameReplace(src: Path, dst: Path): Unit = {
+    beforeMutation("renameReplace", src)
     val f = fs(src)
     assertAtomicRename(f, src)
     if (f.exists(dst) && !f.delete(dst, false))
@@ -155,6 +175,7 @@ private[graft] object Fs {
     * stores reject cross-"directory" renames outright).
     */
   def moveFileUncommitted(src: Path, dst: Path): Unit = {
+    beforeMutation("moveFileUncommitted", src)
     val f = fs(src)
     if (f.exists(dst))
       throw new IOException(s"move target $dst already exists")
@@ -190,6 +211,7 @@ private[graft] object Fs {
     writeBytes(p, s.getBytes("UTF-8"))
 
   def writeBytes(p: Path, bytes: Array[Byte]): Unit = {
+    beforeMutation("writeBytes", p)
     val f = fs(p)
     val out = f.create(p, true)
     try out.write(bytes) finally out.close()

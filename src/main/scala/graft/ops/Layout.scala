@@ -51,117 +51,168 @@ object Layout {
     * directory, rows re-sorted by `sortCols` — the compaction pass that
     * undoes small-file accumulation from incremental appends.
     *
-    * Crash-safe swap: the rewrite lands in `dir__compacting`, then the
-    * live dir is renamed ASIDE to `dir__old` (not deleted), the rewrite
-    * renamed into place, and only then is `dir__old` dropped. At every
-    * instant at least one complete copy of the data exists on disk, and
-    * [[recover]] (run automatically at the start of compact) rolls any
-    * interrupted swap forward or back from the leftovers. Renames are
-    * single `FileSystem.rename` calls — atomic on HDFS and POSIX; if the
-    * second rename fails the live dir is restored from `dir__old` before
-    * rethrowing. ([[Fs.rename]] refuses non-atomic object-store schemes.)
+    * The rewrite lands in `dir__next` and [[swapIn]] puts it in place: at
+    * every instant at least one complete copy of the data exists on disk,
+    * and [[recover]] (run first, as by every store write) rolls an
+    * interrupted swap forward or back.
     */
   def compact(spark: SparkSession, dir: String, partitionCol: String,
       sortCols: Seq[String]): Unit = {
     recover(dir)
-    val tmp = dir.stripSuffix("/") + "__compacting"
-    writePartitioned(spark.read.parquet(dir), tmp, partitionCol, sortCols)
-    val dirP = Fs.path(dir.stripSuffix("/"))
-    val tmpP = Fs.path(tmp)
-    val oldP = Fs.path(dir.stripSuffix("/") + "__old")
-    Fs.rename(dirP, oldP)
-    try Fs.rename(tmpP, dirP)
-    catch {
-      case e: Throwable =>
-        // restore the live dir so the store is intact before we rethrow
-        Fs.rename(oldP, dirP)
-        throw e
-    }
-    Fs.deleteRecursively(oldP)
-    ()
-  }
-
-  /** Roll an interrupted [[compact]] forward or back from its on-disk
-    * leftovers. Safe to call on a healthy store (no-op). The cases, in
-    * crash-order through compact's phases:
-    *  - `dir` present + `dir__old` present: crash after the swap completed
-    *    but before cleanup — the live dir is already the compacted copy;
-    *    drop `dir__old`.
-    *  - `dir` MISSING + `dir__old` present: crash between the two renames —
-    *    roll back by restoring `dir__old` as the live dir.
-    *  - `dir__compacting` present (any time): an incomplete or unswapped
-    *    rewrite — drop it; compact always rebuilds it from the live dir.
-    */
-  def recover(dir: String): Unit = recoverSwap(dir, "__compacting")
-
-  /** The ONE rename-aside recovery state machine, shared by every
-    * whole-directory swap in this package ([[recover]]'s `__compacting`
-    * scratch, [[Rollup.recover]]'s `__next`): restore `dir` from
-    * `dir__old` if the second rename never happened, drop `dir__old` if
-    * it did, and discard any scratch leftovers.
-    */
-  private[ops] def recoverSwap(dir: String, scratchSuffix: String): Unit = {
     val base = dir.stripSuffix("/")
-    val dirP = Fs.path(base)
-    val oldP = Fs.path(base + "__old")
-    val tmpP = Fs.path(base + scratchSuffix)
-    if (Fs.exists(oldP)) {
-      if (Fs.exists(dirP)) Fs.deleteRecursively(oldP)
-      else Fs.rename(oldP, dirP)
+    writePartitioned(spark.read.parquet(base), base + StoreNext, partitionCol,
+      sortCols)
+    swapIn(base + StoreNext, base, base + StoreAside)
+  }
+
+  // Every scratch, aside and marker name of the store family — the names
+  // `recover` acts on. The two swap shapes: the whole store
+  // (`<dir>__next` / `<dir>__old`) and one partition directory
+  // (`<dir>/.__next__<pd>` / `<dir>/.__old__<pd>`, dot-prefixed so a
+  // concurrent reader's file index never parses them as partition values).
+  private[ops] val StoreNext = "__next"
+  private[ops] val StoreAside = "__old"
+  private val DirNext = ".__next__"
+  private val DirAside = ".__old__"
+  private val Merging = ".__merging__"
+  private val Evolving = "__evolving"
+  private val EvolveDone = "._evolve_done"
+  private val SquashTmp = ".__squashtmp__"
+  private val SquashMark = ".__squashmark__"
+
+  /** THE rename-aside swap: replace `live` by the complete rewrite in
+    * `scratch`. `live` is renamed ASIDE (not deleted), the scratch renamed
+    * into place, and only then is the aside dropped, so at every instant
+    * one complete copy is on disk. If the second rename fails the aside is
+    * renamed back before rethrowing. With no `live` yet (a new partition
+    * value) the scratch is just renamed into place. Renames are single
+    * `FileSystem.rename` calls — atomic on HDFS and POSIX; [[Fs.rename]]
+    * refuses the object-store schemes where they are not.
+    */
+  private[ops] def swapIn(scratch: String, live: String,
+      aside: String): Unit = {
+    val (scratchP, liveP, asideP) =
+      (Fs.path(scratch), Fs.path(live), Fs.path(aside))
+    if (!Fs.exists(liveP)) Fs.rename(scratchP, liveP)
+    else {
+      Fs.rename(liveP, asideP)
+      try Fs.rename(scratchP, liveP)
+      catch {
+        case e: Throwable =>
+          try Fs.rename(asideP, liveP)
+          catch { case r: Throwable => e.addSuppressed(r) }
+          throw e
+      }
+      Fs.deleteRecursively(asideP)
     }
-    if (Fs.exists(tmpP)) Fs.deleteRecursively(tmpP)
     ()
   }
 
-  /** Compact ONLY the partition directories whose file count exceeds
-    * `maxFiles` — the 100 TB form of [[compact]]: a store with thousands
-    * of partition values accumulates appends unevenly, and rewriting the
-    * whole store to fix a handful of hot directories is a full-corpus
-    * write. Each fragmented directory is rewritten sorted and swapped
-    * with the same crash-safe rename-aside protocol as [[compact]] (per
-    * directory: at least one complete copy on disk at every instant;
-    * [[recover]] on the subdirectory rolls an interrupted swap forward
-    * or back). Untouched directories are not read, not written, not even
-    * opened. `maxDirs` bounds one pass to the worst offenders (budgeted
-    * maintenance window); repeated passes converge.
-    *
-    * `targetFileBytes` = 0 keeps the classic one-file-per-directory
-    * contract — which funnels each directory through ONE task, fine for
-    * long-tail values, wrong for a hot one (`lang=en` at 100 TB is
-    * multi-TB). With `targetFileBytes` > 0 a directory rewrites as
-    * ceil(bytes / target) PARALLEL range-partitioned sorted runs (each
-    * file still carries tight sort-key min/max), and a directory already
-    * within that file count counts as compacted, so passes converge on
-    * size-targeted stores too. Bytes come from the directory listing —
-    * no footer is opened (row-count targeting would have to open every
-    * footer of every directory, breaking the untouched-dirs contract).
-    *
-    * Returns the partition directory names that were compacted.
+  /** THE crash recovery of the partitioned-store family — SQLite's
+    * hot-journal rule: every store write ([[append]], [[appendBatch]],
+    * [[ingest]], [[ingestBloom]], [[merge]], every maintenance op here and
+    * [[Rollup.maintain]]) runs it first, so no write lands on a
+    * half-swapped store. On a healthy store it only probes. In order:
+    *  1. whole-store aside `dir__old`: live `dir` present → the swap
+    *     completed, drop the aside; live missing → roll back;
+    *  2. whole-store scratch `dir__next`: an unswapped rewrite, dropped
+    *     (its op rebuilds it from the live store);
+    *  3. [[evolvePartitions]]' resumable `dir__evolving`: staging dirs and
+    *     the `src-<enc>-*` files of sources missing from its progress log
+    *     are pruned, completed sources are kept; a progress log that a
+    *     completed swap carried into the live dir is dropped;
+    *  4. per-directory asides `.__old__<pd>`: the rule of step 1;
+    *  5. per-directory scratch `.__next__<pd>` and [[merge]]'s
+    *     `.__merging__`: dropped;
+    *  6. [[squashHistory]] markers roll forward (scratch present → redo the
+    *     deletes and the move; scratch gone → finish the deletes);
+    *     markerless squash scratch is a pre-commit crash, dropped;
+    *  7. `.*.tmp` atomic-write leftovers ([[Fs.tmpFor]]'s naming rule) in
+    *     the store root and in `dir__evolving`.
     */
+  def recover(dir: String): Unit = {
+    val base = dir.stripSuffix("/")
+    def rollAside(aside: String, live: String): Unit =
+      if (Fs.exists(Fs.path(aside))) {
+        if (Fs.exists(Fs.path(live))) Fs.deleteRecursively(Fs.path(aside))
+        else Fs.rename(Fs.path(aside), Fs.path(live))
+      }
+    def sweepTmp(d: Path): Unit = Fs.list(d).foreach { f =>
+      val n = f.getPath.getName
+      if (f.isFile && n.startsWith(".") && n.endsWith(".tmp"))
+        Fs.deleteFile(f.getPath)
+    }
+    rollAside(base + StoreAside, base)
+    Fs.deleteRecursively(Fs.path(base + StoreNext))
+    val evolving = Fs.path(base + Evolving)
+    if (Fs.isDir(evolving)) {
+      val doneFile = new Path(evolving, EvolveDone)
+      val keep = (if (Fs.exists(doneFile))
+        Fs.readUTF8(doneFile).linesIterator.toSet else Set.empty[String])
+        .map(srcEnc)
+      Fs.list(evolving).foreach { f =>
+        if (f.getPath.getName.startsWith(".__stage__"))
+          Fs.deleteRecursively(f.getPath)
+        else if (f.isDirectory)
+          Fs.list(f.getPath).foreach { df =>
+            val n = df.getPath.getName
+            if (n.startsWith("src-") && n.endsWith(".parquet") &&
+                !keep.exists(e => n.startsWith(s"src-$e-")))
+              Fs.deleteFile(df.getPath)
+          }
+      }
+      sweepTmp(evolving)
+    }
+    Fs.deleteFile(Fs.path(s"$base/$EvolveDone"))
+    val entries = Fs.list(Fs.path(base)).map(_.getPath.getName)
+    entries.filter(_.startsWith(DirAside)).foreach(n =>
+      rollAside(s"$base/$n", s"$base/${n.stripPrefix(DirAside)}"))
+    entries.filter(n => n.startsWith(DirNext) || n == Merging)
+      .foreach(n => Fs.deleteRecursively(Fs.path(s"$base/$n")))
+    val marks =
+      entries.filter(n => n.startsWith(SquashMark) && !n.endsWith(".tmp"))
+    marks.foreach { n =>
+      val pd = n.stripPrefix(SquashMark)
+      val lines = Fs.readUTF8(Fs.path(s"$base/$n")).trim.split("\n").toSeq
+      val target = lines.head.toLong
+      val ids = lines.tail.map(_.toLong)
+      val tmp = Fs.path(s"$base/$SquashTmp$pd")
+      def drop(i: Long): Unit =
+        Fs.deleteRecursively(Fs.path(s"$base/$pd/ingest_batch=$i"))
+      if (Fs.exists(tmp)) {
+        // deletes may be partial and the move has not happened (the
+        // scratch is the only complete copy): redo both
+        ids.foreach(drop)
+        Fs.rename(tmp, Fs.path(s"$base/$pd/ingest_batch=$target"))
+      } else ids.filter(_ != target).foreach(drop) // moved: finish deletes
+      Fs.deleteFile(Fs.path(s"$base/$n"))
+    }
+    entries.filter(n => n.startsWith(SquashTmp) &&
+        !marks.contains(SquashMark + n.stripPrefix(SquashTmp)))
+      .foreach(n => Fs.deleteRecursively(Fs.path(s"$base/$n")))
+    sweepTmp(Fs.path(base))
+  }
+
+  /** Per-directory rewrites run at most this many at a time. */
+  private val MaxConcurrentRewrites = 4
+
   /** Run per-directory rewrite bodies CONCURRENTLY (optimization round 15,
     * guide §2.6 "overlap independent jobs"): the maintenance family's
     * per-partition rewrites are driver-sequenced Spark jobs over disjoint
     * directories, so a store with P fragmented/expiring dirs paid P full
     * job round-trips back to back while most of the cluster idled through
-    * each job's tail. Each body keeps its own per-directory crash-safe
-    * rename protocol (the recover state machines roll ANY subset of
-    * completed dirs forward, so concurrent completion order changes
-    * nothing); a small pool merely lets the next directory's job back-fill
-    * executors the current one no longer saturates. Results come back in
-    * ITEM order, the first failure propagates with its original exception
-    * (unwrapped), and `spark.graft.layout.maxConcurrentRewrites` (default
-    * 4 — the guide's "2-3 jobs in flight is plenty" plus one) bounds the
-    * in-flight jobs so production-sized directory rewrites don't fight for
-    * executors.
+    * each job's tail. Each body swaps its own directory with [[swapIn]]
+    * ([[recover]] rolls ANY subset of completed dirs forward, so
+    * concurrent completion order changes nothing); a small pool merely
+    * lets the next directory's job back-fill executors the current one no
+    * longer saturates. Results come back in ITEM order, the first failure
+    * propagates with its original exception (unwrapped), and at most
+    * [[MaxConcurrentRewrites]] jobs are in flight (the guide's "2-3 jobs
+    * in flight is plenty" plus one) so production-sized directory
+    * rewrites don't fight for executors.
     */
-  private def forEachRewrite[T, R](spark: SparkSession, items: Seq[T])(
-      body: T => R): Seq[R] = {
-    // malformed / non-positive conf falls back to the default instead of
-    // throwing from every maintenance entry point; 1 is the documented
-    // sequential escape hatch (r15 advice)
-    val conc = math.min(items.size,
-      spark.conf.get("spark.graft.layout.maxConcurrentRewrites", "4")
-        .toIntOption.filter(_ >= 1).getOrElse(4))
+  private def forEachRewrite[T, R](items: Seq[T])(body: T => R): Seq[R] = {
+    val conc = math.min(items.size, MaxConcurrentRewrites)
     if (conc <= 1) items.map(body)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(conc)
@@ -193,11 +244,36 @@ object Layout {
     }
   }
 
+  /** Compact ONLY the partition directories whose file count exceeds
+    * `maxFiles` — the 100 TB form of [[compact]]: a store with thousands
+    * of partition values accumulates appends unevenly, and rewriting the
+    * whole store to fix a handful of hot directories is a full-corpus
+    * write. Each fragmented directory is rewritten sorted into
+    * `.__next__<pd>` and put in place with [[swapIn]] (per directory: at
+    * least one complete copy on disk at every instant; [[recover]], run
+    * first, rolls an interrupted swap forward or back). Untouched
+    * directories are not read, not written, not even opened. `maxDirs`
+    * bounds one pass to the worst offenders (budgeted maintenance window);
+    * repeated passes converge.
+    *
+    * `targetFileBytes` = 0 keeps the classic one-file-per-directory
+    * contract — which funnels each directory through ONE task, fine for
+    * long-tail values, wrong for a hot one (`lang=en` at 100 TB is
+    * multi-TB). With `targetFileBytes` > 0 a directory rewrites as
+    * ceil(bytes / target) PARALLEL range-partitioned sorted runs (each
+    * file still carries tight sort-key min/max), and a directory already
+    * within that file count counts as compacted, so passes converge on
+    * size-targeted stores too. Bytes come from the directory listing —
+    * no footer is opened (row-count targeting would have to open every
+    * footer of every directory, breaking the untouched-dirs contract).
+    *
+    * Returns the partition directory names that were compacted.
+    */
   def compactPartitions(spark: SparkSession, dir: String, sortCols: Seq[String],
       maxFiles: Int = 1, maxDirs: Int = Int.MaxValue,
       targetFileBytes: Long = 0L): Seq[String] = {
     require(maxDirs >= 1, "compactPartitions: maxDirs must be >= 1")
-    recoverPartitions(dir)
+    recover(dir)
     val base = dir.stripSuffix("/")
     // size-targeted mode (targetFileBytes > 0): a directory is COMPACTED
     // once its file count is within what a size-targeted layout needs —
@@ -217,30 +293,15 @@ object Layout {
         n > needed(pd) }.toSeq
       .sortBy { case (name, n) => (-n, name) }
       .take(maxDirs).map(_._1).sorted
-    forEachRewrite(spark, fragmented) { pd =>
+    forEachRewrite(fragmented) { pd =>
       val sub = s"$base/$pd"
-      // scratch names are DOT-prefixed so Spark's file index ignores them:
-      // a concurrent reader of the store mid-compact must never see a
-      // half-written `lang=...__tmp` directory parse as a partition value
-      val tmp = s"$base/.__compacting__$pd"
-      val old = s"$base/.__old__$pd"
       // the partition column lives in the DIRECTORY NAME, not the files —
       // reading the subdir yields the data columns only, which is exactly
       // what the rewritten files must contain
       clusterForRewrite(spark.read.parquet(sub), sortCols,
           targetFiles(dirDataBytes(Fs.path(sub)), targetFileBytes))
-        .write.mode("overwrite").parquet(tmp)
-      val subP = Fs.path(sub)
-      val tmpP = Fs.path(tmp)
-      val oldP = Fs.path(old)
-      Fs.rename(subP, oldP)
-      try Fs.rename(tmpP, subP)
-      catch {
-        case e: Throwable =>
-          Fs.rename(oldP, subP)
-          throw e
-      }
-      Fs.deleteRecursively(oldP)
+        .write.mode("overwrite").parquet(s"$base/$DirNext$pd")
+      swapIn(s"$base/$DirNext$pd", sub, s"$base/$DirAside$pd")
     }
     fragmented
   }
@@ -281,36 +342,6 @@ object Layout {
     else df.repartitionByRange(numFiles, sortCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
 
-  /** Roll interrupted [[compactPartitions]] swaps forward or back from
-    * their dot-prefixed scratch leftovers — the per-directory analogue of
-    * [[recover]], run automatically at the start of compactPartitions.
-    * Safe on a healthy store (no-op).
-    */
-  def recoverPartitions(dir: String): Unit =
-    recoverDotSwaps(dir, ".__compacting__")
-
-  /** The shared per-directory recovery state machine behind
-    * [[recoverPartitions]]/[[recoverVacuum]]/[[recoverAddColumn]]:
-    * `.__old__X` present + live `X` present → swap completed, drop the
-    * aside; aside present + live missing → roll back; any `scratchPrefix`
-    * leftover → incomplete rewrite, drop it.
-    */
-  private def recoverDotSwaps(dir: String, scratchPrefix: String): Unit = {
-    val base = dir.stripSuffix("/")
-    val entries = Fs.list(Fs.path(base)).map(_.getPath.getName)
-    entries.filter(_.startsWith(".__old__")).foreach { n =>
-      val pd = n.stripPrefix(".__old__")
-      val live = Fs.path(s"$base/$pd")
-      val oldP = Fs.path(s"$base/$n")
-      if (Fs.exists(live)) Fs.deleteRecursively(oldP)
-      else Fs.rename(oldP, live)
-    }
-    entries.filter(_.startsWith(scratchPrefix)).foreach { n =>
-      Fs.deleteRecursively(Fs.path(s"$base/$n"))
-    }
-    ()
-  }
-
   /** Append a batch to an existing partitioned store — same per-value
     * clustering and in-file sort as [[writePartitioned]], but additive:
     * each append lands ONE new file per touched partition directory.
@@ -326,6 +357,7 @@ object Layout {
     */
   def append(df: DataFrame, dir: String, partitionCol: String,
       sortCols: Seq[String]): Unit = {
+    recover(dir)
     // an EMPTY batch into a DATA-LESS store (absent, or existing with
     // only a checkpoint sidecar / _SUCCESS) must not create a schema-less
     // store that poisons later opens. The isEmpty job only runs in that
@@ -413,6 +445,7 @@ object Layout {
     // store. The pre-write isEmpty job runs only in the rare fresh-store
     // case; on an existing store emptiness is detected for free AFTER the
     // write (no ingest_batch dir appeared). Returns -1: nothing written.
+    recover(dir)
     if (!hasData(dir) && df.isEmpty) return -1L
     requireSchemaMatch(df, dir, partitionCol)
     val next = nextBatchId(dir)
@@ -531,6 +564,7 @@ object Layout {
   def ingest(batch: DataFrame, dir: String, partitionCol: String,
       sortCols: Seq[String], keyExpr: org.apache.spark.sql.Column): Unit = {
     val spark = batch.sparkSession
+    recover(dir) // before the store probe below; append's own is a no-op
     if (!Fs.exists(Fs.path(dir))) {
       append(batch, dir, partitionCol, sortCols); return
     }
@@ -564,6 +598,7 @@ object Layout {
       sortCols: Seq[String], keyExpr: org.apache.spark.sql.Column,
       fpp: Double = 0.01): Unit = {
     val spark = batch.sparkSession
+    recover(dir) // before the store probe below; append's own is a no-op
     if (!Fs.exists(Fs.path(dir))) {
       append(batch, dir, partitionCol, sortCols); return
     }
@@ -615,13 +650,13 @@ object Layout {
     *    any outstanding checkpoint (a consumer at c < S would re-consume
     *    the whole squashed mass as "new" on its next [[readNew]]).
     *
-    * Crash-safe per partition directory, same discipline as
-    * [[compactPartitions]] (dot-prefixed scratch so a concurrent reader
-    * never parses half-written dirs as partition values): the merged
-    * rewrite lands in scratch first, a commit MARKER records the ids
-    * being replaced, only then are old dirs deleted and the scratch moved
-    * in, and the marker removed. [[recoverSquash]] — run automatically on
-    * entry — rolls an interrupted squash forward from the marker (scratch
+    * Crash-safe per partition directory, with dot-prefixed scratch like
+    * [[compactPartitions]] (a concurrent reader never parses half-written
+    * dirs as partition values): the merged rewrite lands in
+    * `.__squashtmp__<pd>` first, a commit MARKER records the ids being
+    * replaced, only then are old dirs deleted and the scratch moved in,
+    * and the marker removed. [[recover]] — run first, as by every store
+    * write — rolls an interrupted squash forward from the marker (scratch
     * still present: redo deletes, complete the move; scratch gone: the
     * move completed, finish the deletes), and sweeps markerless scratch
     * (pre-commit crash: originals are intact). At every instant at least
@@ -633,17 +668,16 @@ object Layout {
     * has — compact/compactPartitions/merge). Run squash as the store's
     * single writer in a maintenance window with respect to full-history
     * readers; incremental consumers above the floor only lose listing
-    * work. After a crash the gap PERSISTS until recoverSquash runs —
-    * reads do not self-heal — so schedule squash via a wrapper that
-    * always recovers first (this method does) or call recoverSquash at
-    * store-open, like compact's recover.
+    * work. After a crash the gap PERSISTS until [[recover]] runs — reads
+    * do not self-heal — so the next write to the store (which recovers
+    * first) or an explicit [[recover]] at store-open closes it.
     *
     * Returns the partition directory names that were squashed.
     */
   def squashHistory(spark: SparkSession, dir: String, upTo: Long,
       sortCols: Seq[String] = Seq.empty,
       targetFileBytes: Long = 0L): Seq[String] = {
-    recoverSquash(dir)
+    recover(dir)
     val base = dir.stripSuffix("/")
     val parts = Fs.list(Fs.path(base)).filter(isPartitionDir)
     def batchIds(p: FileStatus): Seq[Long] =
@@ -665,13 +699,13 @@ object Layout {
         s"${lagging.keys.toSeq.sorted.mkString(",")} are checkpointed below " +
         s"batch $s and would re-consume the squashed history; advance or " +
         "drop their checkpoints first")
-    val touched = forEachRewrite(spark, partIds.toSeq) { case (p, ids) =>
+    val touched = forEachRewrite(partIds.toSeq) { case (p, ids) =>
       // a partition already holding exactly one dir labeled S is done
       if (ids.isEmpty || ids == Seq(s)) None
       else {
         val pd = p.getPath.getName
-        val tmp = s"$base/.__squashtmp__$pd"
-        val mark = Fs.path(s"$base/.__squashmark__$pd")
+        val tmp = s"$base/$SquashTmp$pd"
+        val mark = Fs.path(s"$base/$SquashMark$pd")
         val srcs = ids.map(i => s"$base/$pd/ingest_batch=$i")
         // the partition cols live in directory names; the merged files
         // must carry data columns only, exactly like compactPartitions.
@@ -685,7 +719,7 @@ object Layout {
         // commit point: marker lists the ids being replaced + the target.
         // Written via tmp + rename onto a NONEXISTENT name — fully atomic
         // (no replace window): the marker either exists complete or not
-        val tmpMark = Fs.path(s"$base/.__squashmark__$pd.tmp")
+        val tmpMark = Fs.path(s"$base/$SquashMark$pd.tmp")
         Fs.writeUTF8(tmpMark,
           (s.toString +: ids.map(_.toString)).mkString("\n"))
         Fs.rename(tmpMark, mark)
@@ -699,46 +733,6 @@ object Layout {
     touched.flatten.sorted
   }
 
-  /** Roll interrupted [[squashHistory]] swaps forward from their commit
-    * markers; sweep pre-commit scratch. Safe on a healthy store (no-op).
-    */
-  def recoverSquash(dir: String): Unit = {
-    val base = dir.stripSuffix("/")
-    val entries = Fs.list(Fs.path(base)).map(_.getPath.getName)
-    entries.filter(n => n.startsWith(".__squashmark__") && !n.endsWith(".tmp"))
-      .foreach { n =>
-        val pd = n.stripPrefix(".__squashmark__")
-        val lines = Fs.readUTF8(Fs.path(s"$base/$n")).trim.split("\n").toSeq
-        val target = lines.head.toLong
-        val ids = lines.tail.map(_.toLong)
-        val tmp = Fs.path(s"$base/.__squashtmp__$pd")
-        if (Fs.exists(tmp)) {
-          // deletes may be partial; the move has not happened (scratch is
-          // the only complete copy) — redo both
-          ids.foreach(i =>
-            Fs.deleteRecursively(Fs.path(s"$base/$pd/ingest_batch=$i")))
-          Fs.rename(tmp, Fs.path(s"$base/$pd/ingest_batch=$target"))
-        } else {
-          // move completed: the target dir holds the squashed data — finish
-          // deleting the replaced ids EXCEPT the target itself
-          ids.filter(_ != target).foreach(i =>
-            Fs.deleteRecursively(Fs.path(s"$base/$pd/ingest_batch=$i")))
-        }
-        Fs.deleteFile(Fs.path(s"$base/$n"))
-        ()
-      }
-    // markerless scratch = crash before the commit point: originals intact
-    entries.filter(_.startsWith(".__squashtmp__")).foreach { n =>
-      if (!Fs.exists(Fs.path(
-          s"$base/.__squashmark__${n.stripPrefix(".__squashtmp__")}")))
-        Fs.deleteRecursively(Fs.path(s"$base/$n"))
-    }
-    // half-written markers from a crash inside the marker write
-    entries.filter(n => n.startsWith(".__squashmark__") && n.endsWith(".tmp"))
-      .foreach(n => Fs.deleteFile(Fs.path(s"$base/$n")))
-    ()
-  }
-
   /** MERGE (upsert) by key into a partitioned store: each batch row
     * REPLACES every store row sharing its `keyCols` value; batch rows with
     * no match are inserted. The update primitive the append-only paths
@@ -749,8 +743,8 @@ object Layout {
     * `partitionCol` values appear in the batch are read, rewritten, and
     * swapped. At 100 TB a merge touching 3 of 10 000 day-partitions scans
     * and writes 3 directories; the other 9 997 are never opened. Each
-    * touched directory swaps via the crash-safe rename-aside protocol of
-    * [[compactPartitions]] (dot-prefixed scratch, [[recoverPartitions]]
+    * touched directory is rewritten under the dot-prefixed `.__merging__`
+    * scratch and put in place with [[swapIn]] ([[recover]], run first,
     * rolls an interrupted swap forward or back), so the merge is atomic
     * PER DIRECTORY, not across the store; re-running the same merge is
     * idempotent (replace-by-key twice = once), which is the recovery
@@ -785,6 +779,7 @@ object Layout {
       keyCols: Seq[String], sortCols: Seq[String]): Seq[String] = {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val spark = batch.sparkSession
+    recover(dir)
     if (!hasData(dir)) { // first write: plain partitioned layout
       // empty batch + absent store: writing would leave a _SUCCESS-only
       // schema-less dir that poisons later opens (same guard as append)
@@ -793,11 +788,8 @@ object Layout {
       return filesPerPartition(dir).keys.toSeq.sorted
     }
     requireSchemaMatch(batch, dir, partitionCol)
-    recoverPartitions(dir)
     val base = dir.stripSuffix("/")
-    val scratch = s"$base/.__merging__"
-    val scratchP = Fs.path(scratch)
-    if (Fs.exists(scratchP)) Fs.deleteRecursively(scratchP) // stale crashed merge
+    val scratch = s"$base/$Merging"
     // screen pass 1 (per partition value): touched values + null screens.
     // The key-dup count is NOT taken from these per-value groups — a key
     // appearing under TWO partition values would count distinct in each —
@@ -857,26 +849,13 @@ object Layout {
       .sortWithinPartitions((partitionCol +: sortCols).map(col): _*)
       .write.mode("overwrite").partitionBy(partitionCol)
       .parquet(scratch)
-    // swap each rewritten directory into place, one crash-safe rename
-    // pair at a time (new partition values just move in — no live dir)
-    val rewritten = Fs.list(scratchP)
+    // swap each rewritten directory into place, one at a time (new
+    // partition values just move in — no live dir)
+    val rewritten = Fs.list(Fs.path(scratch))
       .filter(isPartitionDir).map(_.getPath.getName).sorted
-    rewritten.foreach { pd =>
-      val liveP = Fs.path(s"$base/$pd")
-      val tmpP = Fs.path(s"$scratch/$pd")
-      val oldP = Fs.path(s"$base/.__old__$pd")
-      if (Fs.exists(liveP)) {
-        Fs.rename(liveP, oldP)
-        try Fs.rename(tmpP, liveP)
-        catch {
-          case e: Throwable =>
-            Fs.rename(oldP, liveP)
-            throw e
-        }
-        Fs.deleteRecursively(oldP)
-      } else Fs.rename(tmpP, liveP)
-    }
-    Fs.deleteRecursively(scratchP)
+    rewritten.foreach(pd =>
+      swapIn(s"$scratch/$pd", s"$base/$pd", s"$base/$DirAside$pd"))
+    Fs.deleteRecursively(Fs.path(scratch))
     rewritten
   }
 
@@ -898,33 +877,32 @@ object Layout {
     *     `src-<md5(sourceDir)>-` — so a crash mid-source is recovered by
     *     deleting exactly that source's files and redoing it. All other
     *     completed sources' work is kept.
-    *  3. when every source is listed done, the whole scratch is swapped
-    *     into place with [[compact]]'s rename-aside protocol (live dir
-    *     renamed to `dir__old`, scratch renamed live, `dir__old` dropped).
+    *  3. when every source is listed done, the whole scratch is put in
+    *     place with [[swapIn]] (live dir renamed to `dir__old`, scratch
+    *     renamed live, `dir__old` dropped).
     *
     * The ORIGINAL store stays live and readable until the final atomic
     * swap; a crash anywhere loses at most one source partition's rewrite.
-    * [[recoverEvolve]] (run automatically on entry) rolls an interrupted
-    * swap forward/back and prunes partial source output, after which a
-    * re-run resumes from `._evolve_done`. Scale: per-increment work is
-    * one source partition's rows (bounded), never the corpus; the final
-    * swap is two renames.
+    * [[recover]] (run first) rolls an interrupted swap forward/back and
+    * prunes partial source output, after which a re-run resumes from
+    * `._evolve_done`. Scale: per-increment work is one source partition's
+    * rows (bounded), never the corpus; the final swap is two renames.
     *
     * Returns the source directory names processed THIS call (empty =
     * everything was already done and only the swap was pending).
     */
   def evolvePartitions(spark: SparkSession, dir: String, fromCol: String,
       toCol: String, sortCols: Seq[String]): Seq[String] = {
-    recoverEvolve(dir)
+    recover(dir)
     val base = dir.stripSuffix("/")
-    val scratch = base + "__evolving"
-    val doneFile = Fs.path(s"$scratch/._evolve_done")
+    val scratch = base + Evolving
+    val doneFile = Fs.path(s"$scratch/$EvolveDone")
     val sources = Fs.list(Fs.path(base))
       .filter(f => f.isDirectory && f.getPath.getName.startsWith(fromCol + "="))
       .map(_.getPath.getName).sorted
     if (sources.isEmpty) {
       // a crash AFTER the final swap leaves the live dir already evolved
-      // (recoverEvolve just rolled it forward): re-running is the
+      // (recover just rolled it forward): re-running is the
       // documented recovery path and must be a no-op, not an error
       val alreadyEvolved = Fs.list(Fs.path(base))
         .exists(f => f.isDirectory && f.getPath.getName.startsWith(toCol + "="))
@@ -944,10 +922,10 @@ object Layout {
     // collide in a shared target dir; Fs.mkdirs is idempotent) — only the
     // progress log is shared, so its accumulate+write is synchronized. The
     // logged set is exactly the COMPLETED sources whatever the completion
-    // order, which a crash resume (recoverEvolve prune + rerun) already
+    // order, which a crash resume (recover's prune + rerun) already
     // tolerates by construction.
     val committed = scala.collection.mutable.Set[String]() ++ done
-    forEachRewrite(spark, todo) { srcDir =>
+    forEachRewrite(todo) { srcDir =>
       val enc = srcEnc(srcDir)
       val stage = s"$scratch/.__stage__$enc"
       spark.read.option("basePath", base).parquet(s"$base/$srcDir")
@@ -968,25 +946,17 @@ object Layout {
       Fs.deleteRecursively(Fs.path(stage))
       // commit this source: rewrite the done file via atomic tmp swap so
       // a crash mid-write never truncates the progress log (a LOST done
-      // file only redoes work — recoverEvolve prunes and the run resumes)
+      // file only redoes work — recover prunes and the run resumes)
       committed.synchronized {
         committed += srcDir
         Fs.writeUTF8Atomic(doneFile,
           committed.toSeq.sorted.mkString("\n") + "\n")
       }
     }
-    // every source committed -> atomic whole-store swap (rename-aside)
-    val dirP = Fs.path(base)
-    val oldP = Fs.path(base + "__old")
-    Fs.rename(dirP, oldP)
-    try Fs.rename(Fs.path(scratch), dirP)
-    catch {
-      case e: Throwable =>
-        Fs.rename(oldP, dirP)
-        throw e
-    }
-    Fs.deleteRecursively(oldP)
-    Fs.deleteFile(Fs.path(s"$base/._evolve_done"))
+    // every source committed -> atomic whole-store swap; the progress log
+    // rides in with the scratch and is dropped after
+    swapIn(scratch, base, base + StoreAside)
+    Fs.deleteFile(Fs.path(s"$base/$EvolveDone"))
     todo
   }
 
@@ -1009,17 +979,16 @@ object Layout {
     * which stays readable throughout). Choose this form inside a
     * maintenance window where one shuffle round is affordable; choose the
     * incremental form when redoing the whole rewrite on failure is not.
-    * Both end in the same atomic whole-store rename-aside swap;
-    * [[recoverSwap]] (run on entry) rolls an interrupted swap forward or
-    * back.
+    * Both end in the same whole-store [[swapIn]]; [[recover]] (run
+    * first) rolls an interrupted swap forward or back.
     *
     * Returns the target partition directory names created.
     */
   def evolveCompact(spark: SparkSession, dir: String, fromCol: String,
       toCol: String, sortCols: Seq[String]): Seq[String] = {
-    recoverSwap(dir, "__evolvecompact")
+    recover(dir)
     val base = dir.stripSuffix("/")
-    val scratch = base + "__evolvecompact"
+    val scratch = base + StoreNext
     val sources = Fs.list(Fs.path(base))
       .filter(f => f.isDirectory && f.getPath.getName.startsWith(fromCol + "="))
     if (sources.isEmpty) {
@@ -1037,16 +1006,7 @@ object Layout {
     val created = Fs.list(Fs.path(scratch))
       .filter(f => f.isDirectory && f.getPath.getName.startsWith(toCol + "="))
       .map(_.getPath.getName).sorted
-    val dirP = Fs.path(base)
-    val oldP = Fs.path(base + "__old")
-    Fs.rename(dirP, oldP)
-    try Fs.rename(Fs.path(scratch), dirP)
-    catch {
-      case e: Throwable =>
-        Fs.rename(oldP, dirP)
-        throw e
-    }
-    Fs.deleteRecursively(oldP)
+    swapIn(scratch, base, base + StoreAside)
     created
   }
 
@@ -1057,60 +1017,6 @@ object Layout {
     java.security.MessageDigest.getInstance("MD5")
       .digest(srcDir.getBytes("UTF-8")).take(8)
       .map("%02x".format(_)).mkString
-
-  /** Roll an interrupted [[evolvePartitions]] to a resumable state. Run
-    * automatically on entry; safe on a healthy store (no-op). Cases:
-    *  - `dir__old` present: the final swap was interrupted. `dir` present
-    *    → swap completed, drop `dir__old` (and the migrated progress
-    *    marker); `dir` missing → roll back (`dir__old` becomes live
-    *    again; any complete scratch is kept and the next run goes
-    *    straight to the swap).
-    *  - scratch present with a progress file: delete staging leftovers
-    *    and every `src-<enc>-*` file belonging to sources NOT in the
-    *    progress file (partial output of the crashed increment) — the
-    *    next run redoes exactly those sources.
-    */
-  def recoverEvolve(dir: String): Unit = {
-    val base = dir.stripSuffix("/")
-    val dirP = Fs.path(base)
-    val oldP = Fs.path(base + "__old")
-    if (Fs.exists(oldP)) {
-      if (Fs.exists(dirP)) Fs.deleteRecursively(oldP)
-      else Fs.rename(oldP, dirP)
-    }
-    // a completed swap leaves the progress marker inside the live dir
-    Fs.deleteFile(Fs.path(s"$base/._evolve_done"))
-    val scratch = Fs.path(base + "__evolving")
-    if (Fs.isDir(scratch)) {
-      val doneFile = Fs.path(s"${base}__evolving/._evolve_done")
-      val done: Set[String] =
-        if (Fs.exists(doneFile)) Fs.readUTF8(doneFile).linesIterator.toSet
-        else Set.empty
-      val keep = done.map(srcEnc)
-      Fs.list(scratch).foreach { f =>
-        val name = f.getPath.getName
-        if (name.startsWith(".__stage__")) Fs.deleteRecursively(f.getPath)
-        else if (f.isDirectory)
-          Fs.list(f.getPath).foreach { df =>
-            val n = df.getPath.getName
-            if (n.startsWith("src-") && n.endsWith(".parquet") &&
-                !keep.exists(e => n.startsWith(s"src-$e-")))
-              Fs.deleteFile(df.getPath)
-          }
-      }
-      // crash-leftover atomic-write temps in the scratch root: sweep by
-      // the ACTUAL naming rule (Fs.tmpFor — no double-dotting) plus any
-      // legacy `.*.tmp` stragglers a pre-r15 writer may have left, so the
-      // final whole-store swap can never carry a stray dotfile live
-      Fs.deleteFile(Fs.tmpFor(doneFile))
-      Fs.list(scratch).foreach { f =>
-        val n = f.getPath.getName
-        if (!f.isDirectory && n.startsWith(".") && n.endsWith(".tmp"))
-          Fs.deleteFile(f.getPath)
-      }
-    }
-    ()
-  }
 
   /** TTL / RETENTION VACUUM: delete every row whose `tsCol` value is
     * below `cutoff` from a partitioned store — the retention sweep a
@@ -1125,12 +1031,12 @@ object Layout {
     *  - LIVE directories (footer min(tsCol) ≥ cutoff everywhere):
     *    untouched — not read, not rewritten, not opened past the footer.
     *  - BOUNDARY directories (straddle the cutoff): rewritten with the
-    *    `tsCol >= cutoff` filter to one sorted file and swapped in with
-    *    [[compactPartitions]]' per-directory rename-aside protocol — at
-    *    every instant a complete copy of the surviving rows exists on
-    *    disk, and [[recoverVacuum]] (run automatically on entry) rolls an
-    *    interrupted swap forward or back. A rewrite that drops EVERY row
-    *    removes the directory (empty partition dirs poison readers).
+    *    `tsCol >= cutoff` filter to one sorted file in `.__next__<pd>` and
+    *    put in place with [[swapIn]] — at every instant a complete copy of
+    *    the surviving rows exists on disk, and [[recover]] (run first)
+    *    rolls an interrupted swap forward or back. A rewrite that drops
+    *    EVERY row deletes the directory directly, like an expired one
+    *    (empty partition dirs poison readers).
     *
     * Files without `tsCol` stats are treated as boundary (rewritten —
     * correct, just not skipped). Scale: cost is proportional to the
@@ -1142,7 +1048,7 @@ object Layout {
   def vacuumRetention(spark: SparkSession, dir: String, tsCol: String,
       cutoff: Long, sortCols: Seq[String],
       targetFileBytes: Long = 0L): (Seq[String], Seq[String]) = {
-    recoverVacuum(dir)
+    recover(dir)
     val base = dir.stripSuffix("/")
     val parts = Fs.list(Fs.path(base)).filter(isPartitionDir)
       .map(_.getPath.getName).sorted
@@ -1151,7 +1057,7 @@ object Layout {
     object Kept extends Outcome
     object Deleted extends Outcome
     object Rewritten extends Outcome
-    val outcomes = forEachRewrite(spark, parts) { pd =>
+    val outcomes = forEachRewrite(parts) { pd =>
       val sub = s"$base/$pd"
       // footer sweep: (every group max < cutoff, every group min >= cutoff)
       val stats = Manifest.manifest(spark, sub, tsCol)
@@ -1175,7 +1081,7 @@ object Layout {
         Fs.deleteRecursively(Fs.path(sub))
         Deleted
       } else if (!allLive) {
-        val tmp = s"$base/.__vacuuming__$pd"
+        val tmp = s"$base/$DirNext$pd"
         val survivors = spark.read.parquet(sub)
           .filter(col(tsCol) >= lit(cutoff) || col(tsCol).isNull)
         // survivors <= the directory's bytes: the pre-filter size is a
@@ -1186,24 +1092,14 @@ object Layout {
         val anyRow = Fs.list(Fs.path(tmp))
           .exists(_.getPath.getName.endsWith(".parquet")) &&
           spark.read.parquet(tmp).limit(1).count() > 0
-        val subP = Fs.path(sub)
-        val oldP = Fs.path(s"$base/.__old__$pd")
-        Fs.rename(subP, oldP)
-        val out: Outcome =
-          if (anyRow) {
-            try Fs.rename(Fs.path(tmp), subP)
-            catch {
-              case e: Throwable =>
-                Fs.rename(oldP, subP)
-                throw e
-            }
-            Rewritten
-          } else {
-            Fs.deleteRecursively(Fs.path(tmp))
-            Deleted
-          }
-        Fs.deleteRecursively(oldP)
-        out
+        if (anyRow) {
+          swapIn(tmp, sub, s"$base/$DirAside$pd")
+          Rewritten
+        } else {
+          Fs.deleteRecursively(Fs.path(sub))
+          Fs.deleteRecursively(Fs.path(tmp))
+          Deleted
+        }
       } else Kept
     }
     val byDir = parts.zip(outcomes)
@@ -1219,12 +1115,12 @@ object Layout {
     * a column the store lacks until the store is evolved first).
     *
     * Incremental + idempotent: each directory is rewritten with the new
-    * column and swapped in with [[compactPartitions]]' per-directory
-    * rename-aside protocol; a directory whose files ALREADY carry
-    * `colName` is skipped (one footer-only schema read), which is what
-    * makes a crashed run resumable by just re-running — completed
-    * directories skip, the interrupted one is rolled forward/back by
-    * [[recoverAddColumn]] (run automatically on entry), the rest redo.
+    * column into `.__next__<pd>` and put in place with [[swapIn]]; a
+    * directory whose files ALREADY carry `colName` is skipped (one
+    * footer-only schema read), which is what makes a crashed run
+    * resumable by just re-running — completed directories skip, the
+    * interrupted one is rolled forward/back by [[recover]] (run first),
+    * the rest redo.
     * At every instant every directory holds one complete copy of its
     * rows, and readers see old-schema or new-schema files per directory,
     * never a torn one. Scale: cost is one read+write of each directory,
@@ -1251,54 +1147,30 @@ object Layout {
     require(cols.nonEmpty, "addColumns: no columns to add")
     require(cols.map(_._1).distinct.size == cols.size,
       "addColumns: duplicate column names")
-    recoverAddColumn(dir)
+    recover(dir)
     val base = dir.stripSuffix("/")
     val parts = Fs.list(Fs.path(base)).filter(isPartitionDir)
       .map(_.getPath.getName).sorted
     require(parts.nonEmpty, s"addColumn: no partition directories under $dir")
-    val flags = forEachRewrite(spark, parts) { pd =>
+    val flags = forEachRewrite(parts) { pd =>
       val sub = s"$base/$pd"
       val existing = spark.read.parquet(sub)
       val missing = cols.filterNot { case (n, _) =>
         existing.columns.contains(n) }
       if (missing.nonEmpty) {
-        val tmp = s"$base/.__addcol__$pd"
+        val tmp = s"$base/$DirNext$pd"
         clusterForRewrite(
             missing.foldLeft(existing) { case (df, (n, e)) =>
               df.withColumn(n, expr(e)) },
             sortCols,
             targetFiles(dirDataBytes(Fs.path(sub)), targetFileBytes))
           .write.mode("overwrite").parquet(tmp)
-        val subP = Fs.path(sub)
-        val oldP = Fs.path(s"$base/.__old__$pd")
-        Fs.rename(subP, oldP)
-        try Fs.rename(Fs.path(tmp), subP)
-        catch {
-          case e: Throwable =>
-            Fs.rename(oldP, subP)
-            throw e
-        }
-        Fs.deleteRecursively(oldP)
+        swapIn(tmp, sub, s"$base/$DirAside$pd")
         true
       } else false
     }
     parts.zip(flags).collect { case (pd, true) => pd }
   }
-
-  /** Roll interrupted [[addColumn]] swaps forward or back from their
-    * dot-prefixed leftovers — the [[recoverPartitions]] state machine
-    * with the `.__addcol__` scratch prefix. Safe on a healthy store.
-    */
-  def recoverAddColumn(dir: String): Unit =
-    recoverDotSwaps(dir, ".__addcol__")
-
-  /** Roll interrupted [[vacuumRetention]] swaps forward or back from
-    * their dot-prefixed leftovers — same state machine as
-    * [[recoverPartitions]] with the `.__vacuuming__` scratch prefix. Run
-    * automatically on entry; safe on a healthy store.
-    */
-  def recoverVacuum(dir: String): Unit =
-    recoverDotSwaps(dir, ".__vacuuming__")
 
   /** Data files per partition directory — the compaction health metric.
     * Dot/underscore-prefixed entries are skipped, matching Spark's file

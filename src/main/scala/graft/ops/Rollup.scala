@@ -17,13 +17,14 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType}
   *
   * EXACTLY-ONCE by construction: the rollup's high-water batch id lives
   * in a `_rollup_version` file INSIDE the rollup directory, and every
-  * refresh rewrites data + version together behind one atomic directory
-  * swap ([[Layout.compact]]'s rename-aside protocol). A crash anywhere
-  * leaves either the old rollup (old version — the next run refolds the
-  * same batches) or the new one (new version — the next run skips them);
-  * a half-applied fold cannot exist, so batches are never double-counted
-  * — the failure mode a naive "append partials, then checkpoint"
-  * maintenance loop has.
+  * refresh rewrites data + version together into `rollupDir__next` and
+  * puts it in place with [[Layout.swapIn]], the store family's one
+  * rename-aside swap; [[Layout.recover]] (run first) rolls an interrupted
+  * swap forward or back. A crash anywhere leaves either the old rollup
+  * (old version — the next run refolds the same batches) or the new one
+  * (new version — the next run skips them); a half-applied fold cannot
+  * exist, so batches are never double-counted — the failure mode a naive
+  * "append partials, then checkpoint" maintenance loop has.
   *
   * Aggregate schema per `sumCols` entry `c`: `sum_c`, `min_c`, `max_c`,
   * plus one `n_rows` count. Float/double sums are carried as
@@ -46,13 +47,6 @@ object Rollup {
     else Fs.readUTF8(f).trim.toLong
   }
 
-  /** Roll an interrupted [[maintain]] swap forward or back — the one
-    * shared [[Layout.recoverSwap]] state machine on the rollup dir's
-    * `__next` scratch. Safe on a healthy rollup (no-op); run
-    * automatically at the start of maintain.
-    */
-  def recover(dir: String): Unit = Layout.recoverSwap(dir, "__next")
-
   /** Fold every store batch newer than the rollup's version into the
     * rollup at `rollupDir`, atomically. Returns the new version (the
     * highest batch id folded), or the unchanged current version when the
@@ -67,7 +61,7 @@ object Rollup {
   def maintain(spark: SparkSession, storeDir: String, rollupDir: String,
       groupCols: Seq[String], sumCols: Seq[String]): Long = {
     require(groupCols.nonEmpty, "rollup needs at least one group column")
-    recover(rollupDir)
+    Layout.recover(rollupDir)
     val v = version(rollupDir)
     val latest = Layout.nextBatchId(storeDir) - 1L
     if (latest <= v) return v // nothing new (or store absent/empty)
@@ -79,22 +73,10 @@ object Rollup {
       if (v < 0L) partial
       else merge(spark.read.parquet(base).unionByName(partial),
         groupCols, sumCols)
-    val next = base + "__next"
+    val next = base + Layout.StoreNext
     combined.write.mode("overwrite").parquet(next)
     Fs.writeUTF8(Fs.path(s"$next/$VERSION_FILE"), latest.toString)
-    val nextP = Fs.path(next)
-    val dirP = Fs.path(base)
-    val oldP = Fs.path(base + "__old")
-    if (Fs.exists(dirP)) {
-      Fs.rename(dirP, oldP)
-      try Fs.rename(nextP, dirP)
-      catch {
-        case e: Throwable =>
-          Fs.rename(oldP, dirP)
-          throw e
-      }
-      Fs.deleteRecursively(oldP)
-    } else Fs.rename(nextP, dirP)
+    Layout.swapIn(next, base, base + Layout.StoreAside)
     latest
   }
 

@@ -1109,7 +1109,7 @@ object SinkOps {
     //    shuffle, one write, and exactly ONE sorted file per target dir.
     //    max_files (computed from the on-disk store) is gated at literal 1:
     //    any fragmentation regression breaks the hash alongside any data
-    //    loss. Crash-at-swap recovery shares recoverSwap's protocol -------
+    //    loss. Crash-at-swap recovery is the store's one Layout.recover ---
     ("q_evolve_compact",
       (s: SparkSession, d: String) => {
         val dir = storeDir("evocomp", d)

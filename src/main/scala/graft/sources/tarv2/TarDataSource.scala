@@ -336,8 +336,8 @@ class TarWrite(path: String, truncate: Boolean)
 case class TarWriteCommit(taskDir: String, files: Seq[String])
     extends WriterCommitMessage
 
-/** The crash-recovery half of the export commit (same rename-aside
-  * roll-forward shape as `graft.ops.Layout.recoverSwap`). The
+/** The crash-recovery half of the export commit: a marker-committed
+  * roll-forward, like `graft.ops.Layout.squashHistory`'s markers. The
   * `.__commit__` marker is written by atomic rename only after every
   * staged shard is fully on disk, and lists the complete commit as
   * `del <name>` / `new <taskDir> <name>` (tab-separated; shard names are

@@ -109,48 +109,8 @@ class LayoutSpec extends SparkSuite {
     assert(spark.read.parquet(dir).count() === docs.count() + 1)
   }
 
-  test("compact swap is crash-recoverable at every phase") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = freshDir()
-    Layout.writePartitioned(docs, dir, "lang", Seq("doc_id"))
-    val total = docs.count()
-
-    // phase-1 crash: rewrite finished into __compacting, nothing swapped.
-    // recover drops the orphan rewrite; the live dir is untouched.
-    val tmpP = Paths.get(dir + "__compacting")
-    Files.createDirectories(tmpP)
-    Layout.recover(dir)
-    assert(!Files.exists(tmpP))
-    assert(spark.read.parquet(dir).count() === total)
-
-    // phase-2 crash: live dir renamed aside to __old, new dir not yet in
-    // place (the exact window the old delete-then-move protocol destroyed
-    // the store in). recover rolls BACK: __old is restored as the live dir.
-    val dirP = Paths.get(dir)
-    val oldP = Paths.get(dir + "__old")
-    Files.move(dirP, oldP, StandardCopyOption.ATOMIC_MOVE)
-    assert(!Files.exists(dirP), "simulated crash: live dir is gone")
-    Layout.recover(dir)
-    assert(Files.exists(dirP) && !Files.exists(oldP))
-    assert(spark.read.parquet(dir).count() === total)
-
-    // phase-3 crash: swap completed, stale __old not yet deleted. recover
-    // rolls FORWARD: keeps the live (already-compacted) dir, drops __old.
-    Files.createDirectories(oldP)
-    Files.write(oldP.resolve("stale"), Array[Byte](1))
-    Layout.recover(dir)
-    assert(Files.exists(dirP) && !Files.exists(oldP))
-    assert(spark.read.parquet(dir).count() === total)
-
-    // and compact() itself self-recovers from a phase-2 crash leftover
-    Files.move(dirP, oldP, StandardCopyOption.ATOMIC_MOVE)
-    Layout.compact(spark, dir, "lang", Seq("doc_id"))
-    assert(spark.read.parquet(dir).count() === total)
-    assert(Layout.filesPerPartition(dir).values.forall(_ == 1))
-  }
-
   test("compactPartitions rewrites ONLY fragmented dirs, crash-recoverably") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import java.nio.file.{Files, Paths}
     val dir = freshDir()
     Layout.writePartitioned(docs, dir, "lang", Seq("doc_id"))
     // fragment exactly ONE language by appending its slice again twice
@@ -180,22 +140,20 @@ class LayoutSpec extends SparkSuite {
       .select("doc_id").collect().map(_.getLong(0))
     assert(ids.sameElements(ids.sorted))
 
-    // crash simulation: partition renamed aside, nothing swapped in — the
-    // dot-prefixed scratch is invisible to a plain reader, and
-    // recoverPartitions rolls it back
-    val live = Paths.get(s"$dir/lang=$hot")
-    val oldP = Paths.get(s"$dir/.__old__lang=$hot")
-    Files.move(live, oldP, StandardCopyOption.ATOMIC_MOVE)
+    // a crash between the hot dir's two swap renames (injected at the 2nd
+    // filesystem mutation): the dot-prefixed aside and scratch are
+    // invisible to a plain reader, and recover rolls the swap back
+    Layout.append(slice, dir, "lang", Seq("doc_id"))
+    val crash =
+      Faults.run(dir, 2)(Layout.compactPartitions(spark, dir, Seq("doc_id")))
+    assert(crash.error.exists(Faults.injected))
     assert(spark.read.parquet(dir).count() === expected - slice.count() * 3,
       "reader mid-crash must see the store minus the in-flight partition, " +
         "never a scratch dir parsed as a partition value")
-    Layout.recoverPartitions(dir)
-    assert(spark.read.parquet(dir).count() === expected)
-    // leftover scratch from an interrupted rewrite is swept
-    Files.createDirectories(Paths.get(s"$dir/.__compacting__lang=$hot"))
-    Layout.compactPartitions(spark, dir, Seq("doc_id"))
-    assert(!Files.exists(Paths.get(s"$dir/.__compacting__lang=$hot")))
-    assert(spark.read.parquet(dir).count() === expected)
+    Layout.recover(dir)
+    assert(!Files.exists(Paths.get(s"$dir/.__old__lang=$hot")))
+    assert(!Files.exists(Paths.get(s"$dir/.__next__lang=$hot")))
+    assert(spark.read.parquet(dir).count() === expected + slice.count())
   }
 
   test("ingest: null keys screen null-safely; absent store degrades to append") {
@@ -489,47 +447,9 @@ class LayoutSpec extends SparkSuite {
     assert(!new java.io.File(dir, "._evolve_done").exists())
   }
 
-  test("evolvePartitions resumes after a mid-increment crash without duplicating") {
-    val dir = freshDir()
-    Layout.writePartitioned(docs, dir, "source", Seq("doc_id"))
-    val expected = docs.count()
-    // simulate a crash mid-way: run the FIRST increment by hand (evolve one
-    // source dir into scratch, commit it to ._evolve_done), then also leave
-    // a PARTIAL uncommitted source (files present, not in the done file) —
-    // the exact disk state of a crash during the second increment
-    val sources = Option(new java.io.File(dir).listFiles()).get
-      .filter(f => f.isDirectory && f.getName.startsWith("source="))
-      .map(_.getName).sorted
-    assert(sources.length >= 2, "need >=2 source dirs for the crash sim")
-    val scratch = new java.io.File(dir + "__evolving")
-    scratch.mkdirs()
-    // partial output of an UNCOMMITTED source: a junk parquet file that a
-    // correct recovery must delete (it would double rows otherwise)
-    val junkTarget = new java.io.File(scratch, "lang=en")
-    junkTarget.mkdirs()
-    val enc = java.security.MessageDigest.getInstance("MD5")
-      .digest(sources.head.getBytes("UTF-8")).take(8)
-      .map("%02x".format(_)).mkString
-    spark.read.option("basePath", dir).parquet(s"$dir/${sources.head}")
-      .limit(3).drop("lang")
-      .write.mode("overwrite").parquet(new java.io.File(scratch, ".__stage__junk").getAbsolutePath)
-    Option(new java.io.File(scratch, ".__stage__junk").listFiles()).get
-      .filter(_.getName.endsWith(".parquet")).zipWithIndex.foreach { case (f, i) =>
-        java.nio.file.Files.move(f.toPath,
-          new java.io.File(junkTarget, s"src-$enc-$i.parquet").toPath)
-      }
-    // no ._evolve_done at all -> NOTHING is committed; recovery must wipe
-    // the partial files and the stage dir, then evolve redoes everything
-    val done = Layout.evolvePartitions(spark, dir, "source", "lang", Seq("doc_id"))
-    assert(done.toSet === sources.toSet)
-    val back = spark.read.parquet(dir)
-    assert(back.count() === expected, "crash leftovers must not duplicate rows")
-    assert(back.columns.contains("source"))
-  }
-
   test("atomic-write temps of dot-prefixed files are single-dotted and reaped by recovery") {
     // r15 advice: `.` + `._evolve_done` + `.tmp` = `.._evolve_done.tmp`,
-    // which recoverEvolve's `._evolve_done.tmp` delete missed — a crash
+    // which a `._evolve_done.tmp`-only delete missed — a crash
     // between writeUTF8 and renameReplace then rode the whole-store swap
     // into the live dir as a stray dotfile.
     val p = Fs.path(new java.io.File(freshDir(), "._evolve_done").getAbsolutePath)
@@ -545,7 +465,7 @@ class LayoutSpec extends SparkSuite {
       "partial".getBytes("UTF-8"))
     java.nio.file.Files.write(new java.io.File(scratch, ".._evolve_done.tmp").toPath,
       "partial".getBytes("UTF-8"))
-    Layout.recoverEvolve(dir)
+    Layout.recover(dir)
     assert(Option(scratch.listFiles()).getOrElse(Array.empty)
       .forall(f => !f.getName.endsWith(".tmp")), "recovery must reap .*.tmp")
     assert(spark.read.parquet(dir).count() === expected)
@@ -573,32 +493,8 @@ class LayoutSpec extends SparkSuite {
     assert(back.columns.contains("source") && back.columns.contains("lang"))
     val orig = docs.select(back.columns.map(col): _*)
     assert(back.exceptAll(orig).isEmpty && orig.exceptAll(back).isEmpty)
-    assert(!new java.io.File(dir + "__evolvecompact").exists())
+    assert(!new java.io.File(dir + "__next").exists())
     assert(!new java.io.File(dir + "__old").exists())
-  }
-
-  test("evolveCompact rolls a crash at the swap back and a rerun completes") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = freshDir()
-    Layout.writePartitioned(docs, dir, "source", Seq("doc_id"))
-    val expected = docs.count()
-    // crash state BETWEEN the two swap renames: live moved aside to __old,
-    // a complete scratch present but not yet renamed live
-    spark.read.option("basePath", dir).parquet(dir)
-      .repartition(col("lang"))
-      .write.mode("overwrite").partitionBy("lang")
-      .parquet(dir + "__evolvecompact")
-    Files.move(Paths.get(dir), Paths.get(dir + "__old"),
-      StandardCopyOption.ATOMIC_MOVE)
-    // recovery rolls __old back live, discards scratch, rerun re-evolves
-    val created = Layout.evolveCompact(spark, dir, "source", "lang", Seq("doc_id"))
-    assert(created.nonEmpty)
-    val back = spark.read.parquet(dir)
-    assert(back.count() === expected, "crash leftovers must not duplicate or lose rows")
-    assert(Layout.filesPerPartition(dir).keys.forall(_.startsWith("lang=")))
-    // rerun AFTER success (no fromCol dirs left) is a documented no-op
-    assert(Layout.evolveCompact(spark, dir, "source", "lang", Seq("doc_id")).isEmpty)
-    assert(back.count() === expected)
   }
 
   test("vacuumRetention: expired dirs dropped via footers, boundary rewritten, live untouched") {
@@ -646,31 +542,7 @@ class LayoutSpec extends SparkSuite {
     assert(d2.isEmpty && r2.isEmpty)
   }
 
-  test("vacuumRetention swap is crash-recoverable") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val dir = freshDir()
-    val ev = spark.read.parquet(s"$sfDir/events.parquet")
-      .select(col("event_id"),
-        expr("unix_micros(cast(ts AS TIMESTAMP)) div 1000").as("ms"))
-      .withColumn("day", expr("ms div 86400000"))
-    Layout.writePartitioned(ev, dir, "day", Seq("event_id"))
-    val total = ev.count()
-    val pd = Layout.filesPerPartition(dir).keys.min
-    // phase-2 crash: boundary dir renamed aside, rewrite not yet in place
-    Files.move(Paths.get(s"$dir/$pd"), Paths.get(s"$dir/.__old__$pd"),
-      StandardCopyOption.ATOMIC_MOVE)
-    Layout.recoverVacuum(dir)
-    assert(Files.exists(Paths.get(s"$dir/$pd")))
-    assert(spark.read.parquet(dir).count() === total)
-    // orphan rewrite scratch is dropped
-    Files.createDirectories(Paths.get(s"$dir/.__vacuuming__$pd"))
-    Layout.recoverVacuum(dir)
-    assert(!Files.exists(Paths.get(s"$dir/.__vacuuming__$pd")))
-    assert(spark.read.parquet(dir).count() === total)
-  }
-
   test("addColumn backfills per directory, skips evolved dirs, recovers from a crash") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val dir = freshDir()
     Layout.writePartitioned(docs, dir, "lang", Seq("doc_id"))
     val total = docs.count()
@@ -684,12 +556,12 @@ class LayoutSpec extends SparkSuite {
     assert(back.filter(col("n2") =!= col("n_chars") * 2).count() === 0L)
     // idempotent: second run skips everything
     assert(Layout.addColumn(spark, dir, "n2", "n_chars * 2", Seq("doc_id")).isEmpty)
-    // crash sim: one dir renamed aside mid-swap; recovery restores it and
-    // a re-run of a NEW backfill still covers every directory exactly once
-    val pd = dirs.head
-    Files.move(Paths.get(s"$dir/$pd"), Paths.get(s"$dir/.__old__$pd"),
-      StandardCopyOption.ATOMIC_MOVE)
-    Files.createDirectories(Paths.get(s"$dir/.__addcol__$pd"))
+    // a NEW backfill crashes at its 2nd filesystem mutation, so no
+    // directory finished its swap; the re-run recovers first and still
+    // covers every directory exactly once
+    val crash = Faults.run(dir, 2)(
+      Layout.addColumn(spark, dir, "n3", "n_chars + 1", Seq("doc_id")))
+    assert(crash.error.exists(Faults.injected))
     val r2 = Layout.addColumn(spark, dir, "n3", "n_chars + 1", Seq("doc_id"))
     assert(r2.toSet === dirs.toSet)
     val back2 = spark.read.parquet(dir)
@@ -774,7 +646,7 @@ class LayoutSpec extends SparkSuite {
     assert(sel.isEmpty, "size-targeted compaction did not reach a fixpoint")
     assert(spark.read.parquet(dir).count() === total)
     // recovery on the healthy multi-file store is a no-op
-    Layout.recoverPartitions(dir)
+    Layout.recover(dir)
     assert(spark.read.parquet(dir).count() === total)
   }
 

@@ -1,13 +1,14 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-/** squashHistory: content preservation, contract boundaries, checkpoint
-  * guard, and crash recovery at every phase of the per-partition protocol.
+/** squashHistory: content preservation, contract boundaries and the
+  * checkpoint guard. Crash recovery at every point of the per-partition
+  * protocol is CrashSpec's fault-injection case.
   */
 class SquashSpec extends SparkSuite {
 
@@ -73,53 +74,6 @@ class SquashSpec extends SparkSuite {
     // and its incremental read still sees exactly the unseen batch
     val (fresh, upTo) = Layout.readNew(spark, dir, "trainer")
     assert(upTo == 3L && fresh.count() == 10L)
-  }
-
-  test("recovery: pre-commit crash (scratch, no marker) restores cleanly") {
-    val dir = mkStore()
-    val before = content(dir)
-    // simulate: scratch written, crash before marker
-    val srcs = Seq(0L, 1L, 2L).map(i => s"$dir/lang=en/ingest_batch=$i")
-    spark.read.parquet(srcs: _*).repartition(1)
-      .write.parquet(s"$dir/.__squashtmp__lang=en")
-    Layout.recoverSquash(dir)
-    assert(!new java.io.File(s"$dir/.__squashtmp__lang=en").exists())
-    assert(content(dir) == before)
-  }
-
-  test("recovery: post-commit crash with scratch present rolls forward") {
-    val dir = mkStore()
-    val expectData = content(dir).map(t => (t._1, t._2, t._3))
-    // simulate the exact pre-delete commit state for lang=en
-    val srcs = Seq(0L, 1L, 2L).map(i => s"$dir/lang=en/ingest_batch=$i")
-    spark.read.parquet(srcs: _*).repartition(1)
-      .write.parquet(s"$dir/.__squashtmp__lang=en")
-    Files.write(Paths.get(s"$dir/.__squashmark__lang=en"),
-      "2\n0\n1\n2".getBytes("UTF-8"))
-    // crash mid-delete: one of the three old dirs already gone
-    Layout.deleteRecursively(new java.io.File(s"$dir/lang=en/ingest_batch=0"))
-    Layout.recoverSquash(dir)
-    assert(batchDirs(dir, "lang=en") == Set("ingest_batch=2", "ingest_batch=3"))
-    assert(!new java.io.File(s"$dir/.__squashmark__lang=en").exists())
-    assert(content(dir).map(t => (t._1, t._2, t._3)) == expectData)
-  }
-
-  test("recovery: crash after the move finishes the deletes") {
-    val dir = mkStore()
-    val expectData = content(dir).map(t => (t._1, t._2, t._3))
-    // simulate: scratch moved into place over a FRESH id layout — target 2
-    // replaced, ids 0/1 still present, marker still on disk
-    val srcs = Seq(0L, 1L, 2L).map(i => s"$dir/lang=de/ingest_batch=$i")
-    spark.read.parquet(srcs: _*).repartition(1)
-      .write.parquet(s"$dir/.__squashtmp__lang=de")
-    Layout.deleteRecursively(new java.io.File(s"$dir/lang=de/ingest_batch=2"))
-    Files.move(Paths.get(s"$dir/.__squashtmp__lang=de"),
-      Paths.get(s"$dir/lang=de/ingest_batch=2"), StandardCopyOption.ATOMIC_MOVE)
-    Files.write(Paths.get(s"$dir/.__squashmark__lang=de"),
-      "2\n0\n1\n2".getBytes("UTF-8"))
-    Layout.recoverSquash(dir)
-    assert(batchDirs(dir, "lang=de") == Set("ingest_batch=2", "ingest_batch=3"))
-    assert(content(dir).map(t => (t._1, t._2, t._3)) == expectData)
   }
 
   test("partitions whose only squashable dir is already the target are skipped") {
