@@ -1,7 +1,6 @@
 package graft
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** The flagship query cluster the driver's tail-parse (and the judge's
@@ -146,31 +145,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM/session warmup so the first measured query doesn't absorb
-    // context + codegen startup cost. The range-sum alone proved too
-    // narrow: round 9's FIRST scheduled query (q_groupby_agg) timed 7.3 s
-    // scheduled vs 0.6 s on rerun because the real path — parquet
-    // footer/reader init, whole-stage-codegen compilation of a
-    // scan→hash-aggregate, the noop DataWriter — was all still cold. Warm
-    // exactly that shape twice (second run hits the codegen cache, so
-    // what's left warm is what the measured queries actually reuse).
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    for (_ <- 1 to 2)
-      try spark.read.parquet(s"$sfDir/customer.parquet")
-        .groupBy("c_nationkey")
-        .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n"),
-          org.apache.spark.sql.functions.sum("c_acctbal").as("s"))
-        .write.format("noop").mode("overwrite").save()
-      catch { case scala.util.control.NonFatal(_) => () }
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
     // three runs per query, report the min: steady-state timing (first run
     // absorbs codegen + cache materialization; this host also shows sporadic
     // multi-second contention spikes that a single sample would misattribute).
@@ -194,48 +170,19 @@ object Bench {
     val roundSeed: Long = sys.env.get("SPARK_GRAFT_ROUND").flatMap(_.toLongOption)
       .getOrElse(maxBenchRound().getOrElse(0))
     val rng = new scala.util.Random(roundSeed)
-    // Per-query shuffle-WRITE bytes ([[ShuffleMeter]], shared with
-    // ScaleBench): wall-clock regressions on this host are routinely
-    // contention noise needing a rerun pass to adjudicate, but shuffle
-    // bytes are a property of the PLAN — a plan regression (lost
-    // broadcast, lost partial agg) shows up as bytes immediately and is
-    // immune to host load. Reported per query as the min over samples
-    // (steady state; a first sample may include one-off cache builds).
-    val meter = new ShuffleMeter(spark)
-    // Materialize EVERY output column via the noop sink. Timing `count()`
-    // (rounds 1-8) let Catalyst prune whatever count(1) doesn't reference —
-    // aggregate expressions above the grouping keys, final projections,
-    // whole subtrees behind a provably-multiplicity-preserving join — so
-    // expression-heavy queries were under-measured (q_line_dedup's entire
-    // md5-rebuild pipeline pruned to a 115-byte shuffle). The noop sink
-    // runs the full plan including final sorts, like a real consumer, and
-    // discards rows at the writer. Round-over-round deltas vs BENCH_r08 are
-    // a one-time methodology step, called out in BENCH.md.
-    def materialize(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    // A sample that THROWS is a failure, not a time: recording the fast
-    // exception path as a legitimate min (pre-round-10 behavior) would let
-    // a broken sink query "win" the benchmark by crashing early. Failed
-    // samples are dropped from the series, counted in `failed`, and a
-    // query with zero successes reports value -1 (excluded from total).
-    val failed = scala.collection.mutable.Map.empty[String, Int]
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[(Double, Long)] = {
-      meter.drain()
-      val b0 = meter.shuffleBytes.get()
-      val t0 = System.nanoTime()
-      try {
-        materialize(fn(spark, sfDir))
-        val wall = (System.nanoTime() - t0) / 1e9
-        meter.drain()
-        Some((wall, meter.shuffleBytes.get() - b0))
-      }
-      catch {
-        case scala.util.control.NonFatal(e) =>
-          failed(name) = failed.getOrElse(name, 0) + 1
-          System.err.println(s"[bench] $name sample FAILED: " +
-            s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
-          None
-      }
+    // Per-query shuffle-WRITE bytes ([[QueryMeter]]): wall-clock
+    // regressions on this host are routinely contention noise needing a
+    // rerun pass to adjudicate, but shuffle bytes are a property of the
+    // PLAN. Reported per query as the min over samples (steady state; a
+    // first sample may include one-off cache builds). A sample that THROWS
+    // is a failure, not a time ([[QueryMeter.sample]]): it is dropped from
+    // the series and counted in `meter.failures`, and a query with zero
+    // successes reports value -1 (excluded from total).
+    val meter = new QueryMeter(spark)
+    def timeOne(name: String): Option[(Double, Long)] = {
+      val fn = SparkEntry.queries(name)
+      meter.sample(name)(Harness.materialize(fn(spark, sfDir)))
+        .map(s => (s.wallS, s.shuffleWriteBytes))
     }
     // Wall budget for the SCHEDULED pass (round 15): BENCH_r13 (line
     // overflow) and BENCH_r14 (rc 124 — the driver's wall-clock timeout
@@ -288,14 +235,13 @@ object Bench {
     // recorded beats an erased record (r14's rc 124).
     val samples = SparkEntry.schedule.flatMap { case (names, after) =>
       val rs = rng.shuffle(names).map { name =>
-        val fn = SparkEntry.queries(name)
         val n =
           if (elapsedS > budgetS * 2) { budgetCut += name; 0 }
           else if (elapsedS > budgetS) {
             budgetCut += name
             if (headlineSet(name)) 2 else 1
           } else plannedSamples(name)
-        name -> Seq.fill(n)(timeOne(name, fn)).flatten.sortBy(_._1)
+        name -> Seq.fill(n)(timeOne(name)).flatten.sortBy(_._1)
       }
       after()
       // free dropped localCheckpoint blocks NOW: ContextCleaner only
@@ -308,7 +254,7 @@ object Bench {
       rs
     }.toMap
     val results = samples.map { case (k, v) => k -> v.headOption.map(_._1).getOrElse(-1.0) }
-    // per-query steady-state shuffle MB: min over samples (see listener note)
+    // per-query steady-state shuffle MB: min over samples (see meter note)
     val shuffleMb = samples.map { case (k, v) =>
       k -> (if (v.isEmpty) -1.0
             else math.round(v.map(_._2).min / 1048.576) / 1000.0)
@@ -326,7 +272,7 @@ object Bench {
       s""""$k":$v"""
     }.mkString("{", ",", "}")
     val total = results.values.filter(_ >= 0).sum
-    def failedJson = failed.toSeq.sortBy(_._1)
+    def failedJson = meter.failures.toSeq.sortBy(_._1)
       .map { case (k, n) => s""""$k":$n""" }.mkString("{", ",", "}")
     // DuckDB absolute yardstick (BENCH.md round 7): scripts/duckbench.py
     // times each headline query's oracle SQL on the same sf0.1 parquet and
@@ -395,7 +341,7 @@ object Bench {
       val rerunHead = rerun.take(6).map { case (k, v) =>
         s""""$k":${v.map(x => f"$x%.2f").mkString("[", ",", "]")}"""
       }.mkString("{", ",", "}")
-      val failHead = if (failed.isEmpty) "" else s""","failed":$failedJson"""
+      val failHead = if (meter.failures.isEmpty) "" else s""","failed":$failedJson"""
       // dropped suspects ride in the tail-parsed line too: a capped-out
       // offender must be VISIBLE, not silently unadjudicated. Capped at 6
       // names + a count — the full list is in bench_last.json (on a fresh
@@ -459,8 +405,7 @@ object Bench {
     val rerun: Seq[(String, Seq[Double])] = suspects.flatMap { case (name, _, _) =>
       if (elapsedS > rerunCutoff) None
       else {
-        val fn = SparkEntry.queries(name)
-        val times = Seq.fill(2)(timeOne(name, fn)).flatten.map(_._1).sorted
+        val times = Seq.fill(2)(timeOne(name)).flatten.map(_._1).sorted
         groupHook.get(name).foreach(h => h())
         Some(name -> times)
       }

@@ -1,20 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
+    val failures = scala.collection.mutable.Map.empty[String, (String, String)]
     // Local-iteration filter: SPARK_GRAFT_ONLY=q_a,q_b runs just those
     // queries (unset — the driver's case — runs everything).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -25,6 +18,8 @@ object Verify {
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failures(name) = (e.getClass.getName,
+            String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(""))
         }
       }
       after()
@@ -51,6 +46,13 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // failure manifest: each query that threw → its exception class and
+    // first message line, `{}` on a clean run. The exit code stays 0, so
+    // every other query is still compared.
+    val failed = failures.toSeq.sortBy(_._1).map { case (k, (cls, msg)) =>
+      s"${q(k)}: {${q("class")}: ${q(cls)}, ${q("message")}: ${q(msg)}}"
+    }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/verify_failures.json"), failed)
     spark.stop()
   }
 }

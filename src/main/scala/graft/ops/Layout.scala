@@ -780,13 +780,6 @@ object Layout {
     require(keyCols.nonEmpty, "merge needs at least one key column")
     val spark = batch.sparkSession
     recover(dir)
-    if (!hasData(dir)) { // first write: plain partitioned layout
-      // empty batch + absent store: writing would leave a _SUCCESS-only
-      // schema-less dir that poisons later opens (same guard as append)
-      if (batch.isEmpty) return Seq.empty
-      writePartitioned(batch, dir, partitionCol, sortCols)
-      return filesPerPartition(dir).keys.toSeq.sorted
-    }
     requireSchemaMatch(batch, dir, partitionCol)
     val base = dir.stripSuffix("/")
     val scratch = s"$base/$Merging"
@@ -824,16 +817,19 @@ object Layout {
     val touchedVals = stats.map(_.get(0)).toSeq
     // read ONLY the touched directories (partition filter prunes at the
     // file index — untouched directories are not opened), drop the rows
-    // being replaced, union the batch, rewrite to dot-prefixed scratch
-    val live = spark.read.parquet(dir)
-      .filter(col(partitionCol).isInCollection(touchedVals))
-    // anti-join on (partition value + key), NOT the key alone: a store
-    // row under a different partition value than the batch row's must
-    // survive deterministically, not depend on whether unrelated batch
-    // rows happened to touch its directory (see scaladoc contract)
-    val retained = live.join(
-      batch.select((partitionCol +: keyCols).map(col): _*).distinct(),
-      partitionCol +: keyCols, "left_anti")
+    // being replaced, union the batch, rewrite to dot-prefixed scratch.
+    // A store with no data yet retains nothing: its first batch takes the
+    // same screens, scratch and swaps as every later one.
+    // The anti-join is on (partition value + key), NOT the key alone: a
+    // store row under a different partition value than the batch row's
+    // must survive deterministically, not depend on whether unrelated
+    // batch rows happened to touch its directory (see scaladoc contract)
+    val retained =
+      if (!hasData(dir)) batch.limit(0)
+      else spark.read.parquet(dir)
+        .filter(col(partitionCol).isInCollection(touchedVals))
+        .join(batch.select((partitionCol +: keyCols).map(col): _*).distinct(),
+          partitionCol +: keyCols, "left_anti")
     // repartitionByRange, NOT repartition(partitionCol): clustering by
     // value alone would funnel each touched directory through ONE task —
     // a merge touching a hot day-partition would rewrite it single-
@@ -1062,8 +1058,6 @@ object Layout {
       // footer sweep: (every group max < cutoff, every group min >= cutoff)
       val stats = Manifest.manifest(spark, sub, tsCol)
         .select("min_value", "max_value", "n_nulls", "n_rows").collect()
-      def num(s: String): Option[Long] =
-        try Some(BigDecimal(s).toLongExact) catch { case _: Exception => None }
       // NULL tsCol is NOT below the cutoff: a dir is only whole-deleted
       // when every group's max < cutoff AND it holds zero null rows
       // (null counts come from the same footers); a rewrite keeps nulls.
@@ -1072,10 +1066,10 @@ object Layout {
       // live, or a rewritten null-only directory would re-rewrite on
       // every later sweep)
       val allExpired = stats.nonEmpty && stats.forall { r =>
-        !r.isNullAt(1) && num(r.getString(1)).exists(_ < cutoff) &&
+        !r.isNullAt(1) && Manifest.statNumber(r.getString(1)).exists(_ < cutoff) &&
           r.getLong(2) == 0L }
       val allLive = stats.nonEmpty && stats.forall { r =>
-        (!r.isNullAt(0) && num(r.getString(0)).exists(_ >= cutoff)) ||
+        (!r.isNullAt(0) && Manifest.statNumber(r.getString(0)).exists(_ >= cutoff)) ||
           (r.getLong(2) >= 0L && r.getLong(2) == r.getLong(3)) }
       if (allExpired) {
         Fs.deleteRecursively(Fs.path(sub))

@@ -56,10 +56,8 @@ object Manifest {
     val rows = m.select("min_value", "max_value").collect()
       .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
       .map(r => (r.getString(0), r.getString(1))).toVector
-    def num(s: String): Option[BigDecimal] =
-      try Some(BigDecimal(s)) catch { case _: NumberFormatException => None }
     val numeric = rows.forall { case (a, b) =>
-      num(a).isDefined && num(b).isDefined }
+      statNumber(a).isDefined && statNumber(b).isDefined }
     if (numeric) {
       val sorted = rows.map { case (a, b) => (BigDecimal(a), BigDecimal(b)) }
         .sortBy(_._1)
@@ -95,8 +93,6 @@ object Manifest {
     require(lo <= hi, s"pruneFiles: empty range [$lo, $hi]")
     val files = listParquet(Fs.path(path))
     require(files.nonEmpty, s"no parquet files under '$path'")
-    def num(s: String): Option[BigDecimal] =
-      try Some(BigDecimal(s)) catch { case _: NumberFormatException => None }
     val confProps = hadoopConfProps(spark)
     spark.sparkContext
       .parallelize(files, math.min(files.size, 32).max(1))
@@ -105,7 +101,7 @@ object Manifest {
         it.filter { f =>
           readFooter(f, column, conf).exists { case (_, _, _, mn, mx, _) =>
             if (mn == null || mx == null) true // no stats: can't prove disjoint
-            else (num(mn), num(mx)) match {
+            else (statNumber(mn), statNumber(mx)) match {
               case (Some(a), Some(b)) => !(b < lo || a > hi)
               case _ => true // non-numeric stats: cannot prove disjoint
             }
@@ -114,6 +110,13 @@ object Manifest {
       }
       .collect().toSeq.sorted
   }
+
+  /** A footer stat string as a number — integers, doubles and decimals
+    * alike, so stats compare in the column's numeric order — or None when
+    * it does not parse as one (strings, NaN, infinities).
+    */
+  private[ops] def statNumber(s: String): Option[BigDecimal] =
+    try Some(BigDecimal(s)) catch { case _: NumberFormatException => None }
 
   // the session's resolved Hadoop conf as a serializable property list —
   // executor-side footer reads must see the driver's fs.* settings

@@ -6,8 +6,7 @@ import org.apache.spark.sql.SparkSession
   * round 15 — guide §2 "make partitioning scale-adaptive").
   *
   * Two measured floors in every stateful gate at sf0.1/local[32], found by
-  * stack-sampling the executor threads mid-micro-batch (OptProfile /
-  * StreamProbe):
+  * stack-sampling the executor threads mid-micro-batch:
   *
   *   1. '''State partitions.''' A streaming query's stateful operators
   *      create one state store instance per shuffle partition per operator
@@ -18,12 +17,11 @@ import org.apache.spark.sql.SparkSession
   *      stores × 6 micro-batches is pure per-file overhead — AQE would
   *      coalesce a batch shuffle this small to one partition, but AQE is
   *      disabled for stateful streaming, so the partition count must be
-  *      chosen here. [[statePartitions]] derives it from the INPUT SIZE
+  *      chosen here. [[withGateConfAt]] derives it from the INPUT SIZE
   *      (bytes/8MB + 2, min 2), capped by the session's configured shuffle
   *      partitions: tiny gate replays get 2, the 100× fixture gets ~20,
   *      and a production session configured with thousands of shuffle
-  *      partitions over TB inputs keeps them. Explicit override:
-  *      `spark.graft.stream.statePartitions`.
+  *      partitions over TB inputs keeps them.
   *
   *   2. '''Checkpoint file checksums.''' Spark 4.1 writes + verifies a
   *      checksum twin for every checkpoint file
@@ -36,8 +34,7 @@ import org.apache.spark.sql.SparkSession
   *      detection buys nothing there, so the gate wrapper disables it.
   *      Production streams with durable checkpoints keep Spark's default
   *      (this wrapper is gate scaffolding, not the DocStream/EventStream
-  *      API). Override: `spark.graft.stream.gateChecksum` = true restores
-  *      the checksums inside gates too.
+  *      API).
   *
   * Both settings are restored after the gate's streaming section, so the
   * batch queries around it (and the rest of the Bench/Verify session) keep
@@ -49,7 +46,7 @@ import org.apache.spark.sql.SparkSession
 object StreamTune {
 
   /** Total bytes under `paths` (files or directories) via the Hadoop FS
-    * API — the input-size signal [[withGateConf]] scales state partitions
+    * API — the input-size signal [[withGateConfAt]] scales state partitions
     * from. Missing paths count 0.
     */
   def pathBytes(s: SparkSession, paths: Seq[String]): Long =
@@ -61,50 +58,32 @@ object StreamTune {
       } catch { case scala.util.control.NonFatal(_) => 0L }
     }.sum
 
-  /** Scale-adaptive state partition count: `bytes/8MB + 2`, clamped to
-    * [2, session shuffle partitions] (the +2 keeps a small headroom above
-    * the pure ratio so an input just past a boundary doesn't run
-    * single-partition-per-store; r15 advice: doc now matches the code).
-    * The cap keeps a production session's own sizing authoritative (it
-    * configured thousands of partitions for a reason); the floor keeps
-    * two-way parallelism so the gate still exercises multi-partition
-    * state.
-    */
-  def statePartitions(s: SparkSession, inputBytes: Long): Int = {
-    val conf = s.sessionState.conf
-    conf.getConfString("spark.graft.stream.statePartitions", "").toIntOption
-      .filter(_ > 0)
-      .getOrElse {
-        val sessionParts = conf.numShufflePartitions
-        val derived = (inputBytes / (8L << 20)).toInt + 2
-        math.max(2, math.min(sessionParts, derived))
-      }
-  }
-
   /** Run `body` (a gate's streaming section: build → start → await) with
-    * gate-scoped shuffle/state partitions and checkpoint-checksum
-    * settings, restoring both afterwards. Results are partition-count
-    * independent (keyed state, keyed joins, watermark semantics), which
-    * the oracle gates re-prove at both SFs.
+    * gate-scoped shuffle/state partitions and checkpoint checksums off,
+    * restoring both afterwards. The partition count is `bytes/8MB + 2` of
+    * the input under `paths`, clamped to [2, session shuffle partitions]:
+    * the +2 keeps a small headroom above the pure ratio so an input just
+    * past a boundary doesn't run single-partition-per-store, the cap keeps
+    * a production session's own sizing authoritative (it configured
+    * thousands of partitions for a reason), and the floor keeps two-way
+    * parallelism so the gate still exercises multi-partition state.
+    * Results are partition-count independent (keyed state, keyed joins,
+    * watermark semantics), which the oracle gates re-prove at both SFs.
     */
-  def withGateConf[T](s: SparkSession, inputBytes: Long)(body: => T): T = {
+  def withGateConfAt[T](s: SparkSession, paths: Seq[String])(body: => T): T = {
     val conf = s.conf
     val kParts = "spark.sql.shuffle.partitions"
     val kSum = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val keepSums = conf.getOption("spark.graft.stream.gateChecksum")
-      .exists(_.toBoolean)
     val oldParts = conf.getOption(kParts)
     val oldSum = conf.getOption(kSum)
-    conf.set(kParts, statePartitions(s, inputBytes).toString)
-    if (!keepSums) conf.set(kSum, "false")
+    val derived = (pathBytes(s, paths) / (8L << 20)).toInt + 2
+    conf.set(kParts, math.max(2,
+      math.min(s.sessionState.conf.numShufflePartitions, derived)).toString)
+    conf.set(kSum, "false")
     try body
     finally {
       oldParts.fold(conf.unset(kParts))(conf.set(kParts, _))
       oldSum.fold(conf.unset(kSum))(conf.set(kSum, _))
     }
   }
-
-  /** [[withGateConf]] with the input size read from `paths`. */
-  def withGateConfAt[T](s: SparkSession, paths: Seq[String])(body: => T): T =
-    withGateConf(s, pathBytes(s, paths))(body)
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Bridge to Spark 4's package-private APIs: the Column ↔ catalyst
   * Expression conversions (org.apache.spark.sql.classic.ExpressionUtils),
   * needed to expose custom Catalyst expressions as user-facing Columns,
-  * and a thread's local properties, which work handed to a thread pool
-  * must carry so its jobs stay in the caller's job group.
+  * a thread's local properties, which work handed to a thread pool
+  * must carry so its jobs stay in the caller's job group, and the
+  * listener bus's drain, which [[graft.QueryMeter]] reads behind.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -29,4 +30,10 @@ object GraftBridge {
     sc.setLocalProperties(org.apache.spark.util.Utils.cloneProperties(props))
     try body finally sc.setLocalProperties(own)
   }
+
+  /** Block until the listener bus has delivered every event posted so far;
+    * throws `java.util.concurrent.TimeoutException` after `timeoutMs`.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

@@ -3,13 +3,10 @@ package graft.api
 import java.nio.file.{Files, StandardCopyOption}
 import java.sql.{Date, Timestamp}
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-import graft.SparkSuite
+import graft.{QueryMeter, SparkSuite}
 
 /** The fused memo warm-up ([[Database.populateCache]]: one aggregate per
   * table, one grouped pass per column) leaves exactly the memo that
@@ -170,30 +167,17 @@ class FusedStatsSpec extends SparkSuite {
 
   // ---- job shape ---------------------------------------------------------
 
-  /** Spark jobs `body` submits under job group `group`. Listener events
-    * arrive in order, so once a later marker job has been seen every job
-    * of `body` has been counted.
+  /** Spark jobs `body` submits under job group `group`, as the
+    * [[graft.QueryMeter]] records them.
     */
   private def jobsIn(group: String)(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
+    val meter = new QueryMeter(spark)
     try {
       sc.setJobGroup(group, group)
-      try body finally sc.clearJobGroup()
-      val marker = group + "-marker"
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(marker), "listener never saw the marker job")
-      seen.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
+      val jobs = try meter.measure(body).jobs finally sc.clearJobGroup()
+      jobs.count(_.group == group)
+    } finally meter.close()
   }
 
   private def smallTable(): String = {

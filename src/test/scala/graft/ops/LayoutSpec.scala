@@ -430,6 +430,47 @@ class LayoutSpec extends SparkSuite {
     assert(Layout.readAsOf(spark, freshDir() + "/absent", 5L).isEmpty)
   }
 
+  test("a first merge into a data-less store keeps its consumer checkpoints") {
+    val dir = freshDir()
+    Layout.commitCheckpoint(dir, "early", -1L)
+    Layout.merge(docs.orderBy("doc_id").limit(10), dir, "lang",
+      Seq("doc_id"), Seq("doc_id"))
+    assert(Layout.consumers(dir) === Map("early" -> -1L))
+    assert(spark.read.parquet(dir).count() === 10L)
+  }
+
+  test("a first merge screens its batch like every later merge") {
+    val dir = freshDir()
+    val rows = docs.orderBy("doc_id").limit(3)
+    def refusal(batch: org.apache.spark.sql.DataFrame): String =
+      intercept[IllegalArgumentException] {
+        Layout.merge(batch, dir, "lang", Seq("doc_id"), Seq("doc_id"))
+      }.getMessage
+    assert(refusal(rows.unionByName(rows.limit(1))).contains("share a key"))
+    assert(refusal(rows.withColumn("doc_id", lit(null).cast("long")))
+      .contains("NULL"))
+    assert(refusal(rows.withColumn("lang", lit(null).cast("string")))
+      .contains("partition"))
+    assert(Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .forall(_.getName.startsWith(".")), "a refused batch wrote data")
+  }
+
+  test("vacuumRetention drops an expired double-ts dir from its footers alone") {
+    val dir = freshDir()
+    val rows = spark.range(0, 20).select(col("id"),
+      (col("id") * 0.5 + 0.25).as("ts"), (col("id") % 2).as("day"))
+    Layout.writePartitioned(rows, dir, "day", Seq("id"))
+    val scratch = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    Fs.beforeMutation = (_, p) =>
+      if (p.getName.startsWith(".__next__")) { scratch.add(p.toString); () }
+    val (deleted, rewritten) =
+      try Layout.vacuumRetention(spark, dir, "ts", 100L, Seq("id"))
+      finally Fs.beforeMutation = (_, _) => ()
+    assert(deleted === Seq("day=0", "day=1") && rewritten.isEmpty)
+    assert(scratch.isEmpty, s"expired dirs went through a rewrite: $scratch")
+    assert(Layout.filesPerPartition(dir).isEmpty)
+  }
+
   test("evolvePartitions re-keys losslessly, keeps the old key, prunes on the new one") {
     val dir = freshDir()
     Layout.writePartitioned(docs, dir, "source", Seq("doc_id"))

@@ -1,85 +1,36 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement harness (guide §1): run named queries
   * through the SAME noop-sink methodology as [[Bench]], printing per-JOB
   * wall/task/shuffle breakdowns so a query's seconds can be attributed to
   * a specific pass (a training level, a CC round, a staging write) instead
   * of guessed at. Not part of the driver contract — a local tool.
   *
-  * Usage: `sbt "Test/runMain graft.OptProfile q_a,q_b [reps]"` (test scope — not in the driver artifact; r15 advice)
-  * (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench).
+  * Usage: `sbt "Test/runMain graft.OptProfile q_a,q_b [reps]"`
+  * (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench, conf overrides via
+  * SPARK_GRAFT_PROBE_CONF, see [[Harness.applyProbeConf]]).
   */
 object OptProfile {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach { kvs =>
-      kvs.split(";").map(_.split("=", 2)).foreach {
-        case Array(k, v) => spark.conf.set(k, v); println(s"[probe] set $k=$v")
-        case _ => ()
-      }
-    }
-
-    val jobStart = new ConcurrentHashMap[Int, (Long, String)]()
-    val stageAgg = new ConcurrentHashMap[Int, (Long, Long, Long, Int)]() // jobId -> (taskTimeMs, shufWrite, shufRead, nTasks)
-    val stageToJob = new ConcurrentHashMap[Int, Int]()
-    @volatile var collecting = false
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val site = Option(js.properties)
-          .map(_.getProperty("callSite.short", "")).getOrElse("")
-        jobStart.put(js.jobId, (js.time, site))
-        js.stageIds.foreach(sid => stageToJob.put(sid, js.jobId))
-      }
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val jid = Option(stageToJob.get(sc.stageInfo.stageId)).getOrElse(-1)
-        val m = sc.stageInfo.taskMetrics
-        val prev = Option(stageAgg.get(jid)).getOrElse((0L, 0L, 0L, 0))
-        stageAgg.put(jid, (prev._1 + m.executorRunTime,
-          prev._2 + m.shuffleWriteMetrics.bytesWritten,
-          prev._3 + m.shuffleReadMetrics.totalBytesRead,
-          prev._4 + sc.stageInfo.numTasks))
-      }
-      override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        if (collecting) {
-          val (t0, site) = Option(jobStart.get(je.jobId)).getOrElse((je.time, "?"))
-          val (task, sw, sr, nt) = Option(stageAgg.get(je.jobId))
-            .getOrElse((0L, 0L, 0L, 0))
-          println(f"[job ${je.jobId}%4d] wall=${(je.time - t0) / 1e3}%7.3fs " +
-            f"task=${task / 1e3}%8.3fs tasks=$nt%4d " +
-            f"sw=${sw / 1048576.0}%8.2fMB sr=${sr / 1048576.0}%8.2fMB  $site")
-        }
-      }
-    })
-    // Bench's warmup shape
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    try spark.read.parquet(s"$sfDir/customer.parquet").count()
-    catch { case scala.util.control.NonFatal(_) => () }
-
+    val spark = Harness.session()
+    Harness.applyProbeConf(spark)
+    val meter = new QueryMeter(spark)
+    Harness.warmUp(spark, sfDir)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to reps).foreach { r =>
         println(s"\n=== $name run $r ===")
-        collecting = true
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        collecting = false
-        println(f"=== $name run $r TOTAL ${wall}%.3f s ===")
+        val s = meter.measure(Harness.materialize(fn(spark, sfDir)))
+        s.jobs.foreach { j =>
+          println(f"[job ${j.id}%4d] wall=${j.wallMs / 1e3}%7.3fs " +
+            f"task=${j.runMs / 1e3}%8.3fs tasks=${j.tasks}%4d " +
+            f"sw=${j.shuffleWriteBytes / 1048576.0}%8.2fMB " +
+            f"sr=${j.shuffleReadBytes / 1048576.0}%8.2fMB  ${j.callSite}")
+        }
+        println(f"=== $name run $r TOTAL ${s.wallS}%.3f s ===")
       }
       // clear any group caches so queries profile like Bench's cold path
       graft.queries.TextOps.clearCaches()

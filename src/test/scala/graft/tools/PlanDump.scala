@@ -2,23 +2,46 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 
-/** Writes PLANS.md: formatted physical plans of the flagship queries, the
-  * evidence behind PlanSpec's assertions (pushdown, pruning, broadcast,
-  * top-k, partial aggregation).
+/** Formatted physical plans, in the session [[Harness.session]] gives
+  * [[Bench]], so the plans are the ones the bench runs. Two forms:
+  *
+  *  - `sbt "Test/runMain graft.PlanDump"` writes PLANS.md: the flagship
+  *    picks below, the evidence behind PlanSpec's assertions (pushdown,
+  *    pruning, broadcast, top-k, partial aggregation).
+  *  - `sbt "Test/runMain graft.PlanDump <tag> q_a,q_b [outDir]"` writes
+  *    each named query's plan to `<outDir>/<query>_<tag>.txt` (outDir
+  *    defaults to `plans/r15`) — before/after evidence for a plan change.
+  *
+  * Tables are read from SPARK_GRAFT_SF_DIR, default sf0.001.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val d = "/root/testdata/sf0.001"
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", d)
+    def plan(name: String): String =
+      SparkEntry.queries(name)(spark, sfDir).queryExecution
+        .explainString(ExplainMode.fromString("formatted"))
+    if (args.nonEmpty) {
+      val tag = args(0)
+      val outDir = if (args.length > 2) args(2) else "plans/r15"
+      Files.createDirectories(Paths.get(outDir))
+      args(1).split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
+        try {
+          Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), plan(name))
+          println(s"[plans] wrote $outDir/${name}_$tag.txt")
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            println(s"[plans] $name FAILED: ${e.getMessage}")
+        }
+        graft.queries.TextOps.clearCaches()
+        graft.queries.VectorOps.clearCaches()
+      }
+      spark.stop()
+      return
+    }
     val picks = Seq(
       "q_filter_eq" -> "Filter pushdown + column pruning (PushedFilters / ReadSchema)",
       "q_groupby_agg" -> "Partial (map-side) + final hash aggregation",
@@ -52,14 +75,13 @@ object PlanDump {
       "q_changepoint" -> "Change-point KS scan: ONE corpus groupBy to the day×bucket matrix, then (days×buckets)-sized triangular joins — no window, no corpus re-read",
       "q_basket_rules" -> "Market-basket rules: order-keyed pair self-join (fan-out structurally bounded by order size), broadcast item counts, DECIMAL lift via truncating integral div")
     val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of flagship queries (sf0.001)\n\n")
-    sb.append("Generated by `sbt \"runMain graft.PlanDump\"`. Properties asserted\n")
+    sb.append("# PLANS — formatted physical plans of flagship queries " +
+      s"(${sfDir.stripSuffix("/").split('/').last})\n\n")
+    sb.append("Generated by `sbt \"Test/runMain graft.PlanDump\"`. Properties asserted\n")
     sb.append("continuously by `graft.queries.PlanSpec`.\n")
     picks.foreach { case (name, why) =>
-      val qe = SparkEntry.queries(name)(spark, d).queryExecution
       sb.append(s"\n## $name — $why\n\n```\n")
-      sb.append(qe.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")).trim)
+      sb.append(plan(name).trim)
       sb.append("\n```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)

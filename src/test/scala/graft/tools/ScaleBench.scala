@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Scaling harness for SCALE.md: run a named subset of SparkEntry.queries
   * against an arbitrary data dir (e.g. the 10x sf1 fixture built by
@@ -7,9 +6,10 @@ import org.apache.spark.sql.SparkSession
   * evidence side of the "would this survive a 100x scale-up" claim, instead
   * of the assertion.
   *
-  * Usage: runMain graft.ScaleBench <dir> [query ...]
+  * Usage: `sbt "Test/runMain graft.ScaleBench <dir> [query ...]"`
   * Env: SPARK_GRAFT_RUNS (samples per query, min reported; default 2),
-  *      SPARK_GRAFT_CPUS (default 32).
+  *      SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PROBE_CONF (conf
+  *      overrides for A/B arms, see [[Harness.applyProbeConf]]).
   */
 object ScaleBench {
 
@@ -41,50 +41,29 @@ object ScaleBench {
       if (q.nonEmpty) q else if (cappedOnly) Set.empty else defaultSet
     }
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // optional conf overrides for A/B arms (the StreamProbe convention):
-    // SPARK_GRAFT_PROBE_CONF="k=v;k2=v2"
-    sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach { kvs =>
-      kvs.split(";").map(_.split("=", 2)).foreach {
-        case Array(k, v) => spark.conf.set(k, v); println(s"[probe] set $k=$v")
-        case _ => ()
-      }
-    }
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    val spark = Harness.session()
+    Harness.applyProbeConf(spark)
+    Harness.warmUp(spark, sfDir)
     // Shuffle-volume instrumentation: wall-clock linearity on a 32-core box
     // is weak scaling evidence (everything is memory-speed); shuffle WRITE
     // bytes ∝ data is the property that decides whether a plan survives a
-    // real cluster. The shared [[ShuffleMeter]] sums task shuffle-write
-    // bytes and input (scan) records — recordsRead, not bytesRead: the
-    // local-fs parquet path reports only footer bytes to
-    // inputMetrics.bytesRead, but row counts are exact. Per query we
-    // report the minimum over runs (caches warm = the steady-state plan).
-    val meter = new ShuffleMeter(spark)
-    val shuffleBytes = meter.shuffleBytes
-    val inputRecords = meter.inputRecords
-    // per-query scan-row readings for sections that opt in (merge/rollup)
+    // real cluster. Per query we report the minimum over runs of the
+    // [[QueryMeter]]'s shuffle-write bytes (caches warm = the steady-state
+    // plan), and for sections that opt in (merge/rollup/pqbloom) its input
+    // records.
+    val meter = new QueryMeter(spark)
     val inputRows = scala.collection.mutable.Map.empty[String, Long]
-    def drainListenerBus(): Unit = meter.drain()
-    // shared store-teardown helper for the A/B sections below (was four
-    // identical local copies)
-    def del(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(del)
-      f.delete(); ()
-    }
-    // (time, shuffle-write bytes) of `body`, min over `runs` samples each.
-    // A crashed sample must NOT masquerade as a fast run (time-to-crash can
-    // be tiny): any failure poisons the query's result to (-1, 0) and logs
-    // the cause to stderr, so a -1 in the JSON reads as "failed", never
-    // "fast".
-    def timeIt(body: => Unit): (Double, Long) = {
-      var failed = false
+    // store teardown for the A/B sections below
+    import graft.ops.Layout.{deleteRecursively => del}
+    // (time, shuffle-write bytes) of `body`, min over `runs` samples each;
+    // `setup` runs before each sample, outside its window, and `rowsAs`
+    // names the input_rows entry that gets the min input records. A
+    // crashed sample must NOT masquerade as a fast run (time-to-crash can
+    // be tiny): any failure poisons the result to (-1, 0), and the
+    // [[QueryMeter]] logs the cause to stderr, so a -1 in the JSON reads as
+    // "failed", never "fast".
+    def timed(name: String, setup: => Unit = (), rowsAs: String = "")(
+        body: => Unit): (Double, Long) = {
       val samples = Seq.fill(runs) {
         // free the PREVIOUS arm's dropped localCheckpoint blocks before
         // sampling (the Bench per-group discipline): ContextCleaner only
@@ -92,33 +71,26 @@ object ScaleBench {
         // the frame, so back-to-back 100× arms otherwise stack pinned
         // occurrence indexes until the second arm OOMs (measured r16)
         System.gc()
-        drainListenerBus()
-        val b0 = shuffleBytes.get()
-        val t0 = System.nanoTime()
-        try body catch {
-          case e: Throwable =>
-            failed = true
-            System.err.println(
-              s"[scalebench] FAILED: ${e.getClass.getName}: ${e.getMessage}")
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        drainListenerBus()
-        (t, shuffleBytes.get() - b0)
+        setup
+        meter.sample(name)(body)
       }
-      if (failed) (-1.0, 0L)
-      else (samples.map(_._1).min, samples.map(_._2).min)
+      if (samples.contains(None)) (-1.0, 0L)
+      else {
+        val ok = samples.flatten
+        if (rowsAs.nonEmpty) inputRows(rowsAs) = ok.map(_.inputRecords).min
+        (ok.map(_.wallS).min, ok.map(_.shuffleWriteBytes).min)
+      }
     }
+    def timeIt(body: => Unit): (Double, Long) = timed("scalebench")(body)
     // reuse the bench schedule so cache-consuming dedup queries share one
     // shingling pass and release it after their group, like Bench/Verify
     val results = SparkEntry.schedule.flatMap { case (names, after) =>
       val rs = names.filter(want).map { name =>
         val fn = SparkEntry.queries(name)
         // noop sink, not count(): count(1) lets Catalyst prune aggregate
-        // expressions and projection work (see Bench.materialize) — the
+        // expressions and projection work (see Harness.materialize) — the
         // shuffle-byte column especially must reflect the FULL plan
-        name -> timeIt {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        }
+        name -> timed(name)(Harness.materialize(fn(spark, sfDir)))
       }
       after()
       rs
@@ -237,27 +209,11 @@ object ScaleBench {
           .unionByName(docs.filter(pmod(col("doc_id"), lit(100)) === 7))
         val root = java.nio.file.Files.createTempDirectory("graft_scale_ing_")
           .toFile.getAbsolutePath
-        def sample(dir: String)(screen: => Unit): (Double, Long) = {
-          var failed = false
-          val samples = Seq.fill(runs) {
+        def sample(dir: String)(screen: => Unit): (Double, Long) =
+          timed("ingest", setup = {
             del(new java.io.File(dir))
             graft.ops.Layout.writePartitioned(seed, dir, "lang", Seq("doc_id"))
-            drainListenerBus()
-            val b0 = shuffleBytes.get()
-            val t0 = System.nanoTime()
-            try screen catch {
-              case e: Throwable =>
-                failed = true
-                System.err.println(
-                  s"[scalebench] ingest FAILED: ${e.getClass.getName}: ${e.getMessage}")
-            }
-            val t = (System.nanoTime() - t0) / 1e9
-            drainListenerBus()
-            (t, shuffleBytes.get() - b0)
-          }
-          if (failed) (-1.0, 0L)
-          else (samples.map(_._1).min, samples.map(_._2).min)
-        }
+          })(screen)
         try {
           val exact = sample(s"$root/exact") {
             graft.ops.Layout.ingest(
@@ -290,26 +246,8 @@ object ScaleBench {
           graft.ops.Layout.append(hot, dir, "lang", Seq("doc_id"))
           graft.ops.Layout.append(hot, dir, "lang", Seq("doc_id"))
         }
-        def sample(dir: String)(body: => Unit): (Double, Long) = {
-          var failed = false
-          val samples = Seq.fill(runs) {
-            seeded(dir)
-            drainListenerBus()
-            val b0 = shuffleBytes.get()
-            val t0 = System.nanoTime()
-            try body catch {
-              case e: Throwable =>
-                failed = true
-                System.err.println(
-                  s"[scalebench] compact FAILED: ${e.getClass.getName}: ${e.getMessage}")
-            }
-            val t = (System.nanoTime() - t0) / 1e9
-            drainListenerBus()
-            (t, shuffleBytes.get() - b0)
-          }
-          if (failed) (-1.0, 0L)
-          else (samples.map(_._1).min, samples.map(_._2).min)
-        }
+        def sample(dir: String)(body: => Unit): (Double, Long) =
+          timed("compact", setup = seeded(dir))(body)
         try {
           val full = sample(s"$root/full") {
             graft.ops.Layout.compact(spark, s"$root/full", "lang", Seq("doc_id"))
@@ -357,26 +295,8 @@ object ScaleBench {
           Option(new java.io.File(s"$dir/l_returnflag=N").listFiles())
             .getOrElse(Array.empty)
             .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-        def sample(dir: String)(body: => Unit): (Double, Long) = {
-          var failed = false
-          val samples = Seq.fill(runs) {
-            seeded(dir)
-            drainListenerBus()
-            val b0 = shuffleBytes.get()
-            val t0 = System.nanoTime()
-            try body catch {
-              case e: Throwable =>
-                failed = true
-                System.err.println(
-                  s"[scalebench] hotsplit FAILED: ${e.getClass.getName}: ${e.getMessage}")
-            }
-            val t = (System.nanoTime() - t0) / 1e9
-            drainListenerBus()
-            (t, shuffleBytes.get() - b0)
-          }
-          if (failed) (-1.0, 0L)
-          else (samples.map(_._1).min, samples.map(_._2).min)
-        }
+        def sample(dir: String)(body: => Unit): (Double, Long) =
+          timed("hotsplit", setup = seeded(dir))(body)
         try {
           val single = sample(s"$root/single") {
             graft.ops.Layout.compactPartitions(spark, s"$root/single",
@@ -539,31 +459,11 @@ object ScaleBench {
           .withColumn("source", lit("upd"))
           .write.mode("overwrite").parquet(s"$root/batch")
         val batch = spark.read.parquet(s"$root/batch")
-        def sample(name: String, dir: String)(body: => Unit): (Double, Long) = {
-          var failed = false
-          val samples = Seq.fill(runs) {
+        def sample(name: String, dir: String)(body: => Unit): (Double, Long) =
+          timed("merge", rowsAs = name, setup = {
             del(new java.io.File(dir))
             graft.ops.Layout.writePartitioned(docs, dir, "shard", Seq("doc_id"))
-            drainListenerBus()
-            val b0 = shuffleBytes.get()
-            val i0 = inputRecords.get()
-            val t0 = System.nanoTime()
-            try body catch {
-              case e: Throwable =>
-                failed = true
-                System.err.println(
-                  s"[scalebench] merge FAILED: ${e.getClass.getName}: ${e.getMessage}")
-            }
-            val t = (System.nanoTime() - t0) / 1e9
-            drainListenerBus()
-            (t, shuffleBytes.get() - b0, inputRecords.get() - i0)
-          }
-          if (failed) (-1.0, 0L)
-          else {
-            inputRows(name) = samples.map(_._3).min
-            (samples.map(_._1).min, samples.map(_._2).min)
-          }
-        }
+          })(body)
         try {
           val pruned = sample("merge_pruned[1_of_50_shards]", s"$root/pruned") {
             graft.ops.Layout.merge(batch, s"$root/pruned", "shard",
@@ -606,29 +506,8 @@ object ScaleBench {
           } else java.nio.file.Files.copy(src.toPath, dst.toPath)
           ()
         }
-        def sample(name: String)(body: => Unit): (Double, Long) = {
-          var failed = false
-          val samples = Seq.fill(runs) {
-            drainListenerBus()
-            val b0 = shuffleBytes.get()
-            val i0 = inputRecords.get()
-            val t0 = System.nanoTime()
-            try body catch {
-              case e: Throwable =>
-                failed = true
-                System.err.println(
-                  s"[scalebench] rollup FAILED: ${e.getClass.getName}: ${e.getMessage}")
-            }
-            val t = (System.nanoTime() - t0) / 1e9
-            drainListenerBus()
-            (t, shuffleBytes.get() - b0, inputRecords.get() - i0)
-          }
-          if (failed) (-1.0, 0L)
-          else {
-            inputRows(name) = samples.map(_._3).min
-            (samples.map(_._1).min, samples.map(_._2).min)
-          }
-        }
+        def sample(name: String)(body: => Unit): (Double, Long) =
+          timed("rollup", rowsAs = name)(body)
         try {
           val store = s"$root/store"
           for (i <- 0 to 9)
@@ -739,13 +618,9 @@ object ScaleBench {
           // ONE sample — a second squash is a no-op and min-of-runs would
           // report the no-op, not the rewrite
           val sq = {
-            drainListenerBus()
-            val b0 = shuffleBytes.get()
-            val t0 = System.nanoTime()
-            graft.ops.Layout.squashHistory(spark, dir, 46L, Seq("doc_id"))
-            val t = (System.nanoTime() - t0) / 1e9
-            drainListenerBus()
-            (t, shuffleBytes.get() - b0)
+            val m = meter.measure(
+              graft.ops.Layout.squashHistory(spark, dir, 46L, Seq("doc_id")))
+            (m.wallS, m.shuffleWriteBytes)
           }
           val post = timeIt { fullScan() }
           val cPost = timeIt { consume() }
@@ -856,12 +731,8 @@ object ScaleBench {
               .agg(count(lit(1)), sum(col("value"))).collect()
             ()
           }
-          def measured(tag: String, dir: String): ((String, (Double, Long))) = {
-            val r0 = inputRecords.get()
-            val t = timeIt { lookup(dir) }
-            inputRows(s"pqbloom_$tag") = inputRecords.get() - r0
-            s"pqbloom_$tag" -> t
-          }
+          def measured(tag: String, dir: String): ((String, (Double, Long))) =
+            s"pqbloom_$tag" -> timed("pqbloom", rowsAs = s"pqbloom_$tag")(lookup(dir))
           Map(measured("plain", s"$root/plain"),
             measured("bloom", s"$root/bloom"))
         } finally del(new java.io.File(root))
