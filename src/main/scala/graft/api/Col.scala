@@ -2,7 +2,7 @@ package graft.api
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.types._
@@ -202,8 +202,7 @@ final class Col private[api] (
   def ilocSlice(start: Option[Long] = None, stop: Option[Long] = None,
       step: Long = 1): Seq[Any] = view.ilocSlice(start, stop, step).map(_.get(0))
   def sortValues(ascending: Boolean = true): Table =
-    new Table(table.db, colDf.orderBy(if (ascending) asc(name) else desc(name)),
-      table.name, ordered = true)
+    view.sortValues(name, ascending)
   def limit(n: Int): Table = view.limit(n)
   def notNullView: Table = new Table(table.db, df.filter(c.isNotNull).select(c), table.name)
 
@@ -213,13 +212,7 @@ final class Col private[api] (
     * data(limit) is head-n, column.py:314-326 — a bare Spark limit takes
     * arbitrary rows).
     */
-  def data(limit: Int = -1): Seq[Any] = {
-    val d =
-      if (limit < 0) colDf
-      else df.select(c, monotonically_increasing_id().as("__mid"))
-        .orderBy("__mid").limit(limit).drop("__mid")
-    d.collect().map(_.get(0)).toSeq
-  }
+  def data(limit: Int = -1): Seq[Any] = view.data(limit).map(_.get(0))
   def toSeq: Seq[Any] = data()
   def iterator: Iterator[Any] = colDf.toLocalIterator().asScala.map(_.get(0))
 
@@ -230,18 +223,11 @@ final class Col private[api] (
     */
   def repr(maxRows: Int = 10): String = {
     val v = view
-    val n = v.len
-    val half = math.max(maxRows / 2, 1)
-    val (idx, rows) =
-      if (n <= maxRows) ((0L until n), v.iloc(0L, n))
-      else ((0L until half) ++ (n - half until n),
-        v.iloc(0L, half) ++ v.iloc(n - half, n))
-    val vals = rows.map(r => if (r.isNullAt(0)) "NaN" else r.get(0).toString)
-    val entries = {
-      val z = idx.map(_.toString).zip(vals)
-      if (n <= maxRows) z
-      else { val (t, b) = z.splitAt(half); (t :+ ("..." -> "...")) ++ b }
-    }
+    val (top, bottom) = v.reprRows(v.len, maxRows)
+    def entry(ir: (Long, Row)): (String, String) =
+      ir._1.toString -> (if (ir._2.isNullAt(0)) "NaN" else ir._2.get(0).toString)
+    val entries = top.map(entry) ++
+      (if (bottom.isEmpty) Nil else ("..." -> "...") +: bottom.map(entry))
     val iw = entries.map(_._1.length).max
     val vw = entries.map(_._2.length).max
     entries.map { case (i, x) =>

@@ -321,22 +321,13 @@ final class Table private[api] (
     */
   def repr(maxRows: Int = 10): String = {
     val (n, m) = shape
-    val half = math.max(maxRows / 2, 1)
-    val (idx, rows) =
-      if (n <= maxRows) ((0L until n), iloc(0L, n))
-      else ((0L until half) ++ (n - half until n),
-        iloc(0L, half) ++ iloc(n - half, n))
+    val (top, bottom) = reprRows(n, maxRows)
     def cell(v: Any): String = if (v == null) "NaN" else v.toString
-    val grid = rows.map(r => (0 until m).map(i => cell(r.get(i))))
-    val shrunk = n > maxRows
+    def line(ir: (Long, Row)): Seq[String] =
+      ir._1.toString +: (0 until m).map(i => cell(ir._2.get(i)))
     val header = "" +: columns
-    val body = idx.zip(grid).map { case (i, cs) => i.toString +: cs }
-    val withEll =
-      if (!shrunk) body
-      else {
-        val (top, bot) = body.splitAt(half)
-        (top :+ Seq.fill(m + 1)("...")) ++ bot
-      }
+    val withEll = top.map(line) ++
+      (if (bottom.isEmpty) Nil else Seq.fill(m + 1)("...") +: bottom.map(line))
     val widths = (header +: withEll).transpose.map(_.map(_.length).max)
     def fmt(r: Seq[String]): String =
       r.zip(widths).map { case (s, w) => " " * (w - s.length) + s }
@@ -344,6 +335,18 @@ final class Table private[api] (
     (fmt(header) +: withEll.map(fmt)).mkString("\n") +
       s"\n\n[$n rows x $m columns]"
   }
+
+  /** The rows both `repr`s show, with their positions, out of `n`: all
+    * of them when `n <= maxRows`, else the first and the last
+    * `max(maxRows / 2, 1)` as (top, bottom). A non-empty bottom means the
+    * middle is elided.
+    */
+  private[api] def reprRows(n: Long, maxRows: Int): (Seq[(Long, Row)], Seq[(Long, Row)]) =
+    if (n <= maxRows) ((0L until n).zip(iloc(0L, n)), Nil)
+    else {
+      val half = math.max(maxRows / 2, 1)
+      ((0L until half).zip(iloc(0L, half)), (n - half until n).zip(iloc(n - half, n)))
+    }
 
   // ---- equality (reference §2.7, table.py:480-495) ---------------------
 

@@ -1177,15 +1177,4 @@ object Layout {
           f.getPath.getName.endsWith(".parquet") ||
             f.getPath.getName.endsWith(".orc")))
       .toMap
-
-  /** Local-path recursive delete, kept for the query/test scaffolding
-    * that builds scratch stores under /tmp (the STORE protocol itself
-    * goes through [[Fs]]).
-    */
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-    ()
-  }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.streaming.{Scratch, StagedSource}
+
 import Q._
 
 /** Event-stream analytics over the `events` table (batch form; the same
@@ -30,9 +32,6 @@ object EventOps {
 
   private def nsDiv(colName: String, divisor: Long): Column =
     expr(s"$colName div ${divisor}L")
-
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.ops.Layout.deleteRecursively(f)
 
   /** Gate-scoped streaming tuning (see [[graft.streaming.StreamTune]]):
     * scale-adaptive state partitions derived from the gate's table bytes
@@ -69,6 +68,37 @@ object EventOps {
         case _ => col("ts").cast("timestamp") // micros TS/NTZ (UTC session)
       }
     (stream0, tss)
+  }
+
+  /** The staged replay of q_stream_left_join and q_stream_full_join:
+    * the ms-floored events (the suite's interval-join convention) as one
+    * file, then two far-future sentinel pairs, one file each, under
+    * maxFilesPerTrigger=1. Slice mtimes sequence the batches: the file
+    * source orders by modification time, and a sentinel landing BEFORE
+    * the data would advance the watermark past it and drop it as late.
+    * Each pair is an error (user -2) AND a purchase (user -1), so that a
+    * sentinel survives each join side's event_type filter.
+    */
+  private def sentinelJoinReplay[T](s: SparkSession, d: String,
+      name: String)(body: DataFrame => T): T = {
+    import s.implicits._
+    val ev = t(s, d, "events")
+      .select(col("event_id"),
+        timestamp_millis(nsDiv("ts", NS_PER_MS)).as("ts"),
+        col("user_id"), col("event_type"), col("value"))
+    val maxMs = ev.agg(max(unix_millis(col("ts")))).head().getLong(0)
+    def sentinelPair(tag: Long, offsetMs: Long, slice: Long) = Seq(
+      (tag, new java.sql.Timestamp(maxMs + offsetMs), -2L,
+        "error", 0.0, slice),
+      (tag - 1L, new java.sql.Timestamp(maxMs + offsetMs), -1L,
+        "purchase", 0.0, slice))
+    StagedSource.replay(name,
+        ev.withColumn("__slice", lit(0L)).unionByName(
+          (sentinelPair(-100L, 7200000L, 1L) ++
+            sentinelPair(-200L, 14400000L, 2L))
+            .toDF("event_id", "ts", "user_id", "event_type", "value",
+              "__slice")),
+        "__slice", Some(1)) { (stream, _) => body(stream) }
   }
 
   /** The shared view→click→purchase funnel stages (first qualifying
@@ -150,48 +180,27 @@ object EventOps {
         val refRows = ev0.groupBy("event_type").agg(count(lit(1)).as("n"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         val total = ev0.count()
-        val tmp = java.nio.file.Files.createTempDirectory("graft_sess_drift")
-        val src = s"$tmp/src"
         val ev = ev0.select(nsDiv("ts", NS_PER_MS).as("ms"),
           col("user_id"), col("event_type"))
         val b = ev.agg(min(col("ms")), max(col("ms"))).head()
         val (loMs, maxMs) = (b.getLong(0), b.getLong(1))
-        try {
-          // four chronologically DISJOINT slices, mtime-ordered: the file
-          // source replays them as separate micro-batches, the watermark
-          // advances between batches, and closed sessions EVICT — state
-          // is bounded by one slice's open sessions, never the corpus.
-          // Two watermark sentinels (user -1, a type no counter counts):
-          // the first advances the watermark past every real session's
-          // end, the SECOND batch then evicts + emits them all. All six
-          // slices staged in ONE job (StagedSource, optimization round
-          // 16); the boundary literals use the same integer arithmetic
-          // as the old per-slice filters, so slice contents are identical
-          val span = maxMs - loMs + 1L
-          val bnd = (1 to 3).map(i => loMs + i * span / 4)
-          val data = ev
-            .withColumn("__slice",
-              when(col("ms") < bnd(0), 0L).when(col("ms") < bnd(1), 1L)
-                .when(col("ms") < bnd(2), 2L).otherwise(3L))
-            .select(timestamp_millis(col("ms")).as("ts"),
-              col("user_id"), col("event_type"), col("__slice"))
-          val sentinels = Seq(
-              (new java.sql.Timestamp(maxMs + 7200000L), -1L, "flush", 4L),
-              (new java.sql.Timestamp(maxMs + 14400000L), -1L, "flush", 5L))
-            .toDF("ts", "user_id", "event_type", "__slice")
-          graft.streaming.StagedSource.write(
-            data.unionByName(sentinels), "__slice", src)
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("ts",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField("user_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType)))
-          val stream0 = s.readStream.schema(schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        // four chronologically DISJOINT slices, mtime-ordered: the file
+        // source replays them as separate micro-batches, the watermark
+        // advances between batches, and closed sessions EVICT — state
+        // is bounded by one slice's open sessions, never the corpus.
+        // Two watermark sentinels (user -1, a type no counter counts):
+        // the first advances the watermark past every real session's
+        // end, the SECOND batch then evicts + emits them all
+        val data = ev
+          .withColumn("__slice", StagedSource.timeSlice(col("ms"), loMs, maxMs, 4))
+          .select(timestamp_millis(col("ms")).as("ts"),
+            col("user_id"), col("event_type"), col("__slice"))
+        val sentinels = Seq(
+            (new java.sql.Timestamp(maxMs + 7200000L), -1L, "flush", 4L),
+            (new java.sql.Timestamp(maxMs + 14400000L), -1L, "flush", 5L))
+          .toDF("ts", "user_id", "event_type", "__slice")
+        StagedSource.replay("sess_drift", data.unionByName(sentinels),
+            "__slice", Some(1)) { (stream0, _) =>
           val aggs = count(lit(1)).as("n_events") +:
             types.zipWithIndex.map { case (tp, i) =>
               sum(when(col("event_type") === tp, 1L).otherwise(0L)).as(s"c$i") }
@@ -199,39 +208,39 @@ object EventOps {
             .withWatermark("tss", "1 minute")
             .groupBy(col("user_id"), session_window(col("tss"), "30 minutes"))
             .agg(aggs.head, aggs.tail: _*)
-        val n = col("n_events").cast("double")
-        val terms = types.zipWithIndex.map { case (tp, i) =>
-          val refCnt = refRows.getOrElse(tp, 0L)
-          val p = col(s"c$i").cast("double") / n
-          val q = lit(refCnt.toDouble / total.toDouble)
-          val m = (p + q) / lit(2.0)
-          val tP = when(col(s"c$i") > 0L, p * round(log(p / m), 6))
-            .otherwise(lit(0.0))
-          val tQ = if (refCnt > 0L) q * round(log(q / m), 6) else lit(0.0)
-          round((tP + tQ) / lit(2.0), 6)
-            .cast(org.apache.spark.sql.types.DecimalType(18, 6))
+          val n = col("n_events").cast("double")
+          val terms = types.zipWithIndex.map { case (tp, i) =>
+            val refCnt = refRows.getOrElse(tp, 0L)
+            val p = col(s"c$i").cast("double") / n
+            val q = lit(refCnt.toDouble / total.toDouble)
+            val m = (p + q) / lit(2.0)
+            val tP = when(col(s"c$i") > 0L, p * round(log(p / m), 6))
+              .otherwise(lit(0.0))
+            val tQ = if (refCnt > 0L) q * round(log(q / m), 6) else lit(0.0)
+            round((tP + tQ) / lit(2.0), 6)
+              .cast(org.apache.spark.sql.types.DecimalType(18, 6))
+          }
+          val scored = sess.select(col("user_id"),
+            expr("unix_millis(session_window.start)").as("start_ms"),
+            (expr("unix_millis(session_window.end)") - 1800000L).as("last_ms"),
+            col("n_events"),
+            round(terms.reduce(_ + _).cast("double"), 6).as("js"))
+          val flow = alertMin.map(thr => scored.filter(col("js") >= thr))
+            .getOrElse(scored)
+          s.catalog.dropTempView(sink)
+          gated(s, d) {
+            graft.streaming.EventStream.runToMemory(flow, sink,
+              org.apache.spark.sql.streaming.OutputMode.Append)
+          }
+          // (user_id, start_ms) is a true session key — the standard
+          // at-least-once replay screen; sentinel sessions (user -1) drop.
+          // The memory sink owns the rows — reading after the scratch dir
+          // is deleted is safe
+          s.table(sink)
+            .dropDuplicates("user_id", "start_ms")
+            .filter(col("user_id") >= 0L)
+            .orderBy("user_id", "start_ms")
         }
-        val scored = sess.select(col("user_id"),
-          expr("unix_millis(session_window.start)").as("start_ms"),
-          (expr("unix_millis(session_window.end)") - 1800000L).as("last_ms"),
-          col("n_events"),
-          round(terms.reduce(_ + _).cast("double"), 6).as("js"))
-        val flow = alertMin.map(thr => scored.filter(col("js") >= thr))
-          .getOrElse(scored)
-        s.catalog.dropTempView(sink)
-        gated(s, d) {
-          graft.streaming.EventStream.runToMemory(flow, sink,
-            org.apache.spark.sql.streaming.OutputMode.Append)
-        }
-        // (user_id, start_ms) is a true session key — the standard
-        // at-least-once replay screen; sentinel sessions (user -1) drop.
-        // The memory sink owns the rows — reading after the
-        // finally-delete of the staged src is safe
-        s.table(sink)
-          .dropDuplicates("user_id", "start_ms")
-          .filter(col("user_id") >= 0L)
-          .orderBy("user_id", "start_ms")
-        } finally deleteRecursively(tmp.toFile)
   }
 
   /** The matching DuckDB oracle: full score table, optionally filtered
@@ -864,38 +873,20 @@ object EventOps {
             coalesce(cents(col("value")), lit(0L)).as("cents"))
         val b = ev.agg(min(col("ms")), max(col("ms"))).head()
         val (loMs, maxMs) = (b.getLong(0), b.getLong(1))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_ewma")
-        val src = s"$tmp/src"
-        try {
-          // sentinel 1 advances the watermark past every real timeout;
-          // sentinel 2's batch then FIRES the timeouts (timeout checks run
-          // against the previous batch's watermark). 4 quarter-slices + 2
-          // sentinels staged in ONE job (StagedSource, optimization round
-          // 16); boundary literals = the old per-slice filters' arithmetic
-          val span = maxMs - loMs + 1L
-          val bnd = (1 to 3).map(i => loMs + i * span / 4)
-          val data = ev.withColumn("__slice",
-              when(col("ms") < bnd(0), 0L).when(col("ms") < bnd(1), 1L)
-                .when(col("ms") < bnd(2), 2L).otherwise(3L))
-            .select(timestamp_millis(col("ms")).as("ts"),
-              col("event_type"), col("cents"), col("__slice"))
-          val sentinels = Seq(
-              (new java.sql.Timestamp(maxMs + 7200000L), "__flush", 0L, 4L),
-              (new java.sql.Timestamp(maxMs + 14400000L), "__flush", 0L, 5L))
-            .toDF("ts", "event_type", "cents", "__slice")
-          graft.streaming.StagedSource.write(
-            data.unionByName(sentinels), "__slice", src)
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("ts",
-              org.apache.spark.sql.types.TimestampType),
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("cents",
-              org.apache.spark.sql.types.LongType)))
-          val typed = s.readStream.schema(schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        // sentinel 1 advances the watermark past every real timeout;
+        // sentinel 2's batch then FIRES the timeouts (timeout checks run
+        // against the previous batch's watermark)
+        val data = ev
+          .withColumn("__slice", StagedSource.timeSlice(col("ms"), loMs, maxMs, 4))
+          .select(timestamp_millis(col("ms")).as("ts"),
+            col("event_type"), col("cents"), col("__slice"))
+        val sentinels = Seq(
+            (new java.sql.Timestamp(maxMs + 7200000L), "__flush", 0L, 4L),
+            (new java.sql.Timestamp(maxMs + 14400000L), "__flush", 0L, 5L))
+          .toDF("ts", "event_type", "cents", "__slice")
+        StagedSource.replay("stream_ewma", data.unionByName(sentinels),
+            "__slice", Some(1)) { (stream, _) =>
+          val typed = stream
             .withWatermark("ts", "1 minute")
             .as[EwmaEvt]
           val flow = typed.groupByKey(_.event_type)
@@ -957,7 +948,7 @@ object EventOps {
             .filter(col("event_type") =!= "__flush")
             .dropDuplicates("event_type", "day")
             .orderBy("event_type", "day")
-        } finally deleteRecursively(tmp.toFile)
+        }
       },
       """WITH bd AS (SELECT event_type, epoch_ms(ts) // 86400000 AS day,
         |    CAST(sum(CAST(round(coalesce(value, 0) * 100) AS BIGINT)) AS BIGINT)
@@ -996,41 +987,19 @@ object EventOps {
             coalesce(col("value"), lit(0.0)).as("value"))
         val b = ev.agg(min(col("ms")), max(col("ms"))).head()
         val (loMs, maxMs) = (b.getLong(0), b.getLong(1))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_sessx")
-        val src = s"$tmp/src"
-        try {
-          // sentinel 1 advances the watermark past every real session's
-          // timeout; sentinel 2's batch fires the remaining ones (timeouts
-          // check the PREVIOUS batch's watermark). 4 quarter-slices + 2
-          // sentinels staged in ONE job (StagedSource, optimization round
-          // 16); boundary literals = the old per-slice filters' arithmetic
-          val span = maxMs - loMs + 1L
-          val bnd = (1 to 3).map(i => loMs + i * span / 4)
-          val data = ev.withColumn("__slice",
-            when(col("ms") < bnd(0), 0L).when(col("ms") < bnd(1), 1L)
-              .when(col("ms") < bnd(2), 2L).otherwise(3L))
-          val sentinels = Seq(
-              (-1L, maxMs + 7200000L, -1L, "flush", 0.0, 4L),
-              (-1L, maxMs + 14400000L, -1L, "flush", 0.0, 5L))
-            .toDF("event_id", "ms", "user_id", "event_type", "value",
-              "__slice")
-          graft.streaming.StagedSource.write(
-            data.unionByName(sentinels), "__slice", src)
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("ms",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("user_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("value",
-              org.apache.spark.sql.types.DoubleType)))
-          val stream = s.readStream.schema(schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        // sentinel 1 advances the watermark past every real session's
+        // timeout; sentinel 2's batch fires the remaining ones (timeouts
+        // check the PREVIOUS batch's watermark)
+        val data = ev.withColumn("__slice",
+          StagedSource.timeSlice(col("ms"), loMs, maxMs, 4))
+        val sentinels = Seq(
+            (-1L, maxMs + 7200000L, -1L, "flush", 0.0, 4L),
+            (-1L, maxMs + 14400000L, -1L, "flush", 0.0, 5L))
+          .toDF("event_id", "ms", "user_id", "event_type", "value",
+            "__slice")
+        StagedSource.replay("stream_sessx", data.unionByName(sentinels),
+            "__slice", Some(1)) { (staged, _) =>
+          val stream = staged
             .select(col("event_id"), timestamp_millis(col("ms")).as("ts"),
               col("user_id"), col("event_type"), col("value"))
             .as[graft.streaming.EventStream.Event]
@@ -1050,7 +1019,7 @@ object EventOps {
             .select(col("user_id"), col("start_ms"), col("end_ms"),
               col("n_events"))
             .orderBy("user_id", "start_ms")
-        } finally deleteRecursively(tmp.toFile)
+        }
       },
       """WITH e AS (
         |  SELECT user_id, epoch_ms(ts) AS ms,
@@ -1194,31 +1163,20 @@ object EventOps {
     ("q_stream_sessionize",
       (s: SparkSession, d: String) => {
         import s.implicits._
-        val src = java.nio.file.Files.createTempDirectory("graft_stream_sess")
-        try {
-          val ev = t(s, d, "events")
-            .select(col("event_id"), expr("ts div 1000000L").as("ms"),
-              col("user_id"), col("event_type"),
-              coalesce(col("value"), lit(0.0)).as("value"))
-          val maxMs = ev.agg(max(col("ms"))).head().getLong(0)
-          val flush = ev.select(col("user_id")).distinct()
-            .select(lit(-1L).as("event_id"),
-              lit(maxMs + 7200000L).as("ms"), col("user_id"),
-              lit("flush").as("event_type"), lit(0.0).as("value"))
-          ev.unionByName(flush).coalesce(1)
-            .write.mode("overwrite").parquet(src.toString)
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("event_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("ms",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("user_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("event_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("value",
-              org.apache.spark.sql.types.DoubleType)))
-          val stream = s.readStream.schema(schema).parquet(src.toString)
+        val ev = t(s, d, "events")
+          .select(col("event_id"), expr("ts div 1000000L").as("ms"),
+            col("user_id"), col("event_type"),
+            coalesce(col("value"), lit(0.0)).as("value"))
+        val maxMs = ev.agg(max(col("ms"))).head().getLong(0)
+        val flush = ev.select(col("user_id")).distinct()
+          .select(lit(-1L).as("event_id"),
+            lit(maxMs + 7200000L).as("ms"), col("user_id"),
+            lit("flush").as("event_type"), lit(0.0).as("value"))
+        // one file, no rate limit: the whole table is one micro-batch
+        StagedSource.replay("stream_sess",
+            ev.unionByName(flush).withColumn("__slice", lit(0L)),
+            "__slice", None) { (staged, _) =>
+          val stream = staged
             .select(col("event_id"), timestamp_millis(col("ms")).as("ts"),
               col("user_id"), col("event_type"), col("value"))
             .as[graft.streaming.EventStream.Event]
@@ -1237,8 +1195,6 @@ object EventOps {
             .agg(count(lit(1)).as("n_sessions"),
               sum(col("n_events")).as("n_events"))
             .orderBy("user_id")
-        } finally {
-          deleteRecursively(src.toFile)
         }
       },
       """WITH e AS (
@@ -1264,8 +1220,7 @@ object EventOps {
     //    exactly-once content, graded not just spec'd -------------------
     ("q_stream_replay_ingest",
       (s: SparkSession, d: String) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_replay")
-        try {
+        Scratch.withDir("stream_replay") { tmp =>
           val src = s"$tmp/src"; val store = s"$tmp/store"
           val ckpt = s"$tmp/ckpt"
           val docs = t(s, d, "documents")
@@ -1307,12 +1262,9 @@ object EventOps {
               countDistinct(col("doc_id")).as("n_ids"),
               max(col("doc_id")).as("max_id"))
             .orderBy("lang")
-          // materialize the (per-lang-sized) result BEFORE the finally
-          // deletes the store the lazy plan would otherwise re-scan
-          import scala.jdk.CollectionConverters._
-          s.createDataFrame(agg.collect().toSeq.asJava, agg.schema)
-        } finally {
-          deleteRecursively(tmp.toFile)
+          // materialize the (per-lang-sized) result BEFORE the scratch
+          // dir holding the store the lazy plan would re-scan is deleted
+          Scratch.collected(agg)
         }
       },
       """SELECT lang, count(*) AS n_docs, cast(sum(n_chars) AS BIGINT) AS chars,
@@ -1333,33 +1285,20 @@ object EventOps {
     //    bug all break the hash ----------------------------------------
     ("q_stream_ingest_vacuum",
       (s: SparkSession, d: String) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_vac")
-        try {
-          val src = s"$tmp/src"; val store = s"$tmp/store"
-          val ckpt = s"$tmp/ckpt"
-          val ev = t(s, d, "events")
-            .select(col("event_id"), col("user_id"), col("event_type"),
-              expr("ts div 1000000").as("ms"), col("value"))
-            .withColumn("day", expr("ms div 86400000"))
-          val b = ev.agg(min(col("ms")), max(col("ms"))).head()
-          val (lo, hi) = (b.getLong(0), b.getLong(1))
-          val cutoff = (lo + hi) / 2
-          val span = hi - lo + 1L
-          // three time slices staged in ONE job (StagedSource,
-          // optimization round 16); boundary literals = the old
-          // per-slice filters' integer arithmetic
-          graft.streaming.StagedSource.write(
-            ev.withColumn("__slice",
-              when(col("ms") < lo + span / 3, 0L)
-                .when(col("ms") < lo + 2 * span / 3, 1L).otherwise(2L)),
-            "__slice", src)
-          val stream = s.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        val ev = t(s, d, "events")
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            expr("ts div 1000000").as("ms"), col("value"))
+          .withColumn("day", expr("ms div 86400000"))
+        val b = ev.agg(min(col("ms")), max(col("ms"))).head()
+        val (lo, hi) = (b.getLong(0), b.getLong(1))
+        val cutoff = (lo + hi) / 2
+        StagedSource.replay("stream_vac",
+            ev.withColumn("__slice", StagedSource.timeSlice(col("ms"), lo, hi, 3)),
+            "__slice", Some(1)) { (stream, tmp) =>
+          val store = s"$tmp/store"
           gated(s, d) {
             val q = stream.writeStream
-              .option("checkpointLocation", ckpt)
+              .option("checkpointLocation", s"$tmp/ckpt")
               .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
                 graft.ops.Layout.append(batch, store, "day", Seq("event_id"))
                 graft.ops.Layout.vacuumRetention(s, store, "ms", cutoff,
@@ -1378,10 +1317,9 @@ object EventOps {
               min(col("ms")).as("first_ms"),
               max(col("ms")).as("last_ms"))
             .orderBy("event_type")
-          // materialize before the finally deletes the store
-          import scala.jdk.CollectionConverters._
-          s.createDataFrame(agg.collect().toSeq.asJava, agg.schema)
-        } finally deleteRecursively(tmp.toFile)
+          // materialize before the scratch dir with the store is deleted
+          Scratch.collected(agg)
+        }
       },
       """WITH e AS (SELECT event_id, user_id, event_type,
         |    epoch_ms(ts) AS ms, value FROM events),
@@ -1432,24 +1370,18 @@ object EventOps {
     //    against DuckDB's DISTINCT over the same augmented corpus --------
     ("q_stream_dedup",
       (s: SparkSession, d: String) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_dedup")
-        try {
-          val src = s"$tmp/src"
-          val docs = t(s, d, "documents").select("doc_id", "text")
-          docs
-            .unionByName(docs.filter(pmod(col("doc_id"), lit(3)) === 0)
-              .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-            .unionByName(s.range(1, 3)
-              .select((-col("id")).as("doc_id"),
-                lit(null).cast("string").as("text")))
-            .coalesce(2).write.parquet(src)
-          val stream = s.readStream
-            .schema(org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("doc_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("text",
-                org.apache.spark.sql.types.StringType))))
-            .option("pathGlobFilter", "*.parquet").parquet(src)
+        val docs = t(s, d, "documents").select("doc_id", "text")
+        // two files, the texts and the null-text rows, no rate limit: one
+        // micro-batch
+        val aug = docs
+          .unionByName(docs.filter(pmod(col("doc_id"), lit(3)) === 0)
+            .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+          .unionByName(s.range(1, 3)
+            .select((-col("id")).as("doc_id"),
+              lit(null).cast("string").as("text")))
+        StagedSource.replay("stream_dedup",
+            aug.withColumn("__slice", col("text").isNull.cast("long")),
+            "__slice", None) { (stream, _) =>
           val sink = "graft_stream_dedup_out"
           s.catalog.dropTempView(sink)
           gated(s, d) {
@@ -1457,7 +1389,7 @@ object EventOps {
               graft.streaming.DocStream.dedupStream(stream), sink)
           }
           // the memory sink owns the kept rows, so aggregating after the
-          // finally-delete of src is safe; bucket NULL carries the two
+          // scratch dir is deleted is safe; bucket NULL carries the two
           // null-text pass-through rows. dropDuplicates(doc_id) is the
           // at-least-once replay screen (see q_stream_join) — doc_id is
           // unique in the augmented corpus, so it is a no-op on the true
@@ -1468,10 +1400,7 @@ object EventOps {
             .agg(count(lit(1)).as("n_kept"),
               sum(length(col("text")).cast("long")).as("chars"))
             .orderBy("bucket")
-          import scala.jdk.CollectionConverters._
-          s.createDataFrame(agg.collect().toSeq.asJava, agg.schema)
-        } finally {
-          deleteRecursively(tmp.toFile)
+          Scratch.collected(agg)
         }
       },
       """WITH aug AS (
@@ -1576,37 +1505,7 @@ object EventOps {
     //    the engine dropped or duplicated outer rows the gate fails ------
     ("q_stream_left_join",
       (s: SparkSession, d: String) => {
-        import s.implicits._
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_ljoin")
-        try {
-          val src = s"$tmp/src"
-          // ms-floored timestamps (the suite's interval-join convention)
-          val ev = t(s, d, "events")
-            .select(col("event_id"),
-              timestamp_millis(nsDiv("ts", NS_PER_MS)).as("ts"),
-              col("user_id"), col("event_type"), col("value"))
-          val maxMs = ev.agg(max(unix_millis(col("ts")))).head().getLong(0)
-          // data + two sentinel pairs staged in ONE job (StagedSource,
-          // optimization round 16). Slice mtimes sequence the batches:
-          // the file source orders by modification time, and a sentinel
-          // landing BEFORE the data would advance the watermark past it
-          // and drop it as late
-          def sentinelPair(tag: Long, offsetMs: Long, slice: Long) = Seq(
-            (tag, new java.sql.Timestamp(maxMs + offsetMs), -2L,
-              "error", 0.0, slice),
-            (tag - 1L, new java.sql.Timestamp(maxMs + offsetMs), -1L,
-              "purchase", 0.0, slice))
-          graft.streaming.StagedSource.write(
-            ev.withColumn("__slice", lit(0L)).unionByName(
-              (sentinelPair(-100L, 7200000L, 1L) ++
-                sentinelPair(-200L, 14400000L, 2L))
-                .toDF("event_id", "ts", "user_id", "event_type", "value",
-                  "__slice")),
-            "__slice", src)
-          val stream = s.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        sentinelJoinReplay(s, d, "stream_ljoin") { stream =>
           val joined = graft.streaming.EventStream.errorsLeftPurchases(
             stream, windowMinutes = 30)
           val sink = "graft_stream_ljoin_out"
@@ -1616,7 +1515,7 @@ object EventOps {
               org.apache.spark.sql.streaming.OutputMode.Append)
           }
           // memory sink owns the joined rows — aggregating after the
-          // finally-delete of src is safe
+          // scratch dir is deleted is safe
           s.table(sink)
             // keyed replay screen (see q_stream_join): (event_id,
             // p_event_id) is a true key — matched rows via unique ids,
@@ -1633,8 +1532,6 @@ object EventOps {
               sum(cents(col("purchase_value"))).as("purchase_cents"),
               max(expr("unix_micros(p_ts) div 1000L")).as("last_purchase_ms"))
             .orderBy("user_id")
-        } finally {
-          deleteRecursively(tmp.toFile)
         }
       },
       """WITH e AS (SELECT event_id, user_id, epoch_ms(ts) AS ms
@@ -1665,33 +1562,7 @@ object EventOps {
     //    NULL-purchase errors, and NULL-error purchases all proven -------
     ("q_stream_full_join",
       (s: SparkSession, d: String) => {
-        import s.implicits._
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_fjoin")
-        try {
-          val src = s"$tmp/src"
-          val ev = t(s, d, "events")
-            .select(col("event_id"),
-              timestamp_millis(nsDiv("ts", NS_PER_MS)).as("ts"),
-              col("user_id"), col("event_type"), col("value"))
-          val maxMs = ev.agg(max(unix_millis(col("ts")))).head().getLong(0)
-          // data + two sentinel pairs staged in ONE job, slice mtimes
-          // sequencing the batches (StagedSource — see q_stream_left_join)
-          def sentinelPair(tag: Long, offsetMs: Long, slice: Long) = Seq(
-            (tag, new java.sql.Timestamp(maxMs + offsetMs), -2L,
-              "error", 0.0, slice),
-            (tag - 1L, new java.sql.Timestamp(maxMs + offsetMs), -1L,
-              "purchase", 0.0, slice))
-          graft.streaming.StagedSource.write(
-            ev.withColumn("__slice", lit(0L)).unionByName(
-              (sentinelPair(-100L, 7200000L, 1L) ++
-                sentinelPair(-200L, 14400000L, 2L))
-                .toDF("event_id", "ts", "user_id", "event_type", "value",
-                  "__slice")),
-            "__slice", src)
-          val stream = s.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
+        sentinelJoinReplay(s, d, "stream_fjoin") { stream =>
           val joined = graft.streaming.EventStream.errorsFullPurchases(
             stream, windowMinutes = 30)
           val sink = "graft_stream_fjoin_out"
@@ -1720,8 +1591,6 @@ object EventOps {
               max(expr("unix_micros(e_ts) div 1000L")).as("last_err_ms"),
               max(expr("unix_micros(p_ts) div 1000L")).as("last_purchase_ms"))
             .orderBy("user_id")
-        } finally {
-          deleteRecursively(tmp.toFile)
         }
       },
       """WITH e AS (SELECT event_id, user_id, epoch_ms(ts) AS ms
@@ -1761,21 +1630,14 @@ object EventOps {
     //    rate-limit-invariance contract, hash-proven --------------------
     ("q_stream_backfill",
       (s: SparkSession, d: String) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_backfill")
-        try {
-          val src = s"$tmp/src"
-          val ev = t(s, d, "events")
-            .select(col("event_id"), col("user_id"), col("event_type"),
-              col("value"))
-          // six hash slices staged in ONE job (StagedSource, optimization
-          // round 16) — same per-file rows as the old 6 append jobs
-          graft.streaming.StagedSource.write(
+        val ev = t(s, d, "events")
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            col("value"))
+        // six hash slices, two per micro-batch
+        StagedSource.replay("stream_backfill",
             ev.withColumn("__slice", pmod(col("event_id"), lit(6))),
-            "__slice", src)
-          val stream = s.readStream.schema(ev.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", "2")
-            .parquet(src)
+            "__slice", Some(2)) { (staged, _) =>
+          val stream = staged
             .groupBy("event_type")
             .agg(count(lit(1)).as("n"),
               sum(col("user_id")).cast("long").as("uid_sum"),
@@ -1783,17 +1645,11 @@ object EventOps {
               max(col("event_id")).as("max_id"))
           val sink = "graft_stream_backfill_out"
           s.catalog.dropTempView(sink)
-          val q = gated(s, d) {
+          StagedSource.requireBatches(gated(s, d) {
             graft.streaming.EventStream.runToMemory(stream, sink,
               org.apache.spark.sql.streaming.OutputMode.Complete)
-          }
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches >= 3,
-            s"rate-limited backfill should need >=3 micro-batches (6 files, " +
-              s"maxFilesPerTrigger=2); observed $dataBatches")
+          }, "rate-limited backfill")
           s.table(sink).orderBy("event_type")
-        } finally {
-          deleteRecursively(tmp.toFile)
         }
       },
       s"""SELECT event_type, count(*) AS n,
@@ -1815,42 +1671,25 @@ object EventOps {
     //    per key IS the final state ---------------------------------------
     ("q_stream_update",
       (s: SparkSession, d: String) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_upd")
-        try {
-          val src = s"$tmp/src"; val upd = s"$tmp/upd"
-          val ev = t(s, d, "events")
-            .select(col("event_id"), col("user_id"), col("event_type"),
-              col("value"))
-          // three hash slices staged in ONE job (StagedSource,
-          // optimization round 16) — same per-file rows as before
-          graft.streaming.StagedSource.write(
+        val ev = t(s, d, "events")
+          .select(col("event_id"), col("user_id"), col("event_type"),
+            col("value"))
+        StagedSource.replay("stream_upd",
             ev.withColumn("__slice", pmod(col("event_id"), lit(3))),
-            "__slice", src)
-          val q = gated(s, d) {
-            val q0 = s.readStream.schema(ev.schema)
-              .option("pathGlobFilter", "*.parquet")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(src)
-              .groupBy("event_type")
-              .agg(count(lit(1)).as("n"),
-                sum(col("user_id")).cast("long").as("uid_sum"),
-                dsum(col("value")).as("val_sum"),
-                max(col("event_id")).as("max_id"))
-              .writeStream
-              .outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
-              .option("checkpointLocation", s"$tmp/ckpt")
-              .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-                b.coalesce(1).write.mode("overwrite").parquet(s"$upd/batch=$id")
-                ()
-              }
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q0.awaitTermination()
-            q0
+            "__slice", Some(1)) { (stream, tmp) =>
+          val upd = s"$tmp/upd"
+          gated(s, d) {
+            StagedSource.runBatches(
+              stream.groupBy("event_type")
+                .agg(count(lit(1)).as("n"),
+                  sum(col("user_id")).cast("long").as("uid_sum"),
+                  dsum(col("value")).as("val_sum"),
+                  max(col("event_id")).as("max_id")),
+              tmp, org.apache.spark.sql.streaming.OutputMode.Update,
+              "staged update stream") { (b, id) =>
+              b.coalesce(1).write.mode("overwrite").parquet(s"$upd/batch=$id")
+            }
           }
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches >= 3, s"staged update stream should take >=3 " +
-            s"micro-batches (3 files, maxFilesPerTrigger=1); got $dataBatches")
           val updates = s.read.parquet(upd)
           // Update-mode contract half 1: keys re-emit as later batches
           // change them (every type appears in every third of event_ids)
@@ -1864,10 +1703,7 @@ object EventOps {
           val res = updates.join(latest, Seq("event_type", "batch"))
             .select("event_type", "n", "uid_sum", "val_sum", "max_id")
             .orderBy("event_type")
-          import scala.jdk.CollectionConverters._
-          s.createDataFrame(res.collect().toSeq.asJava, res.schema)
-        } finally {
-          deleteRecursively(tmp.toFile)
+          Scratch.collected(res)
         }
       },
       s"""SELECT event_type, count(*) AS n,

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.Scratch.{deleteRecursively, storeDir}
+
 import Q._
 
 /** Sink-path queries under the hash gate: each writes a real on-disk layout
@@ -19,30 +21,6 @@ import Q._
 object SinkOps {
 
   type Fn = (SparkSession, String) => DataFrame
-
-  /** Per-JVM root for the written stores — same isolation reasoning as
-    * TextOps.bandIdxRoot: a random per-process dir so concurrent graft JVMs
-    * (Bench + ScaleBench) never overwrite each other's stores, removed on
-    * JVM exit.
-    */
-  private lazy val sinkRoot: java.io.File = {
-    val root = java.nio.file.Files.createTempDirectory("graft_sink_").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(root)))
-    root
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.ops.Layout.deleteRecursively(f)
-
-  /** Store dir keyed on (store name, full dataset path) — q_index_probe's
-    * dirKey recipe: basenames collide across checkouts, full paths don't.
-    */
-  private def storeDir(name: String, d: String): String = {
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(new java.io.File(d).getAbsolutePath.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    new java.io.File(sinkRoot, s"${name}_$key").getAbsolutePath
-  }
 
   val entries: Seq[(String, Fn, String)] = Seq(
 
@@ -885,7 +863,7 @@ object SinkOps {
     //    proves the bucketed write+read is lossless ----------------------
     ("q_bucketed_join",
       (s: SparkSession, d: String) => {
-        val key = storeDir("bkt", d).replaceAll(".*_", "")
+        val key = new java.io.File(storeDir("bkt", d)).getName
         val (liT, oT) = (s"graft_li_b_$key", s"graft_o_b_$key")
         // the two bucketed saves are independent tables — overlap them
         // from a 2-thread pool (guide §2.6, the Layout.forEachRewrite

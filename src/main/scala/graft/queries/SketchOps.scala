@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.{Scratch, StagedSource}
+
 import Q._
 
 /** Mergeable-sketch queries over the `events` table (graft.ops.Sketches).
@@ -239,40 +241,24 @@ object SketchOps {
     //    KB-sized sketch tables, rollup by addition, no raw-row rescan ----
     ("q_stream_cms",
       (s: SparkSession, d: String) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_cms")
-        try {
-          val src = s"$tmp/src"; val cellDir = s"$tmp/cells"
-          val keyed = t(s, d, "events").select(
-            concat(col("event_type"), lit("#"),
-              regexp_extract(col("props"), "\"k\": ([0-9]+)", 1)).as("key"),
-            col("event_id"))
-          // three hash slices staged in ONE job (StagedSource,
-          // optimization round 16) — same per-file rows as before
-          graft.streaming.StagedSource.write(
+        val keyed = t(s, d, "events").select(
+          concat(col("event_type"), lit("#"),
+            regexp_extract(col("props"), "\"k\": ([0-9]+)", 1)).as("key"),
+          col("event_id"))
+        StagedSource.replay("stream_cms",
             keyed.withColumn("__slice", pmod(col("event_id"), lit(3))),
-            "__slice", src)
-          val q = graft.streaming.StreamTune.withGateConfAt(s,
+            "__slice", Some(1)) { (stream, tmp) =>
+          val cellDir = s"$tmp/cells"
+          graft.streaming.StreamTune.withGateConfAt(s,
               Seq(s"$d/events.parquet")) {
-            val q0 = s.readStream.schema(keyed.schema)
-              .option("pathGlobFilter", "*.parquet")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(src)
-              .writeStream
-              .option("checkpointLocation", s"$tmp/ckpt")
-              .foreachBatch { (b: DataFrame, id: Long) =>
-                graft.ops.Sketches.countMinCells(b, "key")
-                  .coalesce(1).write.mode("overwrite")
-                  .parquet(s"$cellDir/batch=$id")
-                ()
-              }
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q0.awaitTermination()
-            q0
+            StagedSource.runBatches(stream, tmp,
+                org.apache.spark.sql.streaming.OutputMode.Append,
+                "staged cms stream") { (b, id) =>
+              graft.ops.Sketches.countMinCells(b, "key")
+                .coalesce(1).write.mode("overwrite")
+                .parquet(s"$cellDir/batch=$id")
+            }
           }
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches >= 3, s"staged cms stream should take >=3 " +
-            s"micro-batches (3 files, maxFilesPerTrigger=1); got $dataBatches")
           val cells = s.read.parquet(cellDir)
             .groupBy("j", "h").agg(sum(col("c")).as("c"))
           val exact = keyed.groupBy(col("key").as("item"))
@@ -280,11 +266,8 @@ object SketchOps {
           val res = graft.ops.Sketches.countMinEstimate(cells, keyed, "key")
             .join(exact, Seq("item"))
             .orderBy("item")
-          // materialize (distinct-key-sized) before finally deletes cells
-          import scala.jdk.CollectionConverters._
-          s.createDataFrame(res.collect().toSeq.asJava, res.schema)
-        } finally {
-          graft.ops.Layout.deleteRecursively(tmp.toFile)
+          // materialize (distinct-key-sized) before the cells are deleted
+          Scratch.collected(res)
         }
       },
       cmsOracleSql))

@@ -96,24 +96,15 @@ object TextOps {
       "q_dedup_e2e", "q_dedup_cc_minhash", "q_index_probe",
       "q_index_incremental")
 
-  /** Per-JVM root for q_index_probe's persisted band indexes. A random
-    * per-process directory (not a predictable name in the shared tmpdir)
-    * so a concurrently running graft JVM — Bench and ScaleBench on
-    * different datasets — can never have its index swept mid-query by this
-    * JVM's [[clearCaches]], and another local user can't pre-create the
-    * path. Removed on JVM exit.
+  /** [[graft.streaming.Scratch]] store name of the persisted band indexes
+    * of q_index_probe and q_index_incremental.
     */
-  private[queries] lazy val bandIdxRoot: java.io.File = {
-    val root = java.nio.file.Files.createTempDirectory("graft_bandidx_").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(root)))
-    root
-  }
+  private val BandIdx = "bandidx"
 
   /** Unpersist + drop every cached helper frame (idempotent), and sweep
-    * the q_index_probe band-index dirs out of THIS JVM's band-index root —
-    * the persisted twin of the in-memory frames this hook already releases.
-    * Only this process's root is touched; other graft JVMs' indexes are
-    * invisible to the sweep.
+    * the band-index dirs out of THIS JVM's scratch root — the persisted
+    * twin of the in-memory frames this hook already releases. Other
+    * stores, and other graft JVMs' indexes, are untouched.
     */
   def clearCaches(): Unit = {
     sigCache.values.foreach(df => try df.unpersist(false) catch { case scala.util.control.NonFatal(_) => () })
@@ -122,15 +113,8 @@ object TextOps {
     shingleCache.clear()
     pairCache.values.foreach(df => try df.unpersist(false) catch { case scala.util.control.NonFatal(_) => () })
     pairCache.clear()
-    try Option(bandIdxRoot.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
+    try graft.streaming.Scratch.clear(BandIdx)
     catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-    ()
   }
 
   /** SQL fragment shared by the DuckDB oracles: doc_id + distinct 3-gram shingles. */
@@ -669,15 +653,8 @@ object TextOps {
     ("q_index_probe",
       (s: SparkSession, d: String) => {
         val bands = md5BandsDf(s, d, nBands = 4, rows = 4)
-        // dir keyed on a hash of the FULL dataset path: basenames collide
-        // across checkouts ("data"/"data"), full paths don't. Lives under
-        // the per-JVM bandIdxRoot (cleaned up by clearCaches, the
-        // schedule's group hook) so concurrent graft JVMs never sweep each
-        // other's indexes.
-        val dirKey = java.security.MessageDigest.getInstance("MD5")
-          .digest(new java.io.File(d).getAbsolutePath.getBytes("UTF-8"))
-          .take(8).map("%02x".format(_)).mkString
-        val dir = new java.io.File(bandIdxRoot, dirKey).getAbsolutePath
+        // swept by clearCaches, the schedule's group hook
+        val dir = graft.streaming.Scratch.storeDir(BandIdx, d)
         bands.write.mode("overwrite").partitionBy("j").parquet(dir)
         val idx = s.read.parquet(dir).select("doc_id", "j", "bh")
         val probe = bands.filter(col("doc_id") < 50)
@@ -708,10 +685,7 @@ object TextOps {
     ("q_index_incremental",
       (s: SparkSession, d: String) => {
         val bands = md5BandsDf(s, d, nBands = 4, rows = 4)
-        val dirKey = java.security.MessageDigest.getInstance("MD5")
-          .digest(new java.io.File(d).getAbsolutePath.getBytes("UTF-8"))
-          .take(8).map("%02x".format(_)).mkString + "_incr"
-        val dir = new java.io.File(bandIdxRoot, dirKey).getAbsolutePath
+        val dir = graft.streaming.Scratch.storeDir(BandIdx, d) + "_incr"
         // overwrite clears any prior run's index, so the append below can
         // never stack deltas across reruns
         bands.filter(pmod(col("doc_id"), lit(3)) =!= 0)

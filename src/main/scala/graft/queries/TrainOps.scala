@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.streaming.{Scratch, StagedSource}
+
 import Q._
 
 /** Training-data curation operators a large-scale pipeline needs beyond
@@ -74,61 +76,37 @@ object TrainOps {
     //    order/slicing-invariance of the maintained reservoir ----------
     ("q_stream_reservoir",
       (s: SparkSession, d: String) => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_resv")
-        try {
-          val src = s"$tmp/src"; val store = s"$tmp/store"
-          val docs = t(s, d, "documents").select(col("lang"), col("doc_id"))
-          // three hash slices staged in ONE job (StagedSource,
-          // optimization round 16) — same per-file rows as before
-          graft.streaming.StagedSource.write(
+        val docs = t(s, d, "documents").select(col("lang"), col("doc_id"))
+        StagedSource.replay("stream_resv",
             docs.withColumn("__slice", pmod(col("doc_id"), lit(3))),
-            "__slice", src)
+            "__slice", Some(1)) { (stream, tmp) =>
+          val store = s"$tmp/store"
           def versions(): Seq[Long] = {
             val fs = Option(new java.io.File(store).listFiles())
               .getOrElse(Array.empty[java.io.File])
             fs.filter(_.getName.startsWith("v=")).toSeq
               .map(_.getName.stripPrefix("v=").toLong)
           }
-          val q = graft.streaming.StreamTune.withGateConfAt(s,
+          graft.streaming.StreamTune.withGateConfAt(s,
               Seq(s"$d/documents.parquet")) {
-            val q0 = s.readStream.schema(docs.schema)
-              .option("pathGlobFilter", "*.parquet")
-              .option("maxFilesPerTrigger", "1")
-              .parquet(src)
-              .writeStream
-              .option("checkpointLocation", s"$tmp/ckpt")
-              .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-                // prior = the latest version BELOW this batch id, so a
-                // replayed batch re-derives from the same input state
-                val prior = versions().filter(_ < id).sorted.lastOption
-                  .map(v => b.sparkSession.read.parquet(s"$store/v=$v"))
-                  .getOrElse(b.sparkSession.createDataFrame(
-                    new java.util.ArrayList[org.apache.spark.sql.Row](), b.schema))
-                graft.ops.Reservoir.sampleK(
-                    prior.unionByName(b.select("lang", "doc_id")),
-                    "lang", "doc_id", k = 3)
-                  .coalesce(1).write.mode("overwrite").parquet(s"$store/v=$id")
-                ()
-              }
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q0.awaitTermination()
-            q0
+            StagedSource.runBatches(stream, tmp,
+                org.apache.spark.sql.streaming.OutputMode.Append,
+                "staged reservoir stream") { (b, id) =>
+              // prior = the latest version BELOW this batch id, so a
+              // replayed batch re-derives from the same input state
+              val prior = versions().filter(_ < id).sorted.lastOption
+                .map(v => b.sparkSession.read.parquet(s"$store/v=$v"))
+                .getOrElse(b.sparkSession.createDataFrame(
+                  new java.util.ArrayList[org.apache.spark.sql.Row](), b.schema))
+              graft.ops.Reservoir.sampleK(
+                  prior.unionByName(b.select("lang", "doc_id")),
+                  "lang", "doc_id", k = 3)
+                .coalesce(1).write.mode("overwrite").parquet(s"$store/v=$id")
+            }
           }
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches >= 3, "staged reservoir stream should take " +
-            s">=3 micro-batches (3 files, maxFilesPerTrigger=1); got $dataBatches")
           val res = s.read.parquet(s"$store/v=${versions().max}")
             .orderBy("lang", "doc_id")
-          import scala.jdk.CollectionConverters._
-          s.createDataFrame(res.collect().toSeq.asJava, res.schema)
-        } finally {
-          def del(f: java.io.File): Unit = {
-            if (f.isDirectory)
-              Option(f.listFiles()).getOrElse(Array.empty).foreach(del)
-            f.delete(); ()
-          }
-          del(tmp.toFile)
+          Scratch.collected(res)
         }
       },
       """SELECT lang, doc_id FROM (

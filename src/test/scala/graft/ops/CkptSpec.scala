@@ -63,7 +63,7 @@ class CkptSpec extends SparkSuite with TimeLimits {
           _.checkpoint(true))
         assert(m("s") === 6L)
         assert(out.count() === 3L)
-      } finally Layout.deleteRecursively(dir.toFile)
+      } finally graft.streaming.Scratch.deleteRecursively(dir.toFile)
     }
   }
 }

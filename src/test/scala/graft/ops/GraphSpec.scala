@@ -376,7 +376,7 @@ class GraphSpec extends SparkSuite {
       assert(spilled === pinned && pinned.nonEmpty)
     } finally {
       spark.sparkContext.setCheckpointDir(null)
-      graft.ops.Layout.deleteRecursively(dir.toFile)
+      graft.streaming.Scratch.deleteRecursively(dir.toFile)
     }
   }
 

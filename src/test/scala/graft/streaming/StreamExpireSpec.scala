@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -15,12 +13,6 @@ import graft.SparkSuite
   * followed by batches that still process input rows.
   */
 class StreamExpireSpec extends SparkSuite {
-  import org.apache.spark.sql.types._
-
-  private val schema = StructType(Seq(
-    StructField("event_id", LongType), StructField("ms", LongType),
-    StructField("user_id", LongType), StructField("event_type", StringType),
-    StructField("value", DoubleType)))
 
   test("session state expires and emits BETWEEN micro-batches") {
     import spark.implicits._
@@ -38,28 +30,20 @@ class StreamExpireSpec extends SparkSuite {
       Seq((5L, t0 + 9 * hour, 2L, "view", 5.0)),
       Seq((-1L, t0 + 12 * hour, -1L, "flush", 0.0)),
       Seq((-2L, t0 + 15 * hour, -1L, "flush", 0.0)))
-    val dir = Files.createTempDirectory("graft_expire_spec").toString
-    val src = s"$dir/src"
-    slices.zipWithIndex.foreach { case (rows, i) =>
-      rows.toDF("event_id", "ms", "user_id", "event_type", "value")
-        .coalesce(1).write.mode("append").parquet(src)
-      new java.io.File(src).listFiles()
-        .filter(f => f.getName.endsWith(".parquet") &&
-          f.lastModified() > System.currentTimeMillis() - 60000L)
-        .foreach(_.setLastModified(
-          System.currentTimeMillis() - 600000L + i * 60000L))
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-      .select(col("event_id"), timestamp_millis(col("ms")).as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-      .as[EventStream.Event]
+    val staged = slices.zipWithIndex
+      .flatMap { case (rows, i) => rows.map { case (e, ms, u, tp, v) =>
+        (e, ms, u, tp, v, i.toLong) } }
+      .toDF("event_id", "ms", "user_id", "event_type", "value", "__slice")
     val sink = "expire_spec_out"
     spark.catalog.dropTempView(sink)
-    val q = EventStream.runToMemory(
-      EventStream.sessionize(stream).toDF(), sink)
+    val q = StagedSource.replay("expire_spec", staged, "__slice", Some(1)) {
+      (src, _) =>
+        val stream = src
+          .select(col("event_id"), timestamp_millis(col("ms")).as("ts"),
+            col("user_id"), col("event_type"), col("value"))
+          .as[EventStream.Event]
+        EventStream.runToMemory(EventStream.sessionize(stream).toDF(), sink)
+    }
     // structural claim: rows were EMITTED while input was still arriving
     val prog = q.recentProgress.toSeq
       .map(p => (p.batchId, p.numInputRows, p.sink.numOutputRows))
@@ -82,6 +66,5 @@ class StreamExpireSpec extends SparkSuite {
       (2L, t0 + 3 * hour, t0 + 3 * hour, 1L),
       (2L, t0 + 6 * hour, t0 + 6 * hour, 1L),
       (2L, t0 + 9 * hour, t0 + 9 * hour, 1L)), out.toString)
-    graft.ops.Layout.deleteRecursively(new java.io.File(dir))
   }
 }

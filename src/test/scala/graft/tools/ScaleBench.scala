@@ -54,7 +54,7 @@ object ScaleBench {
     val meter = new QueryMeter(spark)
     val inputRows = scala.collection.mutable.Map.empty[String, Long]
     // store teardown for the A/B sections below
-    import graft.ops.Layout.{deleteRecursively => del}
+    import graft.streaming.Scratch.{deleteRecursively => del}
     // (time, shuffle-write bytes) of `body`, min over `runs` samples each;
     // `setup` runs before each sample, outside its window, and `rowsAs`
     // names the input_rows entry that gets the min input records. A
