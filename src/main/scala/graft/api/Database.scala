@@ -358,7 +358,7 @@ object Database {
           else Option(target.listFiles()).getOrElse(Array.empty[File])
             .filter(f => f.isFile || f.isDirectory) // spark parquet "files" may be dirs
             .filter(f => f.getName.endsWith(".parquet") || f.getName.endsWith(".csv") ||
-              isPartitionedStore(f)) // graft.ops.Layout stores: dirs of key=value/ subdirs
+              isPartitionedStore(f) || isCommitted(f))
         if (files.isEmpty)
           throw new FileTypeError(s"no .parquet or .csv tables found under '$dir'")
         val tm = files.map { f =>
@@ -370,6 +370,7 @@ object Database {
           val tname = if (isCsv) stem.replace(' ', '_').replace('-', '_') else stem
           val raw =
             if (isCsv) spark.read.option("header", "true").option("inferSchema", "true").csv(f.getPath)
+            else if (isCommitted(f)) graft.ops.Layout.read(spark, f.getPath)
             else spark.read.parquet(f.getPath)
           val df =
             if (isCsv)
@@ -390,18 +391,26 @@ object Database {
     db
   }
 
-  /** A hive-partitioned parquet store as [[graft.ops.Layout]] writes them:
-    * a directory whose data lives in `key=value/` subdirectories. Spark's
-    * parquet reader handles the layout natively (partition column recovered
-    * from the path, directory-level pruning on it), so such a store
-    * registers as a table under its directory name — no `.parquet` suffix
-    * required.
+  /** A hive-partitioned parquet directory: its data lives in
+    * `key=value/` subdirectories. Spark's parquet reader handles the
+    * layout natively (partition column recovered from the path,
+    * directory-level pruning on it), so such a directory registers as a
+    * table under its name — no `.parquet` suffix required.
     */
   private def isPartitionedStore(f: File): Boolean =
     f.isDirectory && !f.getName.contains("=") && {
       val subs = Option(f.listFiles()).getOrElse(Array.empty[File])
       subs.nonEmpty && subs.exists(s => s.isDirectory && s.getName.contains("="))
     }
+
+  /** A [[graft.ops.Layout]] store: its `_commits` log names the live
+    * files, so it is read through its current commit — never as a plain
+    * directory, which also holds the previous version's files and any
+    * uncommitted staging. Resolving the commit here pins the table to
+    * that one version for the handle's lifetime.
+    */
+  private def isCommitted(f: File): Boolean =
+    f.isDirectory && new File(f, "_commits").isDirectory
 
   /** Digest of the table sources' identity: absolute path + byte length +
     * mtime of every regular file (parquet "files" that are directories are

@@ -6,38 +6,37 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Hadoop-FileSystem primitives for the storage-maintenance protocol —
-  * the ONE place [[Layout]]/[[Rollup]]/[[Manifest]] touch a filesystem.
+  * the ONE place [[Layout]]/[[PointerStore]]/[[Rollup]]/[[Manifest]] touch
+  * a filesystem.
   *
   * Why Hadoop `FileSystem` and not `java.nio.file`: a 100 TB store lives
   * on HDFS (or an object store), where `java.nio` paths do not exist at
   * all. Everything here goes through the scheme-resolved Hadoop
-  * filesystem, so the same crash-safe rename-aside protocol runs
-  * unchanged against `file:` (CI / local), `hdfs:`, or any other
-  * registered scheme.
+  * filesystem, so the same crash-safe protocol runs unchanged against
+  * `file:` (CI / local), `hdfs:`, or any other registered scheme.
   *
-  * ATOMICITY STANCE (the load-bearing assumption of every swap in
-  * [[Layout]]): `FileSystem.rename` is atomic on HDFS (a namenode
-  * metadata op) and on POSIX local filesystems. It is NOT atomic on
-  * flat-namespace object stores — s3/s3a/gs/oss/swift emulate rename as
-  * copy+delete, during which a reader can observe both or neither copy
-  * and a crash strands a half-copied tree that the recovery state
-  * machines would misread as a completed phase. [[rename]] therefore
-  * REFUSES those schemes loudly; on object stores run the maintenance
-  * family against an atomic-rename layer (HDFS cache tier, or a table
-  * format whose manifest commit replaces directory renames). The
-  * escape hatch for stores that front an object bucket with an atomic
-  * metadata layer the scheme string can't reveal:
+  * ATOMICITY STANCE: store commits rename nothing into place. A store
+  * write moves unreferenced files ([[moveFileUncommitted]], which may be
+  * a copy+delete) and publishes them with one commit-file write whose
+  * trailer makes a torn write detectable ([[PointerStore]]), so stores
+  * need no rename atomicity and run on object stores too. The one
+  * rename left is [[renameReplace]] for consumer checkpoints, and it
+  * keeps the guard: `FileSystem.rename` is atomic on HDFS (a namenode
+  * metadata op) and on POSIX local filesystems, but flat-namespace object
+  * stores (s3/s3a/gs/oss/swift) emulate it as copy+delete, during which a
+  * reader can observe both or neither copy. [[renameReplace]] therefore
+  * REFUSES those schemes loudly. The escape hatch for buckets that front
+  * an atomic metadata layer the scheme string can't reveal:
   * `graft.layout.allow.nonatomic.rename = true` in the Hadoop conf
   * (settable via `spark.hadoop.graft.layout.allow.nonatomic.rename`).
   *
   * Local paths resolve to the RAW local filesystem (no `.crc` checksum
-  * sidecars, true POSIX rename) — the checksummed wrapper would scatter
-  * sidecar files through directories the swap protocol renames wholesale.
+  * sidecars, true POSIX rename).
   */
 private[graft] object Fs {
 
-  /** Schemes whose `rename` is a copy+delete emulation — the swap
-    * protocol's atomicity premise does not hold there (see scaladoc).
+  /** Schemes whose `rename` is a copy+delete emulation — the replace
+    * rename's atomicity premise does not hold there (see scaladoc).
     * abfs/wasb on hierarchical-namespace accounts DO rename atomically
     * and are not listed.
     */
@@ -117,25 +116,8 @@ private[graft] object Fs {
     ()
   }
 
-  /** The ATOMIC_MOVE of the swap protocol: rename `src` onto a
-    * NONEXISTENT `dst`, failing loudly instead of falling into Hadoop's
-    * rename-INTO-existing-directory semantics (POSIX `mv a b/` — which
-    * would silently nest the store) or an object store's non-atomic
-    * emulation. Single-writer protocol: the exists probe races only
-    * against other maintainers, which every caller already forbids.
-    */
-  def rename(src: Path, dst: Path): Unit = {
-    beforeMutation("rename", src)
-    val f = fs(src)
-    assertAtomicRename(f, src)
-    if (f.exists(dst))
-      throw new IOException(s"rename target $dst already exists")
-    if (!f.rename(src, dst))
-      throw new IOException(s"rename $src -> $dst failed")
-  }
-
   /** REPLACE_EXISTING rename for the small metadata files (consumer
-    * checkpoints, progress logs): delete-then-rename. The window between
+    * checkpoints): delete-then-rename. The window between
     * the two is BENIGN by design everywhere this is used — a crash there
     * loses the previous checkpoint/progress file, whose absence reads as
     * "never committed" and only costs re-consumption / re-derivation
@@ -159,13 +141,13 @@ private[graft] object Fs {
         !f.getConf.getBoolean(AllowNonAtomicKey, false))
       throw new IllegalStateException(
         s"refusing rename-based maintenance on '$scheme://' — rename is " +
-          "copy+delete there, so the crash-safe swap protocol's atomicity " +
-          s"premise fails. Set $AllowNonAtomicKey=true only if the bucket " +
+          "copy+delete there, so the atomic-replace premise fails. " +
+          s" Set $AllowNonAtomicKey=true only if the bucket " +
           "fronts an atomic metadata layer (see Fs scaladoc).")
   }
 
   /** File move for data NOT YET REFERENCED by any commit pointer — the
-    * [[PointerStore]] staging→store move. Unlike [[rename]] this does NOT
+    * [[Layout]] staging→store move. Unlike [[renameReplace]] this does NOT
     * assert rename atomicity, because the protocol doesn't need it here: a
     * torn or half-copied `dst` is an unreferenced orphan until a commit
     * file names it, invisible to every reader and reaped by
@@ -232,14 +214,8 @@ private[graft] object Fs {
   /** Atomic(-enough) replace-write: land in a dot-prefixed `.name.tmp`
     * sibling, then [[renameReplace]] into place — a crash mid-write
     * leaves the previous file intact; a crash mid-replace loses it
-    * (benign, see [[renameReplace]]).
-    *
-    * A target that is ALREADY dot-prefixed (the evolve `._evolve_done`
-    * progress log) keeps its own dot rather than gaining a second one:
-    * `.._evolve_done.tmp` escaped every `._evolve_done*`-shaped recovery
-    * sweep and rode a whole-store swap into the live directory as a stray
-    * dotfile (round-15 advice). [[tmpFor]] is the single naming rule so
-    * recovery sweeps and the writer can never disagree again.
+    * (benign, see [[renameReplace]]). A target that is ALREADY
+    * dot-prefixed keeps its own dot rather than gaining a second one.
     */
   def tmpFor(p: Path): Path = {
     val dot = if (p.getName.startsWith(".")) "" else "."

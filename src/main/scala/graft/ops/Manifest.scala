@@ -30,9 +30,17 @@ object Manifest {
     * null when the footer carries none for `column`.
     */
   def manifest(spark: SparkSession, path: String, column: String): DataFrame = {
-    import spark.implicits._
     val files = listParquet(Fs.path(path))
     require(files.nonEmpty, s"no parquet files under '$path'")
+    footers(spark, files, column)
+  }
+
+  /** [[manifest]] over an explicit list of parquet files (a store's live
+    * files, which its directories may hold older versions beside).
+    */
+  private[ops] def footers(spark: SparkSession, files: Seq[String],
+      column: String): DataFrame = {
+    import spark.implicits._
     val confProps = hadoopConfProps(spark)
     spark.sparkContext.parallelize(files, math.min(files.size, 32).max(1))
       .mapPartitions { it =>

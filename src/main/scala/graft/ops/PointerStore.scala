@@ -2,25 +2,21 @@ package graft.ops
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
-/** MANIFEST-POINTER COMMITS — the object-store-safe commit layer the
-  * [[Fs]] scaladoc defers to ("a table format whose manifest commit
-  * replaces directory renames").
+/** THE commit log of a partitioned store — every [[Layout]] write
+  * publishes through it, and every reader resolves it.
   *
-  * [[Layout]]'s whole-directory swap protocol rests on `FileSystem.rename`
-  * atomicity, which flat-namespace object stores (s3/gs/oss — rename is
-  * copy+delete there) do not provide; [[Fs.rename]] refuses them loudly.
-  * This store removes the rename from the commit path entirely, the way
-  * published log-structured table formats do (Delta Lake's `_delta_log`
-  * JSON actions — Armbrust et al., VLDB 2020; Iceberg's metadata-pointer
-  * snapshots): the set of LIVE data files is named by a versioned pointer
-  * file, and every mutation — append, compaction, whole-store re-partition
-  * — is (1) write NEW immutable data files nobody references yet, then
-  * (2) publish them by writing ONE small commit file. Readers resolve the
-  * highest COMPLETE commit and read exactly the files it names.
+  * The set of LIVE data files is named by a versioned pointer file, the
+  * way published log-structured table formats do it (Delta Lake's
+  * `_delta_log` JSON actions — Armbrust et al., VLDB 2020; Iceberg's
+  * metadata-pointer snapshots). Every mutation is (1) write NEW immutable
+  * data files nobody references yet, then (2) publish them by writing ONE
+  * small commit file `_commits/v<n>.commit` that lists the whole live set.
+  * Readers resolve the highest COMPLETE commit and read exactly the files
+  * it names ([[Layout.read]]).
   *
-  * Correctness needs NO rename atomicity anywhere:
+  * Correctness needs NO rename atomicity anywhere, so the same protocol
+  * runs on HDFS, POSIX and flat-namespace object stores alike:
   *  - data files are immutable and unreferenced until a commit names them;
   *    a crash mid-write/mid-move leaves an invisible orphan ([[vacuumOrphans]]
   *    reaps it);
@@ -29,22 +25,24 @@ import org.apache.spark.sql.functions.col
   *    previous version, [[recover]] deletes the fragment. A new-version
   *    commit file either validates or it doesn't exist yet, which is the
   *    same either-or a single-object PUT gives on S3;
-  *  - the old files stay live until the new commit lands, so there is no
-  *    instant with less than one complete copy on disk.
+  *  - the old files stay on disk until a later vacuum retires them, so a
+  *    reader that resolved the old version keeps reading it.
+  *
+  * A directory with no `_commits` at all is a plain parquet directory
+  * (written by another tool): its data files read as its live set, and
+  * the first [[Layout]] write adopts them into commit v1. Every write
+  * creates `_commits` before it moves a file in, so a crashed first write
+  * reads as an empty store, never as its half-moved files.
   *
   * Single-writer protocol, like the rest of the maintenance family (the
-  * reference engine is single-process: /root/reference/pandasdb/
-  * connection.py:17 holds one sqlite3 connection); concurrent READERS are
-  * always safe — they see the old version until the new commit file is
-  * complete.
+  * reference engine is single-process: its connection.py:17 holds one
+  * sqlite3 connection); concurrent READERS are always safe.
   *
   * Scale (the 100 TB question): a commit is one small-file write regardless
-  * of data size — the op that required a whole-store directory swap in
-  * [[Layout.evolvePartitions]] is here a pointer flip ([[rewriteAll]]).
-  * The pointer lists one line (~50-100 bytes) per live file: a 100 TB
-  * store at the 1 GB file sizing [[Layout.compactPartitions]] targets is
-  * ~100k lines / a few MB — a metadata read, not a data read. Growth
-  * beyond that is what log CHECKPOINTING exists for in the published
+  * of data size. The pointer lists one line (~50-100 bytes) per live file:
+  * a 100 TB store at the 1 GB file sizing [[Layout.compactPartitions]]
+  * targets is ~100k lines / a few MB — a metadata read, not a data read.
+  * Growth beyond that is what log CHECKPOINTING exists for in the published
   * formats; this layer keeps the log trivially small instead by writing
   * the full live set each commit and retiring old versions in
   * [[vacuumOrphans]].
@@ -96,20 +94,24 @@ object PointerStore {
 
   def currentVersion(dir: String): Option[Long] = currentCommit(dir).map(_._1)
 
-  /** Live data files, store-relative (partition dirs included). */
-  def liveFiles(dir: String): Seq[String] =
-    currentCommit(dir)
-      .getOrElse(throw new IllegalStateException(
-        s"no complete pointer commit under $dir/_commits — not a pointer store (run init)"))
-      ._2
-
-  /** Write commit `v` — the ONE publish step. A direct create-and-write
-    * (no rename): the trailer makes a torn write self-invalidating, so
-    * this is safe on every scheme including the ones [[Fs.rename]]
-    * refuses. Refuses to overwrite an existing version (single-writer
-    * violation = loud stop, not silent last-wins).
+  /** The store's version (0 before its first commit) and its live data
+    * files, store-relative (partition dirs included). A plain directory
+    * with no `_commits` serves its data files as version 0.
     */
-  private def writeCommit(dir: String, v: Long, files: Seq[String]): Long = {
+  private[ops] def snapshot(dir: String): (Long, Seq[String]) =
+    currentCommit(dir).getOrElse(
+      (0L, if (Fs.exists(commitsDir(dir))) Seq.empty else dataFiles(dir)))
+
+  /** Live data files, store-relative (see [[snapshot]]). */
+  def liveFiles(dir: String): Seq[String] = snapshot(dir)._2
+
+  /** Publish `files` as version `v` — the ONE publish step. A direct
+    * create-and-write (no rename): the trailer makes a torn write
+    * self-invalidating, so this is safe on every scheme. Refuses to
+    * overwrite a complete version (single-writer violation = loud stop,
+    * not silent last-wins).
+    */
+  private[ops] def writeCommit(dir: String, v: Long, files: Seq[String]): Unit = {
     val p = commitPath(dir, v)
     if (Fs.exists(p)) {
       // a COMPLETE v here means two writers raced — loud stop. A TORN v is
@@ -122,17 +124,20 @@ object PointerStore {
       Fs.deleteFile(p)
     }
     Fs.mkdirs(commitsDir(dir))
-    val body = (Header +: files.sorted :+ s"#end ${files.size}").mkString("\n")
-    Fs.writeUTF8(p, body)
-    v
+    Fs.writeUTF8(p,
+      (Header +: files.sorted :+ s"#end ${files.size}").mkString("\n"))
   }
+
+  /** Create `_commits` before the first file of an uncommitted write moves
+    * in (see the class scaladoc: a crashed first write reads as empty).
+    */
+  private[ops] def claim(dir: String): Unit = Fs.mkdirs(commitsDir(dir))
 
   /** Walk the store's DATA files (relative paths), skipping `_commits`,
     * `_stage_*`, dotfiles — the same hidden-entry rule Spark's file index
     * applies.
     */
-  private def dataFiles(dir: String): Seq[String] = {
-    val b = base(dir)
+  private[ops] def dataFiles(dir: String): Seq[String] = {
     def walk(p: Path, prefix: String): Seq[String] =
       Fs.list(p).flatMap { st =>
         val n = st.getPath.getName
@@ -141,32 +146,17 @@ object PointerStore {
           if (n.endsWith(".parquet")) Seq(s"$prefix$n") else Seq.empty
         } else walk(st.getPath, s"$prefix$n/")
       }
-    walk(Fs.path(b), "")
+    walk(Fs.path(base(dir)), "")
   }
 
-  /** Adopt an existing partitioned parquet directory (e.g. a
-    * [[Layout.writePartitioned]] store) as commit v1. */
-  def init(dir: String): Long = {
-    require(currentCommit(dir).isEmpty,
-      s"$dir already has a pointer commit — init is once")
-    val files = dataFiles(dir)
-    require(files.nonEmpty, s"no parquet data files under $dir to adopt")
-    writeCommit(dir, 1L, files)
-  }
-
-  /** The read path: exactly the live files of the current commit —
-    * partition columns recovered from the directory names via basePath.
-    * New data files being staged or already moved in but not yet
-    * committed are invisible here by construction.
+  /** Read exactly `files` (store-relative) — partition columns recovered
+    * from the directory names via basePath.
     */
-  def read(spark: SparkSession, dir: String): DataFrame = {
+  private[ops] def readFiles(spark: SparkSession, dir: String,
+      files: Seq[String]): DataFrame = {
     val b = base(dir)
-    val files = liveFiles(dir).map(f => s"$b/$f")
-    spark.read.option("basePath", b).parquet(files: _*)
+    spark.read.option("basePath", b).parquet(files.map(f => s"$b/$f"): _*)
   }
-
-  private def stageDir(dir: String, v: Long, tag: String): String =
-    s"${base(dir)}/_stage_v$v$tag"
 
   /** TIME TRAVEL: the read path pinned to an explicit committed version —
     * what the retention window of [[vacuumOrphans]] exists to serve.
@@ -175,99 +165,19 @@ object PointerStore {
     * snapshot copy, no log replay. Throws on a version that is absent,
     * torn, or already retired past the vacuum window.
     */
-  def readVersion(spark: SparkSession, dir: String, v: Long): DataFrame = {
-    val files = parseCommit(dir, v).getOrElse(
+  def readVersion(spark: SparkSession, dir: String, v: Long): DataFrame =
+    readFiles(spark, dir, parseCommit(dir, v).getOrElse(
       throw new IllegalArgumentException(
         s"no complete commit v$v under $dir/_commits — retired by vacuum, " +
-          "torn, or never written"))
-    val b = base(dir)
-    spark.read.option("basePath", b).parquet(files.map(f => s"$b/$f"): _*)
-  }
-
-  /** Stage `df` as new partition-dir parquet under `stage`, then move
-    * every staged file into the store under its partition-relative name.
-    * Returns the moved files' store-relative paths. Nothing here is
-    * published — the caller's commit does that.
-    */
-  private def stageIn(df: DataFrame, dir: String, stage: String,
-      partitionCol: String, sortCols: Seq[String]): Seq[String] = {
-    val clustered = df.repartition(col(partitionCol))
-      .sortWithinPartitions((partitionCol +: sortCols).map(col): _*)
-    clustered.write.mode("overwrite").partitionBy(partitionCol).parquet(stage)
-    val staged = dataFiles(stage)
-    staged.foreach { rel =>
-      Fs.moveFileUncommitted(Fs.path(s"$stage/$rel"),
-        Fs.path(s"${base(dir)}/$rel"))
-    }
-    Fs.deleteRecursively(Fs.path(stage))
-    staged
-  }
-
-  /** Append rows: stage → move in → ONE commit-file write. */
-  def append(df: DataFrame, dir: String, partitionCol: String,
-      sortCols: Seq[String]): Long = {
-    val (v, live) = currentCommit(dir).getOrElse(
-      throw new IllegalStateException(s"$dir is not a pointer store"))
-    val staged = stageIn(df, dir, stageDir(dir, v + 1, "append"),
-      partitionCol, sortCols)
-    writeCommit(dir, v + 1, live ++ staged)
-  }
-
-  /** Partition column name encoded in the live paths (`lang=en/…`). */
-  private def partitionColOf(live: Seq[String]): String = {
-    val cols = live.map(_.split('/').head.split('=').head).distinct
-    require(cols.size == 1 && live.head.contains("="),
-      s"pointer store is not single-column partition-dir laid out: $cols")
-    cols.head
-  }
-
-  /** Compaction WITHOUT a directory swap: rewrite every fragmented
-    * partition dir (more than one live file) into one sorted file, move
-    * the rewrites in, and publish with one commit that drops the old
-    * fragments from the live set. The fragments stay on disk — still
-    * readable through the OLD commit version — until [[vacuumOrphans]].
-    * Returns the new version, or the current one when nothing is
-    * fragmented (no-op, no commit burned).
-    */
-  def compact(spark: SparkSession, dir: String,
-      sortCols: Seq[String]): Long = {
-    val (v, live) = currentCommit(dir).getOrElse(
-      throw new IllegalStateException(s"$dir is not a pointer store"))
-    val byDir = live.groupBy(f => f.split('/').dropRight(1).mkString("/"))
-    val fragged = byDir.filter(_._2.size > 1)
-    if (fragged.isEmpty) return v
-    val pcol = partitionColOf(live)
-    val b = base(dir)
-    val victims = fragged.values.flatten.toSeq
-    val df = spark.read.option("basePath", b)
-      .parquet(victims.map(f => s"$b/$f"): _*)
-    val staged = stageIn(df, dir, stageDir(dir, v + 1, "compact"),
-      pcol, sortCols)
-    writeCommit(dir, v + 1, (live.toSet -- victims ++ staged).toSeq)
-  }
-
-  /** WHOLE-STORE re-partition — [[Layout.evolvePartitions]] without the
-    * store-wide directory swap that op needs: every row is rewritten under
-    * `newPartitionCol` dirs (the unavoidable data cost at any scale), but
-    * the cutover is ONE commit-file write, and a crash at any point leaves
-    * the old version fully live. The old layout's files (and eventually
-    * dirs) retire via [[vacuumOrphans]].
-    */
-  def rewriteAll(spark: SparkSession, dir: String, newPartitionCol: String,
-      sortCols: Seq[String]): Long = {
-    val (v, _) = currentCommit(dir).getOrElse(
-      throw new IllegalStateException(s"$dir is not a pointer store"))
-    val staged = stageIn(read(spark, dir), dir,
-      stageDir(dir, v + 1, "rewrite"), newPartitionCol, sortCols)
-    writeCommit(dir, v + 1, staged)
-  }
+          "torn, or never written")))
 
   /** Retire what no current reader needs: data files no commit within the
     * retention window references, stage leftovers, commit files older than
     * the last `keepCommits` versions, and partition dirs left empty. The
     * grace window is VERSIONS, not wall time — a reader pinned to version
     * `current - keepCommits + 1` or newer still sees every file it
-    * resolved. Returns the deleted data files' relative paths.
+    * resolved. Every [[Layout]] write ends with `keepCommits = 2`. Returns
+    * the deleted data files' relative paths.
     */
   def vacuumOrphans(dir: String, keepCommits: Int = 2): Seq[String] = {
     require(keepCommits >= 1, "keepCommits must be >= 1")
@@ -287,35 +197,45 @@ object PointerStore {
       // checksum-FS sidecar of the retired file (Spark's local committer
       // writes `.name.crc` next to each part file) — a stale sidecar would
       // keep the partition dir "non-empty" forever
-      val crc = new Path(p.getParent, s".${p.getName}.crc")
-      if (Fs.exists(crc)) Fs.deleteFile(crc)
+      Fs.deleteFile(new Path(p.getParent, s".${p.getName}.crc"))
     }
     // retired + torn commit files (anything below the window; a torn file
     // ABOVE the current version is a crashed in-flight commit — recover's
     // job, left alone here)
     versions.filter(_ < keepFrom).foreach(v => Fs.deleteFile(commitPath(dir, v)))
-    // stage leftovers and now-empty partition dirs
-    Fs.list(Fs.path(b)).foreach { st =>
+    // stage leftovers and now-empty partition dirs (nested batch dirs too)
+    def prune(p: Path, root: Boolean): Unit = Fs.list(p).foreach { st =>
       val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("_stage_"))
+      if (st.isDirectory && root && n.startsWith("_stage_"))
         Fs.deleteRecursively(st.getPath)
-      else if (st.isDirectory && !n.startsWith("_") &&
-          Fs.list(st.getPath).forall(_.getPath.getName.startsWith(".")))
+      else if (st.isDirectory && !n.startsWith("_") && !n.startsWith(".")) {
+        prune(st.getPath, root = false)
         // "empty" = no visible entries; leftover dot-sidecars go with it
-        Fs.deleteRecursively(st.getPath)
+        if (Fs.list(st.getPath).forall(_.getPath.getName.startsWith(".")))
+          Fs.deleteRecursively(st.getPath)
+      }
     }
+    prune(Fs.path(b), root = true)
     orphans.sorted
   }
 
-  /** Crash cleanup: delete stage leftovers and TORN commit fragments.
-    * Never required for correctness (readers skip torn commits, orphans
-    * are invisible) — this just reclaims the scratch space immediately.
+  /** THE crash recovery of the partitioned-store family: delete stage
+    * leftovers, TORN commit fragments and the `.*.tmp` leftovers of
+    * consumer-checkpoint writes ([[Fs.tmpFor]]'s naming rule). Never
+    * required for correctness (readers skip torn commits, orphans are
+    * invisible, and the next write's vacuum reaps stages) — this just
+    * reclaims the scratch space immediately. On a healthy store it only
+    * probes.
     */
   def recover(dir: String): Unit = {
-    val b = base(dir)
-    Fs.list(Fs.path(b)).foreach { st =>
+    Fs.list(Fs.path(base(dir))).foreach { st =>
       if (st.isDirectory && st.getPath.getName.startsWith("_stage_"))
         Fs.deleteRecursively(st.getPath)
+    }
+    Fs.list(Fs.path(s"${base(dir)}/_graft_checkpoints")).foreach { st =>
+      val n = st.getPath.getName
+      if (st.isFile && n.startsWith(".") && n.endsWith(".tmp"))
+        Fs.deleteFile(st.getPath)
     }
     commitVersions(dir)
       .filter(v => parseCommit(dir, v).isEmpty)

@@ -15,16 +15,17 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType}
   * [[Layout.appendBatch]]'s immutable `ingest_batch=N` levels make "the
   * new data" a precise, replayable set.
   *
-  * EXACTLY-ONCE by construction: the rollup's high-water batch id lives
-  * in a `_rollup_version` file INSIDE the rollup directory, and every
-  * refresh rewrites data + version together into `rollupDir__next` and
-  * puts it in place with [[Layout.swapIn]], the store family's one
-  * rename-aside swap; [[Layout.recover]] (run first) rolls an interrupted
-  * swap forward or back. A crash anywhere leaves either the old rollup
-  * (old version — the next run refolds the same batches) or the new one
-  * (new version — the next run skips them); a half-applied fold cannot
-  * exist, so batches are never double-counted — the failure mode a naive
-  * "append partials, then checkpoint" maintenance loop has.
+  * EXACTLY-ONCE by construction: the rollup is a store with one commit
+  * per refresh, and the rollup's high-water batch id is part of that
+  * commit — every data file of a generation is named
+  * `rollup-<batch>-…parquet` after the highest store batch it folds. A
+  * refresh stages the re-aggregated rollup and publishes it with one
+  * [[PointerStore]] commit ([[Layout.replaceAll]]). A crash anywhere leaves
+  * either the old generation (old version — the next run refolds the same
+  * batches) or the new one (new version — the next run skips them); a
+  * half-applied fold cannot exist, so batches are never double-counted —
+  * the failure mode a naive "append partials, then checkpoint"
+  * maintenance loop has.
   *
   * Aggregate schema per `sumCols` entry `c`: `sum_c`, `min_c`, `max_c`,
   * plus one `n_rows` count. Float/double sums are carried as
@@ -36,16 +37,15 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType}
   */
 object Rollup {
 
-  private val VERSION_FILE = "_rollup_version"
+  private val Generation = "rollup-(\\d+)-.*".r
 
-  /** Last store batch id folded into the rollup at `dir`, or -1 for an
-    * absent/never-maintained rollup.
+  /** Last store batch id folded into the rollup at `dir` (read from its
+    * current commit's file names), or -1 for an absent/never-maintained
+    * rollup.
     */
-  def version(dir: String): Long = {
-    val f = Fs.path(s"${dir.stripSuffix("/")}/$VERSION_FILE")
-    if (!Fs.isFile(f)) -1L
-    else Fs.readUTF8(f).trim.toLong
-  }
+  def version(dir: String): Long =
+    PointerStore.liveFiles(dir).collect { case Generation(n) => n.toLong }
+      .maxOption.getOrElse(-1L)
 
   /** Fold every store batch newer than the rollup's version into the
     * rollup at `rollupDir`, atomically. Returns the new version (the
@@ -55,28 +55,24 @@ object Rollup {
     *
     * Costs one scan of the NEW batches (directory-pruned) + one scan of
     * the previous rollup (aggregate-sized, not corpus-sized). Single
-    * maintainer per rollup dir (the swap is not concurrency-safe), same
+    * maintainer per rollup dir (a second one's commit refuses), the same
     * single-producer shape as [[Layout.appendBatch]].
     */
   def maintain(spark: SparkSession, storeDir: String, rollupDir: String,
       groupCols: Seq[String], sumCols: Seq[String]): Long = {
     require(groupCols.nonEmpty, "rollup needs at least one group column")
-    Layout.recover(rollupDir)
     val v = version(rollupDir)
     val latest = Layout.nextBatchId(storeDir) - 1L
     if (latest <= v) return v // nothing new (or store absent/empty)
     val fresh = Layout.readSince(spark, storeDir, v + 1L)
       .filter(col("ingest_batch") <= latest) // pin: batches may land mid-run
     val partial = aggregate(fresh, groupCols, sumCols)
-    val base = rollupDir.stripSuffix("/")
     val combined =
       if (v < 0L) partial
-      else merge(spark.read.parquet(base).unionByName(partial),
+      else merge(Layout.read(spark, rollupDir).unionByName(partial),
         groupCols, sumCols)
-    val next = base + Layout.StoreNext
-    combined.write.mode("overwrite").parquet(next)
-    Fs.writeUTF8(Fs.path(s"$next/$VERSION_FILE"), latest.toString)
-    Layout.swapIn(next, base, base + Layout.StoreAside)
+    Layout.replaceAll(rollupDir, rel => s"rollup-$latest-$rel")(
+      combined.write.parquet(_))
     latest
   }
 
@@ -84,9 +80,7 @@ object Rollup {
     * sum_/min_/max_ per sum column). Empty-schema frame when never
     * maintained.
     */
-  def read(spark: SparkSession, dir: String): DataFrame =
-    if (version(dir) < 0L) spark.emptyDataFrame
-    else spark.read.parquet(dir.stripSuffix("/"))
+  def read(spark: SparkSession, dir: String): DataFrame = Layout.read(spark, dir)
 
   /** The pinned carry type for a sum over `dt`: integrals stay long,
     * float/double go through exact DECIMAL(30,6), and decimal inputs keep

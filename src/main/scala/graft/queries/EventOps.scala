@@ -1255,7 +1255,7 @@ object EventOps {
             graft.streaming.DocStream.ingestSink(stream(), store, ckpt,
               "lang", Seq("doc_id"), col("doc_id")).awaitTermination()
           }
-          val agg = s.read.parquet(store)
+          val agg = graft.ops.Layout.read(s, store)
             .groupBy("lang")
             .agg(count(lit(1)).as("n_docs"),
               sum(col("n_chars")).cast("long").as("chars"),
@@ -1309,7 +1309,7 @@ object EventOps {
               .start()
             q.awaitTermination()
           }
-          val agg = s.read.parquet(store)
+          val agg = graft.ops.Layout.read(s, store)
             .groupBy("event_type")
             .agg(count(lit(1)).as("n"),
               countDistinct(col("user_id")).as("n_users"),

@@ -14,8 +14,8 @@ import Q._
   * reads the original parquet tables; any row lost, duplicated, or mangled
   * by the sink shows up as a hash mismatch.
   *
-  * The layout ops themselves (one-file-per-partition clustering, compaction
-  * swap, pruned reads) are asserted structurally in LayoutSpec; these
+  * The layout ops themselves (one-file-per-partition clustering, one
+  * commit per write, pruned reads) are asserted structurally in LayoutSpec; these
   * entries put their DATA path under the same gate as every other operator.
   */
 object SinkOps {
@@ -34,7 +34,7 @@ object SinkOps {
         val dir = storeDir("layout", d)
         graft.ops.Layout.writePartitioned(
           t(s, d, "documents"), dir, "lang", Seq("doc_id"))
-        s.read.parquet(dir)
+        graft.ops.Layout.read(s, dir)
           .filter(col("lang").isin("en", "fr"))
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
@@ -50,7 +50,7 @@ object SinkOps {
     // -- small-file accumulation + compaction: write the store fragmented
     //    (~8 files per lang dir — scale-RELATIVE, a fixed records-per-file
     //    would mean 31k files at sf10), compact back to one sorted file per
-    //    dir, read the COMPACTED store. Equality proves the rewrite-and-swap
+    //    dir, read the COMPACTED store. Equality proves the rewrite-and-commit
     //    preserved every row; the cap only shapes files, never data --------
     ("q_compact_roundtrip",
       (s: SparkSession, d: String) => {
@@ -61,7 +61,7 @@ object SinkOps {
           docs, dir, "lang", Seq("doc_id"),
           maxRecordsPerFile = perFile)
         graft.ops.Layout.compact(s, dir, "lang", Seq("doc_id"))
-        s.read.parquet(dir)
+        graft.ops.Layout.read(s, dir)
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("chars"),
@@ -96,7 +96,7 @@ object SinkOps {
     // -- PARTITION-LEVEL compaction under the hash gate: fragment one
     //    language dir by appending its slice, compact only-what's-
     //    fragmented, read the whole store back. Equality (incl. the
-    //    doubled slice) proves the per-directory rewrite-and-swap kept
+    //    doubled slice) proves the per-directory rewrite-and-commit kept
     //    every row while the cold dirs were never rewritten (structural
     //    half asserted in LayoutSpec) ------------------------------------
     ("q_compact_partial",
@@ -108,7 +108,7 @@ object SinkOps {
         graft.ops.Layout.append(
           docs.filter(col("lang") === "en"), dir, "lang", Seq("doc_id"))
         graft.ops.Layout.compactPartitions(s, dir, Seq("doc_id"))
-        s.read.parquet(dir)
+        graft.ops.Layout.read(s, dir)
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("chars"),
@@ -122,12 +122,12 @@ object SinkOps {
         |FROM store GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // -- MANIFEST-POINTER commit layer under the hash gate: the full
-    //    maintenance cycle (adopt a fragmented store → append the odd half
-    //    → compact → retire orphans) where every publish is ONE pointer-
+    //    maintenance cycle (a fragmented store → append the odd half →
+    //    compact → retire orphans) where every publish is ONE pointer-
     //    file write and NO directory rename exists anywhere — the object-
-    //    store-safe protocol (PointerStoreSpec proves the scheme refusal /
-    //    crash / vacuum claims; this gate proves the data path is
-    //    byte-lossless through all four commits) --------------------------
+    //    store-safe protocol (PointerStoreSpec proves the scheme / crash /
+    //    vacuum claims; this gate proves the data path is byte-lossless
+    //    through all three commits) ---------------------------------------
     ("q_pointer_roundtrip",
       (s: SparkSession, d: String) => {
         val dir = storeDir("pointer", d)
@@ -137,13 +137,12 @@ object SinkOps {
         graft.ops.Layout.writePartitioned(
           docs.filter(pmod(col("doc_id"), lit(2)) === 0), dir, "lang",
           Seq("doc_id"), maxRecordsPerFile = perFile)
-        graft.ops.PointerStore.init(dir)
-        graft.ops.PointerStore.append(
+        graft.ops.Layout.append(
           docs.filter(pmod(col("doc_id"), lit(2)) === 1), dir, "lang",
           Seq("doc_id"))
-        graft.ops.PointerStore.compact(s, dir, Seq("doc_id"))
+        graft.ops.Layout.compactPartitions(s, dir, Seq("doc_id"))
         graft.ops.PointerStore.vacuumOrphans(dir, keepCommits = 1)
-        graft.ops.PointerStore.read(s, dir)
+        graft.ops.Layout.read(s, dir)
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("chars"),
@@ -156,9 +155,9 @@ object SinkOps {
         |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // -- whole-store re-partition as a pointer FLIP: lang= layout rewritten
-    //    to source= and cut over by one commit-file write (the op that
-    //    needs a store-wide directory swap in Layout.evolvePartitions);
-    //    old files retired by the version-window vacuum. countDistinct over
+    //    to source= and cut over by one commit-file write
+    //    (Layout.evolveCompact); old files retired by the version-window
+    //    vacuum. countDistinct over
     //    the ex-partition column proves the lang VALUES survived the move
     //    from directory names to data pages ------------------------------
     ("q_pointer_rewrite",
@@ -167,10 +166,9 @@ object SinkOps {
         val docs = t(s, d, "documents")
         deleteRecursively(new java.io.File(dir))
         graft.ops.Layout.writePartitioned(docs, dir, "lang", Seq("doc_id"))
-        graft.ops.PointerStore.init(dir)
-        graft.ops.PointerStore.rewriteAll(s, dir, "source", Seq("doc_id"))
+        graft.ops.Layout.evolveCompact(s, dir, "lang", "source", Seq("doc_id"))
         graft.ops.PointerStore.vacuumOrphans(dir, keepCommits = 1)
-        graft.ops.PointerStore.read(s, dir)
+        graft.ops.Layout.read(s, dir)
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("chars"),
@@ -195,8 +193,7 @@ object SinkOps {
         graft.ops.Layout.writePartitioned(
           docs.filter(pmod(col("doc_id"), lit(2)) === 0), dir, "lang",
           Seq("doc_id"))
-        graft.ops.PointerStore.init(dir)
-        graft.ops.PointerStore.append(
+        graft.ops.Layout.append(
           docs.filter(pmod(col("doc_id"), lit(2)) === 1), dir, "lang",
           Seq("doc_id"))
         graft.ops.PointerStore.readVersion(s, dir, 1L)
@@ -226,7 +223,7 @@ object SinkOps {
         graft.ops.Layout.writePartitioned(
           docs.filter(pmod(col("doc_id"), lit(2)) === 0), dir, "lang", Seq("doc_id"))
         graft.ops.Layout.ingest(docs, dir, "lang", Seq("doc_id"), md5(col("text")))
-        s.read.parquet(dir)
+        graft.ops.Layout.read(s, dir)
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("chars"),
@@ -255,7 +252,7 @@ object SinkOps {
         graft.ops.Layout.writePartitioned(
           docs.filter(pmod(col("doc_id"), lit(10)) === 0), dir, "lang", Seq("doc_id"))
         graft.ops.Layout.ingestBloom(docs, dir, "lang", Seq("doc_id"), md5(col("text")))
-        s.read.parquet(dir)
+        graft.ops.Layout.read(s, dir)
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("chars"),
@@ -335,7 +332,7 @@ object SinkOps {
     // -- history retention: 4 versioned batches, consumers current, squash
     //    everything <= batch 2 into ONE dir per partition (Layout.
     //    squashHistory — Delta-checkpoint analogue, crash recovery in
-    //    SquashSpec). The read-back proves rows survive byte-identically,
+    //    CrashSpec). The read-back proves rows survive byte-identically,
     //    ids <= 2 relabel to the squash floor, batch 3 is untouched, and
     //    the still-checkpointed consumer sees exactly its unseen batch ----
     ("q_squash_history",
@@ -348,7 +345,7 @@ object SinkOps {
         graft.ops.Layout.commitCheckpoint(dir, "squash_consumer", 2L)
         graft.ops.Layout.squashHistory(s, dir, upTo = 2L, Seq("doc_id"))
         val (fresh, _) = graft.ops.Layout.readNew(s, dir, "squash_consumer")
-        val full = s.read.parquet(dir)
+        val full = graft.ops.Layout.read(s, dir)
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"),
             countDistinct(col("ingest_batch").cast("long")).as("n_batches"),
@@ -549,7 +546,7 @@ object SinkOps {
           .withColumn("source", lit("fresh"))
         graft.ops.Layout.merge(updates.unionByName(inserts), dir,
           "lang", Seq("doc_id"), Seq("doc_id"))
-        s.read.parquet(dir)
+        graft.ops.Layout.read(s, dir)
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("chars"),
@@ -752,8 +749,8 @@ object SinkOps {
     //    batches, the per-lang summary is refreshed after EACH batch
     //    (three folds, each reading only the new batch + the tiny rollup),
     //    and the final rollup must equal the direct full-corpus aggregate.
-    //    Exactly-once fold semantics (version-in-dir atomic swap) are
-    //    crash-tested in RollupSpec -------------------------------------
+    //    Exactly-once fold semantics (version-in-commit) are crash-tested
+    //    in CrashSpec ----------------------------------------------------
     ("q_rollup_incremental",
       (s: SparkSession, d: String) => {
         val store = storeDir("rollup_store", d)
@@ -934,9 +931,8 @@ object SinkOps {
         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // -- PARTITION EVOLUTION under the hash gate: documents laid out by
-    //    source, evolved incrementally onto lang=XX/ directories (one
-    //    source dir per increment, original store live until the final
-    //    atomic swap), then read back PRUNED on the new key with the old
+    //    source, evolved onto lang=XX/ directories (one job per source
+    //    dir, original store live until the one commit), then read back PRUNED on the new key with the old
     //    key surviving as a data column. Equality against the original
     //    table proves the re-key was lossless; crash/resume is spec'd
     //    structurally in LayoutSpec --------------------------------------
@@ -948,7 +944,7 @@ object SinkOps {
           t(s, d, "documents"), dir, "source", Seq("doc_id"))
         graft.ops.Layout.evolvePartitions(s, dir, "source", "lang",
           Seq("doc_id"))
-        s.read.parquet(dir)
+        graft.ops.Layout.read(s, dir)
           .filter(col("lang").isin("en", "de"))
           .groupBy("lang", "source")
           .agg(count(lit(1)).as("n_docs"),
@@ -966,7 +962,7 @@ object SinkOps {
     // -- TTL RETENTION VACUUM under the hash gate: events laid out by
     //    day, rows older than the mid-span cutoff vacuumed — expired day
     //    dirs deleted from FOOTERS ONLY, live dirs untouched, the one
-    //    boundary dir rewritten with the crash-safe swap. The read-back
+    //    boundary dir rewritten, all in one commit. The read-back
     //    must equal the oracle's WHERE ms >= cutoff over the original
     //    table: any over-deletion (a live row lost) or under-deletion
     //    (an expired row kept) breaks the hash ---------------------------
@@ -983,7 +979,7 @@ object SinkOps {
         val cutoff = (b.getLong(0) + b.getLong(1)) / 2
         graft.ops.Layout.vacuumRetention(s, dir, "ms", cutoff,
           Seq("event_id"))
-        s.read.parquet(dir)
+        graft.ops.Layout.read(s, dir)
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             countDistinct(col("user_id")).as("n_users"),
@@ -1005,11 +1001,11 @@ object SinkOps {
 
     // -- SCHEMA EVOLUTION with backfill under the hash gate: documents
     //    laid out by lang, a derived n_words column backfilled one
-    //    directory at a time (per-dir crash-safe swap, already-evolved
-    //    dirs skip — the resumability contract), then the EVOLVED store
+    //    directory per job (already-evolved dirs skip, one commit for
+    //    all), then the EVOLVED store
     //    aggregated on the new column. The oracle computes the same
     //    expression from the original table: any directory missed,
-    //    double-written, or torn mid-swap breaks the hash --------------
+    //    double-written, or torn mid-commit breaks the hash --------------
     ("q_schema_evolve",
       (s: SparkSession, d: String) => {
         val dir = storeDir("schemev", d)
@@ -1019,7 +1015,7 @@ object SinkOps {
         graft.ops.Layout.addColumn(s, dir, "n_words",
           "CAST(size(regexp_extract_all(text, '\\\\S+', 0)) AS BIGINT)",
           Seq("doc_id"))
-        s.read.parquet(dir)
+        graft.ops.Layout.read(s, dir)
           .groupBy("lang")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_words")).as("words"),
@@ -1064,7 +1060,7 @@ object SinkOps {
           else { passes += 1; doneDirs ++= n }
         }
         val maxFiles = graft.ops.Layout.filesPerPartition(dir).values.max
-        s.read.parquet(dir)
+        graft.ops.Layout.read(s, dir)
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("chars"),
@@ -1087,7 +1083,7 @@ object SinkOps {
     //    shuffle, one write, and exactly ONE sorted file per target dir.
     //    max_files (computed from the on-disk store) is gated at literal 1:
     //    any fragmentation regression breaks the hash alongside any data
-    //    loss. Crash-at-swap recovery is the store's one Layout.recover ---
+    //    loss. Crash recovery is the store's one PointerStore.recover -----
     ("q_evolve_compact",
       (s: SparkSession, d: String) => {
         val dir = storeDir("evocomp", d)
@@ -1098,7 +1094,7 @@ object SinkOps {
           Seq("doc_id"))
         val maxFiles = graft.ops.Layout.filesPerPartition(dir)
           .values.max
-        s.read.parquet(dir)
+        graft.ops.Layout.read(s, dir)
           .filter(col("lang").isin("en", "de"))
           .groupBy("lang", "source")
           .agg(count(lit(1)).as("n_docs"),

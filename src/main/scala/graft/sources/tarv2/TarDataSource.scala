@@ -337,7 +337,8 @@ case class TarWriteCommit(taskDir: String, files: Seq[String])
     extends WriterCommitMessage
 
 /** The crash-recovery half of the export commit: a marker-committed
-  * roll-forward, like `graft.ops.Layout.squashHistory`'s markers. The
+  * roll-forward (the marker plays the part a `graft.ops.PointerStore`
+  * commit file plays for a store, but installs by rename). The
   * `.__commit__` marker is written by atomic rename only after every
   * staged shard is fully on disk, and lists the complete commit as
   * `del <name>` / `new <taskDir> <name>` (tab-separated; shard names are

@@ -326,8 +326,9 @@ object DocStream {
   }
 
   /** Stream → batch-VERSIONED store: every non-empty micro-batch lands as
-    * its own `ingest_batch=N` level under the partition dirs
-    * ([[graft.ops.Layout.appendBatch]]), so downstream consumers follow
+    * its own `ingest_batch=N` level under the partition dirs, published by
+    * one store commit ([[graft.ops.Layout.appendBatch]]; an empty batch
+    * publishes nothing and takes no id), so downstream consumers follow
     * the live stream incrementally with [[graft.ops.Layout.readNew]] —
     * directory-pruned "everything since my checkpoint", no streaming
     * state store, consumers fully decoupled from the ingest query.
@@ -335,8 +336,9 @@ object DocStream {
     * The one-streaming-query-per-store rule IS appendBatch's
     * single-producer protocol; Spark already enforces one active query
     * per checkpoint. Batch-id semantics across restarts: Layout batch ids
-    * are allocated per WRITE, so a replayed micro-batch (failure between
-    * write and checkpoint commit) appends again under a NEW id —
+    * are allocated per store COMMIT, so a replayed micro-batch (failure
+    * between the store commit and Spark's checkpoint commit) appends again
+    * under a NEW id —
     * at-least-once, like the other append sinks here; consumers needing
     * exactly-once dedup the replay by content key downstream, or write
     * through [[ingestSink]] which builds that screen into the sink.
@@ -355,8 +357,8 @@ object DocStream {
 
   /** Stream → EXACTLY-ONCE-content store: each micro-batch lands through
     * [[graft.ops.Layout.ingest]]'s key screen instead of a plain append,
-    * so a micro-batch REPLAYED after a crash between the store write and
-    * the checkpoint commit re-arrives with every key already present and
+    * so a micro-batch REPLAYED after a crash between the store commit and
+    * Spark's checkpoint commit re-arrives with every key already present and
     * appends nothing — the at-least-once replay the other sinks document
     * ([[versionedSink]]) is absorbed by content addressing, turning
     * at-least-once delivery into exactly-once CONTENT. The same screen

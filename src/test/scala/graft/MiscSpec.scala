@@ -26,31 +26,31 @@ class MiscSpec extends AnyFunSuite {
   test("custom expressions callable from SQL via SparkSessionExtensions") {
     val dot = spark.sql(
       "SELECT vec_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS d")
-      .head.getDouble(0)
+      .head().getDouble(0)
     assert(dot == 32.0)
     val sh = spark.sql("SELECT word_shingles('a b c d', 3) AS s")
-      .head.getSeq[String](0)
+      .head().getSeq[String](0)
     assert(sh == Seq("a b c", "b c d"))
     val fp = spark.sql("SELECT winnow_fingerprints('abcdefghijklmno', 5, 4) AS f")
-      .head.getSeq[Long](0)
+      .head().getSeq[Long](0)
     assert(fp.nonEmpty)
     // and over a real table
     spark.read.parquet(s"$sfDir/documents.parquet").createOrReplaceTempView("docs_ext")
     val cnt = spark.sql(
       "SELECT count(*) FROM docs_ext WHERE size(word_shingles(text)) > 0")
-      .head.getLong(0)
+      .head().getLong(0)
     assert(cnt == 500)
   }
 
   test("approx stats land within tolerance of exact") {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val approx = StatsOps.approxDistinct(li, Seq("l_orderkey"), rsd = 0.02)
-      .head.getLong(0)
-    val exact = li.select(countDistinct(col("l_orderkey"))).head.getLong(0)
+      .head().getLong(0)
+    val exact = li.select(countDistinct(col("l_orderkey"))).head().getLong(0)
     assert(math.abs(approx - exact).toDouble / exact < 0.1)
 
     val Seq(q50) = StatsOps.approxQuantiles(li, "l_quantity", Seq(0.5), 0.001)
-    val exactMed = li.select(median(col("l_quantity"))).head.getDouble(0)
+    val exactMed = li.select(median(col("l_quantity"))).head().getDouble(0)
     assert(math.abs(q50 - exactMed) <= 1.0)
 
     val prof = StatsOps.profile(li.select("l_orderkey", "l_quantity"))
@@ -67,7 +67,7 @@ class MiscSpec extends AnyFunSuite {
       val got = StatsOps.exactPercentiles(li, colName, fracs)
       val exp = li.select(expr(
           s"percentile($colName, array(${fracs.mkString(",")}))"))
-        .head.getSeq[Double](0)
+        .head().getSeq[Double](0)
       got.zip(exp).foreach { case (g, e) =>
         assert(math.abs(g - e) <= math.abs(e) * 1e-12 + 1e-12,
           s"$colName: $g != $e") }
@@ -85,7 +85,6 @@ class MiscSpec extends AnyFunSuite {
   }
 
   test("streaming exact dedup: dropDuplicates with watermark drops replays") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graftdedup").toString
     val lines = Seq(
       """{"event_id":1,"ts":"2024-01-01T00:00:00.000Z","user_id":1,"event_type":"view","value":1.0,"props":"{}"}""",
@@ -100,6 +99,6 @@ class MiscSpec extends AnyFunSuite {
       .queryName("dedup_out")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
     q.awaitTermination()
-    assert(spark.sql("SELECT count(*) FROM dedup_out").head.getLong(0) == 2)
+    assert(spark.sql("SELECT count(*) FROM dedup_out").head().getLong(0) == 2)
   }
 }

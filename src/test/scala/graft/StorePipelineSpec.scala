@@ -49,7 +49,7 @@ class StorePipelineSpec extends SparkSuite {
       .withColumn("source", lit("recrawl"))
     val touched = Layout.merge(fixes, release, "lang", Seq("doc_id"), Seq("doc_id"))
     assert(touched.nonEmpty)
-    val rel = spark.read.parquet(release)
+    val rel = Layout.read(spark, release)
     assert(rel.count() === docs.count(), "merge must replace, not append")
     assert(rel.filter(col("source") === "recrawl").count() === fixes.count())
 
@@ -64,7 +64,7 @@ class StorePipelineSpec extends SparkSuite {
     assert(perSource.nonEmpty && perSource.forall(_.getBoolean(3)))
 
     // 6. the rollup agrees with a direct recompute of the full store
-    val direct = spark.read.parquet(store).groupBy("lang")
+    val direct = Layout.read(spark, store).groupBy("lang")
       .agg(count(lit(1)).as("n_rows"), sum("n_chars").as("s"))
       .orderBy("lang").collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     val folded = Rollup.read(spark, roll)

@@ -38,7 +38,7 @@ class Api2Spec extends SparkSuite {
     // the sanitized names are SQL-addressable through the registered view
     assert(cdb.query(
       "SELECT first_name FROM First_Survey_2024 ORDER BY total_score DESC")
-      .head.getString(0) == "ann")
+      .head().getString(0) == "ann")
     cdb.exit()
   }
 
@@ -52,7 +52,7 @@ class Api2Spec extends SparkSuite {
     vdb.createView("big_orders",
       vdb("orders").filter(vdb("orders")("o_totalprice") > 1000.0))
     assert(vdb.views.contains("big_orders"))
-    assert(vdb.query("SELECT count(*) AS c FROM big_orders").head.getLong(0) > 0)
+    assert(vdb.query("SELECT count(*) AS c FROM big_orders").head().getLong(0) > 0)
     spark.catalog.dropTempView("big_orders")
   }
 
@@ -108,7 +108,7 @@ class Api2Spec extends SparkSuite {
     assert(vdb.views.contains("v_nation") && !vdb.views.contains("tt_region"))
     assert(vdb.tempTables == Seq("tt_region"))
     // the temp table is queryable and materialized (persisted storage level)
-    assert(vdb.query("SELECT count(*) AS c FROM tt_region").head.getLong(0) == 5)
+    assert(vdb.query("SELECT count(*) AS c FROM tt_region").head().getLong(0) == 5)
     assert(spark.table("tt_region").storageLevel.useMemory)
     vdb.exit()
     assert(!spark.catalog.tableExists("tt_region") && !spark.catalog.tableExists("v_nation"))
@@ -248,7 +248,7 @@ class Api2Spec extends SparkSuite {
     val expect = (0 to 3).map(i => hex60(text.substring(i, i + 5))).min
     val got = Seq((1L, text)).toDF("id", "text")
       .select(winnowFingerprints(fcol("text"), 5, 4, md5Mode = true))
-      .head.getSeq[Long](0)
+      .head().getSeq[Long](0)
     assert(got == Seq(expect))
   }
 

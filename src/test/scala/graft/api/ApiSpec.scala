@@ -1,7 +1,5 @@
 package graft.api
 
-import org.apache.spark.sql.Row
-
 import graft.SparkSuite
 
 /** Semantics of the pandas-db-parity API layer (SURVEY.md §2/§4.3),

@@ -41,7 +41,7 @@ class ParchPoseySpec extends SparkSuite {
     // equivalent to the raw-SQL count
     val sqlCount = db.query(
       "SELECT count(*) AS c FROM orders WHERE total >= 500 AND total_amt_usd > 6700")
-      .head.getLong(0)
+      .head().getLong(0)
     assert(filtered.len == sqlCount)
   }
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
   */
 class ConnectedComponentsSpec extends SparkSuite {
 
-  private def unionFind(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
       val p = parent.getOrElse(x, x)
@@ -57,7 +57,7 @@ class ConnectedComponentsSpec extends SparkSuite {
       val n = 200
       val edges = Seq.fill(150)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter(e => e._1 != e._2)
-      assert(run(edges) == unionFind(n, edges), s"seed=$seed")
+      assert(run(edges) == unionFind(edges), s"seed=$seed")
     }
   }
 
@@ -107,7 +107,7 @@ class ConnectedComponentsSpec extends SparkSuite {
       val inc = ConnectedComponents
         .incremental(l1, b2.toDF("a", "b"), "a", "b")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(inc == unionFind(n, edges), s"seed=$seed")
+      assert(inc == unionFind(edges), s"seed=$seed")
     }
   }
 
@@ -146,7 +146,7 @@ class ConnectedComponentsSpec extends SparkSuite {
       Seq((40L, 1500L), (2999L, 20000L)) ++ (20000L until 20010L).map(i => (i + 1, i))
     val edges = hub ++ chain :+ ((7001L, 7000L))
     val got = run(edges)
-    assert(got == unionFind(20011, edges))
+    assert(got == unionFind(edges))
     assert(got(10000L) == 5L && got(20010L) == 5L && got(7001L) == 7000L)
   }
 

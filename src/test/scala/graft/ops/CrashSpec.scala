@@ -1,11 +1,11 @@
 package graft.ops
 
 import java.io.File
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -13,8 +13,8 @@ import graft.SparkSuite
 /** Fault injection through [[Fs.beforeMutation]]: `body` runs as a process
   * that dies at the `k`-th filesystem mutation under `root` (1-based).
   * That mutation and every later one under `root` throw [[Faults.Injected]]:
-  * a dead process does nothing more, so the restore rename of a failing
-  * swap fails too. Mutations elsewhere pass untouched.
+  * a dead process does nothing more, so no cleanup step of a failing
+  * write runs either. Mutations elsewhere pass untouched.
   */
 object Faults {
   final class Injected(msg: String) extends RuntimeException(msg)
@@ -57,12 +57,11 @@ object Faults {
 }
 
 /** One crash model for the partitioned-store family: every store op, at
-  * every crash point, recovers through [[Layout.recover]] to a state whose
-  * partition directories each hold their pre-state or their post-state,
-  * and a re-run lands exactly on the no-crash post-state. Also the
-  * data-loss cases of writes that used to skip recovery, and the same
-  * injection against [[PointerStore]]'s commits, whose readers need no
-  * repair at all.
+  * every crash point, leaves [[Layout.read]] — with no repair — on exactly
+  * its pre-state or its post-state; [[PointerStore.recover]] then leaves no
+  * `_stage_*` dir and no torn commit, and a re-run lands exactly on the
+  * no-crash post-state. Also: a reader resolved before a commit keeps
+  * reading its version, and writes after a crashed op keep the store.
   */
 class CrashSpec extends SparkSuite {
 
@@ -78,20 +77,27 @@ class CrashSpec extends SparkSuite {
       when(pmod(col("id"), lit(3L)) === 2L, "s1").otherwise("s0").as("src"),
       (col("id") * 7L % 101L).as("x"))
 
-  private def count(dir: String): Long = spark.read.parquet(dir).count()
+  private def count(dir: String): Long = Layout.read(spark, dir).count()
 
-  // ---- writes that skipped recovery used to lose data -------------------
-  // The crash states are built by hand so these cases run against any
-  // version of Layout, including ones without the fault hook.
+  private def names(d: File): Seq[String] =
+    Option(d.list()).map(_.toSeq.sorted).getOrElse(Seq.empty)
 
-  /** A store as compact leaves it when it dies between its two renames:
-    * the live dir renamed aside, its rewrite complete but not moved in.
-    */
-  private def crashedCompact(store: String): Unit = {
-    Layout.writePartitioned(spark.read.parquet(store), store + "__next", "p",
-      Seq("id"))
-    Files.move(Paths.get(store), Paths.get(store + "__old"))
+  private def staged(store: String): Seq[String] =
+    names(new File(store)).filter(_.startsWith("_stage_"))
+
+  // ---- writes after a crashed op keep the store --------------------------
+
+  /** Run `op` as a process that dies at its `k`-th filesystem mutation. */
+  private def crash(store: String, k: Int)(op: => Any): Unit = {
+    val run = Faults.run(store, k)(op)
+    assert(run.error.exists(Faults.injected), s"no crash: $run")
   }
+
+  /** compact dies at its 2nd file move: one rewrite file is in the store,
+    * unreferenced, and its stage dir is left behind.
+    */
+  private def crashedCompact(store: String): Unit =
+    crash(store, 2)(Layout.compact(spark, store, "p", Seq("id")))
 
   test("a merge after a crash between compact's renames keeps the store") {
     val store = s"${freshRoot()}/store"
@@ -100,7 +106,7 @@ class CrashSpec extends SparkSuite {
     Layout.merge(rows(1000, 1010), store, "p", Seq("id"), Seq("id"))
     Layout.compact(spark, store, "p", Seq("id"))
     assert(count(store) === 1010L)
-    assert(!new File(store + "__old").exists())
+    assert(staged(store).isEmpty)
   }
 
   test("an ingest after a crash between compact's renames screens against " +
@@ -115,95 +121,74 @@ class CrashSpec extends SparkSuite {
     assert(count(store) === 1010L)
   }
 
-  test("an append after a compactPartitions crash keeps the directory " +
-      "renamed aside") {
+  test("an append after a compactPartitions crash keeps the crashed " +
+      "directory's rows") {
     val store = s"${freshRoot()}/store"
-    Layout.writePartitioned(rows(0, 1000), store, "p", Seq("id"))
-    Files.move(Paths.get(s"$store/p=v0"), Paths.get(s"$store/.__old__p=v0"))
+    Layout.writePartitioned(rows(0, 1000), store, "p", Seq("id"),
+      maxRecordsPerFile = 100L)
+    crash(store, 2)(Layout.compactPartitions(spark, store, Seq("id")))
     Layout.append(rows(1000, 1010), store, "p", Seq("id"))
     Layout.compactPartitions(spark, store, Seq("id"))
     assert(count(store) === 1010L)
+    assert(Layout.filesPerPartition(store).values.forall(_ == 1))
   }
 
-  test("an appendBatch after a per-directory swap crash keeps the " +
-      "directory renamed aside") {
+  test("an appendBatch after a crashed squash keeps every batch") {
     val store = s"${freshRoot()}/store"
-    Layout.appendBatch(rows(0, 1000), store, "p", Seq("id"))
-    Files.move(Paths.get(s"$store/p=v0"), Paths.get(s"$store/.__old__p=v0"))
-    assert(Layout.appendBatch(rows(1000, 1010), store, "p", Seq("id")) === 1L)
-    Layout.compactPartitions(spark, store, Seq("id"))
+    Layout.appendBatch(rows(0, 500), store, "p", Seq("id"))
+    Layout.appendBatch(rows(500, 1000), store, "p", Seq("id"))
+    crash(store, 2)(Layout.squashHistory(spark, store, upTo = 1L, Seq("id")))
+    assert(Layout.appendBatch(rows(1000, 1010), store, "p", Seq("id")) === 2L)
+    Layout.squashHistory(spark, store, upTo = 1L, Seq("id"))
     assert(count(store) === 1010L)
-    assert(Layout.nextBatchId(store) === 2L)
+    assert(Layout.nextBatchId(store) === 3L)
   }
 
   // ---- every op at every crash point ------------------------------------
 
   /** One op under injection. `build` writes its pre-state under a root,
     * `op` runs it there; `stores` are the root-relative dirs it writes.
-    * `resumable`: recover keeps its pruned `__evolving` scratch.
+    * `idempotent`: re-running the op on its own post-state changes
+    * nothing, so a run that crashed after its commit may re-run too.
     */
   private case class Op(name: String, build: String => Unit,
       op: String => Any, stores: Seq[String] = Seq("store"),
-      wholeStore: Boolean = false, resumable: Boolean = false)
+      idempotent: Boolean = true)
 
-  private def names(d: File): Seq[String] =
-    Option(d.list()).map(_.toSeq.sorted).getOrElse(Seq.empty)
-
-  /** Row count and Σxxhash64 over every column of a parquet dir. */
-  private def digest(dir: String): String = {
-    val df = spark.read.parquet(dir)
-    val hs = df.select(xxhash64(df.columns.sorted.map(col): _*))
+  /** Row count and Σxxhash64 over every column of a frame. */
+  private def digest(df: DataFrame): String = {
+    val hs = df.select(xxhash64(df.columns.sorted.toSeq.map(col): _*))
       .collect().map(_.getLong(0))
     s"${hs.length} rows, Σxxhash64 ${hs.sum}"
   }
 
-  /** Per partition directory of each store: its digest. A store without
-    * partition directories (a rollup) is one unit, with its version.
-    */
-  private def state(root: String, stores: Seq[String]): Map[String, String] =
-    stores.flatMap { s =>
-      val d = new File(root, s)
-      val parts = names(d).filter(n => n.contains("=") &&
-        !n.startsWith(".") && !n.startsWith("_"))
-      if (parts.nonEmpty) parts.map(pd => s"$s/$pd" -> digest(s"$d/$pd"))
-      else if (d.isDirectory)
-        Seq(s -> s"${digest(d.getPath)}, version ${Rollup.version(d.getPath)}")
-      else Seq.empty
-    }.toMap
-
-  /** Asides, scratch and markers anywhere under `root`. */
-  private def leftovers(root: String, resumable: Boolean): Seq[String] = {
-    def walk(d: File): Seq[String] = names(d).flatMap { n =>
-      val f = new File(d, n)
-      val inEvolving = d.getName.endsWith("__evolving")
-      val bad = n.endsWith("__next") || n.endsWith("__old") ||
-        n.startsWith(".__") || (n.startsWith(".") && n.endsWith(".tmp")) ||
-        (n == "._evolve_done" && !inEvolving) ||
-        (n.endsWith("__evolving") && !resumable)
-      (if (bad) Seq(f.getPath) else Seq.empty) ++
-        (if (f.isDirectory) walk(f) else Seq.empty)
-    }
-    walk(new File(root))
+  private def digest(dir: String): String = {
+    val df = Layout.read(spark, dir)
+    if (df.columns.isEmpty) "no data" else digest(df)
   }
 
-  /** Store-relative directory names a plain reader's file index sees that
-    * are scratch or aside names. A store with no visible data (mid-swap)
-    * reads as nothing.
+  /** Per store: what [[Layout.read]] serves (a rollup with its version). */
+  private def state(root: String, stores: Seq[String]): Map[String, String] =
+    stores.map { s =>
+      val d = s"$root/$s"
+      s -> (if (s == "rollup") s"${digest(d)}, version ${Rollup.version(d)}"
+            else digest(d))
+    }.toMap
+
+  /** Stage dirs and torn commits (a commit file above the current
+    * version: only the in-flight next commit can be torn) of each store.
     */
-  private def visibleScratch(root: String, stores: Seq[String]): Seq[String] =
+  private def leftovers(root: String, stores: Seq[String]): Seq[String] =
     stores.flatMap { s =>
-      val d = new File(root, s)
-      val files =
-        if (!d.isDirectory) Seq.empty
-        else try spark.read.parquet(d.getPath).inputFiles.toSeq
-        catch { case _: AnalysisException => Seq.empty }
-      files.flatMap(f => new java.net.URI(f).getPath
-          .stripPrefix(d.getPath + "/").split('/').dropRight(1))
-        .filter(seg => seg.contains("__") || seg.startsWith("."))
-    }.distinct
+      val d = s"$root/$s"
+      val cur = PointerStore.currentVersion(d).getOrElse(0L)
+      val torn = names(new File(d, "_commits"))
+        .filter(_.stripPrefix("v").stripSuffix(".commit").toLong > cur)
+      (staged(d) ++ torn).map(n => s"$s/$n")
+    }
 
   private def recoverAll(root: String, stores: Seq[String]): Unit =
-    stores.foreach(s => Layout.recover(s"$root/$s"))
+    stores.foreach(s => PointerStore.recover(s"$root/$s"))
 
   private def copyOf(template: String): String = {
     val root = freshRoot()
@@ -220,7 +205,7 @@ class CrashSpec extends SparkSuite {
     val post = state(clean, c.stores)
     assert(n >= 1, s"${c.name} made no filesystem mutation")
     info(s"${c.name}: $n mutations, each one a crash point")
-    assert(leftovers(clean, resumable = false).isEmpty)
+    assert(leftovers(clean, c.stores).isEmpty)
     assert(Faults.count(clean)(recoverAll(clean, c.stores)) === 0,
       s"${c.name}: recover mutated a healthy store")
     for (k <- 1 to n) {
@@ -235,21 +220,20 @@ class CrashSpec extends SparkSuite {
           case Some(_) =>
             assert(run.error.exists(Faults.injected),
               s"the crash did not propagate: ${run.error}")
-            assert(visibleScratch(root, c.stores).isEmpty)
+            // readers resolve the last complete commit: no repair needed
+            val seen = state(root, c.stores)
+            assert(seen == pre || seen == post,
+              s"a reader saw $seen, neither pre $pre nor post $post")
             recoverAll(root, c.stores)
-            assert(leftovers(root, c.resumable).isEmpty)
-            val now = state(root, c.stores)
-            (pre.keySet ++ post.keySet ++ now.keySet).foreach { pd =>
-              assert(now.get(pd) == pre.get(pd) || now.get(pd) == post.get(pd),
-                s"$pd: ${now.get(pd)} is neither pre ${pre.get(pd)} " +
-                  s"nor post ${post.get(pd)}")
-            }
-            if (c.wholeStore) assert(now == pre || now == post)
+            assert(leftovers(root, c.stores).isEmpty)
+            assert(state(root, c.stores) === seen, "recover changed the data")
             assert(Faults.count(root)(recoverAll(root, c.stores)) === 0,
               "recover mutated a recovered store")
-            c.op(root)
-            assert(state(root, c.stores) === post, "re-run")
-            assert(leftovers(root, resumable = false).isEmpty, "re-run")
+            if (c.idempotent || seen == pre) {
+              c.op(root)
+              assert(state(root, c.stores) === post, "re-run")
+              assert(leftovers(root, c.stores).isEmpty, "re-run")
+            }
         }
       }
       FileUtils.deleteDirectory(new File(root))
@@ -260,11 +244,18 @@ class CrashSpec extends SparkSuite {
   private def store(root: String) = s"$root/store"
 
   private val ops = Seq(
-    Op("compact",
-      r => Layout.writePartitioned(rows(0, 300), store(r), "p", Seq("id"),
-        maxRecordsPerFile = 40L),
-      r => Layout.compact(spark, store(r), "p", Seq("id")),
-      wholeStore = true),
+    Op("append",
+      r => Layout.writePartitioned(rows(0, 300), store(r), "p", Seq("id")),
+      r => Layout.append(rows(300, 330), store(r), "p", Seq("id")),
+      idempotent = false),
+    Op("compact", { r =>
+        // two versions before the op, so its vacuum retires the first
+        // version's files: crash points after the commit, too
+        Layout.writePartitioned(rows(0, 300), store(r), "p", Seq("id"))
+        Layout.writePartitioned(rows(0, 300), store(r), "p", Seq("id"),
+          maxRecordsPerFile = 40L)
+      },
+      r => Layout.compact(spark, store(r), "p", Seq("id"))),
     Op("compactPartitions", { r =>
         Layout.writePartitioned(rows(0, 300), store(r), "p", Seq("id"))
         // fragment two of the three dirs, so two rewrites run concurrently
@@ -272,9 +263,12 @@ class CrashSpec extends SparkSuite {
           Seq("id"))
       },
       r => Layout.compactPartitions(spark, store(r), Seq("id"))),
-    Op("merge",
-      r => Layout.writePartitioned(rows(0, 300).filter(col("p") =!= "v2"),
-        store(r), "p", Seq("id")),
+    Op("merge", { r =>
+        // a replaced version before the op (see compact)
+        Layout.writePartitioned(rows(0, 300), store(r), "p", Seq("id"))
+        Layout.writePartitioned(rows(0, 300).filter(col("p") =!= "v2"),
+          store(r), "p", Seq("id"))
+      },
       { r =>
         // updates into the existing v0, inserts into the new v2
         val upd = rows(0, 15).filter(col("p") === "v0")
@@ -289,12 +283,10 @@ class CrashSpec extends SparkSuite {
       r => Layout.squashHistory(spark, store(r), upTo = 1L, Seq("id"))),
     Op("evolvePartitions",
       r => Layout.writePartitioned(rows(0, 300), store(r), "src", Seq("id")),
-      r => Layout.evolvePartitions(spark, store(r), "src", "p", Seq("id")),
-      wholeStore = true, resumable = true),
+      r => Layout.evolvePartitions(spark, store(r), "src", "p", Seq("id"))),
     Op("evolveCompact",
       r => Layout.writePartitioned(rows(0, 300), store(r), "src", Seq("id")),
-      r => Layout.evolveCompact(spark, store(r), "src", "p", Seq("id")),
-      wholeStore = true),
+      r => Layout.evolveCompact(spark, store(r), "src", "p", Seq("id"))),
     Op("vacuumRetention", { r =>
         // cutoff 10: d0 expired by its footers; d1 straddles it; d2 is all
         // below it, but its fractional stats read as unknown, so it is a
@@ -319,7 +311,7 @@ class CrashSpec extends SparkSuite {
         Layout.appendBatch(rows(150, 300), store(r), "p", Seq("id"))
       },
       r => Rollup.maintain(spark, store(r), s"$r/rollup", Seq("p"), Seq("x")),
-      stores = Seq("rollup"), wholeStore = true)
+      stores = Seq("rollup"))
   )
 
   ops.foreach { c =>
@@ -329,68 +321,20 @@ class CrashSpec extends SparkSuite {
     }
   }
 
-  // ---- PointerStore: readers never need the repair ----------------------
-
-  private case class PtrOp(name: String, build: String => Unit,
-      op: String => Long)
-
-  private def ptrState(dir: String): (Option[Long], String) =
-    (PointerStore.currentVersion(dir), {
-      val df = PointerStore.read(spark, dir)
-      val hs = df.select(xxhash64(df.columns.sorted.map(col): _*))
-        .collect().map(_.getLong(0))
-      s"${hs.length} rows, Σxxhash64 ${hs.sum}"
-    })
-
-  private def ptrStore(r: String): Unit = {
-    Layout.writePartitioned(rows(0, 300), store(r), "p", Seq("id"))
-    PointerStore.init(store(r))
-  }
-
-  private val ptrOps = Seq(
-    PtrOp("append", ptrStore,
-      r => PointerStore.append(rows(300, 330), store(r), "p", Seq("id"))),
-    PtrOp("compact", { r =>
-        ptrStore(r)
-        PointerStore.append(rows(300, 330), store(r), "p", Seq("id"))
-      },
-      r => PointerStore.compact(spark, store(r), Seq("id"))),
-    PtrOp("rewriteAll", ptrStore,
-      r => PointerStore.rewriteAll(spark, store(r), "src", Seq("id")))
-  )
-
-  ptrOps.foreach { c =>
-    test(s"PointerStore.${c.name}: readers see the pre- or post-state at " +
-        "every crash point; recover + retry gives the post-state") {
-      val template = freshRoot()
-      c.build(template)
-      val pre = ptrState(store(template))
-      val clean = copyOf(template)
-      val n = Faults.count(clean)(c.op(clean))
-      val post = ptrState(store(clean))
-      assert(n >= 1 && post._1 === pre._1.map(_ + 1L))
-      info(s"PointerStore.${c.name}: $n mutations, each one a crash point")
-      for (k <- 1 to n) {
-        val root = copyOf(template)
-        val run = Faults.run(root, k)(c.op(root))
-        withClue(s"PointerStore.${c.name}, crash at mutation $k of $n " +
-            s"(${run.crashedAt.getOrElse("never reached")}):") {
-          if (run.crashedAt.isEmpty) {
-            run.error.foreach(throw _)
-            assert(ptrState(store(root)) === post)
-          } else {
-            assert(run.error.exists(Faults.injected))
-            val seen = ptrState(store(root))
-            assert(seen == pre || seen == post, s"reader saw $seen")
-            PointerStore.recover(store(root))
-            c.op(root)
-            assert(ptrState(store(root)) === post, "retry")
-            assert(!names(new File(store(root))).exists(_.startsWith("_stage_")))
-          }
-        }
-        FileUtils.deleteDirectory(new File(root))
+  test("a reader resolved before a commit returns the pre-state after it") {
+    ops.foreach { c =>
+      val root = freshRoot()
+      c.build(root)
+      withClue(s"${c.name}:") {
+        val pinned = c.stores.map(s => Layout.read(spark, s"$root/$s"))
+        val pre = pinned.map(digest)
+        val before = c.stores.map(s => PointerStore.currentVersion(s"$root/$s"))
+        c.op(root)
+        assert(c.stores.map(s => PointerStore.currentVersion(s"$root/$s")) !=
+          before, "the op published no commit")
+        assert(pinned.map(digest) === pre)
       }
-      Seq(template, clean).foreach(d => FileUtils.deleteDirectory(new File(d)))
+      FileUtils.deleteDirectory(new File(root))
     }
   }
 }

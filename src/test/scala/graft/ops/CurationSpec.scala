@@ -34,7 +34,6 @@ class CurationSpec extends SparkSuite {
   }
 
   test("packByBudget: shard weights bounded; matches the graded query's shards") {
-    import org.apache.spark.sql.expressions.Window
     val ntok = size(regexp_extract_all(col("text"), lit("\\S+"), lit(0))).cast("long")
     val in = docs.select(col("lang"), col("doc_id"), ntok.as("n_tok"))
     val got = Curation.packByBudget(in, "lang", "doc_id", "n_tok", 2048L)

@@ -76,7 +76,6 @@ object DedupProperties extends Properties("graft.ops.Dedup") {
       val df = corpus.toDF("id", "text")
       val fp = Dedup.simhash64(df, "id", "text")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val textOf = corpus.toMap
       corpus.forall { case (a, ta) =>
         corpus.forall { case (b, tb) =>
           a >= b || ta != tb || fp(a) == fp(b)

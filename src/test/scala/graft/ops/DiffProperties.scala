@@ -33,7 +33,6 @@ object DiffProperties extends Properties("graft.ops.Diff") {
   } yield (a, b)
 
   private def toDf(rows: List[(Option[Long], Option[String], Long)]) = {
-    import spark.implicits._
     // via DF with explicit schema so an all-None column stays typed
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(r =>

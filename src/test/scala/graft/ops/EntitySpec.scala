@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 
 /** Entity.editPairs' PassJoin segment blocking vs a local brute force —

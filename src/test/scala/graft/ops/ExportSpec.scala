@@ -72,8 +72,6 @@ class ExportSpec extends SparkSuite {
       Seq(col("doc_id").asc), "n_chars", target)
     // semantic twin: exclusive running sum via a no-partition window
     // (fine at spec scale), shard = before div target
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("doc_id").asc)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     val ref = docs.select("doc_id", "n_chars")
       .withColumn("shard",
         expr(s"coalesce(sum(n_chars) OVER (ORDER BY doc_id ROWS BETWEEN " +

@@ -69,7 +69,7 @@ object LayoutProperties extends Properties("graft.ops.Layout") {
         Layout.commitCheckpoint(dir, "prop", upTo)
       }
       val consumeOk = disjoint && seen == expected.keySet
-      val all = spark.read.parquet(dir)
+      val all = Layout.read(spark, dir)
         .select("id", "ingest_batch").collect()
         .map(r => r.getLong(0) -> r.getAs[Number](1).longValue).toMap
       val fullOk = all == expected
@@ -123,7 +123,7 @@ object LayoutProperties extends Properties("graft.ops.Layout") {
       val batchAddrs = batch.map(b => (b._2, b._1)).toSet
       val expected = (store.filterNot(r => batchAddrs((r._2, r._1))) ++
         batch).groupBy(identity).view.mapValues(_.size).toMap
-      val got = spark.read.parquet(dir)
+      val got = Layout.read(spark, dir)
         .select("id", "part", "payload").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
         .groupBy(identity).view.mapValues(_.size).toMap

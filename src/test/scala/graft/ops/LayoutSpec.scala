@@ -40,7 +40,7 @@ class LayoutSpec extends SparkSuite {
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val pruned = spark.read.parquet(dir).filter(col("lang") === "en")
+      val pruned = Layout.read(spark, dir).filter(col("lang") === "en")
       // collect() (not count()) so the inspected queryExecution is the one
       // that actually ran — count() plans a separate aggregate query
       val n = pruned.collect().length.toLong
@@ -65,9 +65,10 @@ class LayoutSpec extends SparkSuite {
     val after = Layout.filesPerPartition(dir)
     assert(after.values.forall(_ == 1), s"compaction left multiple files: $after")
 
-    // every row survived the rewrite-and-swap, and files are sorted inside:
-    // reading one file's rows in file order must show non-decreasing doc_id
-    val back = spark.read.parquet(dir)
+    // every row survived the rewrite-and-commit, and files are sorted
+    // inside: reading one file's rows in file order must show
+    // non-decreasing doc_id
+    val back = Layout.read(spark, dir)
     assert(back.count() === docs.count())
     val oneFile = back.inputFiles.head
     val ids = spark.read.parquet(oneFile).select("doc_id")
@@ -89,6 +90,68 @@ class LayoutSpec extends SparkSuite {
       docs.filter(col("lang") === "en").count())
   }
 
+  test("Database.open reads each store through its commit: a compacted " +
+      "store once, a store caught mid-commit as its pre-state") {
+    val dbDir = java.nio.file.Files.createTempDirectory("layout_db_").toFile
+    dbDir.deleteOnExit()
+    val (even, odd) = (docs.filter(col("doc_id") % 2 === 0),
+      docs.filter(col("doc_id") % 2 === 1))
+    // append + compact: the superseded fragments stay on disk (the
+    // previous version), and a directory read would count them twice
+    val compacted = new java.io.File(dbDir, "compacted").getAbsolutePath
+    Layout.writePartitioned(even, compacted, "lang", Seq("doc_id"))
+    Layout.append(odd, compacted, "lang", Seq("doc_id"))
+    Layout.compactPartitions(spark, compacted, Seq("doc_id"))
+    assert(PointerStore.dataFiles(compacted).size >
+      PointerStore.liveFiles(compacted).size, "no superseded file on disk")
+    // a store caught mid-commit: a staged dir, an orphan moved in, and a
+    // torn next commit
+    val crashed = new java.io.File(dbDir, "crashed").getAbsolutePath
+    Layout.writePartitioned(even, crashed, "lang", Seq("doc_id"))
+    val live = PointerStore.liveFiles(crashed)
+    Fs.writeBytes(Fs.path(s"$crashed/lang=en/part-orphan.parquet"),
+      Fs.readBytes(Fs.path(s"$crashed/${live.head}")))
+    Fs.mkdirs(Fs.path(s"$crashed/_stage_crashed/lang=en"))
+    Fs.writeBytes(Fs.path(s"$crashed/_stage_crashed/lang=en/part-0.parquet"),
+      Fs.readBytes(Fs.path(s"$crashed/${live.head}")))
+    Fs.writeUTF8(Fs.path(s"$crashed/_commits/v00000002.commit"),
+      "#graft-pointer v1\nlang=en/part-orphan.parquet")
+    val db = graft.api.Database.open(spark, dbDir.getAbsolutePath)
+    assert(db.tables === Seq("compacted", "crashed"))
+    assert(db("compacted").len === docs.count())
+    assert(db("crashed").len === even.count())
+    db.exit()
+
+    // a reopen after a new commit recomputes spilled stats, never serves
+    val spill = java.nio.file.Files.createTempDirectory("layout_spill_")
+      .toFile.getAbsolutePath
+    val first = graft.api.Database.open(spark, dbDir.getAbsolutePath,
+      cacheDir = spill)
+    def chars(df: org.apache.spark.sql.DataFrame): Double =
+      df.agg(sum("n_chars")).head().getLong(0).toDouble
+    assert(first("compacted").col("n_chars").sum === chars(docs))
+    first.exit()
+    val five = docs.orderBy("doc_id").limit(5)
+    Layout.append(five, compacted, "lang", Seq("doc_id"))
+    val again = graft.api.Database.open(spark, dbDir.getAbsolutePath,
+      cacheDir = spill)
+    assert(again.cache.size === 0, "a spill of the previous version was served")
+    assert(again("compacted").col("n_chars").sum ===
+      chars(docs) + chars(five))
+    again.exit()
+  }
+
+  test("append reads its batch once: an n-row batch into an absent store " +
+      "reads n input records") {
+    val dir = freshDir()
+    val n = docs.count()
+    val meter = new graft.QueryMeter(spark)
+    val s = try meter.measure(Layout.append(docs, dir, "lang", Seq("doc_id")))
+      finally meter.close()
+    assert(s.inputRecords === n)
+    assert(Layout.read(spark, dir).count() === n)
+  }
+
   test("append fragments one file per batch per dir; ingest screens store dups") {
     val dir = freshDir()
     val even = docs.filter(col("doc_id") % 2 === 0)
@@ -96,21 +159,20 @@ class LayoutSpec extends SparkSuite {
     // plain append of the odd half: every touched dir gains exactly 1 file
     Layout.append(docs.filter(col("doc_id") % 2 === 1), dir, "lang", Seq("doc_id"))
     assert(Layout.filesPerPartition(dir).values.forall(_ == 2))
-    assert(spark.read.parquet(dir).count() === docs.count())
+    assert(Layout.read(spark, dir).count() === docs.count())
     // screened ingest of the SAME corpus again: every text already present
     Layout.ingest(docs, dir, "lang", Seq("doc_id"), md5(col("text")))
-    assert(spark.read.parquet(dir).count() === docs.count(),
+    assert(Layout.read(spark, dir).count() === docs.count(),
       "re-ingesting already-stored content must append nothing")
     // a genuinely new row passes the screen
     val extra = docs.limit(1)
       .withColumn("doc_id", lit(999999L))
       .withColumn("text", lit("a string no other fixture doc contains xq"))
     Layout.ingest(extra, dir, "lang", Seq("doc_id"), md5(col("text")))
-    assert(spark.read.parquet(dir).count() === docs.count() + 1)
+    assert(Layout.read(spark, dir).count() === docs.count() + 1)
   }
 
   test("compactPartitions rewrites ONLY fragmented dirs, crash-recoverably") {
-    import java.nio.file.{Files, Paths}
     val dir = freshDir()
     Layout.writePartitioned(docs, dir, "lang", Seq("doc_id"))
     // fragment exactly ONE language by appending its slice again twice
@@ -134,26 +196,28 @@ class LayoutSpec extends SparkSuite {
     assert(after(s"lang=$hot") === 1, s"hot dir not compacted: $after")
     langs.tail.foreach(pd =>
       assert(listing(pd) === coldBefore(pd), s"cold dir $pd was touched"))
-    assert(spark.read.parquet(dir).count() === expected)
+    assert(Layout.read(spark, dir).count() === expected)
     // and rows inside the rewritten file are sorted
-    val ids = spark.read.parquet(s"$dir/lang=$hot")
+    val hotFile = PointerStore.liveFiles(dir).filter(_.startsWith(s"lang=$hot/"))
+    assert(hotFile.size === 1)
+    val ids = spark.read.parquet(s"$dir/${hotFile.head}")
       .select("doc_id").collect().map(_.getLong(0))
     assert(ids.sameElements(ids.sorted))
 
-    // a crash between the hot dir's two swap renames (injected at the 2nd
-    // filesystem mutation): the dot-prefixed aside and scratch are
-    // invisible to a plain reader, and recover rolls the swap back
+    // a crash after the hot dir's rewrite moved in, before its commit
+    // (injected at the 2nd filesystem mutation): the moved file is
+    // unreferenced, so a reader sees the whole pre-crash store, and
+    // recover reaps the stage leftover
     Layout.append(slice, dir, "lang", Seq("doc_id"))
     val crash =
       Faults.run(dir, 2)(Layout.compactPartitions(spark, dir, Seq("doc_id")))
     assert(crash.error.exists(Faults.injected))
-    assert(spark.read.parquet(dir).count() === expected - slice.count() * 3,
-      "reader mid-crash must see the store minus the in-flight partition, " +
-        "never a scratch dir parsed as a partition value")
-    Layout.recover(dir)
-    assert(!Files.exists(Paths.get(s"$dir/.__old__lang=$hot")))
-    assert(!Files.exists(Paths.get(s"$dir/.__next__lang=$hot")))
-    assert(spark.read.parquet(dir).count() === expected + slice.count())
+    assert(Layout.read(spark, dir).count() === expected + slice.count(),
+      "reader mid-crash must see the last committed store, never a " +
+        "moved-in uncommitted file")
+    PointerStore.recover(dir)
+    assert(!new java.io.File(dir).list().exists(_.startsWith("_stage_")))
+    assert(Layout.read(spark, dir).count() === expected + slice.count())
   }
 
   test("ingest: null keys screen null-safely; absent store degrades to append") {
@@ -162,13 +226,13 @@ class LayoutSpec extends SparkSuite {
       .withColumn("text", when(col("doc_id") % 2 === 0, col("text")))
     // absent store dir: ingest must not throw, it IS the first append
     Layout.ingest(twoNulls, dir, "lang", Seq("doc_id"), md5(col("text")))
-    val n = spark.read.parquet(dir).count()
+    val n = Layout.read(spark, dir).count()
     assert(n === 4)
     // re-ingest the same batch: the NULL-key rows must ALSO be screened
     // (null-safe compare) — a plain equi-anti-join would re-append them
     // on every ingest forever
     Layout.ingest(twoNulls, dir, "lang", Seq("doc_id"), md5(col("text")))
-    assert(spark.read.parquet(dir).count() === n,
+    assert(Layout.read(spark, dir).count() === n,
       "null-key rows duplicated on re-ingest: key compare is not null-safe")
   }
 
@@ -181,8 +245,8 @@ class LayoutSpec extends SparkSuite {
     Layout.writePartitioned(seed, dirB, "lang", Seq("doc_id"))
     Layout.ingest(batch, dirA, "lang", Seq("doc_id"), md5(col("text")))
     Layout.ingestBloom(batch, dirB, "lang", Seq("doc_id"), md5(col("text")))
-    val a = spark.read.parquet(dirA)
-    val b = spark.read.parquet(dirB)
+    val a = Layout.read(spark, dirA)
+    val b = Layout.read(spark, dirB)
     assert(a.count() === b.count())
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "bloom-prefiltered ingest diverged from the exact screen")
@@ -198,7 +262,7 @@ class LayoutSpec extends SparkSuite {
     assert(Layout.appendBatch(b2, dir, "lang", Seq("doc_id")) === 2L)
     assert(Layout.nextBatchId(dir) === 3L)
     // full read sees everything; incremental read sees batches 1..2 only
-    assert(spark.read.parquet(dir).count() === docs.count())
+    assert(Layout.read(spark, dir).count() === docs.count())
     val since1 = Layout.readSince(spark, dir, 1L)
     assert(since1.count() === b1.count() + b2.count())
     // and the batch filter prunes at the DIRECTORY level: the scan opens
@@ -207,7 +271,7 @@ class LayoutSpec extends SparkSuite {
     val aqeBefore = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val totalFiles = spark.read.parquet(dir).inputFiles.length
+      val totalFiles = Layout.read(spark, dir).inputFiles.length
       val pruned = Layout.readSince(spark, dir, 2L)
       val n = pruned.collect().length.toLong
       assert(n === b2.count())
@@ -284,7 +348,7 @@ class LayoutSpec extends SparkSuite {
       pmod(col("doc_id"), lit(4)).cast("string"))
     Layout.writePartitioned(df, dir, "shard", Seq("doc_id"))
     Layout.append(df.limit(7), dir, "shard", Seq("doc_id"))
-    assert(spark.read.parquet(dir).count() === docs.count() + 7)
+    assert(Layout.read(spark, dir).count() === docs.count() + 7)
   }
 
   test("empty batches: no phantom ids, no schema-less stores, readNew before first batch") {
@@ -326,7 +390,7 @@ class LayoutSpec extends SparkSuite {
       "lang", Seq("doc_id"), Seq("doc_id"))
     assert(touched.toSet === Set("lang=en", "lang=fr"))
     assert(dirFiles("lang=de") === deBefore, "untouched dir was rewritten")
-    val after = spark.read.parquet(dir)
+    val after = Layout.read(spark, dir)
     assert(after.filter(col("source") === "upd").count() === 1L)
     assert(after.filter(col("source") === "ins").count() === 1L)
     assert(after.count() === base.count() + 1L) // one insert, one replace
@@ -351,7 +415,7 @@ class LayoutSpec extends SparkSuite {
     val snap = after.orderBy("lang", "doc_id").collect()
     Layout.merge(updates.unionByName(inserts), dir,
       "lang", Seq("doc_id"), Seq("doc_id"))
-    assert(spark.read.parquet(dir).orderBy("lang", "doc_id").collect()
+    assert(Layout.read(spark, dir).orderBy("lang", "doc_id").collect()
       .sameElements(snap))
   }
 
@@ -372,7 +436,7 @@ class LayoutSpec extends SparkSuite {
       .withColumn("source", lit("fr_ins"))
     Layout.merge(moved.unionByName(frIns), dir,
       "lang", Seq("doc_id"), Seq("doc_id"))
-    val after = spark.read.parquet(dir)
+    val after = Layout.read(spark, dir)
     // the original fr row with key K is untouched (even though lang=fr was
     // rewritten for the insert), and the en copy landed
     assert(after.filter(col("doc_id") === k && col("lang") === "fr")
@@ -408,7 +472,7 @@ class LayoutSpec extends SparkSuite {
     // and a later REAL merge still initializes the store normally
     Layout.merge(docs.filter(col("lang") === "en"), dir, "lang",
       Seq("doc_id"), Seq("doc_id"))
-    assert(spark.read.parquet(dir).count() ===
+    assert(Layout.read(spark, dir).count() ===
       docs.filter(col("lang") === "en").count())
   }
 
@@ -416,7 +480,7 @@ class LayoutSpec extends SparkSuite {
     val dir = freshDir()
     val third = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
     val touched = Layout.merge(third, dir, "lang", Seq("doc_id"), Seq("doc_id"))
-    assert(touched.nonEmpty && spark.read.parquet(dir).count() === third.count())
+    assert(touched.nonEmpty && Layout.read(spark, dir).count() === third.count())
     // versioned store: snapshot at batch 0 must not see batch 1
     val vdir = freshDir()
     Layout.appendBatch(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
@@ -436,7 +500,7 @@ class LayoutSpec extends SparkSuite {
     Layout.merge(docs.orderBy("doc_id").limit(10), dir, "lang",
       Seq("doc_id"), Seq("doc_id"))
     assert(Layout.consumers(dir) === Map("early" -> -1L))
-    assert(spark.read.parquet(dir).count() === 10L)
+    assert(Layout.read(spark, dir).count() === 10L)
   }
 
   test("a first merge screens its batch like every later merge") {
@@ -462,7 +526,7 @@ class LayoutSpec extends SparkSuite {
     Layout.writePartitioned(rows, dir, "day", Seq("id"))
     val scratch = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     Fs.beforeMutation = (_, p) =>
-      if (p.getName.startsWith(".__next__")) { scratch.add(p.toString); () }
+      if (p.toString.contains("/_stage_")) { scratch.add(p.toString); () }
     val (deleted, rewritten) =
       try Layout.vacuumRetention(spark, dir, "ts", 100L, Seq("id"))
       finally Fs.beforeMutation = (_, _) => ()
@@ -476,40 +540,39 @@ class LayoutSpec extends SparkSuite {
     Layout.writePartitioned(docs, dir, "source", Seq("doc_id"))
     val processed = Layout.evolvePartitions(spark, dir, "source", "lang", Seq("doc_id"))
     assert(processed.nonEmpty)
-    val back = spark.read.parquet(dir)
+    val back = Layout.read(spark, dir)
     // new layout: lang= dirs, source survives as a data column
     assert(Layout.filesPerPartition(dir).keys.forall(_.startsWith("lang=")))
     assert(back.columns.contains("source") && back.columns.contains("lang"))
-    val orig = docs.select(back.columns.map(col): _*)
+    val orig = docs.select(back.columns.toSeq.map(col): _*)
     assert(back.count() === orig.count())
     assert(back.exceptAll(orig).isEmpty && orig.exceptAll(back).isEmpty)
-    // no scratch/marker leftovers
-    assert(!new java.io.File(dir + "__evolving").exists())
-    assert(!new java.io.File(dir, "._evolve_done").exists())
+    // no stage leftovers
+    assert(!new java.io.File(dir).list().exists(_.startsWith("_stage_")))
   }
 
   test("atomic-write temps of dot-prefixed files are single-dotted and reaped by recovery") {
-    // r15 advice: `.` + `._evolve_done` + `.tmp` = `.._evolve_done.tmp`,
-    // which a `._evolve_done.tmp`-only delete missed — a crash
-    // between writeUTF8 and renameReplace then rode the whole-store swap
-    // into the live dir as a stray dotfile.
-    val p = Fs.path(new java.io.File(freshDir(), "._evolve_done").getAbsolutePath)
-    assert(Fs.tmpFor(p).getName === "._evolve_done.tmp") // no double dot
+    // `.` + `._name` + `.tmp` would be `.._name.tmp`, which a
+    // `._name.tmp`-only sweep misses. A crash between a checkpoint's
+    // writeUTF8 and its renameReplace leaves the temp in the sidecar dir.
+    val p = Fs.path(new java.io.File(freshDir(), "._hidden").getAbsolutePath)
+    assert(Fs.tmpFor(p).getName === "._hidden.tmp") // no double dot
     assert(Fs.tmpFor(Fs.path("/x/manifest.json")).getName === ".manifest.json.tmp")
     val dir = freshDir()
     Layout.writePartitioned(docs, dir, "source", Seq("doc_id"))
     val expected = docs.count()
-    val scratch = new java.io.File(dir + "__evolving")
-    scratch.mkdirs()
-    // crash leftovers: the tmpFor name AND a legacy double-dotted one
-    java.nio.file.Files.write(new java.io.File(scratch, "._evolve_done.tmp").toPath,
+    Layout.commitCheckpoint(dir, "._hidden", 3L)
+    val sidecar = new java.io.File(dir, "_graft_checkpoints")
+    // crash leftovers: the tmpFor name AND a double-dotted one
+    java.nio.file.Files.write(new java.io.File(sidecar, "._hidden.tmp").toPath,
       "partial".getBytes("UTF-8"))
-    java.nio.file.Files.write(new java.io.File(scratch, ".._evolve_done.tmp").toPath,
+    java.nio.file.Files.write(new java.io.File(sidecar, ".._hidden.tmp").toPath,
       "partial".getBytes("UTF-8"))
-    Layout.recover(dir)
-    assert(Option(scratch.listFiles()).getOrElse(Array.empty)
+    PointerStore.recover(dir)
+    assert(Option(sidecar.listFiles()).getOrElse(Array.empty)
       .forall(f => !f.getName.endsWith(".tmp")), "recovery must reap .*.tmp")
-    assert(spark.read.parquet(dir).count() === expected)
+    assert(Layout.lastCheckpoint(dir, "._hidden") === 3L)
+    assert(Layout.read(spark, dir).count() === expected)
   }
 
   test("evolveCompact re-keys losslessly in ONE pass and leaves one file per target dir") {
@@ -530,12 +593,11 @@ class LayoutSpec extends SparkSuite {
     val fpp = Layout.filesPerPartition(dir)
     assert(fpp.keys.forall(_.startsWith("lang=")))
     assert(fpp.values.forall(_ == 1), s"expected 1 file/dir, got $fpp")
-    val back = spark.read.parquet(dir)
+    val back = Layout.read(spark, dir)
     assert(back.columns.contains("source") && back.columns.contains("lang"))
-    val orig = docs.select(back.columns.map(col): _*)
+    val orig = docs.select(back.columns.toSeq.map(col): _*)
     assert(back.exceptAll(orig).isEmpty && orig.exceptAll(back).isEmpty)
-    assert(!new java.io.File(dir + "__next").exists())
-    assert(!new java.io.File(dir + "__old").exists())
+    assert(!new java.io.File(dir).list().exists(_.startsWith("_stage_")))
   }
 
   test("vacuumRetention: expired dirs dropped via footers, boundary rewritten, live untouched") {
@@ -567,7 +629,7 @@ class LayoutSpec extends SparkSuite {
     // every surviving non-null row is >= cutoff, none were lost, and BOTH
     // NULL-ms rows survived (their host dir was otherwise fully expired,
     // so it was rewritten down to just them, not deleted)
-    val back = spark.read.parquet(dir)
+    val back = Layout.read(spark, dir)
     assert(back.filter(col("ms") < cutoff).count() === 0L)
     assert(back.filter(col("ms").isNull).count() === 2L)
     assert(back.count() === ev.filter(col("ms") >= cutoff).count() + 2L)
@@ -592,20 +654,20 @@ class LayoutSpec extends SparkSuite {
     // first run evolves every directory
     val r1 = Layout.addColumn(spark, dir, "n2", "n_chars * 2", Seq("doc_id"))
     assert(r1.toSet === dirs.toSet)
-    val back = spark.read.parquet(dir)
+    val back = Layout.read(spark, dir)
     assert(back.count() === total)
     assert(back.filter(col("n2") =!= col("n_chars") * 2).count() === 0L)
     // idempotent: second run skips everything
     assert(Layout.addColumn(spark, dir, "n2", "n_chars * 2", Seq("doc_id")).isEmpty)
-    // a NEW backfill crashes at its 2nd filesystem mutation, so no
-    // directory finished its swap; the re-run recovers first and still
-    // covers every directory exactly once
+    // a NEW backfill crashes at its 2nd filesystem mutation, before its
+    // commit: the old version stays live, and the re-run covers every
+    // directory exactly once
     val crash = Faults.run(dir, 2)(
       Layout.addColumn(spark, dir, "n3", "n_chars + 1", Seq("doc_id")))
     assert(crash.error.exists(Faults.injected))
     val r2 = Layout.addColumn(spark, dir, "n3", "n_chars + 1", Seq("doc_id"))
     assert(r2.toSet === dirs.toSet)
-    val back2 = spark.read.parquet(dir)
+    val back2 = Layout.read(spark, dir)
     assert(back2.count() === total)
     assert(back2.filter(col("n3") =!= col("n_chars") + 1).count() === 0L)
     // multi-column backfill: one rewrite adds both; the already-present
@@ -613,7 +675,7 @@ class LayoutSpec extends SparkSuite {
     val r3 = Layout.addColumns(spark, dir,
       Seq("n4" -> "n_chars * 3", "n2" -> "n_chars * 99"), Seq("doc_id"))
     assert(r3.toSet === dirs.toSet)
-    val back3 = spark.read.parquet(dir)
+    val back3 = Layout.read(spark, dir)
     assert(back3.filter(col("n4") =!= col("n_chars") * 3).count() === 0L)
     assert(back3.filter(col("n2") =!= col("n_chars") * 2).count() === 0L,
       "existing column must keep stored values")
@@ -626,7 +688,7 @@ class LayoutSpec extends SparkSuite {
     assert(Layout.filesPerPartition(dir2).values.max > 1)
     Layout.compactPartitions(spark, dir2, Seq("doc_id"))
     assert(Layout.filesPerPartition(dir2).values.forall(_ == 1))
-    assert(spark.read.parquet(dir2).count() === total)
+    assert(Layout.read(spark, dir2).count() === total)
   }
 
   test("size-targeted compaction splits a hot directory into parallel " +
@@ -637,7 +699,7 @@ class LayoutSpec extends SparkSuite {
       maxRecordsPerFile = 8L)
     val before = Layout.filesPerPartition(dir)
     assert(before.values.max > 3, s"need real fragmentation, got $before")
-    val total = spark.read.parquet(dir).count()
+    val total = Layout.read(spark, dir).count()
     // target ~1/3 of the hottest directory's bytes per file → every dir
     // rewrites as >=2 parallel range-partitioned runs (if big enough)
     val hot = before.maxBy(_._2)._1
@@ -651,15 +713,14 @@ class LayoutSpec extends SparkSuite {
     val after = Layout.filesPerPartition(dir)
     assert(after(hot) >= 2 && after(hot) < before(hot),
       s"expected 2..${before(hot) - 1} files for $hot, got ${after(hot)}")
-    assert(spark.read.parquet(dir).count() === total, "rows lost in re-split")
+    assert(Layout.read(spark, dir).count() === total, "rows lost in re-split")
     // the parallel runs are DISJOINT sorted ranges on the sort key — the
     // property that keeps per-file min/max tight for later skipping
-    val ranges = Option(new java.io.File(s"$dir/$hot").listFiles())
-      .getOrElse(Array.empty)
-      .filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
-        val ids = spark.read.parquet(f.getAbsolutePath).select("doc_id")
+    val ranges = PointerStore.liveFiles(dir).filter(_.startsWith(s"$hot/"))
+      .map { f =>
+        val ids = spark.read.parquet(s"$dir/$f").select("doc_id")
           .collect().map(_.getLong(0))
-        assert(ids.sameElements(ids.sorted), s"${f.getName} not sorted")
+        assert(ids.sameElements(ids.sorted), s"$f not sorted")
         (ids.min, ids.max)
       }.sortBy(_._1)
     ranges.sliding(2).foreach {
@@ -685,10 +746,10 @@ class LayoutSpec extends SparkSuite {
         targetFileBytes = target)
     }
     assert(sel.isEmpty, "size-targeted compaction did not reach a fixpoint")
-    assert(spark.read.parquet(dir).count() === total)
+    assert(Layout.read(spark, dir).count() === total)
     // recovery on the healthy multi-file store is a no-op
-    Layout.recover(dir)
-    assert(spark.read.parquet(dir).count() === total)
+    PointerStore.recover(dir)
+    assert(Layout.read(spark, dir).count() === total)
   }
 
   test("the whole maintenance cycle runs through a scheme-qualified " +
@@ -696,17 +757,17 @@ class LayoutSpec extends SparkSuite {
     val local = freshDir()
     val dir = "file:" + local // scheme-qualified from here on
     Layout.writePartitioned(docs, dir, "lang", Seq("doc_id"))
-    val total = spark.read.parquet(dir).count()
+    val total = Layout.read(spark, dir).count()
     // append + fragmentation + per-dir compaction
     Layout.append(docs.limit(50), dir, "lang", Seq("doc_id"))
     assert(Layout.filesPerPartition(dir).values.max > 1)
     val compacted = Layout.compactPartitions(spark, dir, Seq("doc_id"))
     assert(compacted.nonEmpty)
     assert(Layout.filesPerPartition(dir).values.forall(_ == 1))
-    assert(spark.read.parquet(dir).count() === total + 50L)
-    // whole-store compact (rename-aside swap through the Hadoop API)
+    assert(Layout.read(spark, dir).count() === total + 50L)
+    // whole-store compact (one commit through the Hadoop API)
     Layout.compact(spark, dir, "lang", Seq("doc_id"))
-    assert(spark.read.parquet(dir).count() === total + 50L)
+    assert(Layout.read(spark, dir).count() === total + 50L)
     // batch-versioned store + consumer checkpoints on file: paths
     val vdir = "file:" + freshDir()
     val b0 = Layout.appendBatch(docs.limit(20), vdir, "lang", Seq("doc_id"))
@@ -723,7 +784,7 @@ class LayoutSpec extends SparkSuite {
     val (del, rew) = Layout.vacuumRetention(spark, dir, "doc_id",
       cutoff = 5L, Seq("doc_id"))
     assert(del.nonEmpty || rew.nonEmpty)
-    assert(spark.read.parquet(dir).filter(col("doc_id") < 5L).count() === 0L)
+    assert(Layout.read(spark, dir).filter(col("doc_id") < 5L).count() === 0L)
   }
 
   test("ORC round trip preserves rows and schema") {

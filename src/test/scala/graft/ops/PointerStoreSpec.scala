@@ -4,13 +4,13 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 
-/** The manifest-pointer commit layer: versioned live-file pointers replace
-  * directory renames, so the maintenance family runs where [[Fs.rename]]
-  * refuses (object stores). Data equality of the read path is additionally
-  * under the DuckDB hash gate (SinkOps q_pointer_roundtrip /
-  * q_pointer_rewrite); this spec owns the PROTOCOL claims: versioning,
-  * crash-mid-commit, crash-mid-stage, orphan retirement, and the
-  * object-store-scheme end-to-end that the rename protocol cannot do.
+/** The manifest-pointer commit layer every [[Layout]] write publishes
+  * through: versioned live-file pointers replace directory renames, so the
+  * maintenance family runs on object stores too. Data equality of the read
+  * path is additionally under the DuckDB hash gate (SinkOps
+  * q_pointer_roundtrip / q_pointer_rewrite); this spec owns the PROTOCOL
+  * claims: versioning, crash-mid-commit, crash-mid-stage, orphan
+  * retirement, and the object-store-scheme end-to-end.
   */
 class PointerStoreSpec extends SparkSuite {
 
@@ -24,21 +24,28 @@ class PointerStoreSpec extends SparkSuite {
 
   private def assertSameData(dir: String,
       expected: org.apache.spark.sql.DataFrame): Unit = {
-    val back = PointerStore.read(spark, dir)
-    val exp = expected.select(back.columns.map(col): _*)
+    val back = Layout.read(spark, dir)
+    val exp = expected.select(back.columns.toSeq.map(col): _*)
     assert(back.count() === exp.count())
     assert(back.exceptAll(exp).isEmpty && exp.exceptAll(back).isEmpty)
   }
 
-  test("init adopts a partitioned store; read serves exactly the live set") {
+  test("writePartitioned commits v1, plain dirs adopt; read serves exactly " +
+      "the live set") {
     val dir = freshDir()
     Layout.writePartitioned(docs, dir, "lang", Seq("doc_id"))
-    assert(PointerStore.init(dir) === 1L)
     assert(PointerStore.currentVersion(dir).contains(1L))
     assert(PointerStore.liveFiles(dir).forall(_.startsWith("lang=")))
     assertSameData(dir, docs)
-    // init is once
-    intercept[IllegalArgumentException](PointerStore.init(dir))
+    // a plain partitioned directory (no _commits) reads as its data files,
+    // and its first write adopts them into v1
+    val plain = freshDir()
+    docs.write.partitionBy("lang").parquet(plain)
+    assert(PointerStore.currentVersion(plain).isEmpty)
+    assertSameData(plain, docs)
+    Layout.append(docs.limit(3), plain, "lang", Seq("doc_id"))
+    assert(PointerStore.currentVersion(plain).contains(1L))
+    assert(Layout.read(spark, plain).count() === docs.count() + 3)
   }
 
   test("append publishes new files with ONE commit write; old version intact") {
@@ -46,13 +53,16 @@ class PointerStoreSpec extends SparkSuite {
     val (a, b) = (docs.filter(col("doc_id") % 2 === 0),
       docs.filter(col("doc_id") % 2 =!= 0))
     Layout.writePartitioned(a, dir, "lang", Seq("doc_id"))
-    PointerStore.init(dir)
     val v1Live = PointerStore.liveFiles(dir).toSet
-    assert(PointerStore.append(b, dir, "lang", Seq("doc_id")) === 2L)
+    val commits = Faults.count(s"$dir/_commits")(
+      Layout.append(b, dir, "lang", Seq("doc_id")))
+    assert(commits === 1)
+    assert(PointerStore.currentVersion(dir).contains(2L))
     assertSameData(dir, docs)
     // v1 still resolves to exactly its old set (pinned-reader guarantee)
     val v2Live = PointerStore.liveFiles(dir).toSet
     assert(v1Live.subsetOf(v2Live) && v2Live.size > v1Live.size)
+    assert(PointerStore.readVersion(spark, dir, 1L).count() === a.count())
   }
 
   test("compact rewrites fragmented dirs, retires fragments only at vacuum") {
@@ -60,32 +70,32 @@ class PointerStoreSpec extends SparkSuite {
     val perFile = (docs.count() / 40L + 1L) max 16L
     Layout.writePartitioned(docs, dir, "lang", Seq("doc_id"),
       maxRecordsPerFile = perFile)
-    PointerStore.init(dir)
     val before = PointerStore.liveFiles(dir)
     assert(before.groupBy(_.split('/').head).values.exists(_.size > 1),
       "need a fragmented store for the compaction claim")
-    val v = PointerStore.compact(spark, dir, Seq("doc_id"))
-    assert(v === 2L)
+    assert(Layout.compactPartitions(spark, dir, Seq("doc_id")).nonEmpty)
+    assert(PointerStore.currentVersion(dir).contains(2L))
     val after = PointerStore.liveFiles(dir)
     assert(after.groupBy(_.split('/').head).values.forall(_.size == 1),
       s"expected 1 live file per dir, got $after")
     assertSameData(dir, docs)
-    // fragments are STILL ON DISK (old commit readable) until vacuum
+    // fragments are STILL ON DISK (old commit readable): the write's own
+    // vacuum keeps one previous version
     assert(before.forall(f => Fs.isFile(Fs.path(s"$dir/$f"))))
     val deleted = PointerStore.vacuumOrphans(dir, keepCommits = 1)
     assert(deleted.toSet === before.toSet -- after)
     assert(deleted.forall(f => !Fs.exists(Fs.path(s"$dir/$f"))))
     assertSameData(dir, docs)
     // compacting an already-compact store burns no commit
-    assert(PointerStore.compact(spark, dir, Seq("doc_id")) === 2L)
+    assert(Layout.compactPartitions(spark, dir, Seq("doc_id")).isEmpty)
+    assert(PointerStore.currentVersion(dir).contains(2L))
   }
 
-  test("rewriteAll re-partitions the whole store with a pointer flip") {
+  test("evolveCompact re-partitions the whole store with a pointer flip") {
     val dir = freshDir()
     Layout.writePartitioned(docs, dir, "lang", Seq("doc_id"))
-    PointerStore.init(dir)
-    val v = PointerStore.rewriteAll(spark, dir, "source", Seq("doc_id"))
-    assert(v === 2L)
+    Layout.evolveCompact(spark, dir, "lang", "source", Seq("doc_id"))
+    assert(PointerStore.currentVersion(dir).contains(2L))
     assert(PointerStore.liveFiles(dir).forall(_.startsWith("source=")))
     assertSameData(dir, docs)
     // old lang= files retire at vacuum, and their now-empty dirs go too
@@ -101,14 +111,13 @@ class PointerStoreSpec extends SparkSuite {
     val dir = freshDir()
     val evens = docs.filter(col("doc_id") % 2 === 0)
     Layout.writePartitioned(evens, dir, "lang", Seq("doc_id"))
-    PointerStore.init(dir)
-    PointerStore.append(docs.filter(col("doc_id") % 2 =!= 0),
+    Layout.append(docs.filter(col("doc_id") % 2 =!= 0),
       dir, "lang", Seq("doc_id"))
     // v1 = evens, v2 = everything — both resolvable while retained
     assert(PointerStore.readVersion(spark, dir, 1L).count() === evens.count())
     assert(PointerStore.readVersion(spark, dir, 2L).count() === docs.count())
     val v1 = PointerStore.readVersion(spark, dir, 1L)
-    assert(v1.exceptAll(evens.select(v1.columns.map(col): _*)).isEmpty)
+    assert(v1.exceptAll(evens.select(v1.columns.toSeq.map(col): _*)).isEmpty)
     // past the window, the version is gone LOUDLY (not empty-silently)
     PointerStore.vacuumOrphans(dir, keepCommits = 1)
     intercept[IllegalArgumentException](
@@ -119,7 +128,6 @@ class PointerStoreSpec extends SparkSuite {
   test("crash mid-commit: torn pointer is ignored, recovered, and retryable") {
     val dir = freshDir()
     Layout.writePartitioned(docs, dir, "lang", Seq("doc_id"))
-    PointerStore.init(dir)
     // a torn v2: header + half a file list, NO trailer — the exact on-disk
     // state of a crash (or a reader racing a slow non-atomic PUT)
     val torn = Fs.path(s"$dir/_commits/v00000002.commit")
@@ -132,15 +140,15 @@ class PointerStoreSpec extends SparkSuite {
     assert(!Fs.exists(torn))
     // and a fresh torn fragment does NOT deadlock the next commit either
     Fs.writeUTF8(torn, "#graft-pointer v1\nlang=en/bogus.parquet")
-    val v = PointerStore.append(docs.limit(5), dir, "lang", Seq("doc_id"))
-    assert(v === 2L && PointerStore.currentVersion(dir).contains(2L))
+    Layout.append(docs.limit(5), dir, "lang", Seq("doc_id"))
+    assert(PointerStore.currentVersion(dir).contains(2L))
+    assert(Layout.read(spark, dir).count() === docs.count() + 5)
   }
 
   test("crash mid-stage: moved-but-uncommitted files stay invisible, vacuum reaps") {
     val dir = freshDir()
     Layout.writePartitioned(docs, dir, "lang", Seq("doc_id"))
-    PointerStore.init(dir)
-    val n0 = PointerStore.read(spark, dir).count()
+    val n0 = Layout.read(spark, dir).count()
     // simulate: a new data file fully moved into a partition dir + a stage
     // leftover, with NO commit naming them (crash between move and publish)
     val live = PointerStore.liveFiles(dir)
@@ -150,56 +158,54 @@ class PointerStoreSpec extends SparkSuite {
     Fs.mkdirs(Fs.path(s"$dir/_stage_v2append/lang=en"))
     // invisible to the read path (plain spark.read.parquet(dir) would
     // double-count — exactly why the pointer is the read path)
-    assert(PointerStore.read(spark, dir).count() === n0)
+    assert(Layout.read(spark, dir).count() === n0)
     val deleted = PointerStore.vacuumOrphans(dir)
     assert(deleted.contains("lang=en/part-orphan-uncommitted.parquet"))
     assert(!Fs.exists(orphan))
     assert(Fs.list(Fs.path(dir)).forall(
       st => !st.getPath.getName.startsWith("_stage_")))
-    assert(PointerStore.read(spark, dir).count() === n0)
+    assert(Layout.read(spark, dir).count() === n0)
   }
 
   test("vacuum keeps every file any RETAINED commit references") {
     val dir = freshDir()
     Layout.writePartitioned(docs.filter(col("doc_id") % 2 === 0),
       dir, "lang", Seq("doc_id"))
-    PointerStore.init(dir)
-    PointerStore.append(docs.filter(col("doc_id") % 2 =!= 0),
+    Layout.append(docs.filter(col("doc_id") % 2 =!= 0),
       dir, "lang", Seq("doc_id"))
-    PointerStore.compact(spark, dir, Seq("doc_id")) // v3 drops v2's files
-    val v2Files = docs // every pre-compact file is referenced by v2
-    // keepCommits=2 retains v2+v3: NOTHING may be deleted (v2 still needs
-    // the fragments) except stage dirs
+    Layout.compactPartitions(spark, dir, Seq("doc_id")) // v3 drops v2's files
+    // keepCommits=2 (what the compaction's own vacuum already ran) retains
+    // v2+v3: NOTHING may be deleted (v2 still needs the fragments)
     assert(PointerStore.vacuumOrphans(dir, keepCommits = 2).isEmpty)
+    assert(PointerStore.readVersion(spark, dir, 2L).count() === docs.count())
     // keepCommits=1 retires the fragments and the old commit files
     assert(PointerStore.vacuumOrphans(dir, keepCommits = 1).nonEmpty)
     assert(Fs.list(Fs.path(s"$dir/_commits")).size === 1)
-    assertSameData(dir, v2Files)
+    assertSameData(dir, docs)
   }
 
   test("object-store scheme: rename maintenance refuses, pointer commits run") {
     // fs.s3.impl -> a RawLocalFileSystem that ANSWERS as scheme 's3': every
     // byte lands on local disk, but path URIs carry the scheme that
-    // Fs.rename's atomicity guard refuses — so this exercises the real
-    // dispatch: Layout's swap protocol must refuse, PointerStore's
-    // rename-free protocol must complete end-to-end on the same store.
+    // Fs.renameReplace's atomicity guard refuses — so this exercises the
+    // real dispatch: the consumer checkpoint's replace rename must refuse,
+    // while the store's rename-free commits complete end-to-end.
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.s3.impl", classOf[graft.ops.MockS3FileSystem].getName)
     hc.set("fs.s3.impl.disable.cache", "true")
     val local = freshDir()
     val dir = s"s3:$local"
     Layout.writePartitioned(docs, local, "lang", Seq("doc_id"))
-    // the rename-based family refuses this scheme (r13/r14 stance — loud,
-    // not wrong-but-silent)
+    // the rename-based checkpoint refuses this scheme (loud, not
+    // wrong-but-silent)
     val e = intercept[IllegalStateException](
-      Layout.compact(spark, dir, "lang", Seq("doc_id")))
+      Layout.commitCheckpoint(dir, "trainer", 0L))
     assert(e.getMessage.contains("refusing rename-based maintenance"))
-    // the pointer protocol runs the SAME maintenance there
-    PointerStore.init(dir)
-    assert(PointerStore.append(docs.limit(7), dir, "lang", Seq("doc_id")) === 2L)
-    PointerStore.compact(spark, dir, Seq("doc_id"))
+    // the store's maintenance runs there
+    Layout.append(docs.limit(7), dir, "lang", Seq("doc_id"))
+    Layout.compactPartitions(spark, dir, Seq("doc_id"))
+    Layout.compact(spark, dir, "lang", Seq("doc_id"))
     PointerStore.vacuumOrphans(dir, keepCommits = 1)
-    val back = PointerStore.read(spark, dir)
-    assert(back.count() === docs.count() + 7)
+    assert(Layout.read(spark, dir).count() === docs.count() + 7)
   }
 }

@@ -1,7 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSuite
 
 class PrivacySpec extends SparkSuite {
@@ -88,7 +86,6 @@ class PrivacySpec extends SparkSuite {
 
   test("lDiversity keeps NULL-quasi rows (null-safe join) and counts per group") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // NULL region is a GROUP (the kAnonymity semantics), not a dropped row
     val df = Seq(
       ("a", "r1", 1L), ("b", "r1", 2L), ("c", "r1", 2L),

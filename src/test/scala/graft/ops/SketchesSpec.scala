@@ -97,7 +97,6 @@ class SketchesSpec extends SparkSuite {
   }
 
   test("audienceMatrix: every unordered pair, exact counts below capacity") {
-    import org.apache.spark.sql.functions._
     val spark2 = spark
     import spark2.implicits._
     // A = {0..99}, B = {50..149}, C = {0..9}: known pairwise overlaps

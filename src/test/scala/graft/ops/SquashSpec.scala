@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
 /** squashHistory: content preservation, contract boundaries and the
-  * checkpoint guard. Crash recovery at every point of the per-partition
-  * protocol is CrashSpec's fault-injection case.
+  * checkpoint guard. Crash recovery at every point of the commit is
+  * CrashSpec's fault-injection case.
   */
 class SquashSpec extends SparkSuite {
 
@@ -28,16 +28,17 @@ class SquashSpec extends SparkSuite {
   }
 
   private def content(dir: String): Set[(Long, String, String, Long)] =
-    spark.read.parquet(dir)
+    Layout.read(spark, dir)
       .select(col("id"), col("lang"), col("body"),
         col("ingest_batch").cast("long"))
       .collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
       .toSet
 
+  /** The batch directories of `pd` that the current commit references. */
   private def batchDirs(dir: String, pd: String): Set[String] =
-    Option(new java.io.File(s"$dir/$pd").listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory).map(_.getName).toSet
+    PointerStore.liveFiles(dir).filter(_.startsWith(s"$pd/"))
+      .map(_.split('/')(1)).toSet
 
   test("squash consolidates history, preserves rows, leaves new batches alone") {
     val dir = mkStore()

@@ -472,7 +472,6 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("stateful streaming packer: shard counter carries across micro-batches") {
-    import spark.implicits._
     val dir = Files.createTempDirectory("graftpack").toString
     def doc(id: Long, lang: String, words: Int) =
       s"""{"doc_id":$id,"text":"${Seq.fill(words)("w").mkString(" ")}","lang":"$lang","source":"s","n_chars":${2 * words}}"""
@@ -543,7 +542,6 @@ class StreamingSpec extends SparkSuite {
   test("packStream over the documents table equals the batch packer (q_pack_sequences semantics)") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    import spark.implicits._
     // stream the real sf0.001 documents parquet (file source needs a
     // directory; stage the single file into one); within-batch order is
     // doc_id per the packer contract, matching the batch window's ORDER BY
@@ -622,7 +620,6 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("export hash split runs unchanged on a streaming frame (stateless)") {
-    import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graftsplit").toString
     val lines = (1 to 40).map(i =>
       s"""{"doc_id":$i,"text":"doc number $i","lang":"en","source":"s1","n_chars":12}""")

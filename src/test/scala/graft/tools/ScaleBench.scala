@@ -604,7 +604,7 @@ object ScaleBench {
             docs.filter(pmod(col("doc_id"), lit(48)) === b), dir, "lang",
             Seq("doc_id")))
           def fullScan(): Unit = {
-            spark.read.parquet(dir)
+            graft.ops.Layout.read(spark, dir)
               .groupBy("lang").agg(count(lit(1)), sum("n_chars"))
               .write.format("noop").mode("overwrite").save()
           }
