@@ -321,6 +321,68 @@ class CrashSpec extends SparkSuite {
     }
   }
 
+  // ---- the pointer: one commit per op, readers never need the repair ----
+
+  /** An op seen at the pointer: `append` is [[Layout.append]], `compact`
+    * is [[Layout.compactPartitions]], `rewriteAll` is
+    * [[Layout.evolveCompact]]. Each publishes exactly one commit.
+    */
+  private case class PtrOp(name: String, build: String => Unit,
+      op: String => Any)
+
+  private def ptrState(dir: String): (Option[Long], String) =
+    (PointerStore.currentVersion(dir), digest(Layout.read(spark, dir)))
+
+  private def ptrStore(r: String): Unit =
+    Layout.writePartitioned(rows(0, 300), store(r), "p", Seq("id"))
+
+  private val ptrOps = Seq(
+    PtrOp("append", ptrStore,
+      r => Layout.append(rows(300, 330), store(r), "p", Seq("id"))),
+    PtrOp("compact", { r =>
+        ptrStore(r)
+        Layout.append(rows(300, 330), store(r), "p", Seq("id"))
+      },
+      r => Layout.compactPartitions(spark, store(r), Seq("id"))),
+    PtrOp("rewriteAll", ptrStore,
+      r => Layout.evolveCompact(spark, store(r), "p", "src", Seq("id")))
+  )
+
+  ptrOps.foreach { c =>
+    test(s"PointerStore.${c.name}: readers see the pre- or post-state at " +
+        "every crash point; recover + retry gives the post-state") {
+      val template = freshRoot()
+      c.build(template)
+      val pre = ptrState(store(template))
+      val clean = copyOf(template)
+      val n = Faults.count(clean)(c.op(clean))
+      val post = ptrState(store(clean))
+      assert(n >= 1 && post._1 === pre._1.map(_ + 1L))
+      info(s"PointerStore.${c.name}: $n mutations, each one a crash point")
+      for (k <- 1 to n) {
+        val root = copyOf(template)
+        val run = Faults.run(root, k)(c.op(root))
+        withClue(s"PointerStore.${c.name}, crash at mutation $k of $n " +
+            s"(${run.crashedAt.getOrElse("never reached")}):") {
+          if (run.crashedAt.isEmpty) {
+            run.error.foreach(throw _)
+            assert(ptrState(store(root)) === post)
+          } else {
+            assert(run.error.exists(Faults.injected))
+            val seen = ptrState(store(root))
+            assert(seen == pre || seen == post, s"reader saw $seen")
+            PointerStore.recover(store(root))
+            if (seen == pre) c.op(root)
+            assert(ptrState(store(root)) === post, "retry")
+            assert(staged(store(root)).isEmpty)
+          }
+        }
+        FileUtils.deleteDirectory(new File(root))
+      }
+      Seq(template, clean).foreach(d => FileUtils.deleteDirectory(new File(d)))
+    }
+  }
+
   test("a reader resolved before a commit returns the pre-state after it") {
     ops.foreach { c =>
       val root = freshRoot()
