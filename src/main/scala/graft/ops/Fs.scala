@@ -151,7 +151,7 @@ private[graft] object Fs {
     * assert rename atomicity, because the protocol doesn't need it here: a
     * torn or half-copied `dst` is an unreferenced orphan until a commit
     * file names it, invisible to every reader and reaped by
-    * [[PointerStore.vacuumOrphans]]. The commit that publishes `dst`
+    * [[PointerStore.recover]]. The commit that publishes `dst`
     * happens only AFTER this call returns (write fully landed). Falls back
     * to stream-copy + delete where the FS rejects the rename (some object
     * stores reject cross-"directory" renames outright).

@@ -25,11 +25,11 @@ import org.apache.spark.sql.functions._
   * the one recovery routine, and readers never need it.
   *
   * READ THROUGH GRAFT. [[read]] resolves the current commit and reads its
-  * live files. Each write ends with `vacuumOrphans(dir, keepCommits = 2)`:
-  * the previous version's files stay on disk, so a reader that resolved
-  * before a commit still reads its version, and disk holds at most two
-  * versions. A plain `spark.read.parquet(dir)` sees both versions and is
-  * not a store reader.
+  * live files. Each write ends with [[PointerStore.retire]] at
+  * `keepCommits = 2`: the previous version's files stay on disk, so a
+  * reader that resolved before a commit still reads its version, and disk
+  * holds at most two versions. A plain `spark.read.parquet(dir)` sees both
+  * versions and is not a store reader.
   *
   * Reference scope: pandas-db reads whole SQLite tables (table.py's
   * SELECT-from-table model); a partition-pruned parquet store is the
@@ -75,7 +75,7 @@ object Layout {
     */
   private def commit(dir: String, from: Long, live: Seq[String]): Unit = {
     PointerStore.writeCommit(dir, from + 1, live)
-    PointerStore.vacuumOrphans(dir, keepCommits = 2)
+    PointerStore.retire(dir, from + 1, keepCommits = 2)
     ()
   }
 
@@ -181,9 +181,9 @@ object Layout {
         // DRAIN before propagating a failure: shutdownNow() would
         // interrupt sibling bodies mid-stage and leave their Spark jobs
         // running detached. Every in-flight (and queued) body runs to its
-        // own completion; their staged files are orphans the next write's
-        // vacuum reaps. First failure still propagates unwrapped, in item
-        // order.
+        // own completion; their staged files are orphans no commit names
+        // (PointerStore.recover reaps them). First failure still
+        // propagates unwrapped, in item order.
         val outcomes = fs.map { f =>
           try Right(f.get())
           catch {
@@ -254,13 +254,16 @@ object Layout {
     fragmented
   }
 
-  /** Total bytes of the given store-relative data files (file lengths
-    * only — no footer is opened), the input to size-targeted rewrites.
+  /** Total bytes of the given store-relative data files, the input to
+    * size-targeted rewrites: lengths from one listing per directory that
+    * holds them — no footer is opened, no per-file call made.
     */
   private def bytesOf(dir: String, files: Seq[String]): Long =
-    files.iterator.map { f =>
-      val p = Fs.path(s"${base(dir)}/$f")
-      Fs.fs(p).getFileStatus(p).getLen
+    files.groupBy(f => f.take(f.lastIndexOf('/') + 1)).iterator.map {
+      case (parent, fs) =>
+        val names = fs.map(_.drop(parent.length)).toSet
+        Fs.list(Fs.path(s"${base(dir)}/$parent"))
+          .filter(st => names(st.getPath.getName)).map(_.getLen).sum
     }.sum
 
   /** Files a size-targeted rewrite of `bytes` aims for: 1 when no target
@@ -749,9 +752,10 @@ object Layout {
     *
     * Resume contract: the ORIGINAL store stays live and readable until
     * that one commit. A crash anywhere before it leaves the old version
-    * live, and a rerun redoes EVERY source (staged work of the crashed run
-    * is an orphan the rerun's vacuum reaps); a crash after it leaves the
-    * evolved store, and a rerun is a no-op.
+    * live, and a rerun redoes EVERY source (the crashed run's moved-in
+    * files are orphans no commit names, which [[PointerStore.recover]]
+    * reaps); a crash after it leaves the evolved store, and a rerun is a
+    * no-op.
     *
     * Returns the source directory names processed (empty = the store was
     * already evolved).
@@ -878,9 +882,10 @@ object Layout {
             .write.parquet(st)
         }
         // a rewrite that kept no row drops the directory; its empty files
-        // stay unreferenced and the commit's vacuum reaps them
+        // were never committed, so they go now
         val anyRow = fresh.nonEmpty &&
           readPartition(spark, dir, pd, fresh).limit(1).count() > 0
+        if (!anyRow) PointerStore.deleteData(dir, fresh)
         Some(if (anyRow) fresh else Seq.empty[String])
       } else None
     }

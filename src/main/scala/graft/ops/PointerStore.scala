@@ -18,21 +18,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Correctness needs NO rename atomicity anywhere, so the same protocol
   * runs on HDFS, POSIX and flat-namespace object stores alike:
   *  - data files are immutable and unreferenced until a commit names them;
-  *    a crash mid-write/mid-move leaves an invisible orphan ([[vacuumOrphans]]
+  *    a crash mid-write/mid-move leaves an invisible orphan ([[recover]]
   *    reaps it);
   *  - the commit file itself carries a completeness trailer (`#end <n>`);
   *    a torn commit write is detectable and IGNORED — readers serve the
   *    previous version, [[recover]] deletes the fragment. A new-version
   *    commit file either validates or it doesn't exist yet, which is the
   *    same either-or a single-object PUT gives on S3;
-  *  - the old files stay on disk until a later vacuum retires them, so a
+  *  - the old files stay on disk until a later commit retires them, so a
   *    reader that resolved the old version keeps reading it.
   *
-  * A directory with no `_commits` at all is a plain parquet directory
-  * (written by another tool): its data files read as its live set, and
-  * the first [[Layout]] write adopts them into commit v1. Every write
-  * creates `_commits` before it moves a file in, so a crashed first write
-  * reads as an empty store, never as its half-moved files.
+  * A directory with no complete commit is a plain parquet directory
+  * (written by another tool, or never written): its data files read as
+  * its live set. Before the first file of a write moves in, [[claim]]
+  * publishes those files as commit v0 (none, for a new store), so a
+  * crash anywhere in a store's first write leaves readers on its
+  * pre-state: before v0 completes they still read the plain directory,
+  * after it they read v0, never the half-moved files.
   *
   * Single-writer protocol, like the rest of the maintenance family (the
   * reference engine is single-process: its connection.py:17 holds one
@@ -45,7 +47,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Growth beyond that is what log CHECKPOINTING exists for in the published
   * formats; this layer keeps the log trivially small instead by writing
   * the full live set each commit and retiring old versions in
-  * [[vacuumOrphans]].
+  * [[retire]].
   */
 object PointerStore {
 
@@ -94,13 +96,13 @@ object PointerStore {
 
   def currentVersion(dir: String): Option[Long] = currentCommit(dir).map(_._1)
 
-  /** The store's version (0 before its first commit) and its live data
-    * files, store-relative (partition dirs included). A plain directory
-    * with no `_commits` serves its data files as version 0.
+  /** The store's version and its live data files, store-relative
+    * (partition dirs included). A directory with no complete commit
+    * serves its data files as version 0: no file moves in before a
+    * commit exists ([[claim]]), so those are all pre-state files.
     */
   private[ops] def snapshot(dir: String): (Long, Seq[String]) =
-    currentCommit(dir).getOrElse(
-      (0L, if (Fs.exists(commitsDir(dir))) Seq.empty else dataFiles(dir)))
+    currentCommit(dir).getOrElse((0L, dataFiles(dir)))
 
   /** Live data files, store-relative (see [[snapshot]]). */
   def liveFiles(dir: String): Seq[String] = snapshot(dir)._2
@@ -128,10 +130,15 @@ object PointerStore {
       (Header +: files.sorted :+ s"#end ${files.size}").mkString("\n"))
   }
 
-  /** Create `_commits` before the first file of an uncommitted write moves
-    * in (see the class scaladoc: a crashed first write reads as empty).
+  /** Called before the first file of an uncommitted write moves in: a
+    * directory with no complete commit publishes its data files as v0
+    * (the adoption of a plain directory; an empty v0 for a new store).
+    * Per-directory rewrites stage concurrently, so the check and the
+    * write are one step.
     */
-  private[ops] def claim(dir: String): Unit = Fs.mkdirs(commitsDir(dir))
+  private[ops] def claim(dir: String): Unit = synchronized {
+    if (currentCommit(dir).isEmpty) writeCommit(dir, 0L, dataFiles(dir))
+  }
 
   /** Walk the store's DATA files (relative paths), skipping `_commits`,
     * `_stage_*`, dotfiles — the same hidden-entry rule Spark's file index
@@ -171,67 +178,107 @@ object PointerStore {
         s"no complete commit v$v under $dir/_commits — retired by vacuum, " +
           "torn, or never written")))
 
-  /** Retire what no current reader needs: data files no commit within the
-    * retention window references, stage leftovers, commit files older than
-    * the last `keepCommits` versions, and partition dirs left empty. The
-    * grace window is VERSIONS, not wall time — a reader pinned to version
-    * `current - keepCommits + 1` or newer still sees every file it
-    * resolved. Every [[Layout]] write ends with `keepCommits = 2`. Returns
-    * the deleted data files' relative paths.
+  /** Delete store-relative data files (and the checksum sidecar a Spark
+    * local write leaves next to each), then every directory they leave
+    * empty, deepest first — only directories that lost a file are listed.
     */
-  def vacuumOrphans(dir: String, keepCommits: Int = 2): Seq[String] = {
-    require(keepCommits >= 1, "keepCommits must be >= 1")
+  private[ops] def deleteData(dir: String, files: Seq[String]): Unit = {
     val b = base(dir)
-    val versions = commitVersions(dir)
-    val (cur, _) = currentCommit(dir).getOrElse(
-      throw new IllegalStateException(s"$dir is not a pointer store"))
-    val keepFrom = cur - (keepCommits - 1)
-    // every file referenced by ANY kept commit stays (a pinned reader on
-    // an old kept version must still resolve)
-    val retained: Set[String] = versions.filter(_ >= keepFrom)
-      .flatMap(v => parseCommit(dir, v).getOrElse(Seq.empty)).toSet
-    val orphans = dataFiles(dir).filterNot(retained)
-    orphans.foreach { f =>
+    files.foreach { f =>
       val p = Fs.path(s"$b/$f")
       Fs.deleteFile(p)
-      // checksum-FS sidecar of the retired file (Spark's local committer
-      // writes `.name.crc` next to each part file) — a stale sidecar would
-      // keep the partition dir "non-empty" forever
       Fs.deleteFile(new Path(p.getParent, s".${p.getName}.crc"))
     }
-    // retired + torn commit files (anything below the window; a torn file
-    // ABOVE the current version is a crashed in-flight commit — recover's
-    // job, left alone here)
-    versions.filter(_ < keepFrom).foreach(v => Fs.deleteFile(commitPath(dir, v)))
-    // stage leftovers and now-empty partition dirs (nested batch dirs too)
-    def prune(p: Path, root: Boolean): Unit = Fs.list(p).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && root && n.startsWith("_stage_"))
-        Fs.deleteRecursively(st.getPath)
-      else if (st.isDirectory && !n.startsWith("_") && !n.startsWith(".")) {
-        prune(st.getPath, root = false)
-        // "empty" = no visible entries; leftover dot-sidecars go with it
-        if (Fs.list(st.getPath).forall(_.getPath.getName.startsWith(".")))
-          Fs.deleteRecursively(st.getPath)
-      }
+    val parents = files.flatMap { f =>
+      val ds = f.split('/').init
+      ds.indices.map(i => ds.take(i + 1).mkString("/"))
+    }.distinct.sortBy(d => -d.count(_ == '/'))
+    parents.foreach { d =>
+      val p = Fs.path(s"$b/$d")
+      // "empty" = no visible entries; leftover dot-sidecars go with it
+      if (Fs.list(p).forall(_.getPath.getName.startsWith(".")))
+        Fs.deleteRecursively(p)
     }
-    prune(Fs.path(b), root = true)
-    orphans.sorted
   }
 
-  /** THE crash recovery of the partitioned-store family: delete stage
-    * leftovers, TORN commit fragments and the `.*.tmp` leftovers of
-    * consumer-checkpoint writes ([[Fs.tmpFor]]'s naming rule). Never
-    * required for correctness (readers skip torn commits, orphans are
-    * invisible, and the next write's vacuum reaps stages) — this just
-    * reclaims the scratch space immediately. On a healthy store it only
-    * probes.
-    */
-  def recover(dir: String): Unit = {
+  /** Delete the `_stage_*` dirs at the store's root (one listing). */
+  private def dropStages(dir: String): Unit =
     Fs.list(Fs.path(base(dir))).foreach { st =>
       if (st.isDirectory && st.getPath.getName.startsWith("_stage_"))
         Fs.deleteRecursively(st.getPath)
     }
+
+  /** Retire what left the window once version `cur` is published: commit
+    * files below the last `keepCommits` versions, then the data files
+    * only they name and the directories those leave empty, then the
+    * `_stage_*` leftovers of crashed writes. A grace window of VERSIONS,
+    * not wall time: a reader pinned to version `cur - keepCommits + 1` or
+    * newer still sees every file it resolved. Reads the commit log instead
+    * of walking the store, so a write's metadata cost follows what it
+    * changed, not the store's size; files a crashed write moved in but
+    * never committed are not in the log — [[recover]] and
+    * [[vacuumOrphans]] walk the store for those. Every [[Layout]] write
+    * ends with `keepCommits = 2`. Returns the deleted data files.
+    */
+  private[ops] def retire(dir: String, cur: Long, keepCommits: Int): Seq[String] = {
+    val keepFrom = cur - (keepCommits - 1)
+    // the empty v0 a new store's claim wrote names nothing a reader could
+    // pin: it retires with the first commit instead of taking a slot
+    val (old, kept) = commitVersions(dir).filter(_ <= cur).partition(v =>
+      v < keepFrom || (v == 0L && v < cur && parseCommit(dir, v).exists(_.isEmpty)))
+    val named = kept.flatMap(v => parseCommit(dir, v).getOrElse(Seq.empty)).toSet
+    val gone = old.flatMap(v => parseCommit(dir, v).getOrElse(Seq.empty))
+      .distinct.filterNot(named)
+    // commit files first: no commit may name a deleted file
+    old.foreach(v => Fs.deleteFile(commitPath(dir, v)))
+    deleteData(dir, gone)
+    dropStages(dir)
+    gone.sorted
+  }
+
+  /** Delete every data file no present commit names, every `_stage_*`
+    * dir and every directory left with no visible entry — the full walk
+    * of the store. Returns the deleted data files.
+    */
+  private def sweep(dir: String): Seq[String] = {
+    val named = commitVersions(dir)
+      .flatMap(v => parseCommit(dir, v).getOrElse(Seq.empty)).toSet
+    val orphans = dataFiles(dir).filterNot(named)
+    deleteData(dir, orphans)
+    dropStages(dir)
+    def prune(p: Path): Unit = Fs.list(p).foreach { st =>
+      val n = st.getPath.getName
+      if (st.isDirectory && !n.startsWith("_") && !n.startsWith(".")) {
+        prune(st.getPath)
+        if (Fs.list(st.getPath).forall(_.getPath.getName.startsWith(".")))
+          Fs.deleteRecursively(st.getPath)
+      }
+    }
+    prune(Fs.path(base(dir)))
+    orphans.sorted
+  }
+
+  /** Retire versions older than the last `keepCommits` ([[retire]]) and
+    * everything else no kept commit names ([[sweep]]): the explicit,
+    * whole-store form of the cleanup every write runs on its own changes.
+    * Returns the deleted data files' relative paths.
+    */
+  def vacuumOrphans(dir: String, keepCommits: Int = 2): Seq[String] = {
+    require(keepCommits >= 1, "keepCommits must be >= 1")
+    val (cur, _) = currentCommit(dir).getOrElse(
+      throw new IllegalStateException(s"$dir is not a pointer store"))
+    (retire(dir, cur, keepCommits) ++ sweep(dir)).sorted
+  }
+
+  /** THE crash recovery of the partitioned-store family: delete stage
+    * leftovers, TORN commit fragments, data files a crashed write moved
+    * in but never committed, and the `.*.tmp` leftovers of
+    * consumer-checkpoint writes ([[Fs.tmpFor]]'s naming rule). Never
+    * required for correctness (readers skip torn commits and orphans are
+    * invisible) — this reclaims the space. Keeps every complete commit;
+    * on a healthy store it only probes.
+    */
+  def recover(dir: String): Unit = {
     Fs.list(Fs.path(s"${base(dir)}/_graft_checkpoints")).foreach { st =>
       val n = st.getPath.getName
       if (st.isFile && n.startsWith(".") && n.endsWith(".tmp"))
@@ -240,5 +287,8 @@ object PointerStore {
     commitVersions(dir)
       .filter(v => parseCommit(dir, v).isEmpty)
       .foreach(v => Fs.deleteFile(commitPath(dir, v)))
+    // a directory with no complete commit is plain: all its files are live
+    if (currentCommit(dir).isDefined) sweep(dir)
+    else dropStages(dir)
   }
 }

@@ -248,6 +248,15 @@ class CrashSpec extends SparkSuite {
       r => Layout.writePartitioned(rows(0, 300), store(r), "p", Seq("id")),
       r => Layout.append(rows(300, 330), store(r), "p", Seq("id")),
       idempotent = false),
+    // a plain directory another tool wrote: the op's first move adopts it
+    Op("append to a plain directory",
+      r => rows(0, 300).write.partitionBy("p").parquet(store(r)),
+      r => Layout.append(rows(300, 330), store(r), "p", Seq("id")),
+      idempotent = false),
+    Op("compactPartitions of a plain directory",
+      // several files per dir, so every dir's rewrite adopts concurrently
+      r => rows(0, 300).repartition(4).write.partitionBy("p").parquet(store(r)),
+      r => Layout.compactPartitions(spark, store(r), Seq("id"))),
     Op("compact", { r =>
         // two versions before the op, so its vacuum retires the first
         // version's files: crash points after the commit, too
