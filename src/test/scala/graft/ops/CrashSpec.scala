@@ -176,12 +176,13 @@ class CrashSpec extends SparkSuite {
     }.toMap
 
   /** Stage dirs and torn commits (a commit file above the current
-    * version: only the in-flight next commit can be torn) of each store.
+    * version: only the in-flight next commit can be torn; every one, when
+    * no commit is complete) of each store.
     */
   private def leftovers(root: String, stores: Seq[String]): Seq[String] =
     stores.flatMap { s =>
       val d = s"$root/$s"
-      val cur = PointerStore.currentVersion(d).getOrElse(0L)
+      val cur = PointerStore.currentVersion(d).getOrElse(-1L)
       val torn = names(new File(d, "_commits"))
         .filter(_.stripPrefix("v").stripSuffix(".commit").toLong > cur)
       (staged(d) ++ torn).map(n => s"$s/$n")
@@ -258,7 +259,7 @@ class CrashSpec extends SparkSuite {
       r => rows(0, 300).repartition(4).write.partitionBy("p").parquet(store(r)),
       r => Layout.compactPartitions(spark, store(r), Seq("id"))),
     Op("compact", { r =>
-        // two versions before the op, so its vacuum retires the first
+        // two versions before the op, so its commit retires the first
         // version's files: crash points after the commit, too
         Layout.writePartitioned(rows(0, 300), store(r), "p", Seq("id"))
         Layout.writePartitioned(rows(0, 300), store(r), "p", Seq("id"),

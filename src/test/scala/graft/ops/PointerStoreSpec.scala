@@ -174,7 +174,7 @@ class PointerStoreSpec extends SparkSuite {
     Layout.append(docs.filter(col("doc_id") % 2 =!= 0),
       dir, "lang", Seq("doc_id"))
     Layout.compactPartitions(spark, dir, Seq("doc_id")) // v3 drops v2's files
-    // keepCommits=2 (what the compaction's own vacuum already ran) retains
+    // keepCommits=2 (what the compaction's own retire already ran) retains
     // v2+v3: NOTHING may be deleted (v2 still needs the fragments)
     assert(PointerStore.vacuumOrphans(dir, keepCommits = 2).isEmpty)
     assert(PointerStore.readVersion(spark, dir, 2L).count() === docs.count())
